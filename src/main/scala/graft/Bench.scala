@@ -55,67 +55,17 @@ object Bench {
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
-    // Opt-in attribution channel (SPARK_GRAFT_DIAG=1): the in-suite vs
-    // isolated wall-time spread on heavy queries survived the gc_ms
-    // evidence (f8: 6.4s in-suite at 50ms GC vs 3.2s isolated), so GC
-    // is NOT the cause and the remaining suspects are driver-state
-    // accumulation effects that only a per-pass trace can separate:
-    // JIT churn (compilation time still climbing by the query's slot),
-    // code-cache exhaustion (occupancy near the 240 MB default stops
-    // compilation → interpreted hot loops), class-count growth
-    // (codegen classes accumulating), and context-cleaner/block-manager
-    // backlog (persistent-RDD count at query start). Each timed call
-    // records absolute occupancy + per-call deltas; BENCH_DIAG.json
-    // gets one row per (pass, query).
-    val diag = sys.env.get("SPARK_GRAFT_DIAG").contains("1")
-    import java.lang.management.ManagementFactory
-    def jitMillis(): Long = {
-      val c = ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime else 0L
-    }
-    def codeCacheUsed(): Long = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("CodeHeap") ||
-        p.getName.contains("Code Cache"))
-      .map(_.getUsage.getUsed).sum
-    // r16: count JANINO compilations (codegen-cache misses) per timed
-    // call — the discriminator between "the generated-class corpus
-    // outgrew spark.sql.codegen.cache.maxEntries and passes re-miss"
-    // (janino_n stays high every pass) and "plans embed per-pass-unique
-    // source" (same signature). Histogram count = one per compile.
-    def janinoCount(): Long = org.apache.spark.metrics.source
-      .CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val diagRows = scala.collection.mutable.ArrayBuffer.empty[String]
-    def timed(name: String, pass: Int): (Double, Long) = {
+    def timed(name: String): (Double, Long) = {
       val g0 = gcMillis()
-      val j0 = if (diag) jitMillis() else 0L
-      val jn0 = if (diag) janinoCount() else 0L
-      val rdds0 = if (diag) spark.sparkContext.getPersistentRDDs.size else 0
       val t0 = System.nanoTime()
       exec(name)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val gc = gcMillis() - g0
-      if (diag) diagRows += {
-        s"""{"pass":$pass,"query":"$name","wall_sec":$wall,""" +
-          s""""gc_ms":$gc,"jit_ms":${jitMillis() - j0},""" +
-          s""""janino_n":${janinoCount() - jn0},""" +
-          s""""code_cache_mb":${codeCacheUsed() / (1024 * 1024)},""" +
-          s""""classes":${
-            ManagementFactory.getClassLoadingMXBean.getLoadedClassCount},""" +
-          s""""rdds_pinned":$rdds0}"""
-      }
-      (wall, gc)
+      ((System.nanoTime() - t0) / 1e9, gcMillis() - g0)
     }
     // Interleaved passes: the full suite runs end-to-end `passes`
     // times, so adjacent samples of the same query are minutes apart
     // and a transient spike cannot hit a query's every sample.
     val samples: Seq[Seq[(String, (Double, Long))]] =
-      (1 to passes).map(p => names.map(n => n -> timed(n, p)))
-    if (diag)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_DIAG.json"),
-        diagRows.mkString("[", ",\n", "]\n"))
-      catch { case _: Throwable => () }
+      (1 to passes).map(_ => names.map(n => n -> timed(n)))
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       val n = s.length

@@ -76,17 +76,11 @@ object Cli {
   def main(args: Array[String]): Unit = {
     // --version answers without paying a session spin-up
     if (args.toList == List("--version")) { println(Version); return }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER is the deployment address; SPARK_GRAFT_CPUS sizes
+    // the local master and the shuffle partitions alike
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession(
+      sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
     try run(spark, args.toList)
     finally spark.stop()
   }

@@ -3,15 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory with graft's standard configuration —
-  * one place for the settings every entry point (Verify, Bench, Cli,
-  * user code) must agree on.
+  * the only place graft's Spark settings are written, so every entry
+  * point (Verify, Bench, Cli, PlanAudit, the specs, user code) runs
+  * the same optimizer over the same storage format.
   */
 object GraftSession {
 
-  /** Local-mode builder. `cpus` sizes the master and, by default, the
-    * shuffle partitions: on a real cluster set
-    * `spark.sql.shuffle.partitions` ≈ 2-3× total cores and let AQE
-    * coalesce.
+  /** Local-mode session on `cpus` cores (see [[apply]]). */
+  def local(cpus: Int): SparkSession = apply(s"local[$cpus]", cpus)
+
+  /** Session on `master` (a deployment address: `local[n]`, a cluster
+    * URL). `cpus` sizes the shuffle partitions: on a real cluster pass
+    * the total core count, or set `spark.sql.shuffle.partitions` ≈
+    * 2-3× total cores and let AQE coalesce.
     *
     * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides the partition count
     * WITHOUT changing parallelism — the scale knob the prompt's
@@ -22,23 +26,11 @@ object GraftSession {
     * and the fix is more, smaller partitions (AQE coalesces the
     * queries that don't need them), not more heap.
     */
-  def local(cpus: Int, aqe: Boolean = true): SparkSession = {
+  def apply(master: String, cpus: Int): SparkSession = {
     val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .map(_.toInt).getOrElse(cpus)
-    // measurement escape hatch (SPARK_GRAFT_AQE=0/1 or true/false):
-    // lets a probe isolate AQE's replan overhead vs its coalescing wins
-    // without a code edit; unset = the caller's default (on
-    // everywhere). Any other value fails LOUDLY — r15 ADVICE: the old
-    // `_ == "1"` parse silently turned SPARK_GRAFT_AQE=true into
-    // AQE-OFF and would have skewed a probe without a trace.
-    val aqeOn = sys.env.get("SPARK_GRAFT_AQE").map {
-      case "1" | "true" => true
-      case "0" | "false" => false
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_AQE must be 1/true/0/false, got '$other'")
-    }.getOrElse(aqe)
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS); see Tables.load
@@ -49,28 +41,26 @@ object GraftSession {
       // skip-index power (the ZOrderLayout pruning story) and are the
       // modern interchange type; INT96 is deprecated upstream.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", aqeOn.toString)
+      .config("spark.sql.adaptive.enabled", "true")
       // The default 100-entry codegen cache thrashes on a suite of 65+
       // queries (several whole-stage/expression classes each): every
       // re-execution Janino-recompiles and the JVM re-JITs the same
       // stages, keeping compiler threads busy ~85% of a bench run
-      // (BENCH_DIAG.json: 131s of JIT during 154s of timed wall) and
-      // stealing cores from the 32-thread executor pool exactly when a
-      // heavy query saturates them — measured as f8's 2× in-suite vs
-      // isolated spread that gc_ms had already ruled out as GC. The
-      // r8 fix sized it at 2000 for a 65-query workload; by r15 the
-      // registry reached 142 queries (~2600 distinct codegen units,
-      // BENCH_DIAG janino_n) and the LRU evicted ~550 units per
-      // interleaved pass — ~100 s of JIT-compiler-thread time PER PASS
-      // re-JITting classes the previous pass had already compiled (the
-      // r15 verdict's top item). 8000 fits the whole corpus with
-      // growth headroom; the cache never holds more than the workload
-      // actually generates, so the cost is bounded by the corpus
-      // (~3k units ≈ tens of MB of metaspace per JVM — cheap next to
-      // recompile churn on driver AND executors of a real cluster).
-      // Env-overridable for measurement (SPARK_GRAFT_CODEGEN_CACHE).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
+      // (131s of JIT during 154s of timed wall) and stealing cores
+      // from the 32-thread executor pool exactly when a heavy query
+      // saturates them — measured as f8's 2× in-suite vs isolated
+      // spread that gc_ms had already ruled out as GC. The r8 fix
+      // sized it at 2000 for a 65-query workload; by r15 the registry
+      // reached 142 queries (~2600 distinct codegen units) and the LRU
+      // evicted ~550 units per interleaved pass — ~100 s of
+      // JIT-compiler-thread time PER PASS re-JITting classes the
+      // previous pass had already compiled (the r15 verdict's top
+      // item). 8000 fits the whole corpus with growth headroom; the
+      // cache never holds more than the workload actually generates,
+      // so the cost is bounded by the corpus (~3k units ≈ tens of MB
+      // of metaspace per JVM — cheap next to recompile churn on
+      // driver AND executors of a real cluster).
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         sys.env.getOrElse("GRAFT_WAREHOUSE", "/tmp/graft_warehouse"))

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: dump formatted physical plans for representative
   * queries to audit scan pushdown (PushedFilters/ReadSchema), broadcast
-  * choices, and Exchange counts. Usage:
+  * choices, and Exchange counts. Runs on [[GraftSession]] — the same
+  * optimizer (GraftExtensions included) PlanShapeSpec pins. Usage:
   *   sbt "runMain graft.PlanAudit <sfDir> [query ...]"
   */
 object PlanAudit {
@@ -15,13 +14,7 @@ object PlanAudit {
         "f8_xref_block", "d2_dedup_ngram_jaccard", "d3_dedup_minhash_lsh",
         "d5_dedup_embedding", "s1_ann_brute_topk", "f12_entity_query",
         "q16_percentile")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -437,7 +437,7 @@ object Similarity {
     val subsAll = subVectors(corpusV, "vec_id", numSub, subDim)
     // a persisted codebook ([[trainPqCodebook]] / VecStore `_pq`) skips
     // the in-query train — the production lifecycle: train once, reuse
-    // per query, RETRAIN on drift (PqDriftProbe measures when).
+    // per query, RETRAIN on drift (BASELINE.md round 10: when).
     // The in-query train is referenced TWICE (encode + the ADC table),
     // so it is checkpointed: the train subtree's stages run once and
     // both consumers read the numSub·codebookK-row result (structurally
@@ -505,7 +505,7 @@ object Similarity {
     * is bit-identical to it on unchanged data (spec-asserted): the
     * train here is the SAME deterministic pipeline the queries run.
     * Production cadence: train once, reuse per query, retrain when the
-    * corpus drifts — `graft.PqDriftProbe` measures the recall decay
+    * corpus drifts — BASELINE.md round 10 records the recall decay
     * that triggers it.
     */
   def trainPqCodebook(
@@ -523,8 +523,8 @@ object Similarity {
     * the retrain trigger a production deployment alarms on: unlike
     * recall it needs no ground truth, so it can run per ingest batch
     * against the persisted codebook and compare to the trained-time
-    * baseline (PqDriftProbe measures the separation: recall stays flat
-    * under drift because the exact re-rank absorbs shortlist noise,
+    * baseline (BASELINE.md round 10 records the separation: recall
+    * stays flat under drift because the exact re-rank absorbs shortlist noise,
     * while this residual rises the moment the corpus's subspace
     * distributions leave the codebook's support). Scale shape: one
     * scan, broadcast codebook, map-side min + one global avg.
@@ -783,8 +783,8 @@ object Similarity {
     * Exchange through both levels). Tree assignment is approximate vs
     * the flat argmax (a vector whose nearest leaf lives under a
     * different subtree mis-assigns — the standard tree-IVF trade;
-    * `TreeIvfProbe` measures the agreement rate and the assignment
-    * speedup at L = 100 and L = 1000).
+    * BASELINE.md round 12 records the agreement rate and the
+    * assignment speedup at L = 100 and L = 1000).
     */
   /** The level-2 broadcast side of the tree descent: leaf centroids
     * with precomputed norms, annotated with their subtree —

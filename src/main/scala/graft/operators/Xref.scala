@@ -122,8 +122,7 @@ object Xref {
     *     rows. Cost: ONE broadcast-relabel pass over the mapping — no
     *     iteration, no edge-set scan, per-row work O(1). The full
     *     recompute is O(diameter) join+agg rounds over ALL edges; the
-    *     probe (`graft.ResolverIncrementalProbe`) measures the gap and
-    *     its scaling.
+    *     measured gap and its scaling are in BASELINE.md.
     *   - A NON-positive judgement of a pair whose endpoints currently
     *     share a canonical is a RETRACTION of the edge that may hold
     *     the component together — splitting needs the paths this

@@ -150,6 +150,6 @@ object BitmapStore {
         spark.table(s"${table}_dels").inputFiles.toSet
       else Set.empty[String]
     if (delsNow == delsSnap && delsNow.nonEmpty)
-      graft.Probes.dropManaged(spark, s"${table}_dels")
+      TableSwap.dropManaged(spark, s"${table}_dels")
   }
 }

@@ -190,8 +190,8 @@ object DocStore {
       k: Int = 8,
       buckets: Int = 64): Unit = {
     require(k >= 2, s"initAnchors: anchor width k must be >= 2, got $k")
-    graft.Probes.dropManaged(spark, s"${table}_anchors")
-    graft.Probes.dropManaged(spark, s"${table}_anchorsmeta")
+    TableSwap.dropManaged(spark, s"${table}_anchors")
+    TableSwap.dropManaged(spark, s"${table}_anchorsmeta")
     import spark.implicits._
     Seq(k).toDF("anchor_k").write.mode(SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_anchorsmeta")
@@ -542,7 +542,7 @@ object DocStore {
         spark.table(s"${table}_dels").inputFiles.toSet
       else Set.empty[String]
     if (delsNow == st.delsSnap)
-      graft.Probes.dropManaged(spark, s"${table}_dels")
+      TableSwap.dropManaged(spark, s"${table}_dels")
   }
 
   def compact(
@@ -578,6 +578,6 @@ object DocStore {
         writeAnchorRows(df, s"${table}_anchors", b,
           SaveMode.Append))
     }
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, s"${table}_dels")
   }
 }

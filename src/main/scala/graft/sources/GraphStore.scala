@@ -493,7 +493,7 @@ object GraphStore {
           spark.table(s"${table}_dels").inputFiles.toSet
         else Set.empty[String]
       if (delsNow == snap && delsNow.nonEmpty)
-        graft.Probes.dropManaged(spark, s"${table}_dels")
+        TableSwap.dropManaged(spark, s"${table}_dels")
     }
   }
 

@@ -147,6 +147,6 @@ object SketchStore {
         spark.table(s"${table}_dels").inputFiles.toSet
       else Set.empty[String]
     if (delsNow == delsSnap && delsNow.nonEmpty)
-      graft.Probes.dropManaged(spark, s"${table}_dels")
+      TableSwap.dropManaged(spark, s"${table}_dels")
   }
 }

@@ -143,6 +143,30 @@ object TableSwap {
       .foreach(t => dropStage(spark, t, table))
   }
 
+  /** Drop a managed table from the catalog AND the filesystem,
+    * including its compact/stage siblings: the in-memory catalog
+    * forgets tables between JVMs but their warehouse dirs persist, and
+    * a stale dir fails the next saveAsTable with
+    * LOCATION_ALREADY_EXISTS.
+    */
+  def dropManaged(spark: SparkSession, table: String): Unit = {
+    dropAllStages(spark, table)
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    Option(wh.listFiles()).getOrElse(Array.empty)
+      .filter(d => d.getName == table ||
+        d.getName == table + "_compacted" ||
+        d.getName.startsWith(table + "_stage_"))
+      .foreach(rm)
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+    f.delete(); ()
+  }
+
   /** Swap the fully-written stage table `tmp` over `table`.
     * `partitioned` tables get their partition metadata re-synced under
     * the new root (between the location move and the sync, reads see

@@ -360,7 +360,7 @@ object VecStore {
     * over the store, reuse across every s5/s6-style query (pass
     * [[codebook]] as their `codebook =`), and re-run THIS on drift
     * (the retrain is a deliberate operation, like [[init]]'s quantizer
-    * — `graft.PqDriftProbe` measures the recall decay that triggers
+    * — BASELINE.md round 10 records the recall decay that triggers
     * it). Reuse is bit-identical to in-query training on unchanged
     * data (spec-asserted).
     */
@@ -416,7 +416,7 @@ object VecStore {
           org.apache.spark.sql.catalyst.TableIdentifier(codesT))
         .partitionColumnNames.nonEmpty
       if (!partitioned) {
-        graft.Probes.dropManaged(spark, codesT)
+        TableSwap.dropManaged(spark, codesT)
         writeCodes(spark, corpus, cb, codesT, buckets)
       } else {
         val tmp = TableSwap.stageName(spark, codesT)
@@ -787,7 +787,7 @@ object VecStore {
       writeListed(df, table, b, SaveMode.Append))
     if (spark.catalog.tableExists(s"${table}_codes"))
       rebuildCodes(spark, table, liveCodebook(spark, table), b)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, s"${table}_dels")
   }
 
   /** Handle between [[compactStage]] and [[compactFinish]] — the
@@ -920,7 +920,7 @@ object VecStore {
         spark.table(s"${table}_dels").inputFiles.toSet
       else Set.empty[String]
     if (delsNow == st.delsSnap)
-      graft.Probes.dropManaged(spark, s"${table}_dels")
+      TableSwap.dropManaged(spark, s"${table}_dels")
   }
 
   /** MIGRATE a store written by an older build to the current layout —
@@ -983,7 +983,7 @@ object VecStore {
     val hasPq = spark.catalog.tableExists(s"${table}_pq")
     val hasCodes = spark.catalog.tableExists(s"${table}_codes")
     if (!hasPq && hasCodes) {
-      graft.Probes.dropManaged(spark, s"${table}_codes")
+      TableSwap.dropManaged(spark, s"${table}_codes")
       actions += "dropped orphaned _codes cache (no _pq codebook serves it)"
     } else if (hasPq) {
       val raw = spark.table(s"${table}_pq")
@@ -1049,7 +1049,7 @@ object VecStore {
       table), tmp, buckets, SaveMode.Overwrite)
     TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
       writeListed(df, table, buckets, SaveMode.Append))
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, s"${table}_dels")
   }
 
   /** Opt an EXISTING populated store into TREE mode in place (r12) —
@@ -1103,8 +1103,8 @@ object VecStore {
       table: String,
       buckets: Int = 16): Seq[String] = {
     if (!spark.catalog.tableExists(s"${table}_tops")) return Seq.empty
-    graft.Probes.dropManaged(spark, s"${table}_tops")
-    graft.Probes.dropManaged(spark, s"${table}_leafmap")
+    TableSwap.dropManaged(spark, s"${table}_tops")
+    TableSwap.dropManaged(spark, s"${table}_leafmap")
     reassignCorpus(spark, table, buckets)
     val actions = scala.collection.mutable.Buffer(
       "dropped the tree quantizer and re-assigned the corpus through " +

@@ -181,7 +181,7 @@ object XrefStore {
         spark.table(s"${table}_dsdels").inputFiles.toSet
       else Set.empty[String]
     if (delsNow == delsSnap && delsNow.nonEmpty)
-      graft.Probes.dropManaged(spark, s"${table}_dsdels")
+      TableSwap.dropManaged(spark, s"${table}_dsdels")
   }
 
   // ---------------------------------------------------------------

@@ -139,8 +139,8 @@ object ZOrderLayout {
 
   /** Per-row-group INT64 min/max stats for `cols`, straight from the
     * parquet footers — the exact metadata a scan's row-group pruning
-    * reads, exposed so layout quality is MEASURABLE (the spec and
-    * ZOrderProbe count "row groups whose box intersects the predicate"
+    * reads, exposed so layout quality is MEASURABLE (the specs
+    * count "row groups whose box intersects the predicate"
     * instead of trusting wall-clock noise).
     */
   def rowGroupStats(

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.TableSwap
+
 /** End-to-end CLI spec: init → ingest (statements + fpx) → stats →
   * query → optimize, mirroring the reference writer's double insert
   * (store.py:54-60) and engine.optimize's full flag.
@@ -10,20 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class CliSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def clean(tables: String*): Unit = tables.foreach { name =>
-    // reclaim any stage sibling first (it may share the live table's
-    // current data directory — see TableSwap.dropAllStages)
-    graft.sources.TableSwap.dropAllStages(spark, name)
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    Option(new java.io.File("/tmp/graft_warehouse").listFiles())
-      .getOrElse(Array.empty)
-      .filter(d => d.getName == name || d.getName.startsWith(name + "_stage_"))
-      .foreach(rm)
-  }
+  private def clean(tables: String*): Unit =
+    tables.foreach(TableSwap.dropManaged(spark, _))
 
   test("cli --version prints the library version (cli.py:14-20)") {
     val out = new java.io.ByteArrayOutputStream()
@@ -87,6 +77,57 @@ class CliSpec extends AnyFunSuite {
     Cli.run(spark, List("init", "cli_spec", "--recreate"))
     assert(spark.table("cli_spec").count() == 0)
     assert(spark.table("cli_spec_fpx").count() == 0)
+  }
+
+  // time-range pruning rests on the footer type: Spark's default INT96
+  // timestamps carry no usable row-group min/max, so a store the CLI
+  // creates must write last_seen as INT64 TIMESTAMP(MICROS) with stats
+  test("cli-created store writes last_seen as INT64 TIMESTAMP(MICROS) with min/max") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    clean("cli_ts", "cli_ts_fpx")
+    val entities = Seq(("p1", "Person", Seq("ds"), Map("name" -> Seq("Ann"))))
+      .toDF("id", "schema", "datasets", "properties")
+    graft.sources.FtmJson.writeEntities(entities, "/tmp/graft_cli_ts_in")
+    Cli.run(spark, List("init", "cli_ts"))
+    Cli.run(spark, List("ingest", "cli_ts", "/tmp/graft_cli_ts_in",
+      "2026-02-01 00:00:00"))
+    val micros = java.time.Instant.parse("2026-02-01T00:00:00Z")
+      .getEpochSecond * 1000000L
+    val files = spark.table("cli_ts").inputFiles.toSeq
+    assert(files.nonEmpty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    files.foreach { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), conf))
+      try {
+        val footer = reader.getFooter
+        val schema = footer.getFileMetaData.getSchema
+        val t = schema.getType(schema.getFieldIndex("last_seen"))
+          .asPrimitiveType
+        assert(t.getPrimitiveTypeName == PrimitiveTypeName.INT64, s"$f: $t")
+        t.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation =>
+            assert(ts.getUnit == TimeUnit.MICROS, s"$f: $t")
+          case other => fail(s"$f: last_seen annotated $other")
+        }
+        val blocks = footer.getBlocks.asScala
+        assert(blocks.nonEmpty)
+        blocks.foreach { b =>
+          val st = b.getColumns.asScala
+            .find(_.getPath.toDotString == "last_seen").get.getStatistics
+          assert(st != null && st.hasNonNullValue, s"$f: no last_seen stats")
+          assert(st.genericGetMin == micros && st.genericGetMax == micros,
+            s"$f: last_seen min/max ${st.genericGetMin}/${st.genericGetMax}")
+        }
+      } finally reader.close()
+    }
   }
 
   // r11: the resolver edit loop — judge folds into the stored mapping
@@ -153,7 +194,7 @@ class CliSpec extends AnyFunSuite {
     import org.apache.spark.sql.SaveMode
     val names = Seq("mig_vecs", "mig_vecs_cents", "mig_vecs_pq",
       "mig_vecs_codes", "mig_vecs_dels")
-    names.foreach(n => Probes.dropManaged(spark, n))
+    names.foreach(n => TableSwap.dropManaged(spark, n))
     val emb = Tables.load(spark, SparkTestSession.sf, "embeddings")
     graft.sources.VecStore.init(spark, "mig_vecs", emb,
       col("label"), buckets = 4)
@@ -168,7 +209,7 @@ class CliSpec extends AnyFunSuite {
           (col("list_id") + lit(1)) % lit(nLists.toInt))
           .otherwise(col("list_id")))
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs")
+    TableSwap.dropManaged(spark, "mig_vecs")
     perturbed.write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("list_id").bucketBy(4, "vec_id").sortBy("vec_id")
       .saveAsTable("mig_vecs")
@@ -176,12 +217,12 @@ class CliSpec extends AnyFunSuite {
     // pre-stamp-scheme on-disk shape
     val legacyCb = spark.table("mig_vecs_pq").drop("cb_hash")
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs_pq")
+    TableSwap.dropManaged(spark, "mig_vecs_pq")
     legacyCb.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable("mig_vecs_pq")
     val legacyCodes = spark.table("mig_vecs_codes").drop("cb_hash")
       .localCheckpoint()
-    Probes.dropManaged(spark, "mig_vecs_codes")
+    TableSwap.dropManaged(spark, "mig_vecs_codes")
     legacyCodes.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable("mig_vecs_codes")
     // the legacy store REFUSES PQ serving (the r11 guard) — migrate is
@@ -230,7 +271,7 @@ class CliSpec extends AnyFunSuite {
   test("cli treeify/untreeify: in-place tree mode round-trip") {
     val names = Seq("tfy_vecs", "tfy_vecs_cents", "tfy_vecs_tops",
       "tfy_vecs_leafmap")
-    names.foreach(n => Probes.dropManaged(spark, n))
+    names.foreach(n => TableSwap.dropManaged(spark, n))
     val emb = Tables.load(spark, SparkTestSession.sf, "embeddings")
     graft.sources.VecStore.init(spark, "tfy_vecs", emb,
       col("label"), buckets = 4)

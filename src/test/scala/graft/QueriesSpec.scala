@@ -4,21 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 
@@ -195,6 +181,25 @@ class QueriesSpec extends AnyFunSuite {
       IntervalJoin.overlap(intervals.withColumn("__rbin", $"s"),
         "s", "e", intervals, "s", "e", "k", 7L)
     }
+    // one hot key over timestamps: views every 60 s open 30-minute
+    // windows, points land every 45 s — each point sits in ~30
+    // overlapping windows, and the binned join must return exactly the
+    // naive equi+range join's pairs
+    import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
+    val hotViews = spark.range(400).select(col("id").as("imp_id"),
+      lit(0L).as("user_id"),
+      timestamp_seconds(col("id") * 60L).as("win_start"),
+      timestamp_seconds(col("id") * 60L + 1800L).as("win_end"))
+    val hotPts = spark.range(400).select(col("id").as("event_id"),
+      lit(0L).as("user_id"), timestamp_seconds(col("id") * 45L).as("ts"))
+    val naive = hotPts.join(hotViews,
+        hotPts("user_id") === hotViews("user_id") &&
+          $"ts" >= $"win_start" && $"ts" < $"win_end")
+      .select($"event_id", $"imp_id").as[(Long, Long)].collect().toSeq.sorted
+    val binned = IntervalJoin.join(hotPts, "ts", hotViews,
+        "win_start", "win_end", "user_id", binWidth = 1800L)
+      .select($"event_id", $"i_imp_id").as[(Long, Long)].collect().toSeq.sorted
+    assert(naive.length > 400 * 20 && binned == naive)
   }
 
   test("overlap join: half-open intersection, bin-width independence, " +

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Statements
 import graft.operators.{Fpx, Xref}
-import graft.sources.{FpxStore, FtmJson, StatementStore, XrefStore}
+import graft.sources.{FpxStore, FtmJson, StatementStore, TableSwap,
+  XrefStore}
 
 /** Specs for the storage layer: bucketed statement store with FINAL
   * semantics (shuffle-free by construction) and FTM JSONL ingest.
@@ -21,7 +22,7 @@ class SourcesSpec extends AnyFunSuite {
     * forgets tables between JVMs but their warehouse dirs persist.
     */
   private def dropTable(name: String): Unit =
-    Probes.dropManaged(spark, name)
+    TableSwap.dropManaged(spark, name)
 
   private def sampleStatements = {
     import spark.implicits._
@@ -629,6 +630,31 @@ class SourcesSpec extends AnyFunSuite {
     assert(DocStore.nearDupCandidates(spark, "doc_spec", newDocs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 10L)))
+    // on the sf corpus, with re-keyed copies as the batch (every batch
+    // doc collides in every band): index-probe candidates ⊆ the full
+    // d3 re-block's stored×batch pairs. The probe bounds DISTINCT
+    // STORED docs per key (≤ 1000) while the re-block bounds the UNION
+    // bucket, which also holds the colliding batch docs — so the
+    // re-block gets that much headroom, or a bucket the probe kept
+    // could drop wholesale from the reference set
+    Seq("doc_spec_sf", "doc_spec_sf_bands").foreach(dropTable)
+    val corpus = Tables.load(spark, sf, "documents")
+      .select(col("doc_id"), col("text"), col("source"))
+    DocStore.append(corpus, "doc_spec_sf", buckets = 4)
+    val maxId = corpus.agg(max(col("doc_id"))).head().getLong(0)
+    val nBatch = 100
+    val batch = corpus.filter(col("doc_id") < nBatch)
+      .withColumn("doc_id", col("doc_id") + lit(maxId + 1))
+    val probed = DocStore.nearDupCandidates(spark, "doc_spec_sf", batch)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val crossPairs = graft.operators.Dedup
+      .minhashLsh(corpus.unionByName(batch), maxBucket = 1000 + nBatch)
+      .filter(col("right_id") > maxId && col("left_id") <= maxId)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(probed.exists { case (s, b) => b == s + maxId + 1 },
+      "re-keyed copies must find their stored twins")
+    assert(probed.subsetOf(crossPairs),
+      s"probe pairs not in the full re-block: ${probed -- crossPairs}")
   }
 
   // r13: the incremental face of exact-substring dedup (d14). The
@@ -887,7 +913,8 @@ class SourcesSpec extends AnyFunSuite {
   test("crash between inserts: every store fails loud, lands its documented side, repairs on re-delivery") {
     import spark.implicits._
     import graft.sources.{DocStore, VecStore}
-    val wh = new java.io.File("/tmp/graft_warehouse")
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
 
     // --- DocStore: INDEX first. Orphan index rows are the loud
     // direction (candidates referencing absent docs die at text

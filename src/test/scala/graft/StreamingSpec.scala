@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.XrefStore
+import graft.sources.{TableSwap, XrefStore}
 import graft.streaming.Streams
 
 /** Structured-Streaming specs (SURVEY.md §2 st-block) driven through
@@ -18,6 +18,12 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2026-01-01 10:$minute%02d:00")
+
+  /** A fresh streaming checkpoint location under the session's
+    * warehouse (the same root TableSwap.dropManaged cleans).
+    */
+  private def checkpointDir(prefix: String): String =
+    s"${spark.conf.get("spark.sql.warehouse.dir")}/${prefix}_${System.nanoTime()}"
 
   test("st1 windowed counts aggregate by tumbling event-time window") {
     import spark.implicits._
@@ -85,19 +91,14 @@ class StreamingSpec extends AnyFunSuite {
   test("st5 streaming statement ingest lands in a table; FINAL dedups at read") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    spark.sql("DROP TABLE IF EXISTS st5_stmts")
-    val dir = new java.io.File("/tmp/graft_warehouse/st5_stmts")
-    if (dir.exists()) { dir.listFiles().foreach { f =>
-      if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete() }
-      dir.delete() }
+    TableSwap.dropManaged(spark, "st5_stmts")
     // (id, entity_id, canonical_id, prop, prop_type, schema, value, dataset, last_seen)
     val in = MemoryStream[(String, String, String, String, String, String,
       String, String, Timestamp)]
     val df = in.toDF().toDF("id", "entity_id", "canonical_id", "prop",
       "prop_type", "schema", "value", "dataset", "last_seen")
     val q = Streams.statementFileIngest(df)
-      .option("checkpointLocation", "/tmp/graft_warehouse/st5_ckpt_" +
-        System.nanoTime())
+      .option("checkpointLocation", checkpointDir("st5_ckpt"))
       .toTable("st5_stmts")
     try {
       in.addData(
@@ -177,13 +178,7 @@ class StreamingSpec extends AnyFunSuite {
   test("st8 streaming ingest double-inserts statements + fpx per batch") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    for (t <- Seq("st8_stmts", "st8_stmts_fpx")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (dir.exists()) { dir.listFiles().foreach { f =>
-        if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete() }
-        dir.delete() }
-    }
+    for (t <- Seq("st8_stmts", "st8_stmts_fpx")) TableSwap.dropManaged(spark, t)
     // (id, entity_id, canonical_id, prop, prop_type, schema, value, last_seen, dataset)
     val in = MemoryStream[(String, String, String, String, String, String,
       String, Timestamp, String)]
@@ -191,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
       "prop_type", "schema", "value", "last_seen", "dataset")
     val q = Streams.ingestStatements(df, "st8_stmts")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st8_ckpt_" + System.nanoTime())
+        checkpointDir("st8_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(
@@ -223,19 +218,13 @@ class StreamingSpec extends AnyFunSuite {
   test("st9 streaming xref ingest maintains main + reverse projection") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    for (t <- Seq("st9_xref", "st9_xref_reverse")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (dir.exists()) { dir.listFiles().foreach { f =>
-        if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete() }
-        dir.delete() }
-    }
+    for (t <- Seq("st9_xref", "st9_xref_reverse")) TableSwap.dropManaged(spark, t)
     val in = MemoryStream[(String, String, String, String, String, String,
       String, String, String, String, String, Double, Timestamp, String)]
     val df = in.toDF().toDF(graft.operators.Xref.columns: _*)
     val q = Streams.ingestXref(df, "st9_xref")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st9_ckpt_" + System.nanoTime())
+        checkpointDir("st9_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(
@@ -270,7 +259,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st15_xref", "st15_xref_reverse", "st15_xref_mapping"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     def pair(l: String, r: String, j: String, t: Int) =
       ("ds", l, "P", "de", l.toUpperCase, "ds", r, "P", "de",
         r.toUpperCase, j, 0.9, ts(t), "u")
@@ -293,7 +282,7 @@ class StreamingSpec extends AnyFunSuite {
     val df = in.toDF().toDF(graft.operators.Xref.columns: _*)
     val q = Streams.ingestXrefResolved(df, "st15_xref")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st15_ckpt_" + System.nanoTime())
+        checkpointDir("st15_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // batch 0: two disjoint components (first write = full mapping)
@@ -485,19 +474,13 @@ class StreamingSpec extends AnyFunSuite {
   test("st13 streaming doc ingest double-inserts docs + band index per batch") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    for (t <- Seq("st13_docs", "st13_docs_bands")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(s"/tmp/graft_warehouse/$t")
-      if (dir.exists()) { dir.listFiles().foreach { f =>
-        if (f.isDirectory) f.listFiles().foreach(_.delete()); f.delete() }
-        dir.delete() }
-    }
+    for (t <- Seq("st13_docs", "st13_docs_bands")) TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val in = MemoryStream[(Long, String, String)]
     val q = Streams.ingestDocs(
       in.toDF().toDF("doc_id", "text", "source"), "st13_docs")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st13_ckpt_" + System.nanoTime())
+        checkpointDir("st13_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData((1L, textA, "s"),
@@ -522,7 +505,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st13b_docs", "st13b_docs_bands"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val in = MemoryStream[(Long, String, String)]
@@ -530,7 +513,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("doc_id", "text", "source"), "st13b_docs",
       compactEvery = 2)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st13b_ckpt_" + System.nanoTime())
+        checkpointDir("st13b_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // batch 0: two docs; no cadence tick yet → raw keeps both rows
@@ -654,7 +637,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st13c_docs", "st13c_docs_bands"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val in = MemoryStream[(Long, String, String)]
@@ -662,7 +645,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("doc_id", "text", "source"), "st13c_docs",
       compactEvery = 2, asyncCompact = true)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st13c_ckpt_" + System.nanoTime())
+        checkpointDir("st13c_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData((1L, textA, "s"), (2L, textB, "s"))
@@ -728,7 +711,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14c_vecs", "st14c_vecs_cents", "st14c_vecs_pq",
         "st14c_vecs_codes"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -746,7 +729,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("vec_id", "embedding"), "st14c_vecs",
       compactEvery = 2, buckets = 4, asyncCompact = true)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st14c_ckpt_" + System.nanoTime())
+        checkpointDir("st14c_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(rows.take(half).toIndexedSeq: _*)
@@ -804,7 +787,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit}
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14_vecs", "st14_vecs_cents"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -821,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("vec_id", "embedding"), "st14_vecs",
       compactEvery = 2, buckets = 4)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st14_ckpt_" + System.nanoTime())
+        checkpointDir("st14_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(rows.toIndexedSeq: _*)
@@ -858,7 +841,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14t_vecs", "st14t_vecs_cents", "st14t_vecs_tops",
         "st14t_vecs_leafmap"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     val batchSide = emb.filter(col("vec_id") % 10 === 0)
@@ -874,7 +857,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("vec_id", "embedding"), "st14t_vecs",
       compactEvery = 0, buckets = 4)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st14t_ckpt_" + System.nanoTime())
+        checkpointDir("st14t_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(rows.toIndexedSeq: _*)
@@ -912,7 +895,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     for (t <- Seq("st16_docs", "st16_docs_bands", "st16_docs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val textA = "the quick brown fox jumps over the lazy dog again today"
     val textB = "completely different content with no shared phrases here"
     val textC = "a third unrelated document about entirely other things"
@@ -939,7 +922,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streams.takedownDocs(
       in.toDF().toDF("doc_id"), "st16_docs", compactEvery = 2)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st16_ckpt_" + System.nanoTime())
+        checkpointDir("st16_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // batch 0: the pop request lands; no cadence tick yet — the doc
@@ -978,7 +961,7 @@ class StreamingSpec extends AnyFunSuite {
     val q2 = Streams.takedownDocs(
       in2.toDF().toDF("doc_id"), "st16_docs")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st16_ckpt2_" + System.nanoTime())
+        checkpointDir("st16_ckpt2"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in2.addData(1L)
@@ -1003,7 +986,7 @@ class StreamingSpec extends AnyFunSuite {
     for (t <- Seq("st16b_sk", "st16b_sk_dels", "st16b_xref",
         "st16b_xref_reverse", "st16b_xref_mapping", "st16b_xref_dsdels",
         "st16b_tk", "st16b_tk_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val k = 64
     graft.sources.SketchStore.applyBatch(spark, Seq(
       (1L, "alpha beta gamma delta epsilon zeta", "keep"),
@@ -1052,7 +1035,7 @@ class StreamingSpec extends AnyFunSuite {
       topkTable = Some("st16b_tk"),
       k = k, topkCapacity = 64, compactEvery = 2)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st16b_ckpt_" + System.nanoTime())
+        checkpointDir("st16b_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // batch 0: tombstones only — estimates and judgement faces
@@ -1100,7 +1083,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st16_vecs", "st16_vecs_cents", "st16_vecs_pq",
         "st16_vecs_codes", "st16_vecs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     graft.sources.VecStore.init(spark, "st16_vecs", emb,
       col("label"), buckets = 4)
@@ -1131,7 +1114,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streams.takedownVecs(
       in.toDF().toDF("vec_id"), "st16_vecs", buckets = 4)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st16v_ckpt_" + System.nanoTime())
+        checkpointDir("st16v_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       in.addData(victim)
@@ -1162,7 +1145,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     for (t <- Seq("st14b_vecs", "st14b_vecs_cents", "st14b_vecs_pq",
         "st14b_vecs_codes", "st14b_vecs_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
     val emb = Tables.load(spark, sf, "embeddings")
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     graft.sources.VecStore.init(spark, "st14b_vecs", storedSide,
@@ -1200,7 +1183,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("vec_id", "embedding"), "st14b_vecs",
       buckets = 4, retrainEvery = 1)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st14b_ckpt_" + System.nanoTime())
+        checkpointDir("st14b_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
     try {
       // batch 0 calibrates the baseline; batch 1 is jitter at the
@@ -1380,7 +1363,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sq = spark.sqlContext
     val table = "st18_sketch"
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    graft.Probes.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, table)
     val k = 1024
     // deterministic doc maker: source s contributes distinct shingles
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
@@ -1403,7 +1386,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streams.sketchCardinality(
       in.toDF().toDF("doc_id", "text", "source"), table, k, compactEvery = 3)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st18_ckpt_" + System.nanoTime())
+        checkpointDir("st18_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
       // batch 0: two sources; under k → estimates are EXACT
@@ -1443,7 +1426,7 @@ class StreamingSpec extends AnyFunSuite {
     // treat compact as a no-op, not NPE on the null max(ver)
     val empty = "st18_empty_sketch"
     spark.sql(s"DROP TABLE IF EXISTS $empty")
-    graft.Probes.dropManaged(spark, empty)
+    TableSwap.dropManaged(spark, empty)
     graft.sources.SketchStore.applyBatch(spark,
       Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source"),
       empty, k, batchId = 0L)
@@ -1468,7 +1451,7 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.outputMode("append").format("memory")
       .queryName("st21_out")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st21_ckpt_" + System.nanoTime())
+        checkpointDir("st21_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     // finalized is monotone by construction and provisional only grows
@@ -1551,7 +1534,7 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.outputMode("append").format("memory")
       .queryName("st24_out")
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st24_ckpt_" + System.nanoTime())
+        checkpointDir("st24_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     def served(): Map[Long, (Long, Long, Long)] =
@@ -1606,8 +1589,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st20_topk"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val cap = 64 // far above the test vocabulary → exact regime
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
     def doc(id: Long, s: String, text: String): (Long, String, String) = {
@@ -1631,7 +1614,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("doc_id", "text", "source"), table, cap,
       compactEvery = 3)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st20_ckpt_" + System.nanoTime())
+        checkpointDir("st20_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
       in.addData(
@@ -1681,8 +1664,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st23_bm"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     def e(t: String, u: Long): (String, Long) = { seen += ((t, u)); (t, u) }
     val popped = scala.collection.mutable.Set.empty[Long]
@@ -1700,7 +1683,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streams.audienceTelemetry(
       in.toDF().toDF("event_type", "user_id"), table, compactEvery = 3)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st23_ckpt_" + System.nanoTime())
+        checkpointDir("st23_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
       in.addData(e("view", 1L), e("view", 2L), e("click", 2L))
@@ -1742,8 +1725,8 @@ class StreamingSpec extends AnyFunSuite {
     val table = "st22_kll"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS ${table}_dels")
-    graft.Probes.dropManaged(spark, table)
-    graft.Probes.dropManaged(spark, s"${table}_dels")
+    TableSwap.dropManaged(spark, table)
+    TableSwap.dropManaged(spark, s"${table}_dels")
     val k = 64 // far above the test doc counts → exact regime
     val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
     def doc(id: Long, s: String, text: String): (Long, String, String) = {
@@ -1768,7 +1751,7 @@ class StreamingSpec extends AnyFunSuite {
       in.toDF().toDF("doc_id", "text", "source"), table, k,
       compactEvery = 3)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st22_ckpt_" + System.nanoTime())
+        checkpointDir("st22_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)).start()
     try {
       in.addData(
@@ -1826,7 +1809,7 @@ class StreamingSpec extends AnyFunSuite {
     Seq(table, s"${table}_dels", s"${table}_ranks",
       s"${table}_communities", s"${table}_cohesion", s"${table}_kcore",
       s"${table}_support")
-      .foreach(graft.Probes.dropManaged(spark, _))
+      .foreach(TableSwap.dropManaged(spark, _))
     def served(): Map[String, Long] =
       GraphStore.ranks(spark, table).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1837,7 +1820,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streams.graphTelemetry(in.toDF().toDF("src", "dst"), table,
       refreshEvery = 2, minSupport = 1L, kcoreK = 2L)
       .option("checkpointLocation",
-        "/tmp/graft_warehouse/st25_ckpt_" + System.nanoTime())
+        checkpointDir("st25_ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
       .start()
     try {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Similarity}
-import graft.sources.VecStore
+import graft.sources.{TableSwap, VecStore}
 
 /** Specs for the vector store (the embedding-side incremental dedup
   * index): assignment parity with the exchange-based argmax, probe
@@ -18,7 +18,7 @@ class VecStoreSpec extends AnyFunSuite {
     for (t <- Seq(name, s"${name}_cents", s"${name}_tops",
         s"${name}_leafmap", s"${name}_pq",
         s"${name}_codes", s"${name}_dels"))
-      Probes.dropManaged(spark, t)
+      TableSwap.dropManaged(spark, t)
 
   private lazy val emb = Tables.load(spark, sf, "embeddings")
   private lazy val stored = emb.filter(col("vec_id") % 10 =!= 0)
@@ -475,7 +475,7 @@ class VecStoreSpec extends AnyFunSuite {
     dropStore("vec_nocodes")
     VecStore.init(spark, "vec_nocodes", stored, col("label"), buckets = 4)
     VecStore.trainPqCodebook(spark, "vec_nocodes", buckets = 4)
-    Probes.dropManaged(spark, "vec_nocodes_codes")
+    TableSwap.dropManaged(spark, "vec_nocodes_codes")
     val e = intercept[IllegalArgumentException] {
       VecStore.append(spark,
         batch.select(col("vec_id"), col("embedding")), "vec_nocodes",
