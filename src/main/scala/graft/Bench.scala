@@ -94,10 +94,15 @@ object Bench {
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(""""failed":[""", ",", "],")
+    // the configuration that took effect, so a scaling check can see
+    // that SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE_PARTITIONS applied
+    val configJson =
+      s""""cores":${spark.sparkContext.defaultParallelism},""" +
+        s""""shuffle_partitions":"${spark.conf.get("spark.sql.shuffle.partitions")}","""
     // Full-precision record (medians + mins + protocol) — file + an
     // early stdout line for humans reading the build log.
     val detail = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      failedJson +
+      failedJson + configJson +
       s""""protocol":"median_of_${passes}_interleaved",""" +
       s""""queries":${jsonMap(med, full)},""" +
       s""""queries_min":${jsonMap(mins, full)},""" +
@@ -149,7 +154,7 @@ object Bench {
     def msInt(v: Double): String = math.round(v * 1000).toString
     val shortMed = med.map { case (n, v) => shortOf(n) -> v }
     val harness = s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
-      failedJson +
+      failedJson + configJson +
       s""""qunit":"ms","queries":${jsonMap(shortMed, msInt)},"sf":"$sfDir"}"""
     val guarded =
       if (harness.length <= 1800) harness
@@ -157,7 +162,7 @@ object Bench {
         System.err.println(s"BENCH LINE ${harness.length}B > 1800B budget; " +
           "dropping per-query map from the harness line (see BENCH_LAST.json)")
         s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
-          failedJson + s""""queries":{},"sf":"$sfDir"}"""
+          failedJson + configJson + s""""queries":{},"sf":"$sfDir"}"""
       }
     println(guarded)
   }

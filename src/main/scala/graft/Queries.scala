@@ -1406,32 +1406,23 @@ object Queries {
     * count tables join back at pair grain (both sides node-grain —
     * nothing broadcast except the 1-row basket total).
     */
-  // f27's PREVIOUS items-checkpoint blocks — released when the query
-  // is built again (single-generation contract, the Triangles.perNode
-  // discipline): a bench loop that constructs f27 per pass holds one
-  // items generation, not the session's history. Consume each f27
-  // frame before building the next one.
-  private var f27ItemsBlocks: Set[Int] = Set.empty
+  // f27's items checkpoint, one generation: released when the query is
+  // built again. Consume each f27 frame before building the next one.
+  private val f27Items = new graft.operators.Fixpoint.Slots
 
-  def f27CooccurrencePmi(s: SparkSession, dir: String): DataFrame =
-      synchronized {
+  def f27CooccurrencePmi(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.operators.Components.{checkpointDiff, release}
     def nanobits(c: Column): Column = round(log(2.0, c) * 1e9).cast("long")
-    release(s.sparkContext, f27ItemsBlocks)
     // items feeds THREE branches (pair self-join twice, item counts)
     // — materialized once via localCheckpoint (the f26/f20b
     // discipline; EAGER — the Dataset default — and SERIALIZED, so
     // the resident footprint is the compact form and the returned
     // frame's three branches read blocks instead of re-running the
     // distinct)
-    val (items, iBlocks) = checkpointDiff(s.sparkContext) {
-      t(s, dir, "lineitem")
-        .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
-    f27ItemsBlocks = iBlocks
+    val items = f27Items.hold("items", t(s, dir, "lineitem")
+      .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
+      .localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val n = items.select($"o").distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val ca = items.groupBy($"p").agg(count(lit(1)).as("c"))
@@ -1549,17 +1540,14 @@ object Queries {
     // derivation at sf0.1); released as soon as LabelProp returns (its
     // result is eagerly materialized — nothing downstream reads kept
     // again)
-    import graft.operators.Components.{checkpointDiff, release}
-    val (kept, keptBlocks) = checkpointDiff(s.sparkContext) {
-      graft.operators.Triangles.perEdge(edges)
-        .filter($"support" >= 2)
-        .select(skey($"a").as("src"), skey($"b").as("dst"))
-        .localCheckpoint()
-    }
+    val kept = graft.operators.Triangles.perEdge(edges)
+      .filter($"support" >= 2)
+      .select(skey($"a").as("src"), skey($"b").as("dst"))
+      .localCheckpoint()
     val out = graft.operators.LabelProp.minLabelRounds(kept, rounds = 10)
       .select(sdecode($"node").as("entity_id"),
         sdecode($"label").as("community"))
-    release(s.sparkContext, keptBlocks)
+    graft.operators.Fixpoint.release(kept)
     out
   }
 

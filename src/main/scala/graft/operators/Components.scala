@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,31 +24,6 @@ import org.apache.spark.sql.functions._
   *     grows with history length.
   */
 object Components {
-
-  /** Diff-based tracking of the block-manager ids a round's
-    * localCheckpoint pins, so superseded rounds can be dropped —
-    * otherwise every iteration's snapshot stays cached for the app's
-    * lifetime.
-    *
-    * SINGLE-WRITER ASSUMPTION: the ids are identified by diffing the
-    * GLOBAL `sc.getPersistentRDDs` key set around `body`; any RDD
-    * persisted concurrently by another thread sharing this
-    * SparkContext during that window would be attributed to this loop
-    * and unpersisted from under its owner. Fine for batch pipelines
-    * and the bench (one driver thread); a multi-tenant driver should
-    * serialize component runs or accept recomputation of the victim's
-    * cache.
-    */
-  private[graft] def checkpointDiff[A](sc: SparkContext)(body: => A)
-      : (A, Set[Int]) = {
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val r = body
-    (r, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private[graft] def release(sc: SparkContext, blocks: Set[Int]): Unit =
-    blocks.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
 
   /** `spark.sql.shuffle.partitions` as an Int — the session scale knob
     * the explicit repartitions read (Fpx.expandSortedSets, LabelProp's
@@ -78,65 +52,46 @@ object Components {
     * explicitly rather than get a wrong answer quietly.
     */
   def minLabel(edges0: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    val und = edges0.select(col("src"), col("dst"))
-    val (edges, edgeBlocks) = checkpointDiff(sc) {
-      und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint()
-    }
-    var (labels, labelBlocks) = checkpointDiff(sc) {
-      edges.groupBy(col("src")).agg(
-          least(col("src"), min(col("dst"))).as("label"))
-        .select(col("src").as("id"), col("label"))
-        .localCheckpoint()
-    }
+    val edges = symmetrized(edges0)
+    val labels0 = edges.groupBy(col("src")).agg(
+        least(col("src"), min(col("dst"))).as("label"))
+      .select(col("src").as("id"), col("label"))
+      .localCheckpoint()
     var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbr = edges
-        .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        .select(col("src").as("id"), col("nlabel"))
-      // ONE driver action per round (r16): a LAZY checkpoint whose
-      // materializing action IS the convergence count. The persist
-      // hooks the RDD iterator below Catalyst, so whatever query runs
-      // on top, the blocks cache the checkpoint RDD's FULL rows — the
-      // count's plan-level pruning cannot reach inside the RDD
-      // boundary — and the count visits every partition, so the whole
-      // snapshot is materialized in the same job (the old form paid a
-      // checkpoint job PLUS a count job per round).
-      val (updated, newBlocks) = checkpointDiff(sc) {
+    // the final labels checkpoint is materialized, so it no longer
+    // reads edges (or labels0): both are released however the loop ends
+    val out = try Fixpoint.iterate(labels0, maxIter, until = Some {
+        (updated: DataFrame, _: Int) =>
+          changed = updated.filter(col("__chg")).count()
+          changed == 0
+      }) { (labels, _) =>
+        val nbr = edges
+          .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+          .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
+          .select(col("src").as("id"), col("nlabel"))
         labels.join(nbr, Seq("id"), "left")
           .select(col("id"),
             least(col("label"), coalesce(col("nlabel"), col("label")))
               .as("label"),
             (col("nlabel") < col("label")).as("__chg"))
-          .localCheckpoint(false)
       }
-      changed = updated.filter(col("__chg")).count()
-      // previous round's checkpoint is superseded — release its blocks
-      release(sc, labelBlocks)
-      labelBlocks = newBlocks
-      labels = updated.drop("__chg")
-      iter += 1
-    }
-    if (changed > 0) {
-      // release the loop's pinned blocks BEFORE failing — the throw
-      // must not leak the final label snapshot + edge set into the
-      // block manager for the app's lifetime
-      release(sc, labelBlocks)
-      release(sc, edgeBlocks)
-      throw new IllegalStateException(
-        s"Components.minLabel did not converge in $maxIter rounds " +
-          s"($changed labels still changing); component diameter exceeds " +
-          "maxIter — use minLabelStars (O(log n) rounds) or raise it " +
-          "(labels would be silently wrong)")
-    }
-    // the final labels checkpoint is eager, so it no longer reads edges
-    release(sc, edgeBlocks)
-    labels
+      finally { Fixpoint.release(labels0); Fixpoint.release(edges) }
+    out.map(_.drop("__chg")).getOrElse(throw new IllegalStateException(
+      s"Components.minLabel did not converge in $maxIter rounds " +
+        s"($changed labels still changing); component diameter exceeds " +
+        "maxIter — use minLabelStars (O(log n) rounds) or raise it " +
+        "(labels would be silently wrong)"))
+  }
+
+  /** Symmetrize + dedup + eagerly checkpoint a (src, dst) edge list;
+    * the caller owns (and [[Fixpoint.release]]s) the returned frame.
+    */
+  private[operators] def symmetrized(edges0: DataFrame): DataFrame = {
+    val und = edges0.select(col("src"), col("dst"))
+    und
+      .union(und.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .localCheckpoint()
   }
 
   /** Same contract as [[minLabel]], via alternating
@@ -159,16 +114,9 @@ object Components {
     * loud-failure contract as [[minLabel]].
     */
   def minLabelStars(edges0: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    val und = edges0.select(col("src"), col("dst"))
     // symmetric original edges: the vertex universe (self-loops keep a
     // vertex alive even with no real neighbors) and the final validator
-    val (orig, origBlocks) = checkpointDiff(sc) {
-      und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint()
-    }
+    val orig = symmetrized(edges0)
 
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -200,61 +148,42 @@ object Components {
       (r.getLong(0), r.getDecimal(1))
     }
 
-    var (e, eBlocks) = checkpointDiff(sc) {
-      orig.filter(col("src") =!= col("dst")).localCheckpoint(false)
-    }
-    var sig = signature(e)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // lazy checkpoint + the signature aggregate as its materializing
-      // action: one driver action per round instead of two (the
-      // minLabel rationale above — the RDD-level persist caches full
-      // rows regardless of what the signature's plan prunes)
-      val (next, newBlocks) = checkpointDiff(sc) {
-        smallStar(largeStar(e)).localCheckpoint(false)
-      }
-      val nextSig = signature(next)
-      release(sc, eBlocks)
-      eBlocks = newBlocks
-      e = next
-      converged = nextSig == sig
-      sig = nextSig
-      iter += 1
-    }
-    if (!converged) {
-      release(sc, eBlocks)
-      release(sc, origBlocks)
-      throw new IllegalStateException(
-        s"Components.minLabelStars did not converge in $maxIter rounds — " +
-          "raise maxIter (labels would be silently wrong)")
-    }
-    // at the fixed point every edge points (vertex → component min):
-    // vertices absent as src are roots (or isolated) and label themselves
-    val pointed = e.groupBy(col("src")).agg(min(col("dst")).as("label"))
-      .select(col("src").as("id"), col("label"))
-    val labels = orig.select(col("src").as("id")).distinct()
-      .join(pointed, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    // exact validation against the original edges: a signature
-    // collision (or a bug) cannot survive this — fail loud like
-    // minLabel's non-convergence throw
-    val lSrc = labels.select(col("id").as("src"), col("label").as("__ls"))
-    val lDst = labels.select(col("id").as("dst"), col("label").as("__ld"))
-    val bad = orig.join(lSrc, Seq("src")).join(lDst, Seq("dst"))
-      .filter(col("__ls") =!= col("__ld")).count()
-    if (bad > 0) {
-      release(sc, eBlocks)
-      release(sc, origBlocks)
-      throw new IllegalStateException(
-        s"Components.minLabelStars produced a split component " +
-          s"($bad edges cross labels) — fixed-point signature collided")
-    }
-    // eager checkpoint of the result, then release the loop's blocks
-    // (the result's own blocks stay pinned — they ARE the answer)
-    val out = labels.localCheckpoint()
-    release(sc, eBlocks)
-    release(sc, origBlocks)
-    out
+    val e0 = orig.filter(col("src") =!= col("dst")).localCheckpoint(false)
+    try {
+      var sig = signature(e0)
+      // the signature aggregate is each round's materializing action
+      val e = Fixpoint.iterate(e0, maxIter, until = Some {
+          (next: DataFrame, _: Int) =>
+            val nextSig = signature(next)
+            val same = nextSig == sig
+            sig = nextSig
+            same
+        })((cur, _) => smallStar(largeStar(cur)))
+        .getOrElse(throw new IllegalStateException(
+          s"Components.minLabelStars did not converge in $maxIter rounds — " +
+            "raise maxIter (labels would be silently wrong)"))
+      try {
+        // at the fixed point every edge points (vertex → component
+        // min): vertices absent as src are roots (or isolated) and
+        // label themselves
+        val pointed = e.groupBy(col("src")).agg(min(col("dst")).as("label"))
+          .select(col("src").as("id"), col("label"))
+        val labels = orig.select(col("src").as("id")).distinct()
+          .join(pointed, Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+        // exact validation against the original edges: a signature
+        // collision (or a bug) cannot survive this — fail loud like
+        // minLabel's non-convergence throw
+        val lSrc = labels.select(col("id").as("src"), col("label").as("__ls"))
+        val lDst = labels.select(col("id").as("dst"), col("label").as("__ld"))
+        val bad = orig.join(lSrc, Seq("src")).join(lDst, Seq("dst"))
+          .filter(col("__ls") =!= col("__ld")).count()
+        if (bad > 0) throw new IllegalStateException(
+          s"Components.minLabelStars produced a split component " +
+            s"($bad edges cross labels) — fixed-point signature collided")
+        // the result's own checkpoint stays pinned — it IS the answer
+        labels.localCheckpoint()
+      } finally Fixpoint.release(e)
+    } finally { Fixpoint.release(e0); Fixpoint.release(orig) }
   }
 }

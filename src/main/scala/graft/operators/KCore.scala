@@ -22,8 +22,8 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: per round ONE node-grain degree aggregate (map-side
   * combined) and TWO semi-joins of the edge set against the node-
   * grain survivor table — the f25/f28 round shape; nothing broadcast,
-  * rounds lineage-broken with eager localCheckpoints and superseded
-  * snapshots released (the Components discipline).
+  * each round a lazy checkpoint materialized by its surviving-edge
+  * count, superseded snapshots released ([[Fixpoint.iterate]]).
   */
 object KCore {
 
@@ -35,64 +35,53 @@ object KCore {
       edges: DataFrame, k: Long, rounds: Int,
       src: String = "src", dst: String = "dst"): DataFrame = {
     require(rounds >= 1, s"kcore: rounds must be >= 1, got $rounds")
-    val sc = edges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
     val ser = StorageLevel.MEMORY_AND_DISK_SER
-    var (e, eBlocks) = checkpointDiff(sc) {
-      edges
-        .select(least(col(src), col(dst)).as("a"),
-          greatest(col(src), col(dst)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(true, ser)
-    }
+    val e0 = edges
+      .select(least(col(src), col(dst)).as("a"),
+        greatest(col(src), col(dst)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint(true, ser)
     // explode instead of unionAll: one scan of the serialized edge
     // checkpoint per degree pass instead of two (r15 — the Triangles
     // census rationale; this runs EVERY peel round)
     def degrees(ed: DataFrame): DataFrame =
       ed.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("d"))
-    var i = 0
-    var nEdges = e.count() // cached blocks — an O(partitions) read
-    while (i < rounds) {
-      // lazy checkpoint + the surviving-edge count as its materializing
-      // action: one driver action per peel round instead of two (the
-      // Components.minLabel rationale — the RDD-level persist caches
-      // full rows whatever the count's plan prunes)
-      val (next, nBlocks) = checkpointDiff(sc) {
-        val keep = degrees(e).filter(col("d") >= k).select(col("node"))
-        e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-          .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-          .select(col("a"), col("b"))
-          .localCheckpoint(false, ser)
-      }
-      val nNext = next.count()
-      release(sc, eBlocks)
-      e = next
-      eBlocks = nBlocks
-      i += 1
-      // EARLY FIXPOINT EXIT — semantics-preserving, not a shortcut:
-      // peeling only ever removes edges, so an unchanged edge count
-      // means no node fell below k and every further round is the
-      // identity; the remaining rounds the oracle still runs are
-      // no-ops on its side too, so the gate is untouched. This is
+    try {
+      var nEdges = e0.count() // cached blocks — an O(partitions) read
+      // the surviving-edge count is each peel round's materializing
+      // action. EARLY FIXPOINT EXIT — semantics-preserving, not a
+      // shortcut: peeling only ever removes edges, so an unchanged
+      // edge count means no node fell below k and every further round
+      // is the identity; the remaining rounds the oracle still runs
+      // are no-ops on its side too, so the gate is untouched. This is
       // what makes the fixed-round contract affordable at scale — the
       // cascade depth, not the round budget, prices the query.
-      if (nNext == nEdges) i = rounds
-      nEdges = nNext
-    }
-    val (out, _) = checkpointDiff(sc) {
-      degrees(e).select(col("node"), col("d")).localCheckpoint()
-    }
-    release(sc, eBlocks)
-    out
+      def peeled(next: DataFrame, i: Int): Boolean = {
+        val nNext = next.count()
+        val same = nNext == nEdges
+        nEdges = nNext
+        same || i == rounds
+      }
+      val e = Fixpoint.iterate(e0, rounds, level = ser,
+          until = Some(peeled _)) { (cur, _) =>
+          val keep = degrees(cur).filter(col("d") >= k).select(col("node"))
+          cur.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
+            .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
+            .select(col("a"), col("b"))
+        }.get // the check holds at round `rounds`
+      try degrees(e).select(col("node"), col("d")).localCheckpoint()
+      finally Fixpoint.release(e)
+    } finally Fixpoint.release(e0)
   }
 
   /** EXACT incremental k-core for an APPEND-ONLY edge batch — the tick
     * twin of [[membership]], the census `perEdgeDeltaDiff` discipline
-    * at node grain. Returns `(newCore, checkpointBlocks)`; the caller
-    * OWNS the result's checkpoint blocks (the per-face generation rule:
-    * a store tick must never release an interactive query's frame).
+    * at node grain. The caller OWNS the returned checkpointed frame and
+    * [[Fixpoint.release]]s it once consumed (the per-face generation
+    * rule: a store tick must never release an interactive query's
+    * frame).
     *
     * Why a delta is exact here: edge INSERTION is monotone for a fixed
     * k — the k-core only grows, so every old member stays a member —
@@ -133,11 +122,9 @@ object KCore {
   def membershipDeltaDiff(
       oldEdges: DataFrame, oldCore: DataFrame, newEdges: DataFrame,
       k: Long, fallbackRounds: Int = 64, maxRegion: Long = 2000000L,
-      src: String = "src", dst: String = "dst"): (DataFrame, Set[Int]) = {
+      src: String = "src", dst: String = "dst"): DataFrame = {
     require(k >= 1, s"kcore delta: k must be >= 1, got $k")
-    val spark = oldEdges.sparkSession
-    val sc = spark.sparkContext
-    import Components.{checkpointDiff, release}
+    import Fixpoint.release
     val ser = StorageLevel.MEMORY_AND_DISK_SER
     def canon(df: DataFrame, s: String, d: String) = df
       .select(least(col(s), col(d)).as("a"),
@@ -147,130 +134,107 @@ object KCore {
     // fold): an edge is new iff NO old row produced it, so replayed
     // batches are structurally absorbed. Consumed by the degree
     // aggregate, every BFS scan and the region edge extraction.
-    val (all, allBlocks) = checkpointDiff(sc) {
-      canon(oldEdges, src, dst).withColumn("is_new", lit(false))
-        .unionAll(canon(newEdges, src, dst).withColumn("is_new", lit(true)))
-        .groupBy("a", "b").agg(bool_and(col("is_new")).as("is_new"))
-        .localCheckpoint(true, ser)
-    }
-    def fullPeel(): (DataFrame, Set[Int]) = {
-      val (out, outBlocks) = checkpointDiff(sc) {
-        membership(all.select(col("a"), col("b")), k, fallbackRounds,
-          "a", "b")
-      }
-      release(sc, allBlocks)
-      (out, outBlocks)
+    val all = canon(oldEdges, src, dst).withColumn("is_new", lit(false))
+      .unionAll(canon(newEdges, src, dst).withColumn("is_new", lit(true)))
+      .groupBy("a", "b").agg(bool_and(col("is_new")).as("is_new"))
+      .localCheckpoint(true, ser)
+    def fullPeel(): DataFrame = {
+      val out = membership(all.select(col("a"), col("b")), k, fallbackRounds,
+        "a", "b")
+      release(all)
+      out
     }
     val delta = all.filter(col("is_new")).select(col("a"), col("b"))
     val deltaNodes = delta.select(col("a").as("node"))
       .unionAll(delta.select(col("b").as("node"))).distinct()
     if (deltaNodes.isEmpty) { // pure replay: edge set unchanged
-      val (out, outBlocks) = checkpointDiff(sc) {
-        oldCore.select(col("node"), col("d")).localCheckpoint()
-      }
-      release(sc, allBlocks)
-      return (out, outBlocks)
+      val out = oldCore.select(col("node"), col("d")).localCheckpoint()
+      release(all)
+      return out
     }
     // eligible non-members: union degree ≥ k (one corpus degree
     // aggregate + one node-grain anti against the old membership) —
     // nodes below k can never join, members never need to
-    val (cand0, cand0Blocks) = checkpointDiff(sc) {
-      all.select(explode(array(col("a"), col("b"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("du"))
-        .filter(col("du") >= k).select(col("node"))
-        .join(oldCore.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint(true, ser)
-    }
+    val cand0 = all.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("du"))
+      .filter(col("du") >= k).select(col("node"))
+      .join(oldCore.select(col("node")), Seq("node"), "left_anti")
+      .localCheckpoint(true, ser)
     val adj = all.select(col("a").as("x"), col("b").as("y"))
       .unionAll(all.select(col("b").as("x"), col("a").as("y")))
-    // Δ-seeded BFS through the eligible set
-    var (visited, vBlocks) = checkpointDiff(sc) {
-      cand0.join(broadcast(deltaNodes), Seq("node"), "left_semi")
-        .localCheckpoint(true, ser)
-    }
+    // Δ-seeded BFS through the eligible set; the frontier is the
+    // visited set itself until the first expansion
+    var visited = cand0.join(broadcast(deltaNodes), Seq("node"), "left_semi")
+      .localCheckpoint(true, ser)
     var frontier = visited
-    var fBlocks = Set.empty[Int]
+    def releaseFrontier(): Unit = if (frontier ne visited) release(frontier)
     var nVisited = visited.count()
     var frontierEmpty = nVisited == 0
     while (!frontierEmpty) {
       // boundary-sized distinct (the round's one exchange); counted
       // BEFORE broadcasting so a hub frontier can never broadcast a
       // corpus-sized set — it falls back instead
-      val (nbrs, nbrBlocks) = checkpointDiff(sc) {
-        adj.join(broadcast(frontier.select(col("node").as("x"))),
-            Seq("x"), "left_semi")
-          .select(col("y").as("node")).distinct()
-          .localCheckpoint(true, ser)
-      }
+      val nbrs = adj.join(broadcast(frontier.select(col("node").as("x"))),
+          Seq("x"), "left_semi")
+        .select(col("y").as("node")).distinct()
+        .localCheckpoint(true, ser)
       val nNbrs = nbrs.count()
       if (nVisited + nNbrs > maxRegion) {
-        release(sc, vBlocks); release(sc, fBlocks)
-        release(sc, nbrBlocks); release(sc, cand0Blocks)
+        releaseFrontier(); release(visited)
+        release(nbrs); release(cand0)
         return fullPeel()
       }
-      val (next, nextBlocks) = checkpointDiff(sc) {
-        cand0.join(broadcast(nbrs), Seq("node"), "left_semi")
-          .join(broadcast(visited), Seq("node"), "left_anti")
-          .localCheckpoint(true, ser)
-      }
-      release(sc, nbrBlocks)
+      val next = cand0.join(broadcast(nbrs), Seq("node"), "left_semi")
+        .join(broadcast(visited), Seq("node"), "left_anti")
+        .localCheckpoint(true, ser)
+      release(nbrs)
       val nNext = next.count()
       if (nNext == 0) {
-        release(sc, nextBlocks)
+        release(next)
         frontierEmpty = true
       } else {
-        val (nv, nvBlocks) = checkpointDiff(sc) {
-          visited.unionAll(next).localCheckpoint(true, ser)
-        }
-        release(sc, vBlocks); release(sc, fBlocks)
-        visited = nv; vBlocks = nvBlocks
-        frontier = next; fBlocks = nextBlocks
+        val nv = visited.unionAll(next).localCheckpoint(true, ser)
+        releaseFrontier(); release(visited)
+        visited = nv
+        frontier = next
         nVisited += nNext
       }
     }
-    release(sc, fBlocks)
-    release(sc, cand0Blocks)
+    releaseFrontier()
+    release(cand0)
     if (nVisited == 0) { // no eligible node near Δ: membership is
       // unchanged; only member–member Δ edges can bump in-core degrees
-      val (out, outBlocks) = checkpointDiff(sc) {
-        val deltaMM = delta
-          .join(oldCore.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(oldCore.select(col("node").as("b")), Seq("b"), "left_semi")
-          .select(explode(array(col("a"), col("b"))).as("node"))
-          .groupBy("node").agg(count(lit(1)).as("inc"))
-        val untouched = oldCore.select(col("node"), col("d"))
-          .join(broadcast(deltaMM.select(col("node"))),
-            Seq("node"), "left_anti")
-        untouched.unionAll(
+      val deltaMM = delta
+        .join(oldCore.select(col("node").as("a")), Seq("a"), "left_semi")
+        .join(oldCore.select(col("node").as("b")), Seq("b"), "left_semi")
+        .select(explode(array(col("a"), col("b"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("inc"))
+      val untouched = oldCore.select(col("node"), col("d"))
+        .join(broadcast(deltaMM.select(col("node"))),
+          Seq("node"), "left_anti")
+      val out = untouched.unionAll(
           oldCore.select(col("node"), col("d"))
             .join(broadcast(deltaMM), Seq("node"))
             .select(col("node"), (col("d") + col("inc")).as("d")))
-          .localCheckpoint()
-      }
-      release(sc, vBlocks); release(sc, allBlocks)
-      return (out, outBlocks)
+        .localCheckpoint()
+      release(visited); release(all)
+      return out
     }
     // region edges, classified once: x ∈ C always; y tagged member /
     // candidate. degO (member-side support) is static through the peel.
-    val (bEdgesM, bmBlocks) = checkpointDiff(sc) {
-      adj.join(broadcast(visited.select(col("node").as("x"))),
-          Seq("x"), "left_semi")
-        .join(oldCore.select(col("node").as("y")), Seq("y"), "left_semi")
-        .select(col("x"), col("y"))
-        .localCheckpoint(true, ser)
-    }
-    val (degO, degOBlocks) = checkpointDiff(sc) {
-      bEdgesM.groupBy(col("x").as("node"))
-        .agg(count(lit(1)).as("dgo")).localCheckpoint(true, ser)
-    }
-    val (eCC, eCCBlocks) = checkpointDiff(sc) {
-      all.select(col("a"), col("b"))
-        .join(broadcast(visited.select(col("node").as("a"))),
-          Seq("a"), "left_semi")
-        .join(broadcast(visited.select(col("node").as("b"))),
-          Seq("b"), "left_semi")
-        .localCheckpoint(true, ser)
-    }
+    val bEdgesM = adj.join(broadcast(visited.select(col("node").as("x"))),
+        Seq("x"), "left_semi")
+      .join(oldCore.select(col("node").as("y")), Seq("y"), "left_semi")
+      .select(col("x"), col("y"))
+      .localCheckpoint(true, ser)
+    val degO = bEdgesM.groupBy(col("x").as("node"))
+      .agg(count(lit(1)).as("dgo")).localCheckpoint(true, ser)
+    val eCC = all.select(col("a"), col("b"))
+      .join(broadcast(visited.select(col("node").as("a"))),
+        Seq("a"), "left_semi")
+      .join(broadcast(visited.select(col("node").as("b"))),
+        Seq("b"), "left_semi")
+      .localCheckpoint(true, ser)
     // cascade peel of the region only — members never leave, so each
     // round is region-bounded: in-region degree + static degO vs k
     def degCC(av: DataFrame): DataFrame = eCC
@@ -279,77 +243,64 @@ object KCore {
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("dcc"))
     var alive = visited
-    var aBlocks = vBlocks
     var nAlive = nVisited
     var done = false
     while (!done && nAlive > 0) {
-      val (keep, keepBlocks) = checkpointDiff(sc) {
-        alive.join(degCC(alive), Seq("node"), "left_outer")
-          .join(degO, Seq("node"), "left_outer")
-          .filter(coalesce(col("dcc"), lit(0L)) +
-            coalesce(col("dgo"), lit(0L)) >= k)
-          .select(col("node")).localCheckpoint(true, ser)
-      }
+      val keep = alive.join(degCC(alive), Seq("node"), "left_outer")
+        .join(degO, Seq("node"), "left_outer")
+        .filter(coalesce(col("dcc"), lit(0L)) +
+          coalesce(col("dgo"), lit(0L)) >= k)
+        .select(col("node")).localCheckpoint(true, ser)
       val nKeep = keep.count()
       done = nKeep == nAlive
-      if (done) release(sc, keepBlocks)
+      if (done) release(keep)
       else {
-        release(sc, aBlocks)
-        alive = keep; aBlocks = keepBlocks; nAlive = nKeep
+        release(alive)
+        alive = keep; nAlive = nKeep
       }
     }
     // joiners with their in-core degrees; old members patched by the
     // broadcast anti/semi split (the support-merge discipline — the
     // stored node-grain side never shuffles)
-    val (out, outBlocks) = checkpointDiff(sc) {
-      val jRows = alive.join(degCC(alive), Seq("node"), "left_outer")
-        .join(degO, Seq("node"), "left_outer")
-        .select(col("node"), (coalesce(col("dcc"), lit(0L)) +
-          coalesce(col("dgo"), lit(0L))).as("d"))
-      val incFromJ = bEdgesM
-        .join(broadcast(alive.select(col("node").as("x"))),
-          Seq("x"), "left_semi")
-        .select(col("y").as("node"))
-      val deltaMM = delta
-        .join(oldCore.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(oldCore.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(explode(array(col("a"), col("b"))).as("node"))
-      val incs = incFromJ.unionAll(deltaMM)
-        .groupBy("node").agg(count(lit(1)).as("inc"))
-      val untouched = oldCore.select(col("node"), col("d"))
-        .join(broadcast(incs.select(col("node"))), Seq("node"), "left_anti")
-      untouched
-        .unionAll(oldCore.select(col("node"), col("d"))
-          .join(broadcast(incs), Seq("node"))
-          .select(col("node"), (col("d") + col("inc")).as("d")))
-        .unionAll(jRows)
-        .localCheckpoint()
-    }
-    release(sc, aBlocks)
-    if (aBlocks != vBlocks) release(sc, vBlocks)
-    release(sc, bmBlocks); release(sc, degOBlocks); release(sc, eCCBlocks)
-    release(sc, allBlocks)
-    (out, outBlocks)
+    val jRows = alive.join(degCC(alive), Seq("node"), "left_outer")
+      .join(degO, Seq("node"), "left_outer")
+      .select(col("node"), (coalesce(col("dcc"), lit(0L)) +
+        coalesce(col("dgo"), lit(0L))).as("d"))
+    val incFromJ = bEdgesM
+      .join(broadcast(alive.select(col("node").as("x"))),
+        Seq("x"), "left_semi")
+      .select(col("y").as("node"))
+    val deltaMM = delta
+      .join(oldCore.select(col("node").as("a")), Seq("a"), "left_semi")
+      .join(oldCore.select(col("node").as("b")), Seq("b"), "left_semi")
+      .select(explode(array(col("a"), col("b"))).as("node"))
+    val incs = incFromJ.unionAll(deltaMM)
+      .groupBy("node").agg(count(lit(1)).as("inc"))
+    val untouched = oldCore.select(col("node"), col("d"))
+      .join(broadcast(incs.select(col("node"))), Seq("node"), "left_anti")
+    val out = untouched
+      .unionAll(oldCore.select(col("node"), col("d"))
+        .join(broadcast(incs), Seq("node"))
+        .select(col("node"), (col("d") + col("inc")).as("d")))
+      .unionAll(jRows)
+      .localCheckpoint()
+    release(alive) // visited itself, or visited went with the first peel
+    release(bEdgesM); release(degO); release(eCC)
+    release(all)
+    out
   }
 
-  // one result generation per face (the Triangles slot discipline): a
+  // one result generation (the Triangles per-face rule): a
   // convenience caller's previous frame is released on the NEXT call,
-  // never someone else's — owners needing block custody use
+  // never someone else's — owners needing custody of the result use
   // membershipDeltaDiff directly (GraphStore.refresh does)
-  private val lastResultBlocks =
-    scala.collection.mutable.Map.empty[String, Set[Int]]
+  private val results = new Fixpoint.Slots
 
   /** Caller-friendly face of [[membershipDeltaDiff]]. */
   def membershipDelta(
       oldEdges: DataFrame, oldCore: DataFrame, newEdges: DataFrame,
       k: Long, fallbackRounds: Int = 64, maxRegion: Long = 2000000L,
       src: String = "src", dst: String = "dst"): DataFrame =
-    synchronized {
-      val (out, outBlocks) = membershipDeltaDiff(
-        oldEdges, oldCore, newEdges, k, fallbackRounds, maxRegion, src, dst)
-      Components.release(out.sparkSession.sparkContext,
-        lastResultBlocks.getOrElse("membershipDelta", Set.empty))
-      lastResultBlocks("membershipDelta") = outBlocks
-      out
-    }
+    results.hold("membershipDelta", membershipDeltaDiff(
+      oldEdges, oldCore, newEdges, k, fallbackRounds, maxRegion, src, dst))
 }

@@ -43,7 +43,7 @@ import org.apache.spark.storage.StorageLevel
   * checkpoint keeps any single plan shallow (a full R-deep plan
   * measured slower under suite load) and bounds the caller's lineage
   * as before. Min-label needs O(diameter) rounds where Components'
-  * alternating star needs O(log n) — use [[Components.connected]]
+  * alternating star needs O(log n) — use [[Components.minLabelStars]]
   * when the graph can contain long chains; use THIS when the round
   * count must be fixed and engine-portable (the oracle cannot express
   * alternating stars, but R chained min-rounds are plain SQL).
@@ -59,20 +59,16 @@ object LabelProp {
       edges: DataFrame, rounds: Int,
       src: String = "src", dst: String = "dst"): DataFrame = {
     require(rounds >= 1, s"labelprop: rounds must be >= 1, got $rounds")
-    val sc = edges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
     // symmetrized edges PLUS a self-loop per node: the closed
     // neighborhood as plain edges, so a round reads `lab` once (the
     // lazy-chain precondition — see the class doc)
-    val (und, uBlocks) = checkpointDiff(sc) {
-      val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
-      val sym = fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v")))
-      sym
-        .unionAll(sym.select(col("u")).distinct()
-          .select(col("u"), col("u").as("v")))
-        .distinct()
-        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    }
+    val fwd = edges.select(col(src).as("u"), col(dst).as("v"))
+    val sym = fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v")))
+    val und = sym
+      .unionAll(sym.select(col("u")).distinct()
+        .select(col("u"), col("u").as("v")))
+      .distinct()
+      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     // ONE reusable exchange of the edge side: the checkpoint erases
     // partitioning metadata, so each round's join would re-shuffle und
     // from the cached blocks (measured: one und shuffle write PER
@@ -83,7 +79,7 @@ object LabelProp {
     // (the session scale knob) keeps AQE from re-coalescing it and
     // keeps the output partitioning join-compatible.
     val undByV = und.repartition(Components.shufflePartitions(und), col("v"))
-    var lab = und.select(col("u").as("node")).distinct()
+    val lab0 = und.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     // Lazy in SEGMENTS of 5 rounds: a segment pipelines its joins in
     // one job (no per-round driver sync/checkpoint), while the segment
@@ -91,23 +87,10 @@ object LabelProp {
     // R-deep mega-plan measured faster isolated but slower in-suite
     // (planning + fresh-codegen cost of one 20-stage DAG under the
     // bench's JIT load outweighed the saved round syncs).
-    var segBlocks = Set.empty[Int]
-    var i = 0
-    while (i < rounds) {
-      val seg = math.min(5, rounds - i)
-      var j = 0
-      while (j < seg) {
-        lab = undByV.join(lab.withColumnRenamed("node", "v"), Seq("v"))
+    try Fixpoint.iterate(lab0, rounds, segment = 5) { (lab, _) =>
+        undByV.join(lab.withColumnRenamed("node", "v"), Seq("v"))
           .groupBy(col("u").as("node")).agg(min(col("label")).as("label"))
-        j += 1
-      }
-      val (next, nBlocks) = checkpointDiff(sc) { lab.localCheckpoint() }
-      release(sc, segBlocks)
-      lab = next
-      segBlocks = nBlocks
-      i += seg
-    }
-    release(sc, uBlocks)
-    lab
+      }.get // no convergence check: always defined
+    finally Fixpoint.release(und)
   }
 }

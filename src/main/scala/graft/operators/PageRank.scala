@@ -85,37 +85,30 @@ object PageRank {
       edges: DataFrame, seeds: Option[DataFrame], iters: Int,
       scale: Long, dampNum: Long, dampDen: Long): DataFrame = {
     require(iters >= 1, s"pagerank: iters must be >= 1, got $iters")
-    val sc = edges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
-
     val tele = scale - (dampNum * scale) / dampDen
-    val (e, eBlocks) = checkpointDiff(sc) {
-      val ded = edges.select(col("src"), col("dst")).distinct()
-      // out-degree attaches to the edge set ONCE; every round then
-      // pays a single edges ⋈ ranks join, never a second deg join
-      ded.join(
-          ded.groupBy(col("src")).agg(count(lit(1)).as("d")), Seq("src"))
-        .localCheckpoint()
-    }
+    val ded = edges.select(col("src"), col("dst")).distinct()
+    // out-degree attaches to the edge set ONCE; every round then
+    // pays a single edges ⋈ ranks join, never a second deg join
+    val e = ded.join(
+        ded.groupBy(col("src")).agg(count(lit(1)).as("d")), Seq("src"))
+      .localCheckpoint()
     // nodes carry their per-node teleport: the uniform walk teleports
     // everywhere; the personalized walk only to seeds (left-semi-style
-    // membership via a left join — seeds stay distributed)
-    val (nodes, nBlocks) = checkpointDiff(sc) {
-      // explode instead of union: one scan of the e checkpoint (the
-      // Triangles census rationale)
-      val ids = e.select(explode(array(col("src"), col("dst"))).as("id"))
-        .distinct()
-      seeds match {
-        case None => ids.withColumn("tele", lit(tele)).localCheckpoint()
-        case Some(sd) =>
-          ids.join(
-              sd.select(col("id")).distinct().withColumn("__s", lit(1)),
-              Seq("id"), "left")
-            .select(col("id"),
-              when(col("__s").isNotNull, lit(tele)).otherwise(lit(0L))
-                .as("tele"))
-            .localCheckpoint()
-      }
+    // membership via a left join — seeds stay distributed).
+    // explode instead of union: one scan of the e checkpoint (the
+    // Triangles census rationale)
+    val ids = e.select(explode(array(col("src"), col("dst"))).as("id"))
+      .distinct()
+    val nodes = seeds match {
+      case None => ids.withColumn("tele", lit(tele)).localCheckpoint()
+      case Some(sd) =>
+        ids.join(
+            sd.select(col("id")).distinct().withColumn("__s", lit(1)),
+            Seq("id"), "left")
+          .select(col("id"),
+            when(col("__s").isNotNull, lit(tele)).otherwise(lit(0L))
+              .as("tele"))
+          .localCheckpoint()
     }
     // ONE reusable exchange per checkpointed side (r16, the LabelProp
     // undByV discipline): the checkpoints erase partitioning metadata,
@@ -135,7 +128,6 @@ object PageRank {
     val r0 =
       if (seeds.isEmpty) lit(scale)
       else when(col("tele") > 0, lit(scale)).otherwise(lit(0L))
-    var ranks = nodesById.select(col("id"), r0.as("r"))
     // SEGMENTED lazy chain (r15 ADVICE): the chain is linear in the
     // round count, but analysis/codegen of one mega-plan grows
     // super-linearly, so a caller passing iters = 100 would pay a
@@ -144,34 +136,21 @@ object PageRank {
     // their plan is EXACTLY the former single chain, one terminal
     // checkpoint job, bit-identical results) with a checkpoint at each
     // segment boundary bounding any single plan's depth (the LabelProp
-    // segmentation rationale).
-    var segBlocks = Set.empty[Int]
-    var i = 0
-    while (i < iters) {
-      val seg = math.min(10, iters - i)
-      var j = 0
-      while (j < seg) {
-        val contrib = eBySrc
-          .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("dst").as("id"),
-            expr(s"($dampNum * r) DIV ($dampDen * d)").as("c"))
-          .groupBy(col("id")).agg(sum(col("c")).as("c"))
-        ranks = nodesById.join(contrib, Seq("id"), "left")
-          .select(col("id"),
-            (col("tele") + coalesce(col("c"), lit(0L))).as("r"))
-        j += 1
-      }
-      val (next, nBlk) = checkpointDiff(sc) { ranks.localCheckpoint() }
-      release(sc, segBlocks)
-      ranks = next
-      segBlocks = nBlk
-      i += seg
-    }
-    // the caller owns only node-grain result blocks; the e/nodes
-    // checkpoints are safe to release once the terminal segment is
+    // segmentation rationale). The caller owns only the node-grain
+    // result; e/nodes are released once the terminal segment is
     // materialized.
-    release(sc, eBlocks)
-    release(sc, nBlocks)
-    ranks
+    try Fixpoint.iterate(
+        nodesById.select(col("id"), r0.as("r")), iters, segment = 10) {
+        (ranks, _) =>
+          val contrib = eBySrc
+            .join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+            .select(col("dst").as("id"),
+              expr(s"($dampNum * r) DIV ($dampDen * d)").as("c"))
+            .groupBy(col("id")).agg(sum(col("c")).as("c"))
+          nodesById.join(contrib, Seq("id"), "left")
+            .select(col("id"),
+              (col("tele") + coalesce(col("c"), lit(0L))).as("r"))
+      }.get // no convergence check: always defined
+    finally { Fixpoint.release(e); Fixpoint.release(nodes) }
   }
 }

@@ -378,6 +378,10 @@ object Similarity {
         slice(col("v"), col("sub") * lit(subDim) + lit(1), lit(subDim))
           .as("sv"))
 
+  // the in-query PQ codebook checkpoint, one generation per face
+  // ("pqTopK" / "ivfPqTopK"): released when that face trains again
+  private val codebooks = new Fixpoint.Slots
+
   /** s5 — product quantization: the memory scale path BEYOND s4's
     * scalar codes. Each vector splits into `numSub` subspaces; a
     * per-subspace codebook of `codebookK` codewords (seeded from the
@@ -445,8 +449,8 @@ object Similarity {
     // bytes, the f20b mapping-checkpoint precedent) instead of
     // replaying the train's final aggregates per consumer (r16,
     // guide §2.4 / §3.3 plan-truncation).
-    val codebook0 = codebook.getOrElse(
-      pqCodebook(corpusV, numSub, subDim, codebookK).localCheckpoint())
+    val codebook0 = codebook.getOrElse(codebooks.hold("pqTopK",
+      pqCodebook(corpusV, numSub, subDim, codebookK).localCheckpoint()))
     val codes = pqEncode(subsAll, codebook0)
     // ADC lookup table: query subvector · codeword, numSub·codebookK
     // rows per query — bounded by the probe set, broadcast
@@ -648,8 +652,8 @@ object Similarity {
     val subsAll = subVectors(corpusV, "vec_id", numSub, subDim)
     // checkpointed for the same two-consumer reason as [[pqTopK]]'s
     // in-query train (structurally bounded — 128 rows at the defaults)
-    val codebook0 = codebook.getOrElse(
-      pqCodebook(corpusV, numSub, subDim, codebookK).localCheckpoint())
+    val codebook0 = codebook.getOrElse(codebooks.hold("ivfPqTopK",
+      pqCodebook(corpusV, numSub, subDim, codebookK).localCheckpoint()))
     // narrow (vec_id, sub, code) rows pick up their list id — ints
     // only, never the vectors
     val codes = pqEncode(subsAll, codebook0)

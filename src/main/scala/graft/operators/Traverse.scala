@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   *     (a 100 TB edge list with a 1k-entity seed moves kB per round);
   *   - rounds are bounded by `maxHops` (a user-facing contract, not a
   *     convergence hope), so the plan is k joins deep, not data-driven;
-  *   - each round eager-checkpoints exactly ONE frame — the new
-  *     visited set (the [[Components]] discipline; the frontier is the
-  *     previous round's hops slice of those cached blocks) — so
-  *     lineage stays flat and superseded snapshots release their
-  *     blocks immediately.
+  *   - each round checkpoints exactly ONE frame — the new visited set,
+  *     materialized by the round's growth count ([[Fixpoint.iterate]];
+  *     the frontier is the previous round's hops slice of those cached
+  *     blocks) — so lineage stays flat and superseded snapshots
+  *     release their blocks immediately.
   *
   * Distances are exact minimal hop counts: level-synchronous expansion
   * discovers every vertex first at its minimal depth, and the visited
@@ -38,73 +38,42 @@ object Traverse {
     * hops = 0 (seed ids absent from the edge list still appear).
     */
   def khop(edges0: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
-    val (edges, edgeBlocks) = symmetrized(edges0)
-    val out = khopOn(edges, seeds, maxHops)
-    Components.release(sc, edgeBlocks)
-    out
+    val edges = Components.symmetrized(edges0)
+    try khopOn(edges, seeds, maxHops) finally Fixpoint.release(edges)
   }
 
-  /** Symmetrize + dedup + eager-checkpoint an edge list once; the
-    * caller releases the returned blocks when every traversal over it
-    * is done (shortestPathMembers runs TWO expansions on one copy).
-    */
-  private def symmetrized(edges0: DataFrame): (DataFrame, Set[Int]) = {
-    val und = edges0.select(col("src"), col("dst"))
-    Components.checkpointDiff(edges0.sparkSession.sparkContext) {
-      und
-        .union(und.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .localCheckpoint()
-    }
-  }
-
-  /** The BFS loop over an ALREADY symmetrized+checkpointed edge set.
+  /** The BFS loop over an ALREADY symmetrized+checkpointed edge set
+    * (shortestPathMembers runs TWO tagged expansions on one copy).
     * `seeds` carries `id` plus any CARRY columns (f23's side tag);
     * the visited set keys on (id ++ carry), so independently-tagged
     * walks advance in the same jobs. ONE materialization per round —
-    * the new visited checkpoint; the frontier is the previous round's
-    * hops slice of the cached blocks, and the growth check is a
-    * filter-isEmpty over the new blocks.
+    * the new visited checkpoint, whose materializing action is the
+    * frontier-growth count; the frontier is the previous round's hops
+    * slice of the cached blocks.
     */
   private def khopOn(
       edges: DataFrame, seeds: DataFrame, maxHops: Int,
       carry: Seq[String] = Nil): DataFrame = {
     require(maxHops >= 0, s"Traverse.khop: maxHops must be >= 0, got $maxHops")
-    val sc = edges.sparkSession.sparkContext
     val keyCols = ("id" +: carry).map(col)
-    var (visited, visitedBlocks) = Components.checkpointDiff(sc) {
-      seeds.select(keyCols: _*).distinct()
-        .withColumn("hops", lit(0).cast("int"))
-        .localCheckpoint()
-    }
-    var h = 1
-    var emptied = maxHops == 0
-    while (!emptied && h <= maxHops) {
-      val frontier = visited.filter(col("hops") === h - 1)
-      // ONE driver action per round (r16): the checkpoint is LAZY and
-      // the frontier-growth count is its materializing action — the
-      // RDD-level persist caches the full visited snapshot regardless
-      // of the count's plan (the Components.minLabel rationale), so
-      // the old eager-checkpoint job + isEmpty job collapse into one.
-      // The early-exit CONTRACT is unchanged: the count is exactly the
-      // new-hop row count the isEmpty tested.
-      val (nv, nvBlocks) = Components.checkpointDiff(sc) {
-        val next = frontier
-          .select((col("id").as("src") +: carry.map(col)): _*)
-          .join(edges, Seq("src"))
-          .select((col("dst").as("id") +: carry.map(col)): _*).distinct()
-          .join(visited, "id" +: carry, "left_anti")
-          .withColumn("hops", lit(h).cast("int"))
-        visited.union(next).localCheckpoint(false)
-      }
-      emptied = nv.filter(col("hops") === h).count() == 0
-      Components.release(sc, visitedBlocks)
-      visited = nv
-      visitedBlocks = nvBlocks
-      h += 1
-    }
-    visited
+    val visited0 = seeds.select(keyCols: _*).distinct()
+      .withColumn("hops", lit(0).cast("int"))
+      .localCheckpoint()
+    if (maxHops == 0) return visited0
+    // early exit when a round finds no new-hop rows
+    def settled(nv: DataFrame, h: Int): Boolean =
+      nv.filter(col("hops") === h).count() == 0 || h == maxHops
+    try Fixpoint.iterate(visited0, maxHops, until = Some(settled _)) {
+        (visited, h) =>
+          val next = visited.filter(col("hops") === h - 1)
+            .select((col("id").as("src") +: carry.map(col)): _*)
+            .join(edges, Seq("src"))
+            .select((col("dst").as("id") +: carry.map(col)): _*).distinct()
+            .join(visited, "id" +: carry, "left_anti")
+            .withColumn("hops", lit(h).cast("int"))
+          visited.union(next)
+      }.get // the check holds at round maxHops
+    finally Fixpoint.release(visited0)
   }
 
   /** Shortest-path MEMBERSHIP between two seed sets — "how are A and
@@ -130,7 +99,6 @@ object Traverse {
   def shortestPathMembers(
       edges0: DataFrame, seedsA: DataFrame, seedsB: DataFrame,
       maxHops: Int): DataFrame = {
-    val sc = edges0.sparkSession.sparkContext
     // symmetrize ONCE, and run BOTH expansions in ONE tagged run of
     // the shared BFS loop — the frontier carries a side column and
     // the visited set keys on (id, side), so each round advances both
@@ -138,15 +106,16 @@ object Traverse {
     // 2·maxHops, half the checkpoint materializations of two
     // sequential khop calls (measured 5.9 → 3.9s on f23's sf0.1
     // grain; identical frontier-bounded shape)
-    val (edges, edgeBlocks) = symmetrized(edges0)
+    val edges = Components.symmetrized(edges0)
     val tagged = seedsA.select(col("id"), lit(0).as("side"))
       .unionAll(seedsB.select(col("id"), lit(1).as("side")))
-    val visited = khopOn(edges, tagged, maxHops, carry = Seq("side"))
+    val visited =
+      try khopOn(edges, tagged, maxHops, carry = Seq("side"))
+      finally Fixpoint.release(edges)
     val da = visited.filter(col("side") === 0)
       .select(col("id"), col("hops").as("hops_a"))
     val db = visited.filter(col("side") === 1)
       .select(col("id"), col("hops").as("hops_b"))
-    Components.release(sc, edgeBlocks)
     val joined = da.join(db, Seq("id"))
     val dmin = joined
       .agg(min(col("hops_a") + col("hops_b")).as("d"))

@@ -38,18 +38,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object Triangles {
 
-  // the PREVIOUS result blocks, keyed PER FACE ("perNode" /
-  // "perEdge"): a new census on one face releases only that face's
-  // previous generation, so an interactive perNode frame survives a
-  // concurrent perEdge (e.g. a stream-thread GraphStore.refresh) and
-  // perNode + perEdge composed in one job each keep one live
-  // generation. A bench loop that calls f26 many times still holds
-  // ONE generation per face, not the session's whole history.
-  // Single-generation contract — per face: consume (collect/write)
-  // each census before requesting the next one ON THE SAME FACE, or
-  // use [[perEdgeDiff]]/[[perNodeDiff]] and own the release yourself.
-  private val lastResultBlocks =
-    scala.collection.mutable.Map.empty[String, Set[Int]]
+  // the PREVIOUS result frame, one per face ("perNode" / "perEdge" /
+  // "perEdgeDelta"): a new census on one face releases only that
+  // face's previous generation, so an interactive perNode frame
+  // survives a concurrent perEdge and perNode + perEdge composed in one
+  // job each keep one live generation. Callers that keep custody use
+  // [[perEdgeDiff]] / [[perEdgeDeltaDiff]] and release it themselves.
+  private val results = new Fixpoint.Slots
 
   /** Per-node triangle counts. `edges` carries one row per (possibly
     * duplicated, possibly reversed) undirected edge in columns
@@ -70,19 +65,10 @@ object Triangles {
     */
   def perNode(edges: DataFrame, src: String = "src",
       dst: String = "dst"): DataFrame =
-    slotted("perNode")(perNodeDiff(edges, src, dst))
-
-  /** [[perNode]] returning its checkpoint block ids — the caller OWNS
-    * the release (`Components.release` once the frame is consumed);
-    * nothing is registered in the per-face generation map, so this
-    * face never stomps (and is never stomped by) another live census.
-    */
-  def perNodeDiff(edges: DataFrame, src: String = "src",
-      dst: String = "dst"): (DataFrame, Set[Int]) =
-    census(edges, src, dst) { tri =>
+    results.hold("perNode", census(edges, src, dst) { tri =>
       tri.select(explode(array(col("x"), col("y"), col("z"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-    }
+    })
 
   /** Per-EDGE triangle support: how many triangles contain each
     * undirected edge — the k-truss building block (an edge of
@@ -93,15 +79,17 @@ object Triangles {
     */
   def perEdge(edges: DataFrame, src: String = "src",
       dst: String = "dst"): DataFrame =
-    slotted("perEdge")(perEdgeDiff(edges, src, dst))
+    results.hold("perEdge", perEdgeDiff(edges, src, dst))
 
-  /** [[perEdge]] returning its checkpoint block ids — caller-owned
-    * release, bypasses the per-face generation map (see
-    * [[perNodeDiff]]). [[graft.sources.GraphStore.refresh]] uses this
-    * so a refresh tick never releases an interactive f26/f28 frame.
+  /** [[perEdge]] outside the per-face generation map: the caller OWNS
+    * the returned checkpointed frame and [[Fixpoint.release]]s it once
+    * consumed, so this face never stomps (and is never stomped by)
+    * another live census. [[graft.sources.GraphStore.refresh]] uses
+    * this so a refresh tick never releases an interactive f26/f28
+    * frame.
     */
   def perEdgeDiff(edges: DataFrame, src: String = "src",
-      dst: String = "dst"): (DataFrame, Set[Int]) =
+      dst: String = "dst"): DataFrame =
     census(edges, src, dst) { tri =>
       // (y, z) is canonical already (y < z by construction); the two
       // spoke edges (x, y), (x, z) canonicalize per pair — the spoke
@@ -117,36 +105,20 @@ object Triangles {
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
     }
 
-  // release the slot's previous generation, run the census, record
-  // the new generation under the slot
-  private def slotted(slot: String)(run: => (DataFrame, Set[Int]))
-      : DataFrame = synchronized {
-    val (out, outBlocks) = run
-    Components.release(out.sparkSession.sparkContext,
-      lastResultBlocks.getOrElse(slot, Set.empty))
-    lastResultBlocks(slot) = outBlocks
-    out
-  }
-
   private def census(edges: DataFrame, src: String, dst: String)(
-      finish: DataFrame => DataFrame): (DataFrame, Set[Int]) =
-      synchronized {
-    val sc = edges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
+      finish: DataFrame => DataFrame): DataFrame = {
     val ser = StorageLevel.MEMORY_AND_DISK_SER
     // canonical undirected edge set: a < b, no loops, no dups.
     // e and oriented are each consumed by TWO downstream branches
     // (orientation + closing lookup; both wedge sides) — materialized
     // once so the lineage branches read blocks instead of re-running
     // the distinct/joins.
-    val (e, eBlocks) = checkpointDiff(sc) {
-      edges
-        .select(least(col(src), col(dst)).as("a"),
-          greatest(col(src), col(dst)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint(true, ser)
-    }
+    val e = edges
+      .select(least(col(src), col(dst)).as("a"),
+        greatest(col(src), col(dst)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .localCheckpoint(true, ser)
     // explode instead of unionAll: one scan of the serialized e
     // checkpoint instead of two (each union branch re-reads and
     // re-deserializes every block; the generator pays neither)
@@ -154,15 +126,13 @@ object Triangles {
       .groupBy("node").agg(count(lit(1)).as("d"))
     // orient a→b when (d(a), a) < (d(b), b); a < b already, so the
     // tie case keeps the canonical direction
-    val (oriented, oBlocks) = checkpointDiff(sc) {
-      e
-        .join(deg.select(col("node").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("node").as("b"), col("d").as("db")), "b")
-        .select(
-          when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("u"),
-          when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("v"))
-        .localCheckpoint(true, ser)
-    }
+    val oriented = e
+      .join(deg.select(col("node").as("a"), col("d").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("d").as("db")), "b")
+      .select(
+        when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("u"),
+        when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("v"))
+      .localCheckpoint(true, ser)
     // wedges: unordered out-neighbor pairs at each spoke u
     val wedges = oriented.as("w1")
       .join(oriented.as("w2"),
@@ -173,12 +143,10 @@ object Triangles {
     val tri = wedges.join(e,
       wedges("y") === e("a") && wedges("z") === e("b"))
       .select(col("x"), col("y"), col("z"))
-    val (out, outBlocks) = checkpointDiff(sc) {
-      finish(tri).localCheckpoint()
-    }
-    release(sc, eBlocks)
-    release(sc, oBlocks)
-    (out, outBlocks)
+    val out = finish(tri).localCheckpoint()
+    Fixpoint.release(e)
+    Fixpoint.release(oriented)
+    out
   }
 
   /** INCREMENTAL per-edge census (r15): update a stored support table
@@ -217,15 +185,12 @@ object Triangles {
     * @param newEdges   the appended batch (edges already in `oldEdges`
     *                   are ignored — replay-immune)
     * @return the UPDATED (a, b, support) table for `E ∪ Δ` (edges on
-    *         ≥ 1 triangle, the [[perEdge]] contract), plus the
-    *         checkpoint block ids the caller must release
+    *         ≥ 1 triangle, the [[perEdge]] contract), a checkpointed
+    *         frame the caller must [[Fixpoint.release]]
     */
   def perEdgeDeltaDiff(
       oldEdges: DataFrame, oldSupport: DataFrame, newEdges: DataFrame,
-      src: String = "src", dst: String = "dst"): (DataFrame, Set[Int]) =
-      synchronized {
-    val sc = oldEdges.sparkSession.sparkContext
-    import Components.{checkpointDiff, release}
+      src: String = "src", dst: String = "dst"): DataFrame = {
     val ser = StorageLevel.MEMORY_AND_DISK_SER
     def canon(df: DataFrame, s: String, d: String) = df
       .select(least(col(s), col(d)).as("a"),
@@ -236,12 +201,10 @@ object Triangles {
     // iff NO old row produced it (which also makes replayed batches
     // the identity). Consumed by the adjacency (twice), the Δ-degree
     // scan and the closing join: materialized once, serialized.
-    val (all, allBlocks) = checkpointDiff(sc) {
-      canon(oldEdges, src, dst).withColumn("is_new", lit(false))
-        .unionAll(canon(newEdges, src, dst).withColumn("is_new", lit(true)))
-        .groupBy("a", "b").agg(bool_and(col("is_new")).as("is_new"))
-        .localCheckpoint(true, ser)
-    }
+    val all = canon(oldEdges, src, dst).withColumn("is_new", lit(false))
+      .unionAll(canon(newEdges, src, dst).withColumn("is_new", lit(true)))
+      .groupBy("a", "b").agg(bool_and(col("is_new")).as("is_new"))
+      .localCheckpoint(true, ser)
     val delta = all.filter(col("is_new")).select(col("a"), col("b"))
     // probe from each Δ edge's LOWER-degree endpoint — the hub-safe
     // choice (Σ min-degree, the delta twin of the census orientation).
@@ -297,20 +260,18 @@ object Triangles {
     // side): rows without a patch pass through untouched; rows with a
     // patch (batch-bounded) full-outer the patch so edges NEWLY on
     // ≥ 1 triangle appear — the stored table never shuffles.
-    val (out, outBlocks) = checkpointDiff(sc) {
-      val sup = oldSupport.select(col("a"), col("b"), col("support"))
-      val keys = patch.select(col("a"), col("b"))
-      val untouched = sup.join(broadcast(keys), Seq("a", "b"), "left_anti")
-      val patchedSup = sup.join(broadcast(keys), Seq("a", "b"), "left_semi")
-      untouched
-        .unionAll(patchedSup.join(patch, Seq("a", "b"), "full_outer")
-          .select(col("a"), col("b"),
-            (coalesce(col("support"), lit(0L)) +
-              coalesce(col("dsup"), lit(0L))).as("support")))
-        .localCheckpoint()
-    }
-    release(sc, allBlocks)
-    (out, outBlocks)
+    val sup = oldSupport.select(col("a"), col("b"), col("support"))
+    val keys = patch.select(col("a"), col("b"))
+    val untouched = sup.join(broadcast(keys), Seq("a", "b"), "left_anti")
+    val patchedSup = sup.join(broadcast(keys), Seq("a", "b"), "left_semi")
+    val out = untouched
+      .unionAll(patchedSup.join(patch, Seq("a", "b"), "full_outer")
+        .select(col("a"), col("b"),
+          (coalesce(col("support"), lit(0L)) +
+            coalesce(col("dsup"), lit(0L))).as("support")))
+      .localCheckpoint()
+    Fixpoint.release(all)
+    out
   }
 
   /** [[perEdgeDeltaDiff]] under the per-face generation map (slot
@@ -319,7 +280,7 @@ object Triangles {
   def perEdgeDelta(
       oldEdges: DataFrame, oldSupport: DataFrame, newEdges: DataFrame,
       src: String = "src", dst: String = "dst"): DataFrame =
-    slotted("perEdgeDelta")(
+    results.hold("perEdgeDelta",
       perEdgeDeltaDiff(oldEdges, oldSupport, newEdges, src, dst))
 
   /** Exact total triangle count (the scalar face). */

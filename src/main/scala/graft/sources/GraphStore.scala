@@ -296,12 +296,9 @@ object GraphStore {
     }
     // the live edge set feeds three consumers (ranks, census, FINAL
     // rewrite) — materialized once, released when the refresh is done
-    // (the Components discipline; refresh is off the serving path, so
-    // nothing outlives this call)
-    import graft.operators.Components.{checkpointDiff, release}
-    val (e, eBlocks) = checkpointDiff(spark.sparkContext) {
-      edges(spark, table).localCheckpoint()
-    }
+    // (refresh is off the serving path, so nothing outlives this call)
+    import graft.operators.Fixpoint.release
+    val e = edges(spark, table).localCheckpoint()
     val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
 
     // each summary frame is fully consumed by its stageSwap write, so
@@ -309,9 +306,7 @@ object GraphStore {
     // lands — a long-running telemetry stream's refresh ticks pin
     // nothing between cadences (r14 advisor finding: ranks/labels/
     // census finals leaked one node-grain generation per tick)
-    val (ranks, rankBlocks) = checkpointDiff(spark.sparkContext) {
-      PageRank.ranks(e, iters).withColumn("as_of", lit(asOf))
-    }
+    val ranks = PageRank.ranks(e, iters).withColumn("as_of", lit(asOf))
     stageSwap(spark, s"${table}_ranks", b, "id")(ranks)
     // the stored-parameters declaration: a later NO-OP/REPLAY fast
     // path must never restamp summaries computed under different
@@ -319,7 +314,7 @@ object GraphStore {
     // DROP+RENAME swap path loses properties, and a lost property
     // only disables the fast paths, never correctness)
     setProp(spark, s"${table}_ranks", "graft.graph.params", params)
-    release(spark.sparkContext, rankBlocks)
+    release(ranks)
 
     // ONE census pays for two summaries: the per-edge support feeds
     // the truss filter below, and the per-NODE triangle count (f26's
@@ -328,10 +323,9 @@ object GraphStore {
     // Σ support(incident edges) = 2 · triangles(node). No second
     // wedge join.
     // perEdgeDiff/perEdgeDeltaDiff hand this call OWNERSHIP of the
-    // census result blocks (never the shared per-face generation — a
+    // census result frame (never the shared per-face generation — a
     // refresh tick must not release an interactive f26/f28 frame);
-    // all consumers below read those blocks, released after the last
-    // write
+    // all consumers below read it, released after the last write
     val supportAsOf: Option[Long] =
       if (!spark.catalog.tableExists(s"${table}_support")) None
       else {
@@ -340,7 +334,7 @@ object GraphStore {
           .agg(max(col("as_of"))).collect()(0)
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-    val (support, supportBlocks) = supportAsOf match {
+    val support = supportAsOf match {
       case Some(snapVer) if deltaCensus && delsSnap.isEmpty &&
           snapVer >= sv =>
         // append-only tick: batch-bounded delta against the snapshot
@@ -366,14 +360,12 @@ object GraphStore {
     val kept = support
       .filter(col("support") >= minSupport)
       .select(col("a").as("src"), col("b").as("dst"))
-    val (comm, commBlocks) = checkpointDiff(spark.sparkContext) {
-      LabelProp.minLabelRounds(kept, lpRounds)
-        .select(col("node"), col("label").as("community"))
-        .withColumn("as_of", lit(asOf))
-    }
+    val comm = LabelProp.minLabelRounds(kept, lpRounds)
+      .select(col("node"), col("label").as("community"))
+      .withColumn("as_of", lit(asOf))
     stageSwap(spark, s"${table}_communities", b, "node")(comm)
-    release(spark.sparkContext, commBlocks)
-    release(spark.sparkContext, supportBlocks)
+    release(comm)
+    release(support)
 
     // f29's k-core at the same cadence (r15): the peel runs on the
     // full live edge set (NOT the truss-filtered one — k-core and
@@ -399,35 +391,30 @@ object GraphStore {
         if (r.isNullAt(0)) None
         else storedK.map(sk => (r.getLong(0), sk))
       }
-    val (core, coreBlocks) = kcoreSnap match {
+    val core = kcoreSnap match {
       case Some((snapVer, storedK))
           if deltaCensus && delsSnap.isEmpty && storedK == kcoreK &&
             snapVer >= sv =>
         val rows = spark.table(table)
-        val (c, blocks) = graft.operators.KCore.membershipDeltaDiff(
+        graft.operators.KCore.membershipDeltaDiff(
           rows.filter(col("ver") <= snapVer).select(col("src"), col("dst")),
           spark.table(s"${table}_kcore")
             .select(col("node"), col("core_degree").as("d")),
           rows.filter(col("ver") > snapVer).select(col("src"), col("dst")),
           kcoreK)
-        (c.select(col("node"), col("d").as("core_degree"))
-          .withColumn("as_of", lit(asOf)), blocks)
-      case _ =>
-        checkpointDiff(spark.sparkContext) {
-          graft.operators.KCore.membership(e, kcoreK, kcoreRounds)
-            .select(col("node"), col("d").as("core_degree"))
-            .withColumn("as_of", lit(asOf))
-        }
+      case _ => graft.operators.KCore.membership(e, kcoreK, kcoreRounds)
     }
-    stageSwap(spark, s"${table}_kcore", b, "node")(core)
+    stageSwap(spark, s"${table}_kcore", b, "node")(
+      core.select(col("node"), col("d").as("core_degree"))
+        .withColumn("as_of", lit(asOf)))
     // the creation-k declaration: a later refresh at a different k
     // must never patch against an incompatible membership (it refuses
     // into the full-peel branch above instead)
     spark.sql(s"ALTER TABLE ${table}_kcore SET TBLPROPERTIES(" +
       s"'graft.kcore.k'='$kcoreK')")
-    release(spark.sparkContext, coreBlocks)
+    release(core)
 
-    release(spark.sparkContext, eBlocks)
+    release(e)
     // physical compaction rides the tick only when asked (default
     // preserves the original contract); retirement is gated on the
     // tombstone snapshot taken BEFORE the summaries — a pop landing

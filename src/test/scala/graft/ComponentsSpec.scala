@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Components
+import graft.operators.{Components, Fixpoint}
 
 /** Connected-components engine specs: the two algorithms must agree,
   * and the star algorithm must solve the high-diameter graphs the
@@ -11,8 +13,22 @@ import graft.operators.Components
 class ComponentsSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  // the persisted-RDD set is session-global, but forked suites run
+  // sequentially, so within one test every change to it is ours
+  private def pinned(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def checkpointsOf(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+
+  // two triangles sharing node 3, a tail 5-6-7 and a separate pair;
+  // the first five edges are the "old" graph of the delta faces
+  private val custodyGraph = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+    (4L, 5L), (3L, 5L), (5L, 6L), (6L, 7L), (8L, 9L))
 
   test("minLabelStars == minLabel on a mixed graph (cliques, chains, self-loop)") {
     import spark.implicits._
@@ -32,9 +48,11 @@ class ComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     // pairwise-merge judgement chain: 0-1, 1-2, ..., 59-60
     val path = (0L until 60L).map(i => (i, i + 1)).toDF("src", "dst")
+    val before = pinned()
     assertThrows[IllegalStateException] {
       Components.minLabel(path, maxIter = 50).count()
     }
+    assert(pinned() == before, "the non-convergence throw must pin nothing")
     val stars = labelsOf(Components.minLabelStars(path))
     assert(stars.size == 61 && stars.values.forall(_ == 0L))
   }
@@ -135,5 +153,75 @@ class ComponentsSpec extends AnyFunSuite {
     // at its minimal depth 2 even though maxHops allows 5
     val got = hopsOf(Traverse.khop(edges, Seq("a").toDF("id"), 5))
     assert(got == Map("a" -> 0, "b" -> 1, "c" -> 2))
+  }
+
+  // ---- checkpoint custody (Fixpoint) ----
+
+  test("custody: every graph operator pins exactly its result's checkpoints") {
+    import graft.operators.{KCore, LabelProp, PageRank, Traverse, Triangles}
+    import spark.implicits._
+    val edges = custodyGraph.toDF("src", "dst")
+    val (oldG, newG) = custodyGraph.splitAt(5)
+    val (oldE, newE) = (oldG.toDF("src", "dst"), newG.toDF("src", "dst"))
+    // the delta faces' stored state, as local rows that pin nothing
+    def stored(df: DataFrame): DataFrame =
+      try spark.createDataFrame(
+        java.util.Arrays.asList(df.collect(): _*), df.schema)
+      finally Fixpoint.release(df)
+    val oldCore = stored(KCore.membership(oldE, 2L, rounds = 10))
+    val oldSupport = stored(Triangles.perEdgeDiff(oldE))
+    val one = Seq(1L).toDF("id")
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "minLabel" -> (() => Components.minLabel(edges)),
+      "minLabelStars" -> (() => Components.minLabelStars(edges)),
+      "khop" -> (() => Traverse.khop(edges, one, maxHops = 3)),
+      "shortestPathMembers" -> (() => Traverse.shortestPathMembers(
+        edges, one, Seq(7L).toDF("id"), maxHops = 3)),
+      "ranks" -> (() => PageRank.ranks(edges)),
+      "personalizedRanks" -> (() => PageRank.personalizedRanks(edges, one)),
+      "minLabelRounds" -> (() => LabelProp.minLabelRounds(edges, rounds = 7)),
+      "membership" -> (() => KCore.membership(edges, 2L, rounds = 10)),
+      "membershipDeltaDiff" ->
+        (() => KCore.membershipDeltaDiff(oldE, oldCore, newE, 2L)),
+      "perEdgeDiff" -> (() => Triangles.perEdgeDiff(edges)),
+      "perEdgeDeltaDiff" ->
+        (() => Triangles.perEdgeDeltaDiff(oldE, oldSupport, newE)))
+    val sentinel = spark.sparkContext.parallelize(1 to 10).persist()
+    assert(sentinel.count() == 10)
+    for ((name, run) <- cases) {
+      val before = pinned()
+      val out = run()
+      assert(out.collect().nonEmpty, name)
+      val own = checkpointsOf(out)
+      assert(own.nonEmpty && (own & before).isEmpty, name)
+      assert(pinned() == before ++ own, s"$name pinned more than its result")
+      Fixpoint.release(out)
+      assert(pinned() == before, s"$name: releasing the result left pins")
+    }
+    assert(pinned().contains(sentinel.id) && sentinel.count() == 10,
+      "an RDD persisted by someone else must survive")
+    sentinel.unpersist()
+  }
+
+  test("custody: minLabel and membership on two threads equal their sequential results") {
+    import graft.operators.KCore
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import spark.implicits._
+    val chain = (0L until 15L).map(i => (i, i + 1)).toDF("src", "dst")
+    val graph = custodyGraph.toDF("src", "dst")
+    def consumed[A](df: DataFrame)(f: DataFrame => A): A =
+      try f(df) finally Fixpoint.release(df)
+    def labels() = consumed(Components.minLabel(chain))(labelsOf)
+    def core() = consumed(KCore.membership(graph, 2L, rounds = 10))(labelsOf)
+    val (wantLabels, wantCore) = (labels(), core())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val l = Future(Seq.fill(3)(labels()))
+      val c = Future(Seq.fill(3)(core()))
+      assert(Await.result(l, 10.minutes).forall(_ == wantLabels))
+      assert(Await.result(c, 10.minutes).forall(_ == wantCore))
+    } finally pool.shutdown()
   }
 }

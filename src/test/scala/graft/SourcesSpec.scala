@@ -1404,8 +1404,11 @@ class SourcesSpec extends AnyFunSuite {
     assert(rankMap(GraphStore.ranks(spark, "gstore")) == served1,
       "serve moved before refresh")
     assert(GraphStore.staleness(spark, "gstore") == ((1L, 2L)))
+    def pinned() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val pinnedBefore = pinned()
     GraphStore.refresh(spark, "gstore", minSupport = 1L, buckets = 2,
       kcoreK = 2L)
+    assert(pinned() == pinnedBefore, "a refresh tick must leave nothing pinned")
     val served2 = rankMap(GraphStore.ranks(spark, "gstore"))
     assert(served2 == rankMap(PageRank.ranks(
       GraphStore.edges(spark, "gstore"))), "post-refresh serve != recompute")

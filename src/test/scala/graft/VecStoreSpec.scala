@@ -132,16 +132,23 @@ class VecStoreSpec extends AnyFunSuite {
     val stored = VecStore.codebook(spark, "vec_pq")
     val reused5 = Similarity.pqTopK(emb, queries, k = 5,
       codebook = Some(stored)).collect().map(_.toString).sorted.toSeq
-    val fresh5 = Similarity.pqTopK(emb, queries, k = 5)
+    // an in-query codebook is one generation per face: a second
+    // identical search releases the first one's codebook checkpoint
+    def pinned() = spark.sparkContext.getPersistentRDDs.size
+    def fresh5() = Similarity.pqTopK(emb, queries, k = 5)
       .collect().map(_.toString).sorted.toSeq
-    assert(reused5.nonEmpty && reused5 == fresh5)
+    assert(reused5.nonEmpty && reused5 == fresh5())
+    val pinned5 = pinned()
+    assert(fresh5() == reused5 && pinned() == pinned5)
     val cents = VecStore.centroids(spark, "vec_pq")
     val reused6 = Similarity.ivfPqTopK(emb, queries, cents, k = 5,
       nProbe = 3, codebook = Some(stored))
       .collect().map(_.toString).sorted.toSeq
-    val fresh6 = Similarity.ivfPqTopK(emb, queries, cents, k = 5,
+    def fresh6() = Similarity.ivfPqTopK(emb, queries, cents, k = 5,
       nProbe = 3).collect().map(_.toString).sorted.toSeq
-    assert(reused6.nonEmpty && reused6 == fresh6)
+    assert(reused6.nonEmpty && reused6 == fresh6())
+    val pinned6 = pinned()
+    assert(fresh6() == reused6 && pinned() == pinned6)
   }
 
   test("store-served IVF search equals Similarity.ivfTopK exactly, pruned") {
