@@ -33,7 +33,8 @@ object GraftSession {
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); see Tables.load
+      // events.ts is parquet TIMESTAMP(NANOS) or timestamp[us] by
+      // testdata generation; NANOS reads as a LONG (see Tables.load)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Spark's default INT96 timestamps carry NO usable row-group
       // min/max statistics — every time-range scan over a store would

@@ -765,9 +765,13 @@ object Similarity {
       .localCheckpoint()
     val topN = tops.select(col("top_id"), col("centroid").as("sc"),
       sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("sn"))
-    (tops,
-      assignTo(topN).select(col("list_id"), col("top_id"))
-        .localCheckpoint())
+    val leafMap = assignTo(topN).select(col("list_id"), col("top_id"))
+      .localCheckpoint()
+    // both results are eager checkpoints of their own: the training
+    // copy is no longer read by anything (the caller owns the two
+    // returned frames)
+    Fixpoint.release(cents)
+    (tops, leafMap)
   }
 
   /** s7 — IVF ANN through the [[treeQuantizer]]: corpus vectors and
@@ -856,6 +860,9 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .toSeq
+    // the collects above are the training's last readers: the returned
+    // plan carries the tree inside `tm`, not these checkpoints
+    Seq(c0, tops, leafMap).foreach(Fixpoint.release)
     // degenerate: an empty corpus trains no tree — answer empty in the
     // standard (query_id, neighbor_id, cos) top-k shape instead of
     // building a zero-node matrix

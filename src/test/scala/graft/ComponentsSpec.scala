@@ -203,6 +203,22 @@ class ComponentsSpec extends AnyFunSuite {
     sentinel.unpersist()
   }
 
+  test("custody: ivfTreeTopK pins only its result's checkpoints, degenerate path too") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.load(spark, sf, "embeddings")
+    val queries = emb.filter(col("vec_id") < 10)
+    for ((name, corpus) <- Seq("trained" -> emb, "empty" -> emb.limit(0))) {
+      val cents = Similarity.centroids(corpus, col("label"))
+      val before = pinned()
+      val out = Similarity.ivfTreeTopK(corpus, queries, cents,
+        k = 5, topCount = 3)
+      out.collect()
+      assert(pinned() == before ++ checkpointsOf(out),
+        s"$name: the tree's training checkpoints outlived the call")
+    }
+  }
+
   test("custody: minLabel and membership on two threads equal their sequential results") {
     import graft.operators.KCore
     import scala.concurrent.{Await, ExecutionContext, Future}

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graftspec.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -117,5 +119,76 @@ class TablesSpec extends AnyFunSuite {
       // and in particular: no NTZ column ever escapes the loader
       assert(!got.values.exists(_ == TimestampNTZType), s"$t leaked NTZ")
     }
+  }
+
+  // ---- the driver-side footer schema ----
+
+  // what `spark.read.parquet` infers, through the same normalizers
+  private def inferred(path: String, name: String): StructType = {
+    val df = spark.read.parquet(path)
+    (if (name == "events") Tables.normalizeTs(df) else Tables.normalizeNtz(df))
+      .schema
+  }
+
+  test("footer schemas equal Spark's inferred schemas on every testdata scale") {
+    for (scale <- Seq("sf0.001", "sf0.01", "sf0.1"); t <- Tables.all) {
+      val dir = s"/root/testdata/$scale"
+      assert(Tables.load(spark, dir, t).schema ==
+        inferred(s"$dir/$t.parquet", t), s"$scale/$t")
+    }
+  }
+
+  test("footer schema of a Spark-written multi-file directory equals inference") {
+    val dir = Files.createTempDirectory("graft_tables_multi").toFile
+    val path = s"$dir/events.parquet"
+    spark.range(40).select(col("id").as("event_id"),
+        expr("cast(timestamp_micros(id * 1000000) as timestamp_ntz)").as("ts"),
+        array(col("id").cast("float")).as("v"),
+        struct(col("id").as("a"), lit("x").as("b")).as("props"))
+      .repartition(4).write.parquet(path)
+    val names = new java.io.File(path).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.endsWith(".parquet")) > 1, names)
+    assert(Tables.load(spark, dir.toString, "events").schema ==
+      inferred(path, "events"))
+  }
+
+  test("Tables.load starts no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsDuring(f: => Unit): Int = {
+      Bus.drain(sc)
+      jobs.set(0)
+      f
+      Bus.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(jobsDuring(Tables.all.foreach(Tables.load(spark, sf, _))) == 0)
+      // the counter sees the inference job the loader avoids
+      assert(jobsDuring(spark.read.parquet(s"$sf/region.parquet")) > 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def loadFailure(dir: String, name: String): String =
+    intercept[Exception](Tables.load(spark, dir, name)).getMessage
+
+  test("a missing table fails naming its path") {
+    val dir = Files.createTempDirectory("graft_tables_missing").toString
+    val msg = loadFailure(dir, "nosuch")
+    assert(msg.contains(s"$dir/nosuch.parquet"), msg)
+  }
+
+  test("an empty table directory fails naming its path") {
+    val dir = Files.createTempDirectory("graft_tables_empty").toFile
+    val table = new java.io.File(dir, "hollow.parquet")
+    assert(table.mkdir() && new java.io.File(table, "_SUCCESS").createNewFile())
+    val msg = loadFailure(dir.toString, "hollow")
+    assert(msg.contains(table.toString), msg)
   }
 }

@@ -281,9 +281,11 @@ def main():
         path = os.path.join(OUT, f"{name}.parquet")
         df = fn()
         if name == "events":
-            # the driver's events.ts is parquet TIMESTAMP(NANOS) and
-            # Tables.load expects to read it as a nanosecond LONG
-            # (nanosAsLong) — force ns units so sf1 reads identically
+            # write events.ts as parquet TIMESTAMP(NANOS). Tables.load
+            # accepts either encoding (it reads each table's schema from
+            # its footer): NANOS arrives as a nanosecond LONG under
+            # nanosAsLong, timestamp[us] as NTZ, both normalized to the
+            # same TIMESTAMP — ns keeps the NANOS path exercised at sf1
             import pyarrow as pa
             import pyarrow.parquet as pq
             table = pa.Table.from_pandas(df, preserve_index=False)

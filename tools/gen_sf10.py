@@ -143,8 +143,8 @@ def relational():
         df.to_parquet(os.path.join(OUT, f"{name}.parquet"), index=False)
         print(f"wrote {OUT}/{name}.parquet ({len(df)} rows)")
         del df
-    # events: parquet TIMESTAMP(NANOS), the driver's encoding
-    # (Tables.load reads ts as a nanosecond LONG under nanosAsLong)
+    # events: parquet TIMESTAMP(NANOS), as gen_sf1 writes it (Tables.load
+    # takes the schema from the footer and accepts it or timestamp[us])
     df = g1.events()
     table = pa.Table.from_pandas(df, preserve_index=False)
     idx = table.schema.get_field_index("ts")
