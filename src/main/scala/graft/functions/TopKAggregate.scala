@@ -253,9 +253,9 @@ case class TopKWeightedAggregate(
   *
   * Unlike the KMV fold, this fold is NOT idempotent — a summary
   * merged twice double-counts (counters are not a set). Exactly-once
-  * under replay is the STORE's job (version accounting in TopKStore),
-  * not the algebra's; the aggregate itself assumes each stored row
-  * appears once.
+  * under replay is the STORE's job (the [[graft.sources.SummaryStore]]
+  * visibility rule), not the algebra's; the aggregate itself assumes
+  * each stored row appears once.
   */
 case class TopKMergeAggregate(
     child: Expression,

@@ -242,8 +242,7 @@ object DocStore {
     val popped = readFinal(spark, table)
       .join(broadcast(ids), Seq("doc_id"))
       .localCheckpoint()
-    ids.write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dels")
+    Tombstones.of(table).append(spark, ids)
     popped
   }
 
@@ -254,27 +253,12 @@ object DocStore {
     * semantics, same read-exclusion, same [[compact]] retirement.
     */
   def popIds(spark: SparkSession, table: String, docIds: DataFrame): Unit =
-    docIds.select(col("doc_id")).distinct()
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dels")
+    Tombstones.of(table).append(spark, docIds.select(col("doc_id")))
 
-  /** The live takedown set, if any tombstones exist. */
-  private def delIds(spark: SparkSession, table: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(s"${table}_dels"))
-      Some(spark.table(s"${table}_dels").select(col("doc_id")).distinct())
-    else None
-
-  /** `df` minus tombstoned ids — a broadcast anti-join (the takedown
-    * set is bounded by requests, not data), or `df` untouched when no
-    * tombstone table exists, so stores that never pop keep their exact
-    * pre-delete plans.
-    */
+  /** `df` minus tombstoned ids ([[Tombstones.minus]]). */
   private def minusDels(
       spark: SparkSession, table: String, df: DataFrame): DataFrame =
-    delIds(spark, table) match {
-      case Some(d) => df.join(broadcast(d), Seq("doc_id"), "left_anti")
-      case None => df
-    }
+    Tombstones.of(table).minus(spark, df, "doc_id")
 
   /** The stored index. */
   def bands(spark: SparkSession, table: String): DataFrame =
@@ -475,10 +459,7 @@ object DocStore {
     // is in files that appear after this list (delta ⊇ missed rows),
     // and the stage honors AT LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
-    val delsSnap =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
+    val delsSnap = Tombstones.of(table).snapshot(spark)
     writeDocRows(readFinal(spark, table), docsTmp, b,
       SaveMode.Overwrite, layout)
     val bandsTmp = TableSwap.stageName(spark, s"${table}_bands")
@@ -537,14 +518,13 @@ object DocStore {
         partitioned = false)(df =>
         writeAnchorRows(df, s"${table}_anchors", b,
           SaveMode.Append)))
-    val delsNow =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
-    if (delsNow == st.delsSnap)
-      TableSwap.dropManaged(spark, s"${table}_dels")
+    Tombstones.of(table).retire(spark, st.delsSnap)
   }
 
+  /** OPTIMIZE inline: FINAL-rewrite the docs and rebuild the band (and
+    * anchor) indexes through staged swaps. Popped docs drop physically;
+    * the tombstones retire unless a pop landed mid-compact.
+    */
   def compact(
       spark: SparkSession,
       table: String,
@@ -557,6 +537,7 @@ object DocStore {
     val docsTmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
     TableSwap.dropAllStages(spark, s"${table}_bands")
+    val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
     writeDocRows(readFinal(spark, table), docsTmp, b,
       SaveMode.Overwrite, layout, writerOptions)
     TableSwap.swapIn(spark, docsTmp, table, partitioned = false)(df =>
@@ -578,6 +559,6 @@ object DocStore {
         writeAnchorRows(df, s"${table}_anchors", b,
           SaveMode.Append))
     }
-    TableSwap.dropManaged(spark, s"${table}_dels")
+    Tombstones.of(table).retire(spark, delsSnap)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{LabelProp, PageRank, Triangles}
 
 /** The stored entity graph WITH its served analytics — the summary-
-  * store fence ([[SketchStore]]/[[TopKStore]] discipline) applied to
+  * store fence (the [[SummaryStore]] discipline) applied to
   * whole-graph algorithms: PageRank and community labels are the
   * "summaries" here, maintained at a refresh cadence and SERVED from
   * node-grain tables, so "what is this entity's rank / community"
@@ -116,16 +116,11 @@ object GraphStore {
     * the tombstones (the StatementStore pop contract at node grain).
     */
   def pop(spark: SparkSession, table: String, nodes: DataFrame): Unit =
-    nodes.select(col("id").cast("string")).distinct()
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dels")
+    Tombstones.of(table)
+      .append(spark, nodes.select(col("id").cast("string")))
 
   private def dels(spark: SparkSession, table: String): Option[DataFrame] =
-    if (!spark.catalog.tableExists(s"${table}_dels")) None
-    else {
-      spark.catalog.refreshTable(s"${table}_dels")
-      Some(spark.table(s"${table}_dels").select(col("id")).distinct())
-    }
+    Tombstones.of(table).ids(spark, "id")
 
   /** The live DISTINCT edge set, tombstoned nodes excluded. */
   def edges(spark: SparkSession, table: String): DataFrame = {
@@ -155,7 +150,7 @@ object GraphStore {
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES('$key'='$value')")
 
   private def maxVer(spark: SparkSession, table: String): Long = {
-    spark.catalog.refreshTable(table) // cloned-session staleness: SketchStore doc
+    spark.catalog.refreshTable(table) // cloned-session staleness: SummaryStore doc
     val r = spark.table(table).agg(max(col("ver"))).collect()(0)
     val rowsMax = if (r.isNullAt(0)) 0L else r.getLong(0)
     // compaction preserves each edge's FIRST-SEEN ver (so the delta
@@ -242,10 +237,7 @@ object GraphStore {
       minSupport: Long = 2L, lpRounds: Int = 10,
       buckets: Int = 16, kcoreK: Long = 3L, kcoreRounds: Int = 10,
       deltaCensus: Boolean = true, compactEdges: Boolean = true): Unit = {
-    val delsSnap =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
+    val delsSnap = Tombstones.of(table).snapshot(spark)
     val asOf = maxVer(spark, table)
     val sv = scrubVer(spark, table)
     val params = s"$iters,$minSupport,$lpRounds,$kcoreK,$kcoreRounds"
@@ -449,10 +441,7 @@ object GraphStore {
   private def compactImpl(
       spark: SparkSession, table: String, buckets: Int,
       retireIfUnchangedSince: Option[Set[String]]): Unit = {
-    val delsSnap =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
+    val delsSnap = Tombstones.of(table).snapshot(spark)
     val asOf = maxVer(spark, table)
     val base = spark.table(table).groupBy(col("src"), col("dst"))
       .agg(min(col("ver")).as("ver")) // first-seen ver: see [[compact]]
@@ -474,14 +463,7 @@ object GraphStore {
     setProp(spark, table, "graft.graph.compact_ver", asOf.toString)
     if (delsSnap.nonEmpty)
       setProp(spark, table, "graft.graph.scrub_ver", asOf.toString)
-    retireIfUnchangedSince.foreach { snap =>
-      val delsNow =
-        if (spark.catalog.tableExists(s"${table}_dels"))
-          spark.table(s"${table}_dels").inputFiles.toSet
-        else Set.empty[String]
-      if (delsNow == snap && delsNow.nonEmpty)
-        TableSwap.dropManaged(spark, s"${table}_dels")
-    }
+    retireIfUnchangedSince.foreach(Tombstones.of(table).retire(spark, _))
   }
 
   private def stageSwap(

@@ -96,7 +96,7 @@ object VecStore {
       treeTopCount: Int = 0): Unit = {
     for (t <- Seq(table, s"${table}_cents", s"${table}_tops",
         s"${table}_leafmap", s"${table}_pq",
-        s"${table}_codes", s"${table}_dels")) {
+        s"${table}_codes", Tombstones.of(table).name)) {
       TableSwap.dropAllStages(spark, t)
       spark.sql(s"DROP TABLE IF EXISTS $t")
     }
@@ -209,8 +209,7 @@ object VecStore {
     val popped = readFinal(spark, table)
       .join(broadcast(ids), Seq("vec_id"))
       .localCheckpoint()
-    ids.write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dels")
+    Tombstones.of(table).append(spark, ids)
     popped
   }
 
@@ -220,25 +219,15 @@ object VecStore {
     * takedown micro-batch costs one request-bounded append.
     */
   def popIds(spark: SparkSession, table: String, vecIds: DataFrame): Unit =
-    vecIds.select(col("vec_id")).distinct()
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dels")
+    Tombstones.of(table).append(spark, vecIds.select(col("vec_id")))
 
-  /** `df` minus tombstoned vec_ids — broadcast anti-join (takedown
-    * sets are bounded by requests, not data); `df` untouched when no
-    * tombstone table exists, so stores that never pop keep their exact
-    * pre-delete plans. Shared by the FINAL read and every serving
-    * face's pruned scan (where it sits ABOVE the partition filter, so
-    * list pruning is unaffected).
+  /** `df` minus tombstoned vec_ids ([[Tombstones.minus]]). Shared by
+    * the FINAL read and every serving face's pruned scan (where it sits
+    * ABOVE the partition filter, so list pruning is unaffected).
     */
   private def minusDels(
       spark: SparkSession, table: String, df: DataFrame): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_dels"))
-      df.join(
-        broadcast(spark.table(s"${table}_dels")
-          .select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti")
-    else df
+    Tombstones.of(table).minus(spark, df, "vec_id")
 
   /** Which vectors of `newVecs` are semantic near-dups of the STORED
     * corpus — the d12 verdict frame restricted to stored×batch pairs
@@ -768,9 +757,10 @@ object VecStore {
     * cache that only ever grows defeats compaction), stamped with the
     * LIVE codebook's hash. [[pop]]ped vectors — already FINAL-excluded
     * — drop physically here, their code rows with them (the rebuild
-    * reads the compacted corpus); the tombstone table retires LAST, so
-    * a crash anywhere earlier leaves the anti-join filtering ids that
-    * are already gone — a no-op, never a resurrection.
+    * reads the compacted corpus); the tombstone table retires LAST and
+    * only if no pop landed mid-compact, so a crash anywhere earlier
+    * leaves the anti-join filtering ids that are already gone — a
+    * no-op, never a resurrection.
     */
   def compact(
       spark: SparkSession,
@@ -781,13 +771,14 @@ object VecStore {
     val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
     val tmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
+    val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
     writeListed(readFinal(spark, table), tmp, b,
       SaveMode.Overwrite)
     TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
       writeListed(df, table, b, SaveMode.Append))
     if (spark.catalog.tableExists(s"${table}_codes"))
       rebuildCodes(spark, table, liveCodebook(spark, table), b)
-    TableSwap.dropManaged(spark, s"${table}_dels")
+    Tombstones.of(table).retire(spark, delsSnap)
   }
 
   /** Handle between [[compactStage]] and [[compactFinish]] — the
@@ -829,10 +820,7 @@ object VecStore {
     // delta ⊇ every row the stage can miss, and the stage honors AT
     // LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
-    val delsSnap =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
+    val delsSnap = Tombstones.of(table).snapshot(spark)
     writeListed(readFinal(spark, table), vecsTmp, b,
       SaveMode.Overwrite)
     val codesTmp =
@@ -915,12 +903,7 @@ object VecStore {
           rebuildCodes(spark, table, live, b)
       }
     }
-    val delsNow =
-      if (spark.catalog.tableExists(s"${table}_dels"))
-        spark.table(s"${table}_dels").inputFiles.toSet
-      else Set.empty[String]
-    if (delsNow == st.delsSnap)
-      TableSwap.dropManaged(spark, s"${table}_dels")
+    Tombstones.of(table).retire(spark, st.delsSnap)
   }
 
   /** MIGRATE a store written by an older build to the current layout —
@@ -1038,18 +1021,19 @@ object VecStore {
     * staged swap. The repair body shared by [[migrate]]'s drift step,
     * [[treeify]], and [[untreeify]]; popped rows (already
     * FINAL-excluded) drop physically, so the tombstones retire with
-    * the swap.
+    * the swap unless a pop landed mid-rewrite.
     */
   private def reassignCorpus(
       spark: SparkSession, table: String, buckets: Int): Unit = {
     val tmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
+    val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
     writeListed(withAssignment(spark,
       readFinal(spark, table).select(col("vec_id"), col("embedding")),
       table), tmp, buckets, SaveMode.Overwrite)
     TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
       writeListed(df, table, buckets, SaveMode.Append))
-    TableSwap.dropManaged(spark, s"${table}_dels")
+    Tombstones.of(table).retire(spark, delsSnap)
   }
 
   /** Opt an EXISTING populated store into TREE mode in place (r12) —

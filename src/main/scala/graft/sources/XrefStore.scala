@@ -81,22 +81,16 @@ object XrefStore {
     */
   def popDataset(
       spark: SparkSession, table: String, datasets: DataFrame): Unit =
-    datasets.select(col("dataset")).distinct()
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(s"${table}_dsdels")
+    Tombstones.ofDatasets(table)
+      .append(spark, datasets.select(col("dataset")))
 
   private def minusDsDels(
       spark: SparkSession, table: String, df: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(s"${table}_dsdels")) df
-    else {
-      spark.catalog.refreshTable(s"${table}_dsdels")
-      val dels = spark.table(s"${table}_dsdels")
-        .select(col("dataset")).distinct()
+    Tombstones.ofDatasets(table).ids(spark, "dataset").fold(df)(dels =>
       df.join(broadcast(dels),
         df("left_dataset") === dels("dataset") ||
           df("right_dataset") === dels("dataset"),
-        "left_anti")
-    }
+        "left_anti"))
 
   /** FINAL read: the latest judgement per (left_id, right_id) —
     * ReplacingMergeTree(ts), minus [[popDataset]]ed rows. In-bucket
@@ -131,12 +125,10 @@ object XrefStore {
     // a caller-parameter mismatch would otherwise leave file bucket
     // ids the table spec disowns, which bucketed reads drop silently
     val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-    // tombstone snapshot BEFORE the FINAL read (the DocStore delsSnap
-    // discipline): the compacted rows honor at least these pops
-    val delsSnap =
-      if (spark.catalog.tableExists(s"${table}_dsdels"))
-        spark.table(s"${table}_dsdels").inputFiles.toSet
-      else Set.empty[String]
+    // tombstone snapshot BEFORE the FINAL read: the compacted rows
+    // honor at least these pops
+    val dels = Tombstones.ofDatasets(table)
+    val delsSnap = dels.snapshot(spark)
     val tmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
     writeMain(readLatest(spark, table), tmp, b, SaveMode.Overwrite)
@@ -176,12 +168,7 @@ object XrefStore {
       TableSwap.swapIn(spark, mtmp, target, partitioned = false)(df =>
         writeMapping(df, target, mb, SaveMode.Append))
     }
-    val delsNow =
-      if (spark.catalog.tableExists(s"${table}_dsdels"))
-        spark.table(s"${table}_dsdels").inputFiles.toSet
-      else Set.empty[String]
-    if (delsNow == delsSnap && delsNow.nonEmpty)
-      TableSwap.dropManaged(spark, s"${table}_dsdels")
+    dels.retire(spark, delsSnap)
   }
 
   // ---------------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -260,7 +260,7 @@ object Streams {
             if (asyncCompact) { compactor.schedule(); () }
             else graft.sources.DocStore.compact(spark, table),
           minBloatRatio,
-          () => spark.catalog.tableExists(s"${table}_dels")))
+          () => graft.sources.Tombstones.of(table).pending(spark)))
       }
     }
   }
@@ -429,7 +429,7 @@ object Streams {
             if (asyncCompact) { compactor.schedule(); () }
             else graft.sources.VecStore.compact(spark, table, buckets),
           minBloatRatio,
-          () => spark.catalog.tableExists(s"${table}_dels")))
+          () => graft.sources.Tombstones.of(table).pending(spark)))
       }
       // r12: the DRIFT-GATED PQ RETRAIN — PqDriftProbe measured a
       // 22–30% residual separation when new mass arrives, and the
@@ -504,7 +504,7 @@ object Streams {
       val spark = batch.sparkSession
       graft.sources.DocStore.popIds(spark, table, batch)
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1 &&
-          spark.catalog.tableExists(s"${table}_dels"))
+          graft.sources.Tombstones.of(table).pending(spark))
         graft.sources.DocStore.compact(spark, table)
     }
 
@@ -523,29 +523,29 @@ object Streams {
       val spark = batch.sparkSession
       graft.sources.VecStore.popIds(spark, table, batch)
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1 &&
-          spark.catalog.tableExists(s"${table}_dels"))
+          graft.sources.Tombstones.of(table).pending(spark))
         graft.sources.VecStore.compact(spark, table, buckets)
     }
 
-  /** st16's SOURCE-grain face (r13 — completes the delete story
-    * across every store): right-to-be-forgotten requests at corpus
-    * grain (a crawl, a dump, a dataset) pop the source's sketch
-    * telemetry ([[graft.sources.SketchStore.pop]]) and its xref
-    * judgement + derived mapping rows
+  /** st16b — the SOURCE-grain takedown: right-to-be-forgotten
+    * requests at corpus grain (a crawl, a dump, a dataset) pop the
+    * source from its summary telemetry ([[graft.sources.SketchStore]],
+    * [[graft.sources.TopKStore]] — [[graft.sources.SummaryStore.pop]])
+    * and its xref judgement + derived mapping rows
     * ([[graft.sources.XrefStore.popDataset]] — a judgement row names
     * the forgotten entities on either side, so it goes wholesale).
-    * Immediate read-side exclusion from `readEstimates` and the
-    * judgement faces; physical cleanup and the mapping's full-resolver
-    * rebuild at the compact cadence (losing a dataset's positives can
-    * split components — the rebuild is structural, not a delta).
-    * Same replay/crash contract as [[takedownDocs]]: the tombstone
-    * appends are idempotent under re-delivery, takedown is sticky
-    * until compaction.
+    * Every store follows the [[graft.sources.Tombstones]] protocol:
+    * immediate read-side exclusion, physical cleanup when the cadence
+    * tick finds tombstones pending — plus, for xref, the mapping's
+    * full-resolver rebuild (losing a dataset's positives can split
+    * components). A summary batch replayed after that compact stays
+    * behind the store's fold horizon, so a popped source stays gone.
+    * Same replay/crash contract as [[takedownDocs]].
     *
-    * `requests` carries one `source` column; either store can be
-    * omitted. Keep `compactEvery` = 0 when the same tables are
-    * compacted by their ingest streams' cadence (the two-compactors
-    * race rule of [[takedownDocs]]).
+    * `requests` carries one `source` column; each store is optional.
+    * Keep `compactEvery` = 0 when the same tables are compacted by
+    * their ingest streams' cadence (the two-compactors race rule of
+    * [[takedownDocs]]).
     */
   def takedownSources(
       requests: DataFrame,
@@ -562,150 +562,99 @@ object Streams {
         graft.sources.SketchStore.pop(spark, t, batch))
       xrefTable.foreach(t => graft.sources.XrefStore.popDataset(
         spark, t, batch.select(col("source").as("dataset"))))
-      // the r13 heavy-hitters telemetry retires with its source too —
-      // an MG summary is derived from the source's raw terms, so
-      // "forget the source" includes its head terms (the SketchStore
-      // rationale at summary grain)
       topkTable.foreach(t =>
         graft.sources.TopKStore.pop(spark, t, batch))
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-        sketchTable
-          .filter(t => spark.catalog.tableExists(s"${t}_dels"))
+        def pending(t: String) = graft.sources.Tombstones.of(t).pending(spark)
+        sketchTable.filter(pending)
           .foreach(t => graft.sources.SketchStore.compact(spark, t, k))
         // compact rewrites at the store's CREATION bucketing
         // (TableSwap.bucketsOf), so no bucket parameter to mismatch
         xrefTable
-          .filter(t => spark.catalog.tableExists(s"${t}_dsdels"))
+          .filter(t => graft.sources.Tombstones.ofDatasets(t).pending(spark))
           .foreach(t => graft.sources.XrefStore.compact(spark, t))
-        topkTable
-          .filter(t => spark.catalog.tableExists(s"${t}_dels"))
+        topkTable.filter(pending)
           .foreach(t =>
             graft.sources.TopKStore.compact(spark, t, topkCapacity))
       }
     }
 
-  /** st18 — streaming CARDINALITY telemetry: the q25 K-Minimum-Values
-    * sketch maintained continuously over a document stream
-    * ([[graft.sources.SketchStore]]): each micro-batch folds one
-    * batch-grain sketch row per source into the versioned sketch
-    * table, and [[graft.sources.SketchStore.readEstimates]] serves
-    * "distinct shingles per source, ever" at any moment without a
-    * corpus rescan — the mix-drift monitor a continuously-ingesting
-    * training pipeline wants (a source whose cardinality curve goes
-    * flat is re-sending old content; one that jumps is a new crawl).
-    *
-    * Why a SKETCH and not a counter: the state is a value-hash SET,
-    * so the read-side fold (union) is IDEMPOTENT in batches — a
-    * replayed micro-batch after a checkpoint restart appends rows the
-    * union absorbs, and served estimates cannot double-count under
-    * at-least-once delivery (spec-asserted). `compactEvery` bounds
-    * fold-at-read cost with the staged-swap OPTIMIZE every N batches
-    * (the st13 cadence discipline; estimates invariant across it).
+  /** The telemetry writers' loop (st18, st20, st22, st23): fold each
+    * micro-batch into its [[graft.sources.SummaryStore]] face at
+    * `ver = batchId`, and compact on every `compactEvery`-th batch —
+    * the staged-swap OPTIMIZE that bounds fold-at-read cost; serves are
+    * invariant across it. Replays need no coordination: the store's
+    * visibility rule dedups a batch replayed before its compact and
+    * hides one replayed after it.
+    */
+  private def foldOnCadence(stream: DataFrame, compactEvery: Int)(
+      apply: (SparkSession, DataFrame, Long) => Unit,
+      compact: SparkSession => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    ingestInto(stream) { (batch, batchId) =>
+      apply(batch.sparkSession, batch, batchId)
+      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+        compact(batch.sparkSession)
+    }
+
+  /** st18 — streaming CARDINALITY telemetry: the q25 KMV sketch per
+    * source ([[graft.sources.SketchStore]]), served by
+    * [[graft.sources.SketchStore.readEstimates]] as "distinct shingles
+    * per source, ever" without a corpus rescan — the mix-drift monitor
+    * a continuously-ingesting training pipeline wants (a source whose
+    * cardinality curve goes flat is re-sending old content; one that
+    * jumps is a new crawl).
     */
   def sketchCardinality(
       docs: DataFrame, table: String, k: Int = 16384,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ingestInto(docs) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      graft.sources.SketchStore.applyBatch(spark, batch, table, k, batchId)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        graft.sources.SketchStore.compact(spark, table, k)
-    }
+    foldOnCadence(docs, compactEvery)(
+      graft.sources.SketchStore.applyBatch(_, _, table, k, _),
+      graft.sources.SketchStore.compact(_, table, k))
 
   /** st20 — streaming HEAVY-HITTERS telemetry: the q23 Misra–Gries
-    * top-k summary maintained continuously over a document stream
-    * ([[graft.sources.TopKStore]]): each micro-batch appends one
-    * full-capacity summary row per source, and [[graft.sources
-    * .TopKStore.readTopK]] serves "which terms dominate each source,
-    * ever" at any moment without a corpus rescan — st18's sibling at
-    * the heavy-hitters grain (cardinality tells you a source DRIFTED;
-    * the head terms tell you INTO WHAT).
-    *
-    * The honest contrast with st18, and why this store is designed
-    * differently: a KMV sketch is a value SET, so st18's read fold
-    * absorbs replayed batches structurally; an MG summary is a
-    * COUNTER map — merged twice it double-counts. Exactly-once under
-    * at-least-once delivery therefore comes from VERSION ACCOUNTING
-    * in the store (one visible row per (source, batchId); rows
-    * replayed after their batch was compacted fall behind the folded
-    * row's version horizon) — the ReplacingMerge discipline doing for
-    * counters what set algebra did for hashes (spec-asserted: a
-    * replayed batch and a post-compact replay both move nothing).
-    * `compactEvery` bounds fold-at-read cost with the staged-swap
-    * OPTIMIZE every N batches (estimates invariant across it).
+    * summary per source ([[graft.sources.TopKStore]]), served by
+    * [[graft.sources.TopKStore.readTopK]] as "which terms dominate each
+    * source, ever" — cardinality tells you a source DRIFTED, the head
+    * terms tell you INTO WHAT.
     */
   def topkTelemetry(
       docs: DataFrame, table: String, capacity: Int = 4096,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ingestInto(docs) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      graft.sources.TopKStore.applyBatch(spark, batch, table, capacity, batchId)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        graft.sources.TopKStore.compact(spark, table, capacity)
-    }
+    foldOnCadence(docs, compactEvery)(
+      graft.sources.TopKStore.applyBatch(_, _, table, capacity, _),
+      graft.sources.TopKStore.compact(_, table, capacity))
 
-  /** st22 — streaming QUANTILE telemetry: the q30 KLL sketch
-    * maintained continuously over a document stream
-    * ([[graft.sources.QuantileStore]]): each micro-batch appends one
-    * summary row per source over the batch's per-document token
-    * counts, and [[graft.sources.QuantileStore.readQuantiles]] serves
-    * "the live p50/p95/p99 document length per source, ever" at any
-    * moment without a corpus rescan — the third face of the sketch
-    * telemetry trio (st18 cardinality: a source DRIFTED; st20 head
-    * terms: into WHAT; st22 length distribution: did its SHAPE
-    * change — truncation, spam padding and boilerplate floods all
-    * move the tails first).
-    *
-    * Replay discipline: a KLL summary is a weighted multiset — merged
-    * twice it double-weights, MG's hazard not KMV's immunity — so
-    * exactly-once comes from the store's VERSION ACCOUNTING (one
-    * visible row per (source, batchId); post-compact replays fall
-    * behind the folded row's version horizon), spec-asserted the same
-    * three ways as st20: replayed batch moves nothing, compact is
-    * serve-invariant, post-compact replay moves nothing.
-    * `compactEvery` bounds fold-at-read cost with the staged-swap
-    * OPTIMIZE every N batches.
+  /** st22 — streaming QUANTILE telemetry: the q30 KLL sketch of
+    * document token counts per source ([[graft.sources.QuantileStore]]),
+    * served by [[graft.sources.QuantileStore.readQuantiles]] as "the
+    * live p50/p95/p99 document length per source, ever" — whether a
+    * source's SHAPE changed (truncation, spam padding and boilerplate
+    * floods move the tails first).
     */
   def quantileTelemetry(
       docs: DataFrame, table: String, k: Int = 4096,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ingestInto(docs) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      graft.sources.QuantileStore.applyBatch(spark, batch, table, k, batchId)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        graft.sources.QuantileStore.compact(spark, table, k)
-    }
+    foldOnCadence(docs, compactEvery)(
+      graft.sources.QuantileStore.applyBatch(_, _, table, k, _),
+      graft.sources.QuantileStore.compact(_, table, k))
 
-  /** st22's sibling at the EXACT grain — st23 streaming AUDIENCE
-    * telemetry: the q33 bitmap maintained continuously over an event
-    * stream ([[graft.sources.BitmapStore]]): each micro-batch appends
-    * one user-bitmap row per event type, and [[graft.sources
-    * .BitmapStore.readAudience]] serves "exactly which users has this
-    * event type reached, ever" at any moment. Completes the telemetry
-    * quartet: st18 cardinality estimate, st20 head terms, st22 length
-    * distribution — and st23 the EXACT id set where the others sketch.
-    *
-    * Replay discipline: set union absorbs replayed batch rows
-    * STRUCTURALLY (the st18 immunity — duplicates set the same bits);
-    * the store still keeps a version horizon because it supports
-    * user-grain DELETION ([[graft.sources.BitmapStore.popUsers]] —
-    * the exact forget no sketch can do): without the horizon, a batch
-    * replayed after its compact (tombstones retired) would resurrect
-    * a scrubbed user's bits. `compactEvery` bounds fold-at-read cost
-    * with the staged-swap OPTIMIZE every N batches.
+  /** st23 — streaming AUDIENCE telemetry: the q33 user bitmap per event
+    * type ([[graft.sources.BitmapStore]]), served by
+    * [[graft.sources.BitmapStore.readAudience]] as "exactly which users
+    * has this event type reached, ever" — the EXACT id set where
+    * st18/st20/st22 sketch, and so the one telemetry face with
+    * user-grain deletion ([[graft.sources.BitmapStore.popUsers]]).
     */
   def audienceTelemetry(
       events: DataFrame, table: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    ingestInto(events) { (batch, batchId) =>
-      val spark = batch.sparkSession
-      graft.sources.BitmapStore.applyBatch(spark, batch, table, batchId)
-      if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-        graft.sources.BitmapStore.compact(spark, table)
-    }
+    foldOnCadence(events, compactEvery)(
+      graft.sources.BitmapStore.applyBatch(_, _, table, _),
+      graft.sources.BitmapStore.compact(_, table))
 
   /** st25 — streaming GRAPH ingest with served analytics: an edge
     * stream (columns `src`, `dst`) folds into a [[graft.sources
@@ -736,7 +685,7 @@ object Streams {
         // rewrite runs when a takedown is pending (scrub + retire is
         // the st16 contract) or on the explicit compactEvery cadence
         // (duplicate-row collapse, the st13 compaction discipline)
-        val delsPending = spark.catalog.tableExists(s"${table}_dels")
+        val delsPending = graft.sources.Tombstones.of(table).pending(spark)
         val compactTick =
           compactEvery > 0 && batchId % compactEvery == compactEvery - 1
         graft.sources.GraphStore.refresh(spark, table, iters, minSupport,

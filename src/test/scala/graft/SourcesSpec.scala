@@ -508,6 +508,154 @@ class SourcesSpec extends AnyFunSuite {
     assert(aud() == Map("view" -> 2L, "click" -> 1L))
   }
 
+  // The summary stores share one visibility rule: the compact stamps
+  // one fold horizon on the whole table, so a batch replayed after the
+  // compact that dropped a popped source cannot bring the source back.
+  test("summary stores: a pre-compact batch replayed after compact keeps a popped source gone") {
+    import spark.implicits._
+    import graft.sources.{QuantileStore, SketchStore, TopKStore}
+    val k = 64
+    final case class Face(
+        apply: (org.apache.spark.sql.DataFrame, String, Long) => Unit,
+        pop: (String, org.apache.spark.sql.DataFrame) => Unit,
+        compact: String => Unit,
+        read: String => org.apache.spark.sql.DataFrame)
+    val faces = Seq(
+      "sketch" -> Face(SketchStore.applyBatch(spark, _, _, k, _),
+        SketchStore.pop(spark, _, _), SketchStore.compact(spark, _, k),
+        SketchStore.readEstimates(spark, _, k)),
+      "topk" -> Face(TopKStore.applyBatch(spark, _, _, k, _),
+        TopKStore.pop(spark, _, _), TopKStore.compact(spark, _, k),
+        TopKStore.readTopK(spark, _, 3, k)),
+      "quantile" -> Face(QuantileStore.applyBatch(spark, _, _, k, _),
+        QuantileStore.pop(spark, _, _), QuantileStore.compact(spark, _, k),
+        QuantileStore.readQuantiles(spark, _, k)))
+    def docs(rows: (Long, String, String)*) =
+      rows.toDF("doc_id", "text", "source")
+    val b0 = docs((1L, "alpha beta gamma delta", "s1"),
+      (2L, "eta theta iota kappa", "s2"))
+    for ((name, f) <- faces) {
+      val t = s"replay_pop_$name"
+      Seq(t, s"${t}_dels").foreach(dropTable)
+      def sources(): Set[String] =
+        f.read(t).select("source").as[String].collect().toSet
+      f.apply(b0, t, 0L)
+      f.apply(docs((3L, "lambda mu nu xi", "s2")), t, 1L)
+      f.pop(t, Seq("s1").toDF("source"))
+      f.compact(t)
+      assert(!spark.catalog.tableExists(s"${t}_dels"), name)
+      f.apply(b0, t, 0L) // at-least-once redelivery of batch 0
+      assert(sources() == Set("s2"),
+        s"$name: post-compact replay resurrected a popped source")
+      // a fresh batch past the horizon lands: s1 may legitimately return
+      f.apply(docs((4L, "omicron pi rho sigma", "s1")), t, 2L)
+      assert(sources() == Set("s1", "s2"), name)
+    }
+  }
+
+  // Read-face plan shapes: the horizon and the per-(key, ver, folded)
+  // dedup ride the fold's one exchange; tombstones add the request-
+  // bounded distinct and its broadcast.
+  test("summary store read faces: one exchange for the fold, one broadcast per tombstone mask") {
+    import spark.implicits._
+    import graft.sources.{BitmapStore, QuantileStore, SketchStore, TopKStore}
+    def shape(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.executedPlan.toString
+      (PlanCounters.shuffles(plan), PlanCounters.broadcasts(plan))
+    }
+    val k = 64
+    val docs = Seq((1L, "a a b c", "s1"), (2L, "x y", "s2"))
+      .toDF("doc_id", "text", "source")
+    val reads = Seq[(String, String => org.apache.spark.sql.DataFrame)](
+      "plan_sk" -> (SketchStore.readEstimates(spark, _, k)),
+      "plan_tk" -> (TopKStore.readTopK(spark, _, 3, k)),
+      "plan_ql" -> (QuantileStore.readQuantiles(spark, _, k)))
+    reads.foreach { case (t, _) => Seq(t, s"${t}_dels").foreach(dropTable) }
+    SketchStore.applyBatch(spark, docs, "plan_sk", k, 0L)
+    TopKStore.applyBatch(spark, docs, "plan_tk", k, 0L)
+    QuantileStore.applyBatch(spark, docs, "plan_ql", k, 0L)
+    for ((t, read) <- reads) assert(shape(read(t)) == ((1, 0)), t)
+    SketchStore.pop(spark, "plan_sk", Seq("s1").toDF("source"))
+    TopKStore.pop(spark, "plan_tk", Seq("s1").toDF("source"))
+    QuantileStore.pop(spark, "plan_ql", Seq("s1").toDF("source"))
+    for ((t, read) <- reads) assert(shape(read(t)) == ((2, 1)), t)
+    Seq("plan_bm", "plan_bm_dels").foreach(dropTable)
+    BitmapStore.applyBatch(spark, Seq(("view", 1L), ("click", 2L))
+      .toDF("event_type", "user_id"), "plan_bm", 0L)
+    assert(shape(BitmapStore.readAudience(spark, "plan_bm")) == ((2, 1)))
+    BitmapStore.popUsers(spark, "plan_bm", Seq(2L).toDF("user_id"))
+    assert(shape(BitmapStore.readAudience(spark, "plan_bm")) == ((2, 1)))
+  }
+
+  // A pop that lands while a compact runs — after its tombstone
+  // snapshot — must survive the compact's retirement step and keep
+  // masking reads until the next compact. The pop is injected on the
+  // compacting thread when the compact re-points the live table at its
+  // rewritten rows (the catalog's AlterTableEvent is posted
+  // synchronously), i.e. between the snapshot and the retirement.
+  test("inline compacts keep a pop that lands mid-compact (doc, vec, vec re-assignment)") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.catalog.{AlterTableEvent,
+      ExternalCatalogEvent, ExternalCatalogEventListener}
+    import graft.sources.{DocStore, VecStore}
+    def popMidCompact(table: String, pop: () => Unit)(compact: => Unit) = {
+      var fired = false
+      val listener = new ExternalCatalogEventListener {
+        def onEvent(e: ExternalCatalogEvent): Unit = e match {
+          case AlterTableEvent(_, `table`, "table") if !fired =>
+            fired = true
+            pop()
+          case _ =>
+        }
+      }
+      val catalog = spark.sharedState.externalCatalog
+      catalog.addListener(listener)
+      try compact
+      finally catalog.removeListener(listener)
+      assert(fired, s"$table: the compact never swapped the live table")
+    }
+    // doc store
+    Seq("doc_midpop", "doc_midpop_bands", "doc_midpop_dels")
+      .foreach(dropTable)
+    DocStore.append(Seq((1L, "one two three four five six", "s"),
+      (2L, "seven eight nine ten eleven twelve", "s"),
+      (3L, "thirteen fourteen fifteen sixteen seventeen", "s"))
+      .toDF("doc_id", "text", "source"), "doc_midpop", buckets = 4)
+    DocStore.popIds(spark, "doc_midpop", Seq(1L).toDF("doc_id"))
+    popMidCompact("doc_midpop",
+      () => DocStore.popIds(spark, "doc_midpop", Seq(2L).toDF("doc_id")))(
+      DocStore.compact(spark, "doc_midpop", buckets = 4))
+    assert(spark.catalog.tableExists("doc_midpop_dels"),
+      "a pop that landed mid-compact was retired with the snapshot")
+    assert(DocStore.readFinal(spark, "doc_midpop").select("doc_id")
+      .as[Long].collect().toSet == Set(3L))
+    DocStore.compact(spark, "doc_midpop", buckets = 4)
+    assert(!spark.catalog.tableExists("doc_midpop_dels"))
+    assert(DocStore.read(spark, "doc_midpop").count() == 1)
+    // vec store: the inline compact and the corpus re-assignment
+    // behind treeify/untreeify/migrate
+    val emb = Tables.load(spark, sf, "embeddings")
+    val ids = emb.select("vec_id").as[Long].collect().sorted.take(2)
+    val rewrites = Seq[(String, String => Unit)](
+      "vec_midpop_compact" -> (VecStore.compact(spark, _, buckets = 4)),
+      "vec_midpop_treeify" -> { t =>
+        VecStore.treeify(spark, t, topCount = 3, buckets = 4); () })
+    for ((t, rewrite) <- rewrites) {
+      Seq(t, s"${t}_cents", s"${t}_tops", s"${t}_leafmap", s"${t}_pq",
+        s"${t}_codes", s"${t}_dels").foreach(dropTable)
+      VecStore.init(spark, t, emb, col("label"), buckets = 4)
+      VecStore.popIds(spark, t, Seq(ids(0)).toDF("vec_id"))
+      popMidCompact(t,
+        () => VecStore.popIds(spark, t, Seq(ids(1)).toDF("vec_id")))(
+        rewrite(t))
+      assert(spark.catalog.tableExists(s"${t}_dels"), t)
+      val live = VecStore.readFinal(spark, t).select("vec_id").as[Long]
+        .collect().toSet
+      assert(!live(ids(0)) && !live(ids(1)), t)
+      assert(live.size == emb.count() - 2, t)
+    }
+  }
+
   test("xref store popDataset: judgements excluded, mapping rebuilt at compact") {
     import spark.implicits._
     Seq("xref_pop", "xref_pop_reverse", "xref_pop_mapping",
