@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Statements
 import graft.operators.{EntityQuery, Fpx, Xref}
 import graft.sources.{BitmapStore, FpxStore, FtmJson, QuantileStore,
-  StatementStore, TopKStore, XrefStore}
+  StatementStore, SummaryStore, TopKStore, XrefStore}
 
 /** Command-line surface mirroring the reference CLI (cli.py: init /
   * optimize, plus the store write/query paths its ftmq integration
@@ -63,6 +63,8 @@ import graft.sources.{BitmapStore, FpxStore, FtmJson, QuantileStore,
   *                                      from summaries (never a corpus
   *                                      rescan); pop-source/pop-users
   *                                      take down; optimize compacts
+  *                                      (an ingest <ver> must pass
+  *                                      the vers it folded)
   *   --version                          print the library version and
   *                                      exit (cli.py:14-20)
   */
@@ -412,18 +414,28 @@ object Cli {
         val aTable = s"${base}_audience"
         val Capacity = 64 // MG counters per source (exact ≤ 64 regime)
         val KllK = 200    // KLL size (exact-below-k regime)
+        // optimize hides every ver up to the fold horizon it stamps (a
+        // replayed batch stays folded), so a batch at or below it would
+        // land invisible: refuse it
+        def pastHorizon(ver: String, tables: String*): Long = {
+          val v = ver.toLong
+          for (t <- tables; hi <- SummaryStore.horizon(spark, t)
+               if v <= hi)
+            sys.error(s"telemetry: <ver> $v is not past $t's fold " +
+              s"horizon $hi (set by optimize); ingest under ver > $hi")
+          v
+        }
         rest match {
           case "ingest-docs" :: path :: batchId :: Nil =>
+            val ver = pastHorizon(batchId, topkTable, qTable)
             val docs = spark.read.parquet(path)
-            TopKStore.applyBatch(spark, docs, topkTable, Capacity,
-              batchId.toLong)
-            QuantileStore.applyBatch(spark, docs, qTable, KllK,
-              batchId.toLong)
+            TopKStore.applyBatch(spark, docs, topkTable, Capacity, ver)
+            QuantileStore.applyBatch(spark, docs, qTable, KllK, ver)
             println(s"telemetry: folded doc batch $batchId into " +
               s"$topkTable, $qTable")
           case "ingest-events" :: path :: batchId :: Nil =>
             BitmapStore.applyBatch(spark, spark.read.parquet(path), aTable,
-              batchId.toLong)
+              pastHorizon(batchId, aTable))
             println(s"telemetry: folded event batch $batchId into $aTable")
           case "topk" :: kArg if kArg.length <= 1 =>
             val k = kArg.headOption.map(_.toInt).getOrElse(10)
@@ -464,7 +476,7 @@ object Cli {
             sys.error("usage: telemetry <base> ingest-docs <parquet> <ver>" +
               " | ingest-events <parquet> <ver> | topk [k] | quantiles" +
               s" | audience | pop-source <s> | pop-users <id,…> | optimize" +
-              s", got: $other")
+              s" (<ver> must pass every ver an optimize folded), got: $other")
         }
 
       case other =>

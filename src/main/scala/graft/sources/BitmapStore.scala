@@ -10,7 +10,9 @@ import graft.functions.Bitmap
   * "exactly which users has each event type reached, ever". The
   * streaming face is st23 ([[graft.streaming.Streams
   * .audienceTelemetry]]); the merge is
-  * [[graft.functions.BitmapOrAggregate]] (`graft_bitmap_or`).
+  * [[graft.functions.BitmapOrAggregate]] (`graft_bitmap_or`), which
+  * absorbs a replayed row, so the fold skips the store's dedup and
+  * aggregates partially.
   *
   * What only this face can do: USER-grain right-to-be-forgotten.
   * [[popUsers]] tombstones user ids; every read masks them after the
@@ -24,7 +26,8 @@ import graft.functions.Bitmap
   */
 object BitmapStore {
 
-  private val store = new SummaryStore("event_type", "bm")
+  private val store =
+    new SummaryStore("event_type", "bm", absorbsReplays = true)
 
   /** Fold a batch of events in: one bitmap row per event type. */
   def applyBatch(
@@ -44,7 +47,7 @@ object BitmapStore {
   def foldBitmaps(spark: SparkSession, table: String): DataFrame = {
     val dels = Tombstones.of(table).rows(spark)
       .getOrElse(spark.range(0).select(col("id").as("user_id")))
-    store.visible(spark, table)
+    store.visible(spark, table)(identity)
       .groupBy(col("event_type"))
       .agg(Bitmap.bitmapOr(col("bm")).as("bm"))
       .crossJoin(broadcast(

@@ -22,7 +22,7 @@ import graft.operators.Dedup
   */
 object QuantileStore {
 
-  private val store = new SummaryStore("source", "sk")
+  private val store = new SummaryStore("source", "sk", absorbsReplays = false)
 
   /** Fold a batch of documents in: one sketch row per source. */
   def applyBatch(

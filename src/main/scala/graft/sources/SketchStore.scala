@@ -16,14 +16,17 @@ import graft.operators.Dedup
   * the merge is [[graft.functions.KmvUnionAggregate]] — the k smallest
   * of the union of k-min sets IS the k-min set of the union, so the
   * fold equals the sketch one pass over the full history would build,
-  * with a merge buffer of ≤ k longs whatever the number of rows.
+  * with a merge buffer of ≤ k longs whatever the number of rows. The
+  * union absorbs a replayed row, so the fold skips the store's dedup
+  * and aggregates partially: ≤ k longs per task and source cross the
+  * exchange.
   */
 object SketchStore {
 
   /** Shingle width shared with q25's registry face (and its oracle). */
   val shingleN = 3
 
-  private val store = new SummaryStore("source", "sk")
+  private val store = new SummaryStore("source", "sk", absorbsReplays = true)
 
   /** Fold a batch of documents in: one sketch row per source. */
   def applyBatch(

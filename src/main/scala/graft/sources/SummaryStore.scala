@@ -23,18 +23,23 @@ import org.apache.spark.sql.functions._
   *     throughout, crash-safe, idempotent);
   *   - VISIBILITY ([[visible]]), one rule for every face: the folded
   *     rows at the horizon plus the raw rows past it, one row per
-  *     `(key, ver, folded)` (deterministic pick: md5 of the summary
-  *     json). A batch replayed before the compact that folds it
-  *     (at-least-once delivery) dedups; one replayed after it sits at
-  *     `ver ≤` the horizon and stays invisible — for EVERY key,
-  *     including a key popped before that compact, whose rows and
-  *     tombstones the compact dropped. Counter and multiset summaries
-  *     (MG, KLL) double-count a row merged twice; set summaries (KMV,
-  *     bitmap) would absorb it, but a deletion still needs the horizon.
+  *     `(key, ver, folded)`. A batch replayed before the compact that
+  *     folds it (at-least-once delivery) counts once; one replayed
+  *     after it sits at `ver ≤` the horizon and stays invisible — for
+  *     EVERY key, including a key popped before that compact, whose
+  *     rows and tombstones the compact dropped. A fresh batch must
+  *     therefore carry a `ver` past the horizon.
   *
-  * The horizon is read on the driver (one narrow job over two columns)
-  * before the plan is built, and the plan partitions on the key once,
-  * so the dedup window and the merge share one exchange.
+  * Counter and multiset summaries (MG, KLL) double-count a row merged
+  * twice, so their faces dedup per `(key, ver, folded)` (deterministic
+  * pick: md5 of the summary json) in a window that shares the merge's
+  * one key exchange. Set summaries (KMV, bitmap) absorb a row merged
+  * twice — `absorbsReplays` — so their faces skip the window and the
+  * merge keeps its partial aggregation: what crosses the exchange is
+  * one merge buffer per task and key, not every raw row. Key
+  * tombstones are masked before the exchange. The horizon is read on
+  * the driver ([[SummaryStore.horizon]], one single-stage job over the
+  * folded rows) before the plan is built.
   *
   * Deletion is the [[Tombstones]] protocol: [[pop]] masks whole keys
   * (a summary is derived from the key's raw values, so forgetting a
@@ -49,7 +54,8 @@ import org.apache.spark.sql.functions._
   * per key is (batches since compact + 1) summaries, re-bounded by the
   * compact cadence; nothing driver-side ever holds a summary.
   */
-final class SummaryStore(key: String, value: String) {
+final class SummaryStore(
+    key: String, value: String, absorbsReplays: Boolean) {
 
   private def write(df: DataFrame, table: String, mode: SaveMode): Unit =
     df.write.format("parquet").mode(mode).saveAsTable(table)
@@ -67,26 +73,27 @@ final class SummaryStore(key: String, value: String) {
   def pop(spark: SparkSession, table: String, keys: DataFrame): Unit =
     Tombstones.of(table).append(spark, keys.select(col(key)))
 
-  /** The rows a fold may see (class doc), partitioned on the key. */
-  def visible(spark: SparkSession, table: String): DataFrame = {
-    spark.catalog.refreshTable(table)
+  /** The rows a fold may see (class doc); `mask` drops popped rows
+    * before the dedup's exchange.
+    */
+  def visible(spark: SparkSession, table: String)(
+      mask: DataFrame => DataFrame): DataFrame = {
+    val hi = SummaryStore.horizon(spark, table) // refreshes the listing
     val rows = spark.table(table)
-    val hi = rows.filter(col("folded")).agg(max(col("ver"))).head()
-    val live =
-      if (hi.isNullAt(0)) rows
-      else rows.filter(col("ver") > hi.getLong(0) ||
-        (col("folded") && col("ver") === hi.getLong(0)))
-    val once = Window.partitionBy(col(key), col("ver"), col("folded"))
-      .orderBy(md5(to_json(col(value))))
-    live.repartition(col(key))
-      .withColumn("__rn", row_number().over(once))
+    val live = mask(hi.fold(rows)(hi =>
+      rows.filter(col("ver") > hi || (col("folded") && col("ver") === hi))))
+    if (absorbsReplays) live
+    else live.repartition(col(key))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col(key), col("ver"), col("folded"))
+          .orderBy(md5(to_json(col(value))))))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
 
   /** The visible rows of unpopped keys merged per key by `merge`. */
   def fold(spark: SparkSession, table: String, merge: Column): DataFrame =
-    Tombstones.of(table).minus(spark, visible(spark, table), key)
+    visible(spark, table)(Tombstones.of(table).minus(spark, _, key))
       .groupBy(col(key)).agg(merge)
 
   /** OPTIMIZE: swap in `folded` — one `(key, value)` row per key — at
@@ -109,4 +116,21 @@ final class SummaryStore(key: String, value: String) {
       dels.retire(spark, snap)
     }
   }
+}
+
+object SummaryStore {
+
+  /** The table's fold horizon — the `ver` its last compact stamped —
+    * or None before the first compact (or when there is no table). One
+    * map-side max per task over the folded rows (a single-stage job,
+    * row groups of raw rows skipped by their `folded` statistics).
+    */
+  def horizon(spark: SparkSession, table: String): Option[Long] =
+    if (!spark.catalog.tableExists(table)) None
+    else {
+      spark.catalog.refreshTable(table)
+      Some(spark.table(table).filter(col("folded")).select(col("ver"))
+        .rdd.map(_.getLong(0)).fold(Long.MinValue)(math.max(_, _)))
+        .filter(_ != Long.MinValue)
+    }
 }

@@ -55,9 +55,14 @@ final case class Tombstones(name: String) {
   def snapshot(spark: SparkSession): Set[String] =
     rows(spark).fold(Set.empty[String])(_.inputFiles.toSet)
 
-  /** Drop the tombstones if they are still exactly `snap`. */
+  /** Drop the tombstones if `snap` held some and they are still
+    * exactly `snap`. An empty snapshot retires nothing: a first pop
+    * writes its files before it registers the table, so the warehouse
+    * may hold an in-flight pop that the catalog does not show yet.
+    */
   def retire(spark: SparkSession, snap: Set[String]): Unit =
-    if (snapshot(spark) == snap) TableSwap.dropManaged(spark, name)
+    if (snap.nonEmpty && snapshot(spark) == snap)
+      TableSwap.dropManaged(spark, name)
 }
 
 object Tombstones {

@@ -22,7 +22,7 @@ import graft.operators.Dedup
   */
 object TopKStore {
 
-  private val store = new SummaryStore("source", "sk")
+  private val store = new SummaryStore("source", "sk", absorbsReplays = false)
 
   /** Fold a batch of documents in: one summary row per source. */
   def applyBatch(

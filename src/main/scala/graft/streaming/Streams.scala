@@ -584,8 +584,8 @@ object Streams {
     * `ver = batchId`, and compact on every `compactEvery`-th batch —
     * the staged-swap OPTIMIZE that bounds fold-at-read cost; serves are
     * invariant across it. Replays need no coordination: the store's
-    * visibility rule dedups a batch replayed before its compact and
-    * hides one replayed after it.
+    * visibility rule counts a batch replayed before its compact once
+    * and hides one replayed after it.
     */
   private def foldOnCadence(stream: DataFrame, compactEvery: Int)(
       apply: (SparkSession, DataFrame, Long) => Unit,

@@ -468,6 +468,29 @@ class CliSpec extends AnyFunSuite {
     assert(cli("telemetry", "tel", "audience") == aud2,
       "audience changed across compact")
   }
+
+  test("cli telemetry refuses an ingest ver at or below the fold horizon") {
+    import spark.implicits._
+    clean("telv_topk", "telv_topk_dels", "telv_quantiles",
+      "telv_quantiles_dels", "telv_audience", "telv_audience_dels")
+    def cli(args: String*): Unit = Cli.run(spark, args.toList)
+    Seq(("srcA", "alpha beta")).toDF("source", "text")
+      .write.mode("overwrite").parquet("/tmp/graft_cli_telv_d")
+    Seq((1L, "view")).toDF("user_id", "event_type")
+      .write.mode("overwrite").parquet("/tmp/graft_cli_telv_e")
+    cli("telemetry", "telv", "ingest-docs", "/tmp/graft_cli_telv_d", "3")
+    cli("telemetry", "telv", "ingest-events", "/tmp/graft_cli_telv_e", "3")
+    cli("telemetry", "telv", "optimize")
+    for (verb <- Seq("ingest-docs" -> "/tmp/graft_cli_telv_d",
+        "ingest-events" -> "/tmp/graft_cli_telv_e"); ver <- Seq("2", "3")) {
+      val e = intercept[RuntimeException](
+        cli("telemetry", "telv", verb._1, verb._2, ver))
+      assert(e.getMessage.contains("fold horizon 3"), e.getMessage)
+    }
+    cli("telemetry", "telv", "ingest-docs", "/tmp/graft_cli_telv_d", "4")
+    cli("telemetry", "telv", "ingest-events", "/tmp/graft_cli_telv_e", "4")
+  }
+
   test("cli graph: ingest, refresh, rank/community lookups, pop, staleness") {
     import spark.implicits._
     clean("cli_graph", "cli_graph_dels", "cli_graph_ranks",

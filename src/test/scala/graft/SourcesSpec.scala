@@ -656,6 +656,38 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  // A first pop writes its files before it registers `<table>_dels` in
+  // the catalog. A compact that found no tombstones must not clear that
+  // name: the in-flight pop's files stay where its registration will
+  // point.
+  test("summary compacts keep a first pop still writing after an empty tombstone snapshot") {
+    import spark.implicits._
+    import graft.sources.{BitmapStore, SketchStore, TopKStore}
+    val docs = Seq((1L, "alpha beta gamma", "s1"), (2L, "delta eta", "s2"))
+      .toDF("doc_id", "text", "source")
+    val compacts = Seq[(String, String => Unit, String => Unit)](
+      ("first_pop_sk", SketchStore.applyBatch(spark, docs, _, 64, 0L),
+        SketchStore.compact(spark, _, 64)),
+      ("first_pop_tk", TopKStore.applyBatch(spark, docs, _, 64, 0L),
+        TopKStore.compact(spark, _, 64)),
+      ("first_pop_bm", BitmapStore.applyBatch(spark,
+        Seq(("view", 1L)).toDF("event_type", "user_id"), _, 0L),
+        BitmapStore.compact(spark, _)))
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    for ((t, apply, compact) <- compacts) {
+      Seq(t, s"${t}_dels").foreach(dropTable)
+      apply(t)
+      val inFlight = new java.io.File(wh, s"${t}_dels")
+      Seq("s1").toDF("source").write.parquet(inFlight.getPath)
+      val files = inFlight.list().toSet
+      compact(t)
+      assert(inFlight.exists() && files.subsetOf(inFlight.list().toSet),
+        s"$t: the compact removed an in-flight first pop")
+      Seq(t, s"${t}_dels").foreach(dropTable)
+    }
+  }
+
   test("xref store popDataset: judgements excluded, mapping rebuilt at compact") {
     import spark.implicits._
     Seq("xref_pop", "xref_pop_reverse", "xref_pop_mapping",

@@ -3,31 +3,28 @@
 
 Reads the JUnit reports sbt writes to target/test-reports/TEST-*.xml and
 prints each suite's wall time and test count, slowest first, then the
-total. Exits 1 when the total passes the suite budget (1800 s by
-default), 2 when there is no report to read.
+total. Exits 1 when the total passes the 1800 s suite budget, 2 when
+there is no report to read.
 
-    python3 tools/suite_times.py [REPORT_DIR] [--budget SECONDS]
+    python3 tools/suite_times.py
 """
-import argparse
 import glob
 import os
 import sys
 import xml.etree.ElementTree as ET
 
+REPORTS = "target/test-reports"
+BUDGET_S = 1800.0
+
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("reports", nargs="?", default="target/test-reports")
-    ap.add_argument("--budget", type=float, default=1800.0)
-    args = ap.parse_args()
-
     rows = []
-    for path in glob.glob(os.path.join(args.reports, "TEST-*.xml")):
+    for path in glob.glob(os.path.join(REPORTS, "TEST-*.xml")):
         suite = ET.parse(path).getroot()
         rows.append((float(suite.get("time", 0)), int(suite.get("tests", 0)),
                      suite.get("name", os.path.basename(path))))
     if not rows:
-        print(f"no TEST-*.xml under {args.reports}", file=sys.stderr)
+        print(f"no TEST-*.xml under {REPORTS}", file=sys.stderr)
         return 2
 
     rows.sort(reverse=True)
@@ -37,8 +34,8 @@ def main() -> int:
     total = sum(secs for secs, _, _ in rows)
     print(f"{'total':<{width}}  {total:9.1f} s  "
           f"{sum(tests for _, tests, _ in rows):4d} tests "
-          f"(budget {args.budget:.0f} s)")
-    return 1 if total > args.budget else 0
+          f"(budget {BUDGET_S:.0f} s)")
+    return 1 if total > BUDGET_S else 0
 
 
 if __name__ == "__main__":
