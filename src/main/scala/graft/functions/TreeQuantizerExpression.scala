@@ -47,17 +47,6 @@ final class TreeMatrix(
 
   def leafCount: Int = leafIds.map(_.length).sum
 
-  // mirrors Spark's RoundBase: NaN/Infinity pass through unchanged
-  // (JBigDecimal.valueOf would throw NumberFormatException), so a
-  // zero-norm embedding (dot/(0·cn) = NaN) scores like the
-  // declarative round() form instead of killing the task: NaN loses
-  // every `v < bestNd` comparison, and first-wins falls back to the
-  // id-ascending head — the array_min-over-structs tie order.
-  private def round4(v: Double): Double =
-    if (v.isNaN || v.isInfinite) v
-    else JBigDecimal.valueOf(v).setScale(4, RoundingMode.HALF_UP)
-      .doubleValue()
-
   // the DotProductExpression fold, emb element type resolved by flag
   private def dot(e: ArrayData, floatEmb: Boolean,
       c: Array[Double]): Double = {
@@ -71,7 +60,7 @@ final class TreeMatrix(
 
   private def nd(e: ArrayData, floatEmb: Boolean, c: Array[Double],
       norm: Double, cn: Double): Double =
-    -round4(dot(e, floatEmb, c) / (norm * cn))
+    -TreeMatrix.round4(dot(e, floatEmb, c) / (norm * cn))
 
   /** Index of the best subtree (stage-1 argmin): first-wins over the
     * id-ascending top array = min by (nd, top_id).
@@ -160,6 +149,19 @@ final class TreeMatrix(
 }
 
 object TreeMatrix {
+
+  /** Spark's `round(v, 4)` on a double: HALF_UP on the decimal
+    * expansion. Mirrors Spark's RoundBase: NaN/Infinity pass through
+    * unchanged (JBigDecimal.valueOf would throw NumberFormatException),
+    * so a zero-norm embedding (dot/(0·cn) = NaN) scores NaN instead of
+    * killing the task: NaN loses every `v < bestNd` comparison, and
+    * first-wins falls back to the id-ascending head — the
+    * array_min-over-structs tie order.
+    */
+  def round4(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else JBigDecimal.valueOf(v).setScale(4, RoundingMode.HALF_UP)
+      .doubleValue()
 
   /** Build from driver-side JVM rows: (top_id, centroid, centNorm)
     * and per-leaf (list_id, centroid, centNorm, owning top_id). Ids

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deterministic stratified sampling — the corpus-rebalancing step of a
   * training-data pipeline (e.g. downsample the dominant language so the
@@ -165,12 +166,16 @@ object Sampling {
     * [[graft.Queries]]); a deployment wanting other τ values supplies
     * explicit weights through [[datasetMix]].
     *
-    * Scale shape: token totals FOLD FROM the prefix sum's own bounded
-    * (stratum, bucket) rollup — materialized once, so deriving the
-    * weights adds zero corpus-grain work to d10's plan — Σw rides a
-    * broadcast 1-row aggregate, and selection is the d10 bucketed
-    * prefix sum unchanged (budget-frontier drop before the window
-    * shuffle, at each stratum's derived frontier).
+    * Scale shape: the (stratum, bucket) token rollup — ≤ strata ×
+    * `nBuckets` rows by construction — is collected once, and the
+    * driver derives everything the budgets need from it in exact long
+    * arithmetic: each bucket's exclusive offset, the per-stratum
+    * totals and floored sqrt weights, Σw and `w · B DIV Σw` (overflow
+    * fails, as Spark's ANSI arithmetic does). The surviving
+    * (stratum, bucket, offset, budget) rows join back as a broadcast
+    * local table, so the budget-frontier drop still happens before
+    * the window shuffle, at each stratum's derived frontier, and no
+    * bounded state is checkpointed.
     * Zero-token strata get zero budget; an all-empty corpus yields an
     * empty result (the Σw > 0 guard), never a division error.
     */
@@ -178,33 +183,66 @@ object Sampling {
       df: DataFrame, stratum: String, id: String, tokens: Column,
       totalBudget: Long, nBuckets: Int = 64, seed: Int = 0): DataFrame = {
     require(totalBudget > 0, s"totalBudget must be positive, got $totalBudget")
-    // token totals come from the prefix sum's OWN bounded rollup (the
-    // deriveBudgets hook), never a second corpus-grain aggregation —
-    // the first cut aggregated the corpus twice more inside the
-    // budget subtree and the plan pin caught it at 6 shuffles
-    val derive: DataFrame => DataFrame = { pref =>
-      val totals = pref
-        .groupBy(col(stratum))
-        .agg(sum(col("__bt")).as("__n"))
-        .withColumn("__w",
-          floor(sqrt(col("__n").cast("double"))).cast("long"))
-      totals
-        .crossJoin(broadcast(totals.agg(sum(col("__w")).as("__wsum"))))
-        .filter(col("__wsum") > 0)
-        .select(col(stratum),
-          expr(s"__w * ${totalBudget}L DIV __wsum").as("__budget"))
+    import scala.jdk.CollectionConverters._
+    val base = bucketed(df, stratum, id, tokens, nBuckets, seed)
+    val rollup = base.groupBy(col(stratum), col("__bucket"))
+      .agg(sum(col("__n_tokens")).as("__bt"))
+    // Spark's sum: nulls skipped, null when nothing is left
+    def total(xs: Iterable[Any]): Option[Long] =
+      xs.collect { case n: Long => n }.reduceOption[Long](Math.addExact)
+    // per stratum, its buckets in ascending order (a null bucket — a
+    // null id — sorts first, as in the window the offsets replace)
+    val strata = rollup.collect().toSeq.groupBy(_.get(0)).map {
+      case (s, rs) =>
+        s -> rs.sortBy(r => Option(r.get(1)).map(_.asInstanceOf[Long]))
     }
-    bucketedCumSum(df, stratum, id, tokens, nBuckets, seed,
-      offsetCap = None, deriveBudgets = Some(derive))
+    val weights = strata.map { case (s, rs) =>
+      s -> total(rs.map(_.get(2)))
+        .map(n => math.floor(math.sqrt(n.toDouble)).toLong)
+    }
+    val offsets = for {
+      wSum <- total(weights.values.flatten).filter(_ > 0).toSeq
+      (s, rs) <- strata.toSeq
+      w <- weights(s).toSeq
+      budget = Math.multiplyExact(w, totalBudget) / wSum
+      (r, off) <- rs.zip(rs.scanLeft(0L)((acc, r) => r.get(2) match {
+        case n: Long => Math.addExact(acc, n)
+        case _ => acc
+      }))
+      if off < budget
+    } yield Row(s, r.get(1), off, budget)
+    val schema = StructType(Seq(rollup.schema(stratum),
+      rollup.schema("__bucket"), StructField("__off", LongType),
+      StructField("__budget", LongType)))
+    withinBuckets(df, base, stratum, id,
+      df.sparkSession.createDataFrame(offsets.asJava, schema),
+      withBudget = true)
       .filter(col("cum_tokens") <= col("__budget"))
       .withColumnRenamed("__budget", "budget")
   }
 
-  /** The shared bucketed-prefix-sum core of [[tokenBudgetBucketed]]
-    * and [[sequencePack]]: appends `cum_tokens` (the inclusive running
-    * total of `tokens` within `stratum`, ordered by (60-bit md5 of
-    * `id`, `id`)) without collapsing a stratum into one window
-    * partition. `offsetCap`, when set, drops whole buckets whose
+  /** `df` with the columns every bucketed prefix sum reads: `__u` (the
+    * 60-bit md5 of `id`), `__n_tokens` and `__bucket` (the hash range
+    * the row falls in, so bucket order IS hash order).
+    */
+  private def bucketed(
+      df: DataFrame, stratum: String, id: String, tokens: Column,
+      nBuckets: Int, seed: Int): DataFrame = {
+    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
+    // md5Hash60 lands in [0, 2^60); integral DIV keeps bucket order
+    // exactly aligned with hash order (the q20b lesson: double
+    // division drifts past 2^53)
+    val width = math.max((1L << 60) / nBuckets, 1L)
+    df.withColumn("__u", Dedup.md5Hash60(lit(seed), col(id).cast("string")))
+      .withColumn("__n_tokens", tokens.cast("long"))
+      .withColumn("__bucket", expr(s"__u DIV ${width}L"))
+  }
+
+  /** The shared bucketed-prefix-sum core of [[tokenBudgetBucketed]],
+    * [[datasetMix]] and [[sequencePack]]: appends `cum_tokens` (the
+    * inclusive running total of `tokens` within `stratum`, ordered by
+    * (60-bit md5 of `id`, `id`)) without collapsing a stratum into one
+    * window partition. `offsetCap`, when set, drops whole buckets whose
     * exclusive prefix already reaches the cap BEFORE the window
     * shuffle — the budget-frontier optimization only the sampling
     * caller can use (packing needs every row).
@@ -212,39 +250,20 @@ object Sampling {
   private def bucketedCumSum(
       df: DataFrame, stratum: String, id: String, tokens: Column,
       nBuckets: Int, seed: Int, offsetCap: Option[Long],
-      budgets: Option[DataFrame] = None,
-      deriveBudgets: Option[DataFrame => DataFrame] = None): DataFrame = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    require(budgets.isEmpty || deriveBudgets.isEmpty,
-      "budgets and deriveBudgets are mutually exclusive")
+      budgets: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // md5Hash60 lands in [0, 2^60); integral DIV keeps bucket order
-    // exactly aligned with hash order (the q20b lesson: double
-    // division drifts past 2^53)
-    val width = math.max((1L << 60) / nBuckets, 1L)
-    val base = df
-      .withColumn("__u", Dedup.md5Hash60(lit(seed), col(id).cast("string")))
-      .withColumn("__n_tokens", tokens.cast("long"))
-      .withColumn("__bucket", expr(s"__u DIV ${width}L"))
-    val prefixes0 = base
+    val base = bucketed(df, stratum, id, tokens, nBuckets, seed)
+    val prefixes = base
       .groupBy(col(stratum), col("__bucket"))
       .agg(sum(col("__n_tokens")).as("__bt"))
       .withColumn("__off", coalesce(
         sum(col("__bt")).over(Window.partitionBy(col(stratum))
           .orderBy(col("__bucket"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    // when budgets derive FROM the rollup itself (temperatureMix), the
-    // BOUNDED rollup (≤ strata × nBuckets rows) materializes once so
-    // the corpus-grain aggregation is never re-instantiated per
-    // consumer — the d12 multi-consumer discipline at rollup grain
-    val prefixes =
-      if (deriveBudgets.isDefined) prefixes0.localCheckpoint()
-      else prefixes0
-    val allBudgets = budgets.orElse(deriveBudgets.map(_(prefixes)))
     // per-stratum budgets ([[datasetMix]]): the domain-grain table
     // joins the BOUNDED prefix rollup, so the frontier drop below
     // happens at each stratum's own budget — same place, same cost
-    val offsets = (offsetCap, allBudgets) match {
+    val offsets = (offsetCap, budgets) match {
       case (Some(cap), _) =>
         prefixes.filter(col("__off") < cap)
           .select(col(stratum), col("__bucket"), col("__off"))
@@ -256,6 +275,19 @@ object Sampling {
       case (None, None) =>
         prefixes.select(col(stratum), col("__bucket"), col("__off"))
     }
+    withinBuckets(df, base, stratum, id, offsets, budgets.isDefined)
+  }
+
+  /** The running sum inside each (stratum, bucket) window plus the
+    * bucket's exclusive `__off`: `base` joins the broadcast `offsets`
+    * (stratum, `__bucket`, `__off`[, `__budget`]), so only rows of the
+    * buckets `offsets` keeps reach the window shuffle. Returns `df`'s
+    * columns, `cum_tokens` and, `withBudget`, `__budget`.
+    */
+  private def withinBuckets(
+      df: DataFrame, base: DataFrame, stratum: String, id: String,
+      offsets: DataFrame, withBudget: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(stratum), col("__bucket"))
       .orderBy(col("__u"), col(id))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -265,7 +297,7 @@ object Sampling {
         sum(col("__n_tokens")).over(w) + col("__off"))
       // the using-join moved its keys first; restore the caller's
       // column order so every caller returns the identical schema
-      .select(allBudgets.fold(outCols)(_ => outCols :+ col("__budget")): _*)
+      .select((if (withBudget) outCols :+ col("__budget") else outCols): _*)
   }
 
   /** Concat-and-split sequence packing — the step that turns a

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -720,84 +723,111 @@ object Similarity {
     * top_id tie-break; refine = dim-major member mean), then leaves
     * RE-assign to the refined tops so the map is consistent with the
     * tops queries will probe. Returns (tops(top_id, centroid),
-    * leafMap(list_id, top_id)). Leaf centroids are bounded (≤ L rows),
-    * so the windows here are centroid-grain, never corpus-grain.
+    * leafMap(list_id, top_id)).
+    *
+    * The leaf centroids are bounded (≤ L rows), so the training is one
+    * collect and plain Scala on the driver ([[trainTree]]) and both
+    * results are local frames: no Spark job beyond the collect, no
+    * checkpoint, nothing pinned for the caller to release.
     */
   def treeQuantizer(
-      cents0: DataFrame, topCount: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    // the d12 checkpoint discipline: every table here is CENTROID
-    // grain (≤ L rows), but each is consumed by several downstream
-    // branches — checkpointing runs the training subtree once and
-    // keeps the final plan's Exchange count flat in consumer count
-    val cents = cents0.localCheckpoint()
-    // seeds: topCount lowest-list_id leaves, top_id = 0..topCount-1 in
-    // list_id order. limit-first = distributed TakeOrdered (no global
-    // sort of the L centroids); the unpartitioned window then runs
-    // over ≤ topCount rows — the s5 driver-bounded-seed discipline.
-    val seeds =
-      cents.select(col("list_id"), col("centroid"))
-        .orderBy(col("list_id")).limit(topCount)
-        .withColumn("top_id",
-          row_number().over(Window.orderBy(col("list_id")))
-            .cast("long") - 1L)
-        .select(col("top_id"), col("centroid").as("sc"),
-          sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("sn"))
-    val leafN = cents.select(col("list_id"), col("centroid"),
-      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("ln"))
-    def assignTo(tops: DataFrame): DataFrame =
-      leafN.crossJoin(broadcast(tops))
-        .withColumn("d", round(Dedup.cosineWithNorms(
-          col("centroid"), col("sc"), col("ln"), col("sn")), 4))
-        .groupBy(col("list_id"))
-        .agg(
-          min_by(col("top_id"), struct((-col("d")).as("nd"), col("top_id")))
-            .as("top_id"),
-          first(col("centroid")).as("centroid"))
-    // one Lloyd step: seed assignment → dim-major member mean
-    val tops = assignTo(seeds)
-      .select(col("top_id"), posexplode(col("centroid")))
-      .groupBy(col("top_id"), col("pos"))
-      .agg(avg(col("col")).as("m"))
-      .groupBy(col("top_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        e => e.getField("m")).as("centroid"))
-      .localCheckpoint()
-    val topN = tops.select(col("top_id"), col("centroid").as("sc"),
-      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("sn"))
-    val leafMap = assignTo(topN).select(col("list_id"), col("top_id"))
-      .localCheckpoint()
-    // both results are eager checkpoints of their own: the training
-    // copy is no longer read by anything (the caller owns the two
-    // returned frames)
-    Fixpoint.release(cents)
+      cents: DataFrame, topCount: Int): (DataFrame, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    val idField = cents.schema("list_id")
+    val tree = trainTree(idField.dataType, collectLeaves(cents), topCount)
+    val spark = cents.sparkSession
+    val tops = spark.createDataFrame(
+      tree.tops.map { case (t, c) => Row(t, c.toSeq) }.asJava,
+      StructType(Seq(StructField("top_id", LongType),
+        StructField("centroid", ArrayType(DoubleType)))))
+    val leafMap = spark.createDataFrame(
+      tree.leafTop.map { case (id, t) => Row(id, t) }.asJava,
+      StructType(Seq(idField, StructField("top_id", LongType))))
     (tops, leafMap)
   }
 
-  /** s7 — IVF ANN through the [[treeQuantizer]]: corpus vectors and
-    * query probes descend the tree (nearest super-centroid, then
-    * nearest leaf among ONLY that super-centroid's children) instead
-    * of scanning all L centroids; queries probe `nProbeTop` subtrees
-    * and the `nProbe` best leaves found inside them; members of the
-    * probed leaves score exactly, top-k per query.
-    *
-    * Plan shape: the corpus path is one scan → broadcast crossJoin
-    * with `topCount` tops → per-vector argmax (map-side combined, one
-    * narrow row per vector shuffles) → broadcast join fanning out to
-    * the assigned subtree's leaves only → second per-vector argmax
-    * that REUSES the level-1 exchange (both aggregate on the vector
-    * id, so Catalyst satisfies the second groupBy from the first's
-    * HashPartitioning — spec-pinned: exactly one corpus-side
-    * Exchange through both levels). Tree assignment is approximate vs
-    * the flat argmax (a vector whose nearest leaf lives under a
-    * different subtree mis-assigns — the standard tree-IVF trade;
-    * BASELINE.md round 12 records the agreement rate and the
-    * assignment speedup at L = 100 and L = 1000).
+  /** The leaf centroids on the driver as (list_id, centroid) — the one
+    * collect the tree training reads.
     */
+  private def collectLeaves(cents: DataFrame): Seq[(Any, Array[Double])] =
+    cents.select(col("list_id"), col("centroid")).collect().toSeq
+      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
+
+  /** A trained tree: the refined tops in top_id order and each leaf's
+    * top, leaves in list_id order.
+    */
+  private[graft] final case class TrainedTree(
+      tops: Seq[(Long, Array[Double])], leafTop: Seq[(Any, Long)])
+
+  /** [[treeQuantizer]]'s training over collected leaf centroids, choice
+    * for choice the declarative form it replaced (the spec twin):
+    *   - seeds: the `topCount` first leaves in Spark's ascending
+    *     `list_id` order (nulls first, then the Catalyst ordering
+    *     [[graft.functions.TreeMatrix.build]] sorts by), top_id = rank;
+    *   - a leaf's top: min of (-round(cos, 4), top_id) — Spark's HALF_UP
+    *     round, Spark's double ordering (NaN above every number, equal
+    *     to itself), ties to the lowest top_id. A zero-norm leaf scores
+    *     NaN against every top and lands in the lowest one (the
+    *     declarative twin divides by its zero norm, which ANSI
+    *     division rejects);
+    *   - cosines and norms fold with [[graft.functions
+    *     .DotProductExpression]]'s `dotDD` loop;
+    *   - a refined top is the dim-major mean of its seed members, in
+    *     list_id order; a seed with no member has no refined top.
+    */
+  private[graft] def trainTree(
+      idType: DataType, leaves: Seq[(Any, Array[Double])],
+      topCount: Int): TrainedTree = {
+    import graft.functions.TreeMatrix
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
+    val conv = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val sorted = leaves.map(l => (l, conv(l._1))).sortWith {
+      case ((_, a), (_, b)) =>
+        if (a == null || b == null) a == null && b != null
+        else ord.compare(a, b) < 0
+    }.map { case ((id, c), _) => (id, c, vecNorm(c)) }
+    // every leaf with its top; no leaf has one when there is no top
+    def assign(tops: Seq[(Long, Array[Double], Double)]) =
+      if (tops.isEmpty) Nil
+      else sorted.map { case (id, c, n) =>
+        val top = tops.map { case (t, tc, tn) =>
+          (t, -TreeMatrix.round4(vecDot(c, tc) / (n * tn)))
+        }.reduceLeft((a, b) =>
+          if (SQLOrderingUtil.compareDoubles(b._2, a._2) < 0) b else a)._1
+        (id, c, top)
+      }
+    val seeds = sorted.take(math.max(topCount, 0)).zipWithIndex
+      .map { case ((_, c, n), i) => (i.toLong, c, n) }
+    val tops = assign(seeds).groupBy(_._3).toSeq.sortBy(_._1)
+      .map { case (t, ms) => (t, dimMean(ms.map(_._2))) }
+      .filter(_._2.nonEmpty)
+    TrainedTree(tops,
+      assign(tops.map { case (t, c) => (t, c, vecNorm(c)) })
+        .map { case (id, _, t) => (id, t) })
+  }
+
+  /** Per-position mean over the member vectors that have the position
+    * — `avg` over posexplode, summed in member order.
+    */
+  private def dimMean(ms: Seq[Array[Double]]): Array[Double] =
+    Array.tabulate(ms.map(_.length).max) { p =>
+      val xs = ms.collect { case m if m.length > p => m(p) }
+      xs.foldLeft(0.0)(_ + _) / xs.size
+    }
+
+  private def vecDot(a: Array[Double], b: Array[Double]): Double =
+    graft.functions.DotProductExpression.dotDD(
+      new GenericArrayData(a), new GenericArrayData(b))
+
+  private def vecNorm(c: Array[Double]): Double = math.sqrt(vecDot(c, c))
+
   /** The level-2 broadcast side of the tree descent: leaf centroids
     * with precomputed norms, annotated with their subtree —
     * centroid-grain, checkpointed (consumed by the corpus descent AND
-    * the probe ranking).
+    * the probe ranking). A spec twin: the served paths carry the tree
+    * in a [[graft.functions.TreeMatrix]].
     */
   private[graft] def treeLeaves(
       cents: DataFrame, leafMap: DataFrame): DataFrame =
@@ -829,6 +859,27 @@ object Similarity {
       .select(col(idCol), col("b.list_id").as("list_id"),
         col("b.embedding").as("embedding"), col("b.__n").as("__n"))
 
+  /** s7 — IVF ANN through the [[treeQuantizer]]: corpus vectors and
+    * query probes descend the tree (nearest super-centroid, then
+    * nearest leaf among ONLY that super-centroid's children) instead
+    * of scanning all L centroids; queries probe `nProbeTop` subtrees
+    * and the `nProbe` best leaves found inside them; members of the
+    * probed leaves score exactly, top-k per query.
+    *
+    * Build: one collect of the L leaf centroids. The driver trains the
+    * tree from those rows ([[trainTree]]) and packs it into a
+    * [[graft.functions.TreeMatrix]]; no other job runs and nothing is
+    * checkpointed, so the returned plan pins no RDD.
+    *
+    * Plan shape: the corpus descent is a scan projection through the
+    * matrix expression (the join form, [[treeDescend]], is its spec
+    * twin); the probes are a broadcast side, and the one corpus-side
+    * exchange feeds the top-k aggregation. Tree assignment is
+    * approximate vs the flat argmax (a vector whose nearest leaf lives
+    * under a different subtree mis-assigns — the standard tree-IVF
+    * trade; BASELINE.md round 12 records the agreement rate and the
+    * assignment speedup at L = 100 and L = 1000).
+    */
   def ivfTreeTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -838,40 +889,34 @@ object Similarity {
       nProbeTop: Int = 2,
       nProbe: Int = 3): DataFrame = {
     import graft.functions.{TreeMatrix, TreeQuantizerExpression}
-    val c0 = cents.localCheckpoint()
-    val (tops, leafMap) = treeQuantizer(c0, topCount)
     // r12: the trained tree rides as ONE expression-local matrix
-    // (centroid-grain collects — the bounded class of s2's hyperplane
-    // matrix; norms via the same centNorms arithmetic), so the corpus
-    // descent is a scan PROJECTION: the corpus-grain argmax exchange
-    // and the corpus × topCount/subtree row fan-outs of the join form
-    // ([[treeDescend]], kept as the spec twin and choice-bitwise to
-    // this expression — randomized parity spec) disappear from the
-    // plan entirely. What remains corpus-side is the one narrow
-    // shuffle into the top-k aggregation.
-    val idType = c0.schema("list_id").dataType
-    val leafTop = leafMap.collect()
-      .map(r => (r.get(0), r.getLong(1))).toMap
-    val leavesByTop = centNorms(c0).collect()
-      .map(r => (r.get(0), r.getSeq[Double](1), r.getDouble(2)))
-      .toSeq.groupBy(c => leafTop(c._1)).map { case (t, v) => t -> v }
-    val topSeq = centNorms(
-      tops.select(col("top_id").as("list_id"), col("centroid")))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-      .toSeq
-    // the collects above are the training's last readers: the returned
-    // plan carries the tree inside `tm`, not these checkpoints
-    Seq(c0, tops, leafMap).foreach(Fixpoint.release)
+    // (centroid-grain, the bounded class of s2's hyperplane matrix), so
+    // the corpus descent is a scan PROJECTION: the corpus-grain argmax
+    // exchange and the corpus × topCount/subtree row fan-outs of the
+    // join form ([[treeDescend]], kept as the spec twin and
+    // choice-bitwise to this expression — randomized parity spec)
+    // disappear from the plan entirely. What remains corpus-side is the
+    // one narrow shuffle into the top-k aggregation. The leaf centroids
+    // are collected once: the driver trains the tree from those rows
+    // ([[trainTree]]) and the same rows fill the matrix's leaves, with
+    // [[centNorms]]' norm arithmetic.
+    val idType = cents.schema("list_id").dataType
+    val leaves = collectLeaves(cents)
+    val tree = trainTree(idType, leaves, topCount)
     // degenerate: an empty corpus trains no tree — answer empty in the
     // standard (query_id, neighbor_id, cos) top-k shape instead of
     // building a zero-node matrix
-    if (topSeq.isEmpty)
+    if (tree.tops.isEmpty)
       return topKPerQuery(
         queries.limit(0).select(col("vec_id").as("query_id"))
           .crossJoin(corpus.limit(0)
             .select(col("vec_id").as("neighbor_id")))
           .withColumn("cos", lit(0.0)), k)
+    val leafTop = tree.leafTop.toMap
+    val leavesByTop = leaves
+      .map { case (id, c) => (id, c.toSeq, vecNorm(c)) }
+      .groupBy(l => leafTop(l._1))
+    val topSeq = tree.tops.map { case (t, c) => (t, c.toSeq, vecNorm(c)) }
     val tm = TreeMatrix.build(idType, topSeq, leavesByTop)
     val assigned = corpus
       .select(col("vec_id").as("neighbor_id"),

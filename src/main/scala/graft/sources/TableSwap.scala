@@ -81,7 +81,10 @@ object TableSwap {
     * every PARTITION location individually, not just the table root,
     * so re-pointing the root alone would still delete the live rows of
     * a partitioned stage (dropPartitions with retainData keeps the
-    * files).
+    * files). The throwaway location is an empty directory made just
+    * before the move — SET LOCATION resolves the relation there, and a
+    * missing directory logs a FileNotFoundException — and the managed
+    * DROP that follows removes it.
     */
   private def detach(spark: SparkSession, table: String, loc: URI): Unit = {
     val cat = spark.sessionState.catalog
@@ -94,7 +97,10 @@ object TableSwap {
         cat.dropPartitions(ident(table), parts.map(_.spec),
           ignoreIfNotExists = true, purge = false, retainData = true)
     }
-    spark.sql(s"ALTER TABLE $table SET LOCATION '${loc.toString}_detached'")
+    val target = new org.apache.hadoop.fs.Path(
+      s"${loc.toString.stripSuffix("/")}_detached")
+    target.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(target)
+    spark.sql(s"ALTER TABLE $table SET LOCATION '$target'")
   }
 
   /** Reclaim a stage table left by an earlier crashed compact WITHOUT

@@ -219,6 +219,35 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("custody: bounded training state is collected, never pinned (s7 tree, p7 budgets, tree store)") {
+    import graft.operators.{Dedup, Sampling, Similarity}
+    import graft.sources.{TableSwap, VecStore}
+    import org.apache.spark.sql.functions.{col, size}
+    val emb = Tables.load(spark, sf, "embeddings")
+    val queries = emb.filter(col("vec_id") < 10)
+    def unchanged(name: String)(f: => Unit): Unit = {
+      val before = pinned()
+      f
+      assert(pinned() == before, s"$name left an RDD persisted")
+    }
+    for ((name, corpus) <- Seq("trained" -> emb, "empty" -> emb.limit(0)))
+      unchanged(s"ivfTreeTopK ($name)")(Similarity.ivfTreeTopK(corpus,
+        queries, Similarity.centroids(corpus, col("label")),
+        k = 5, topCount = 3).collect())
+    unchanged("temperatureMix")(Sampling.temperatureMix(
+      Tables.load(spark, sf, "documents").select(col("doc_id"),
+        col("source"), size(Dedup.words(col("text"))).cast("long")
+          .as("n_tokens")),
+      "source", "doc_id", col("n_tokens"), totalBudget = 6000L).collect())
+    val store = "custody_tree_store"
+    val tables = Seq(store, s"${store}_cents", s"${store}_tops",
+      s"${store}_leafmap")
+    tables.foreach(TableSwap.dropManaged(spark, _))
+    try unchanged("VecStore.init with a tree")(VecStore.init(spark, store,
+      emb, col("label"), buckets = 4, treeTopCount = 3))
+    finally tables.foreach(TableSwap.dropManaged(spark, _))
+  }
+
   test("custody: minLabel and membership on two threads equal their sequential results") {
     import graft.operators.KCore
     import scala.concurrent.{Await, ExecutionContext, Future}

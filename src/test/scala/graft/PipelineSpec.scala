@@ -536,6 +536,103 @@ class PipelineSpec extends AnyFunSuite {
     assert(sweep.max >= 0.85, s"no swept operating point reaches 0.85: $sweep")
   }
 
+  test("s7 tree training: the driver trainer makes its declarative twin's choices") {
+    import graft.operators.{Fixpoint, Similarity}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val rnd = new scala.util.Random(17)
+    // dyadic components (quarters) sum exactly in any order, so many
+    // cosines tie exactly at 4dp; uniform doubles exercise the rounding
+    def vec(dim: Int, dyadic: Boolean): Array[Double] = Array.fill(dim)(
+      if (dyadic) (rnd.nextInt(9) - 4) / 4.0 else rnd.nextDouble() * 2 - 1)
+    def ids(n: Int, ints: Boolean): Seq[Any] =
+      if (ints) rnd.shuffle((0 until 1000).toList).take(n).map(Int.box)
+      else Seq.tabulate(n)(j => s"${rnd.nextInt(100000)}-$j")
+    // hand-made: (1,1,0) ties exactly between the seeds (1,0,0) and
+    // (0,1,0), and the zero vector's NaN cosines send it to top 0
+    val fixed = (IntegerType: DataType, 2, Seq[(Any, Array[Double])](
+      (Int.box(1), Array(1.0, 0.0, 0.0)), (Int.box(2), Array(0.0, 1.0, 0.0)),
+      (Int.box(3), Array(1.0, 1.0, 0.0)), (Int.box(4), Array(0.0, 0.0, 0.0))))
+    // the zero-norm leaf sorts last and never seeds (see the twin call)
+    val random = (0 until 12).map { i =>
+      val dim = 3 + rnd.nextInt(4)
+      val base = Seq.fill(1 + rnd.nextInt(10))(vec(dim, i % 2 == 0))
+      // a duplicate leaf ties with its twin
+      val cs = base :+ base.head.clone()
+      val ints = i % 3 != 0
+      if (i % 4 == 3)
+        (if (ints) IntegerType else StringType, cs.size + rnd.nextInt(3),
+          ids(cs.size, ints).zip(cs))
+      else
+        (if (ints) IntegerType else StringType, 1 + rnd.nextInt(cs.size),
+          (ids(cs.size, ints) :+ (if (ints) Int.box(1000) else "~zero"))
+            .zip(cs :+ Array.fill(dim)(0.0)))
+    }
+    for (((idType, topCount, leaves), i) <- (fixed +: random).zipWithIndex) {
+      val cents = spark.createDataFrame(
+        leaves.map { case (id, c) => Row(id, c.toSeq) }.asJava,
+        StructType(Seq(StructField("list_id", idType),
+          StructField("centroid", ArrayType(DoubleType)))))
+      val (tops, leafMap) = Similarity.treeQuantizer(cents, topCount)
+      // the twin's cosine divides by the zero norm: ANSI division
+      // raises DIVIDE_BY_ZERO, legacy division yields null, and a leaf
+      // whose every score is null ties across all tops exactly as NaN
+      // scores tie in the driver trainer (lowest top_id)
+      val ansi = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val (twinTops, twinMap) =
+        try TreeTrainingTwin.treeQuantizer(cents, topCount)
+        finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+      def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      def mapOf(df: DataFrame) =
+        df.collect().map(r => r.get(0) -> r.getLong(1)).toMap
+      def topsOf(df: DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      try {
+        assert(typed(tops) == typed(twinTops) && typed(leafMap) == typed(twinMap))
+        assert(mapOf(leafMap) == mapOf(twinMap), s"trial $i: leaf maps differ")
+        val (got, want) = (topsOf(tops), topsOf(twinTops))
+        assert(got.keySet == want.keySet, s"trial $i: top ids differ")
+        for ((t, c) <- got) {
+          assert(c.length == want(t).length)
+          for ((a, b) <- c.zip(want(t)))
+            assert(math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b)),
+              s"trial $i top $t: $a vs $b")
+        }
+      } finally Seq(twinTops, twinMap).foreach(Fixpoint.release)
+    }
+  }
+
+  test("s7 ivfTreeTopK starts no job beyond its leaf-centroid collect") {
+    import graft.operators.Similarity
+    import org.apache.spark.graftspec.Bus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsDuring(f: => Unit): Int = {
+      Bus.drain(sc)
+      jobs.set(0)
+      f
+      Bus.drain(sc)
+      jobs.get
+    }
+    // a fresh frame per call: a re-collected frame reuses its finished
+    // adaptive plan and starts fewer jobs
+    def cents() = Similarity.centroids(emb, col("label"))
+    sc.addSparkListener(listener)
+    try {
+      val collect = jobsDuring(cents().collect())
+      assert(collect > 0)
+      assert(jobsDuring(Similarity.ivfTreeTopK(emb,
+        emb.filter(col("vec_id") < 10), cents(), k = 5, topCount = 3)) == collect)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("centroidsAgg: single-shuffle native vec_sum matches posexplode form") {
     import graft.operators.Similarity
     def byList(df: org.apache.spark.sql.DataFrame) =

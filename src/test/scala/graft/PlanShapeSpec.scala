@@ -160,11 +160,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // the per-stratum budget table joins the BOUNDED (stratum, bucket)
     // rollup as a second broadcast, never a shuffle of the doc stream
     Shape("p4_dataset_mix", maxShuffles = 3, minBroadcasts = 2),
-    // r13: p7 = p4's prefix-sum shape + ONE bounded domain-grain
-    // totals aggregation for the derived sqrt weights (the 1-row Σw
-    // rides a broadcast); the doc stream still shuffles only at
-    // (stratum, bucket) grain
-    Shape("p7_temperature_mix", maxShuffles = 4, minBroadcasts = 2),
+    // r17: the (stratum, bucket) rollup is collected at build and the
+    // budgets derive on the driver, so the returned plan is the doc
+    // stream joined to ONE broadcast local offsets table and ONE
+    // (stratum, bucket) window exchange — a second exchange means the
+    // rollup or the budgets went back into the plan
+    Shape("p7_temperature_mix", maxShuffles = 1, minBroadcasts = 1),
     // r8: term frequencies attach via the term-grain window (never a
     // vocabulary rollup joined/broadcast back); the only broadcast is
     // the 1-row token total. 3 shuffles: term window, total agg, doc

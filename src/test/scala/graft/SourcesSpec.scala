@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,6 +125,35 @@ class SourcesSpec extends AnyFunSuite {
     assert(StatementStore.readFinal(spark, "stmt_swap").count() == 3,
       "reclaiming the stranded stage entry deleted live rows")
     dropTable("stmt_swap")
+  }
+
+  test("compact detaches its stage onto a directory that exists and leaves none behind") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    dropTable("stmt_detach")
+    StatementStore.append(sampleStatements, "stmt_detach", buckets = 4)
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("detach-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        logged.add(s"${e.getMessage.getFormattedMessage} ${e.getThrown}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try for (_ <- 1 to 2) StatementStore.compact(spark, "stmt_detach", buckets = 4)
+    finally { root.removeAppender(appender); appender.stop() }
+    assert(!logged.asScala.exists(_.contains("FileNotFoundException")),
+      logged.asScala.mkString("\n"))
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val left = Option(wh.list()).getOrElse(Array.empty[String])
+      .filter(n => n.startsWith("stmt_detach") && n.contains("_detached"))
+    assert(left.isEmpty, s"detach targets left behind: ${left.mkString(", ")}")
+    assert(StatementStore.readFinal(spark, "stmt_detach").count() == 3)
+    dropTable("stmt_detach")
   }
 
   test("bucket pruning: a canonical_id point lookup reads one bucket") {
