@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.CoOccurrence
+
 /** The driver-facing query registry (SURVEY.md §2) plus the DuckDB
   * oracle SQL twins.
   *
@@ -1344,28 +1346,14 @@ object Queries {
     * node's count.
     */
   def f26Triangles(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // node ids ride the census as TAGGED LONGS (key·4 + type tag) and
-    // decode to entity strings only at output: the census is pure
-    // joins/aggregates on the ids, and an 8-byte long halves-to-thirds
-    // every shuffle row vs "supplier-12345" strings. Triangle counts
+    // the census runs on CoOccurrence's tagged longs: triangle counts
     // are orientation-invariant (any total order on nodes yields the
     // same census), so the long order standing in for the string
-    // order changes nothing — the oracle gates that.
-    val li = t(s, dir, "lineitem").select(
-      ($"l_orderkey" * 4).as("o"),
-      ($"l_partkey" * 4 + 1).as("p"),
-      ($"l_suppkey" * 4 + 2).as("sp"))
-    val edges = li.select($"o".as("src"), $"p".as("dst"))
-      .unionAll(li.select($"p".as("src"), $"sp".as("dst")))
-      .unionAll(li.select($"o".as("src"), $"sp".as("dst")))
-    graft.operators.Triangles.perNode(edges)
-      .select(
-        concat(
-          element_at(lit(Array("order-", "part-", "supplier-", "?")),
-            (pmod($"node", lit(4)) + 1).cast("int")),
-          expr("node DIV 4")).as("entity_id"),
-        $"n_triangles")
+    // order changes nothing — the oracle gates that
+    graft.operators.Triangles
+      .perNode(CoOccurrence.edges(t(s, dir, "lineitem")))
+      .select(CoOccurrence.decode(col("node")).as("entity_id"),
+        col("n_triangles"))
   }
 
   val f26Sql: String =
@@ -1471,68 +1459,17 @@ object Queries {
     * for 10 fixed rounds over the surviving edges. Both stages are
     * integer-/string-exact and the oracle runs the identical triangle
     * enumeration + threshold + 10 chained min-label rounds, so every
-    * node's community label hash-gates. The census runs on f26's
-    * tagged longs; edges DECODE to entity strings BEFORE propagation
-    * because labels are MIN node ids and the long order is not the
-    * string order the oracle folds with.
+    * node's community label hash-gates. The census runs on
+    * [[graft.operators.CoOccurrence]]'s tagged longs; labels are MIN
+    * node ids, and the oracle folds them in the DECODED STRING order,
+    * which the long order does not match — so propagation runs on
+    * [[graft.operators.CoOccurrence.skey]]'s order-isomorphic long
+    * surrogates (8-byte hash aggregates, where min over strings would
+    * plan a sort aggregate every round) and decodes only at the end.
     */
   def f28Communities(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = t(s, dir, "lineitem").select(
-      ($"l_orderkey" * 4).as("o"),
-      ($"l_partkey" * 4 + 1).as("p"),
-      ($"l_suppkey" * 4 + 2).as("sp"))
-    val edges = li.select($"o".as("src"), $"p".as("dst"))
-      .unionAll(li.select($"p".as("src"), $"sp".as("dst")))
-      .unionAll(li.select($"o".as("src"), $"sp".as("dst")))
-    // The oracle's labels are MIN over the DECODED STRING order
-    // ("order-10" < "order-2" < "part-1": lexicographic), which the
-    // tagged-long order does not match — the r13 fix decoded edges to
-    // strings BEFORE propagation. But min(string) is not an UnsafeRow-
-    // mutable aggregate, so every one of LabelProp's 10 rounds planned
-    // a SORT-aggregate (a full sort of the edge-grain join output per
-    // round) over ~16-char string shuffles. r16: propagate an ORDER-
-    // ISOMORPHIC LONG surrogate instead — guide §2.3 "narrower types"
-    // plus hash-aggregability — and decode back only at the end.
-    //
-    //   skey(c) = tag·2^55 + (id·10^(15−len)·16 + len)
-    //
-    // with tag = c mod 4 (the prefixes "order-" < "part-" <
-    // "supplier-" sort exactly like tags 0 < 1 < 2), id = c >> 2, and
-    // len = digits(id). The middle term is the classic decimal-lex
-    // packing: padding id RIGHT to 15 digits compares like the digit
-    // string (first differing digit dominates any tail), and the
-    // appended length breaks the pad tie exactly like "1" < "10"
-    // (shorter-prefix-first). skey is injective and strictly monotone
-    // w.r.t. the decoded-string order, so min-label propagation over
-    // surrogates yields EXACTLY the surrogate of the string-order
-    // label — same communities, same hash, 8-byte HashAggregate
-    // rounds instead of string SortAggregate rounds. Ids past 15
-    // digits (corpora beyond ~10^15 rows) fail loudly rather than
-    // mis-sort.
-    def skey(c: Column): Column = {
-      val id = shiftright(c, 2)
-      val len = length(id.cast("string"))
-      val pad = id * pow(lit(10.0), (lit(15) - len).cast("double"))
-        .cast("long")
-      when(len > 15, raise_error(concat(
-          lit("f28 surrogate key: id overflows 15 digits: "),
-          id.cast("string"))))
-        .otherwise(shiftleft(pmod(c, lit(4)), 55) + pad * 16 + len)
-    }
-    def sdecode(k: Column): Column = {
-      val tag = shiftright(k, 55).cast("int")
-      val body = k.bitwiseAND(lit((1L << 55) - 1))
-      val len = body.bitwiseAND(lit(15L))
-      // pad = id·10^(15−len): both < 2^53, quotient an exact integer,
-      // so the double division is exact
-      val id = floor(shiftright(body, 4) /
-        pow(lit(10.0), (lit(15L) - len).cast("double"))).cast("long")
-      concat(
-        element_at(lit(Array("order-", "part-", "supplier-", "?")),
-          tag + 1),
-        id.cast("string"))
-    }
+    import CoOccurrence.{sdecode, skey}
     // materialize the truss-filtered surrogate edges ONCE: LabelProp's
     // symmetrize+self-loop build reads its input four ways, and each
     // read would otherwise re-deserialize the 1.86M-row census
@@ -1540,7 +1477,8 @@ object Queries {
     // derivation at sf0.1); released as soon as LabelProp returns (its
     // result is eagerly materialized — nothing downstream reads kept
     // again)
-    val kept = graft.operators.Triangles.perEdge(edges)
+    val kept = graft.operators.Triangles
+      .perEdge(CoOccurrence.edges(t(s, dir, "lineitem")))
       .filter($"support" >= 2)
       .select(skey($"a").as("src"), skey($"b").as("dst"))
       .localCheckpoint()
@@ -1605,28 +1543,16 @@ object Queries {
     * degree), so the DuckDB twin running the identical rounds as
     * chained MATERIALIZED CTEs hash-gates every row; the spec asserts
     * the rounds CONVERGED (≡ an unbounded driver-side peel at
-    * sf0.001). Node ids ride as f26's tagged longs — the output here
-    * is a DEGREE, not an id-ordered label, so the long order is
-    * semantically invisible (unlike f28, which must propagate string
-    * labels).
+    * sf0.001). Node ids ride as CoOccurrence's tagged longs — the
+    * output here is a DEGREE, not an id-ordered label, so the long
+    * order is semantically invisible (unlike f28, which must propagate
+    * string-ordered labels).
     */
-  def f29Kcore(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = t(s, dir, "lineitem").select(
-      ($"l_orderkey" * 4).as("o"),
-      ($"l_partkey" * 4 + 1).as("p"),
-      ($"l_suppkey" * 4 + 2).as("sp"))
-    val edges = li.select($"o".as("src"), $"p".as("dst"))
-      .unionAll(li.select($"p".as("src"), $"sp".as("dst")))
-      .unionAll(li.select($"o".as("src"), $"sp".as("dst")))
-    graft.operators.KCore.membership(edges, k = 3L, rounds = 10)
-      .select(
-        concat(
-          element_at(lit(Array("order-", "part-", "supplier-", "?")),
-            (pmod($"node", lit(4)) + 1).cast("int")),
-          shiftright($"node", 2)).as("entity_id"),
-        $"d".as("core_degree"))
-  }
+  def f29Kcore(s: SparkSession, dir: String): DataFrame =
+    graft.operators.KCore.membership(
+        CoOccurrence.edges(t(s, dir, "lineitem")), k = 3L, rounds = 10)
+      .select(CoOccurrence.decode(col("node")).as("entity_id"),
+        col("d").as("core_degree"))
 
   // MATERIALIZED is load-bearing, the f28 rule: e_{i-1} feeds both
   // keep_i (twice via the union) and e_i — default inlining would

@@ -404,15 +404,6 @@ object DocStore {
         col("start_stored"), col("start_new"), col("run_len"))
   }
 
-  /** Durable dedup of both tables via the shared staged swap
-    * ([[TableSwap]] crash-window policy): documents dedup by id
-    * (FINAL — [[pop]]ped ids physically dropped), the index rebuilds
-    * FROM the deduped documents so compaction also repairs any index
-    * drift AND sheds the tombstoned docs' band rows. The tombstone
-    * table retires LAST: a crash after the doc swap but before the
-    * retire leaves the anti-join filtering ids that no longer exist —
-    * a no-op, never a resurrection.
-    */
   /** Handle between [[compactStage]] and [[compactFinish]]: the two
     * staged table names plus the corpus/tombstone file-list snapshots
     * taken BEFORE the stage build read anything.
@@ -446,7 +437,16 @@ object DocStore {
       table: String,
       numHashes: Int = 12,
       rowsPerBand: Int = 2,
-      buckets: Int = 64): CompactStage = {
+      buckets: Int = 64): CompactStage =
+    stage(spark, table, numHashes, rowsPerBand, buckets, Map.empty)
+
+  private def stage(
+      spark: SparkSession,
+      table: String,
+      numHashes: Int,
+      rowsPerBand: Int,
+      buckets: Int,
+      writerOptions: Map[String, String]): CompactStage = {
     // rewrite at the CREATION bucketing ([[TableSwap.bucketsOf]]) —
     // a caller-parameter mismatch would leave file bucket ids the
     // table spec disowns, silently dropped by bucketed reads
@@ -461,7 +461,7 @@ object DocStore {
     val snapFiles = spark.table(table).inputFiles.toSet
     val delsSnap = Tombstones.of(table).snapshot(spark)
     writeDocRows(readFinal(spark, table), docsTmp, b,
-      SaveMode.Overwrite, layout)
+      SaveMode.Overwrite, layout, writerOptions)
     val bandsTmp = TableSwap.stageName(spark, s"${table}_bands")
     writeBandRows(bandKeys(spark.table(docsTmp), numHashes, rowsPerBand),
       bandsTmp, b, SaveMode.Overwrite)
@@ -508,22 +508,23 @@ object DocStore {
         anchorRows(deltaRows, anchorK(spark, table)), t, b,
         SaveMode.Append))
     }
-    TableSwap.swapIn(spark, st.docsTmp, table, partitioned = false)(df =>
-      writeDocRows(df, table, b, SaveMode.Append, layout))
-    TableSwap.swapIn(spark, st.bandsTmp, s"${table}_bands",
-      partitioned = false)(df =>
-      writeBandRows(df, s"${table}_bands", b, SaveMode.Append))
-    st.anchorsTmp.foreach(t =>
-      TableSwap.swapIn(spark, t, s"${table}_anchors",
-        partitioned = false)(df =>
-        writeAnchorRows(df, s"${table}_anchors", b,
-          SaveMode.Append)))
+    TableSwap.swapIn(spark, st.docsTmp, table)
+    TableSwap.swapIn(spark, st.bandsTmp, s"${table}_bands")
+    st.anchorsTmp.foreach(TableSwap.swapIn(spark, _, s"${table}_anchors"))
     Tombstones.of(table).retire(spark, st.delsSnap)
   }
 
-  /** OPTIMIZE inline: FINAL-rewrite the docs and rebuild the band (and
-    * anchor) indexes through staged swaps. Popped docs drop physically;
-    * the tombstones retire unless a pop landed mid-compact.
+  /** OPTIMIZE inline — durable dedup of both tables via the shared
+    * staged swap ([[TableSwap]] crash-window policy): [[compactStage]]
+    * then [[compactFinish]] back to back (with no append in between
+    * the file-list delta is empty). Documents dedup by id (FINAL —
+    * [[pop]]ped ids physically dropped), the index rebuilds FROM the
+    * deduped documents so compaction also repairs any index drift AND
+    * sheds the tombstoned docs' band rows. The tombstone table retires
+    * LAST, and only if no pop landed mid-compact: a crash after the
+    * doc swap but before the retire leaves the anti-join filtering ids
+    * that no longer exist — a no-op, never a resurrection.
+    * `writerOptions` reach the staged docs write.
     */
   def compact(
       spark: SparkSession,
@@ -531,34 +532,8 @@ object DocStore {
       numHashes: Int = 12,
       rowsPerBand: Int = 2,
       buckets: Int = 64,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-    val layout = ZOrderLayout.layoutOf(spark, table)
-    val docsTmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
-    TableSwap.dropAllStages(spark, s"${table}_bands")
-    val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
-    writeDocRows(readFinal(spark, table), docsTmp, b,
-      SaveMode.Overwrite, layout, writerOptions)
-    TableSwap.swapIn(spark, docsTmp, table, partitioned = false)(df =>
-      writeDocRows(df, table, b, SaveMode.Append, layout, writerOptions))
-    val bandsTmp = TableSwap.stageName(spark, s"${table}_bands")
-    writeBandRows(bandKeys(read(spark, table), numHashes, rowsPerBand),
-      bandsTmp, b, SaveMode.Overwrite)
-    TableSwap.swapIn(spark, bandsTmp, s"${table}_bands",
-      partitioned = false)(df =>
-      writeBandRows(df, s"${table}_bands", b, SaveMode.Append))
-    if (hasAnchors(spark, table)) {
-      TableSwap.dropAllStages(spark, s"${table}_anchors")
-      val anchorsTmp = TableSwap.stageName(spark, s"${table}_anchors")
-      writeAnchorRows(
-        anchorRows(read(spark, table), anchorK(spark, table)),
-        anchorsTmp, b, SaveMode.Overwrite)
-      TableSwap.swapIn(spark, anchorsTmp, s"${table}_anchors",
-        partitioned = false)(df =>
-        writeAnchorRows(df, s"${table}_anchors", b,
-          SaveMode.Append))
-    }
-    Tombstones.of(table).retire(spark, delsSnap)
-  }
+      writerOptions: Map[String, String] = Map.empty): Unit =
+    compactFinish(spark, table,
+      stage(spark, table, numHashes, rowsPerBand, buckets, writerOptions),
+      numHashes, rowsPerBand, buckets)
 }

@@ -76,21 +76,17 @@ object FpxStore {
       // cheap parquet read — don't inject a repartition
       inputClustered = true)
 
-  /** Durable dedup, same single-write staged swap as
+  /** Durable dedup, the same single-write [[TableSwap.rewrite]] as
     * [[StatementStore.compact]] (crash-window policy in [[TableSwap]]).
     */
-  def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit = {
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
-    BucketedLayout(readFinal(spark, table), buckets,
-      Seq("value"), Seq("algorithm")).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy("algorithm")
-      .bucketBy(buckets, "value")
-      .sortBy("value")
-      .format("parquet")
-      .saveAsTable(tmp)
-    TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
-      append(df, table, buckets))
-  }
+  def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit =
+    TableSwap.rewrite(spark, table)(tmp =>
+      BucketedLayout(readFinal(spark, table), buckets,
+        Seq("value"), Seq("algorithm")).write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("algorithm")
+        .bucketBy(buckets, "value")
+        .sortBy("value")
+        .format("parquet")
+        .saveAsTable(tmp))
 }

@@ -302,8 +302,8 @@ object GraphStore {
     stageSwap(spark, s"${table}_ranks", b, "id")(ranks)
     // the stored-parameters declaration: a later NO-OP/REPLAY fast
     // path must never restamp summaries computed under different
-    // iteration parameters (re-set after every swap — the fallback
-    // DROP+RENAME swap path loses properties, and a lost property
+    // iteration parameters (set after every write: a refresh may run
+    // under parameters other than the last one's, and a lost property
     // only disables the fast paths, never correctness)
     setProp(spark, s"${table}_ranks", "graft.graph.params", params)
     release(ranks)
@@ -454,12 +454,9 @@ object GraphStore {
           .join(broadcast(d).withColumnRenamed("id", "dst"),
             Seq("dst"), "left_anti")
     }
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
-    writeEdges(rows.select(col("src"), col("dst"), col("ver")),
-      tmp, buckets, SaveMode.Overwrite)
-    TableSwap.swapIn(spark, tmp, table, partitioned = false)(df =>
-      writeEdges(df, table, buckets, SaveMode.Append))
+    TableSwap.rewrite(spark, table)(
+      writeEdges(rows.select(col("src"), col("dst"), col("ver")),
+        _, buckets, SaveMode.Overwrite))
     setProp(spark, table, "graft.graph.compact_ver", asOf.toString)
     if (delsSnap.nonEmpty)
       setProp(spark, table, "graft.graph.scrub_ver", asOf.toString)
@@ -475,11 +472,8 @@ object GraphStore {
       // rewrite at the CREATION bucketing (the st16b rule): a count
       // mismatch would write file bucket ids the table spec disowns
       val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-      val tmp = TableSwap.stageName(spark, table)
-      TableSwap.dropAllStages(spark, table)
-      writeNodeTable(rows, tmp, b, keyCol, SaveMode.Overwrite)
-      TableSwap.swapIn(spark, tmp, table, partitioned = false)(df =>
-        writeNodeTable(df, table, b, keyCol, SaveMode.Append))
+      TableSwap.rewrite(spark, table)(
+        writeNodeTable(rows, _, b, keyCol, SaveMode.Overwrite))
     }
   }
 

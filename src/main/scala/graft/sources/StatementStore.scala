@@ -64,7 +64,7 @@ object StatementStore {
     val layout = if (existing) zLayoutOf(spark, table) else zorder
     write(withDel, table, buckets, SaveMode.Append, layout, writerOptions)
     if (!existing) layout.foreach { case (zc, bits) =>
-      setZProps(spark, table, zc, bits)
+      ZOrderLayout.declare(spark, table, zc, bits)
     }
   }
 
@@ -74,10 +74,6 @@ object StatementStore {
     */
   def zLayoutOf(spark: SparkSession, table: String)
       : Option[(Seq[String], Int)] = ZOrderLayout.layoutOf(spark, table)
-
-  private def setZProps(
-      spark: SparkSession, table: String, zc: Seq[String], bits: Int): Unit =
-    ZOrderLayout.declare(spark, table, zc, bits)
 
   /** The one physical layout: dataset partitions, canonical_id buckets,
     * sorted files. Every write path (append, compact stage) goes
@@ -91,7 +87,7 @@ object StatementStore {
     * each write an optimal layout with no global state; row-group
     * pruning reads the ORIGINAL columns' min/max, which z-clustering
     * tightens regardless of the bucket scaling. The catalog schema
-    * and sort spec carry `__z` from creation, so the SET LOCATION
+    * and sort spec carry `__z` from creation, so the location
     * swap keeps catalog metadata TRUE of the files forever (a
     * files-sorted-by-z table whose catalog claimed canonical_id order
     * would let the planner skip a sort it must not — the reason the
@@ -205,15 +201,14 @@ object StatementStore {
     * tombstoned keys physically dropped).
     *
     * The FINAL rows are written exactly ONCE, to a versioned stage
-    * table, which [[TableSwap.swapIn]] points the live name at with a
-    * single SET LOCATION — no moment exists with the table absent from
-    * the catalog (the crash-window policy, fallbacks included, lives
-    * there). At 100 TB: one write per OPTIMIZE, not two.
+    * table, which [[TableSwap.rewrite]] points the live name at with a
+    * single location swap — no moment exists with the table absent from
+    * the catalog (the crash-window policy lives there), and the live
+    * table keeps its TBLPROPERTIES, the z-order declaration included.
+    * At 100 TB: one write per OPTIMIZE, not two.
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64,
       writerOptions: Map[String, String] = Map.empty): Unit = {
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
     // the creation layout governs the rewrite: a z-ordered store is
     // re-laid-out with COMPACT-global bounds (the whole corpus in one
     // write = the optimal z placement — OPTIMIZE improving on the
@@ -221,13 +216,8 @@ object StatementStore {
     val layout = zLayoutOf(spark, table)
     // deleted=false restored so the stage table keeps the physical
     // schema and later appends line up against the catalog.
-    write(readFinal(spark, table).withColumn("deleted", lit(false)),
-      tmp, buckets, SaveMode.Overwrite, layout, writerOptions)
-    // properties ride the stage too, so the DROP+RENAME fallback
-    // cannot strip the layout declaration
-    layout.foreach { case (zc, bits) => setZProps(spark, tmp, zc, bits) }
-    TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
-      write(df.drop("__z"), table, buckets, SaveMode.Append, layout,
-        writerOptions))
+    TableSwap.rewrite(spark, table)(tmp =>
+      write(readFinal(spark, table).withColumn("deleted", lit(false)),
+        tmp, buckets, SaveMode.Overwrite, layout, writerOptions))
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     at `ver = batchId`, `folded = false` (one bounded aggregation);
   *   - [[compact]] folds the visible rows to one `folded` row per key,
   *     every one stamped with the same `ver = max(ver)` — the table's
-  *     FOLD HORIZON — through the staged-location swap (readable
+  *     FOLD HORIZON — through [[TableSwap.rewrite]] (readable
   *     throughout, crash-safe, idempotent);
   *   - VISIBILITY ([[visible]]), one rule for every face: the folded
   *     rows at the horizon plus the raw rows past it, one row per
@@ -106,13 +106,10 @@ final class SummaryStore(
     if (!top.isNullAt(0)) {
       val dels = Tombstones.of(table)
       val snap = dels.snapshot(spark) // before the fold reads
-      val tmp = TableSwap.stageName(spark, table)
-      TableSwap.dropAllStages(spark, table)
-      write(folded.select(col(key), col(value),
-        lit(top.getLong(0)).as("ver"), lit(true).as("folded")),
-        tmp, SaveMode.ErrorIfExists)
-      TableSwap.swapIn(spark, tmp, table, partitioned = false)(
-        write(_, table, SaveMode.Append))
+      TableSwap.rewrite(spark, table)(
+        write(folded.select(col(key), col(value),
+          lit(top.getLong(0)).as("ver"), lit(true).as("folded")),
+          _, SaveMode.ErrorIfExists))
       dels.retire(spark, snap)
     }
   }

@@ -7,34 +7,32 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 
 import scala.util.control.NonFatal
 
-/** Staged-table swap shared by the compact paths of the three stores
-  * (statement / fpx / xref) — the OPTIMIZE FINAL analogue writes the
-  * deduplicated rows ONCE to a stage table, then this helper points the
-  * live name at them.
+/** Staged-table swap shared by the compact paths of every store —
+  * the OPTIMIZE FINAL analogue writes the deduplicated rows ONCE to a
+  * stage table, then this helper points the live name at them.
+  * [[rewrite]] is the one stage-and-swap call; only the split
+  * `compactStage`/`compactFinish` halves of the doc and vector stores
+  * call the pieces ([[stageName]], [[dropAllStages]], [[swapIn]])
+  * separately, because they write and swap at different times.
   *
-  * Primary path (round 8): `ALTER TABLE live SET LOCATION <stage dir>`
-  * — ONE catalog operation, so there is NO moment where the live name
-  * fails to resolve (the pre-r8 DROP-then-RENAME swap had a documented
-  * crash window with no table between the two ops). Stage directories
-  * are VERSIONED (`<table>_stage_1`, `_stage_2`, …, derived from the
-  * live table's current location) so a stage write can never target
-  * the directory the live table currently occupies.
+  * The swap is `ALTER TABLE live SET LOCATION <stage dir>` — ONE
+  * catalog operation, so there is NO moment where the live name fails
+  * to resolve. Stage directories are VERSIONED (`<table>_stage_1`,
+  * `_stage_2`, …, derived from the live table's current location) so
+  * a stage write can never target the directory the live table
+  * currently occupies.
   *
-  * Crash points on the primary path, in order:
+  * Crash points, in order:
   *   - before SET LOCATION: live table untouched; the stage table is
-  *     garbage that [[dropStage]] reclaims on the next compact;
+  *     garbage that [[dropStage]] reclaims on the next compact. A
+  *     catalog that REFUSES the SET LOCATION lands here too: the error
+  *     propagates and the live table is untouched;
   *   - after SET LOCATION, before the stage entry is detached: live
   *     serves the new rows; a stale stage entry points at the SAME
   *     directory — [[dropStage]] detaches it before dropping (a plain
   *     managed DROP would delete the live rows);
   *   - after the detach: only the orphaned old directory remains; its
   *     delete is best-effort cleanup.
-  *
-  * Fallbacks, aligned across stores and loud on every downgrade:
-  * if the catalog refuses SET LOCATION, the legacy DROP+RENAME swap
-  * runs (metadata-only, but with the absent-name window); if it also
-  * refuses the RENAME, the staged rows are copied back through the
-  * caller's canonical writer (2× write, correctness preserved).
   *
   * Cross-session visibility: the swap refreshes THIS session's
   * relation cache; another Spark session (including a streaming
@@ -62,6 +60,15 @@ object TableSwap {
     spark.sessionState.catalog.getTableMetadata(ident(table))
       .bucketSpec.map(_.numBuckets)
 
+  /** Whether `table` is partitioned, per its catalog metadata. Gate
+    * every `listPartitions` on it: the Hive catalog THROWS on a
+    * non-partitioned table (the in-memory one returns an empty list,
+    * which hid this until the Hive probe ran).
+    */
+  def partitioned(spark: SparkSession, table: String): Boolean =
+    spark.sessionState.catalog.getTableMetadata(ident(table))
+      .partitionColumnNames.nonEmpty
+
   /** The stage sibling name for the next compact of `table`: version =
     * one past the version embedded in the live table's current
     * location (1 when the live table still sits in its original,
@@ -88,10 +95,7 @@ object TableSwap {
     */
   private def detach(spark: SparkSession, table: String, loc: URI): Unit = {
     val cat = spark.sessionState.catalog
-    // listPartitions only on actually-partitioned entries: the Hive
-    // catalog THROWS on a non-partitioned table (the in-memory one
-    // returns an empty list, which hid this until the Hive probe ran)
-    if (cat.getTableMetadata(ident(table)).partitionColumnNames.nonEmpty) {
+    if (partitioned(spark, table)) {
       val parts = cat.listPartitions(ident(table))
       if (parts.nonEmpty)
         cat.dropPartitions(ident(table), parts.map(_.spec),
@@ -173,99 +177,80 @@ object TableSwap {
     f.delete(); ()
   }
 
-  /** Swap the fully-written stage table `tmp` over `table`.
-    * `partitioned` tables get their partition metadata re-synced under
-    * the new root (between the location move and the sync, reads see
-    * the consistent OLD snapshot — never an unresolvable name).
-    * `appendBack` is the caller's canonical writer, used only by the
-    * last-resort copy-back fallback.
+  /** Stage-and-swap: write `table`'s replacement rows once, through
+    * `writeStage` (handed the stage table name to create), and swap
+    * them in. Earlier stage siblings are reclaimed first.
     */
-  def swapIn(
-      spark: SparkSession, tmp: String, table: String,
-      partitioned: Boolean)(
-      appendBack: org.apache.spark.sql.DataFrame => Unit): Unit = {
+  def rewrite(spark: SparkSession, table: String)(
+      writeStage: String => Unit): Unit = {
+    val tmp = stageName(spark, table)
+    dropAllStages(spark, table)
+    writeStage(tmp)
+    swapIn(spark, tmp, table)
+  }
+
+  /** Swap the fully-written stage table `tmp` over `table`. A
+    * partitioned table (per its catalog metadata) gets its partition
+    * entries re-synced under the new root (between the location move
+    * and the sync, reads see the consistent OLD snapshot — never an
+    * unresolvable name).
+    */
+  def swapIn(spark: SparkSession, tmp: String, table: String): Unit = {
+    val cat = spark.sessionState.catalog
     val tmpLoc = location(spark, tmp)
     val oldLoc = location(spark, table)
-    val moved =
-      try { spark.sql(s"ALTER TABLE $table SET LOCATION '$tmpLoc'"); true }
-      catch {
-        case NonFatal(e) =>
-          Console.err.println(s"[graft] TableSwap: catalog refused SET " +
-            s"LOCATION on $table (${e.getMessage}); falling back to " +
-            "DROP+RENAME (absent-name window)")
-          false
-      }
-    if (moved) {
-      if (partitioned) {
-        // SET LOCATION moves only the TABLE root; a Hive-style catalog
-        // keeps each partition entry's own location, still pointing
-        // under the OLD root — and MSCK alone never fixes them (SYNC
-        // skips specs that already exist and only drops specs whose
-        // directories are GONE, which the old ones are not yet), so
-        // after the old-root delete every read would return 0 rows.
-        // Repoint each owned partition to the same relative path under
-        // the new root FIRST (alterPartitions is metadata-only, and at
-        // every instant each entry points at a complete snapshot — old
-        // or new — so there is no empty-table window), then let MSCK
-        // reconcile partitions that appeared/disappeared in the
-        // compacted snapshot. Partitions at custom locations outside
-        // the old root are not owned by the swap and are left alone.
-        val cat = spark.sessionState.catalog
-        // normalized comparison (the catalog may spell the same local
-        // path file:/x on the table and file:///x on its partitions),
-        // `/`-bounded so a `_stage_1` root never claims a `_stage_10`
-        // partition; the new URI is built through the encoding
-        // constructor so partition values with URI-special characters
-        // survive the decoded-path arithmetic
-        val oldRoot = normLoc(oldLoc)
-        val repointed = cat.listPartitions(ident(table)).flatMap { p =>
-          p.storage.locationUri.collect {
-            case u if normLoc(u).startsWith(oldRoot + "/") =>
-              val rel = u.getPath.stripSuffix("/")
-                .stripPrefix(oldLoc.getPath.stripSuffix("/"))
-              p.copy(storage = p.storage.copy(locationUri = Some(
-                new URI(tmpLoc.getScheme, tmpLoc.getAuthority,
-                  tmpLoc.getPath.stripSuffix("/") + rel, null, null))))
-          }
+    spark.sql(s"ALTER TABLE $table SET LOCATION '$tmpLoc'")
+    if (partitioned(spark, table)) {
+      // SET LOCATION moves only the TABLE root; a Hive-style catalog
+      // keeps each partition entry's own location, still pointing
+      // under the OLD root — and MSCK alone never fixes them (SYNC
+      // skips specs that already exist and only drops specs whose
+      // directories are GONE, which the old ones are not yet), so
+      // after the old-root delete every read would return 0 rows.
+      // Repoint each owned partition to the same relative path under
+      // the new root FIRST (alterPartitions is metadata-only, and at
+      // every instant each entry points at a complete snapshot — old
+      // or new — so there is no empty-table window), then let MSCK
+      // reconcile partitions that appeared/disappeared in the
+      // compacted snapshot. Partitions at custom locations outside
+      // the old root are not owned by the swap and are left alone.
+      // normalized comparison (the catalog may spell the same local
+      // path file:/x on the table and file:///x on its partitions),
+      // `/`-bounded so a `_stage_1` root never claims a `_stage_10`
+      // partition; the new URI is built through the encoding
+      // constructor so partition values with URI-special characters
+      // survive the decoded-path arithmetic
+      val oldRoot = normLoc(oldLoc)
+      val repointed = cat.listPartitions(ident(table)).flatMap { p =>
+        p.storage.locationUri.collect {
+          case u if normLoc(u).startsWith(oldRoot + "/") =>
+            val rel = u.getPath.stripSuffix("/")
+              .stripPrefix(oldLoc.getPath.stripSuffix("/"))
+            p.copy(storage = p.storage.copy(locationUri = Some(
+              new URI(tmpLoc.getScheme, tmpLoc.getAuthority,
+                tmpLoc.getPath.stripSuffix("/") + rel, null, null))))
         }
-        if (repointed.nonEmpty) cat.alterPartitions(ident(table), repointed)
-        spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
       }
-      spark.catalog.refreshTable(table)
-      try {
-        detach(spark, tmp, tmpLoc)
-        spark.sql(s"DROP TABLE $tmp")
-      } catch {
-        // dropping an undetached stage entry would delete the rows the
-        // live table now serves — leave the entry for the next
-        // compact's dropStage instead
-        case NonFatal(e) =>
-          Console.err.println(s"[graft] TableSwap: could not detach stage " +
-            s"entry $tmp (${e.getMessage}); leaving it for the next " +
-            "compact to reclaim")
-      }
-      try {
-        val p = new org.apache.hadoop.fs.Path(oldLoc)
-        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-        ()
-      } catch { case NonFatal(_) => () } // orphan dir — harmless
-    } else {
-      spark.sql(s"DROP TABLE $table")
-      try {
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-        if (partitioned) spark.sql(s"MSCK REPAIR TABLE $table")
-      } catch {
-        // at this point DROP already ran; propagating would leave the
-        // live name unresolvable, and the staged rows are intact — the
-        // copy-back is always correct, just a 2× write, logged loudly
-        // so it cannot masquerade as the cheap path
-        case NonFatal(e) =>
-          Console.err.println(s"[graft] TableSwap: catalog refused RENAME " +
-            s"$tmp -> $table (${e.getMessage}); copying rows back through " +
-            "the canonical writer (2x write)")
-          appendBack(spark.table(tmp))
-          spark.sql(s"DROP TABLE $tmp")
-      }
+      if (repointed.nonEmpty) cat.alterPartitions(ident(table), repointed)
+      spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
     }
+    spark.catalog.refreshTable(table)
+    try {
+      detach(spark, tmp, tmpLoc)
+      spark.sql(s"DROP TABLE $tmp")
+    } catch {
+      // dropping an undetached stage entry would delete the rows the
+      // live table now serves — leave the entry for the next
+      // compact's dropStage instead
+      case NonFatal(e) =>
+        Console.err.println(s"[graft] TableSwap: could not detach stage " +
+          s"entry $tmp (${e.getMessage}); leaving it for the next " +
+          "compact to reclaim")
+    }
+    try {
+      val p = new org.apache.hadoop.fs.Path(oldLoc)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      ()
+    } catch { case NonFatal(_) => () } // orphan dir — harmless
   }
 }

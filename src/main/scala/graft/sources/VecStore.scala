@@ -396,25 +396,16 @@ object VecStore {
       .select(col("vec_id"), col("embedding"), col("list_id"))
     val codesT = s"${table}_codes"
     if (spark.catalog.tableExists(codesT)) {
-      // a LEGACY unpartitioned cache can't host the partitioned staged
-      // swap (MSCK refuses) — and an unpartitioned layout predates the
+      // a LEGACY unpartitioned cache can't take a partitioned stage by
+      // a location swap (its catalog entry declares no partition
+      // column) — and an unpartitioned layout predates the
       // stamp scheme, so PQ serving is already refusing on it: replace
       // it wholesale (no serving window exists to protect)
-      val partitioned = spark.sessionState.catalog
-        .getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(codesT))
-        .partitionColumnNames.nonEmpty
-      if (!partitioned) {
+      if (!TableSwap.partitioned(spark, codesT)) {
         TableSwap.dropManaged(spark, codesT)
         writeCodes(spark, corpus, cb, codesT, buckets)
-      } else {
-        val tmp = TableSwap.stageName(spark, codesT)
-        TableSwap.dropAllStages(spark, codesT)
-        writeCodes(spark, corpus, cb, tmp, buckets)
-        TableSwap.swapIn(spark, tmp, codesT,
-          partitioned = true)(df =>
-          writeListed(df, codesT, buckets, SaveMode.Append))
-      }
+      } else TableSwap.rewrite(spark, codesT)(
+        writeCodes(spark, corpus, cb, _, buckets))
     } else writeCodes(spark, corpus, cb, codesT, buckets)
   }
 
@@ -540,12 +531,8 @@ object VecStore {
   private def pruneCodebook(
       spark: SparkSession, table: String): Unit = {
     val live = liveCodebook(spark, table).localCheckpoint()
-    val tmp = TableSwap.stageName(spark, s"${table}_pq")
-    TableSwap.dropAllStages(spark, s"${table}_pq")
-    live.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(tmp)
-    TableSwap.swapIn(spark, tmp, s"${table}_pq", partitioned = false)(df =>
-      df.write.mode(SaveMode.Append).format("parquet")
-        .saveAsTable(s"${table}_pq"))
+    TableSwap.rewrite(spark, s"${table}_pq")(
+      live.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(_))
   }
 
   /** RETRAIN the PQ codebook while the store keeps serving — the
@@ -748,7 +735,9 @@ object VecStore {
     Similarity.topKPerQuery(rescored, k)
   }
 
-  /** Durable dedup of re-delivered appends via the shared staged swap
+  /** Durable dedup of re-delivered appends: [[compactStage]] then
+    * [[compactFinish]] back to back (with no append in between the
+    * file-list delta is empty), through the shared staged swap
     * ([[TableSwap]] crash-window policy). The inverted-list index
     * needs no rebuild: list_id is a column, so the deduped rows
     * re-partition into the identical lists. A present `_codes` cache
@@ -765,21 +754,8 @@ object VecStore {
   def compact(
       spark: SparkSession,
       table: String,
-      buckets: Int = 16): Unit = {
-    // rewrite at the CREATION bucketing (TableSwap.bucketsOf) — a
-    // caller mismatch would leave file bucket ids the spec disowns
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
-    val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
-    writeListed(readFinal(spark, table), tmp, b,
-      SaveMode.Overwrite)
-    TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
-      writeListed(df, table, b, SaveMode.Append))
-    if (spark.catalog.tableExists(s"${table}_codes"))
-      rebuildCodes(spark, table, liveCodebook(spark, table), b)
-    Tombstones.of(table).retire(spark, delsSnap)
-  }
+      buckets: Int = 16): Unit =
+    compactFinish(spark, table, compactStage(spark, table, buckets), buckets)
 
   /** Handle between [[compactStage]] and [[compactFinish]] — the
     * [[DocStore.CompactStage]] twin for the embedding corpus: staged
@@ -827,11 +803,8 @@ object VecStore {
       if (!spark.catalog.tableExists(s"${table}_codes")) None
       else {
         val cb = liveCodebook(spark, table)
-        val partitioned = spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst
-            .TableIdentifier(s"${table}_codes"))
-          .partitionColumnNames.nonEmpty
-        if (!cb.columns.contains("cb_hash") || !partitioned) None
+        if (!cb.columns.contains("cb_hash") ||
+            !TableSwap.partitioned(spark, s"${table}_codes")) None
         else {
           val tmp = TableSwap.stageName(spark, s"${table}_codes")
           writeCodes(spark,
@@ -881,8 +854,7 @@ object VecStore {
         writeListed(rows, st.vecsTmp, b, SaveMode.Append)
         Some(rows)
       }
-    TableSwap.swapIn(spark, st.vecsTmp, table, partitioned = true)(df =>
-      writeListed(df, table, b, SaveMode.Append))
+    TableSwap.swapIn(spark, st.vecsTmp, table)
     if (spark.catalog.tableExists(s"${table}_codes")) {
       val live = liveCodebook(spark, table)
       val liveHash =
@@ -893,9 +865,7 @@ object VecStore {
         case Some((tmp, stamp)) if liveHash.contains(stamp) =>
           deltaRows.foreach(rows =>
             writeCodes(spark, rows, live, tmp, b))
-          TableSwap.swapIn(spark, tmp, s"${table}_codes",
-            partitioned = true)(df =>
-            writeListed(df, s"${table}_codes", b, SaveMode.Append))
+          TableSwap.swapIn(spark, tmp, s"${table}_codes")
         case _ =>
           // stale stage (mid-build retrain) or a layout the stage
           // declined — drop any staged codes and rebuild inline
@@ -1025,14 +995,11 @@ object VecStore {
     */
   private def reassignCorpus(
       spark: SparkSession, table: String, buckets: Int): Unit = {
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
     val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
-    writeListed(withAssignment(spark,
-      readFinal(spark, table).select(col("vec_id"), col("embedding")),
-      table), tmp, buckets, SaveMode.Overwrite)
-    TableSwap.swapIn(spark, tmp, table, partitioned = true)(df =>
-      writeListed(df, table, buckets, SaveMode.Append))
+    TableSwap.rewrite(spark, table)(tmp =>
+      writeListed(withAssignment(spark,
+        readFinal(spark, table).select(col("vec_id"), col("embedding")),
+        table), tmp, buckets, SaveMode.Overwrite))
     Tombstones.of(table).retire(spark, delsSnap)
   }
 

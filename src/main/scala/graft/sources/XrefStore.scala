@@ -25,9 +25,9 @@ object XrefStore {
 
   def reverseTable(table: String): String = table + "_reverse"
 
-  /** The one physical layout per side; every write path (append,
-    * compact stage, swap fallback) goes through here so main and
-    * reverse bucketing can never diverge.
+  /** The one physical layout per side; every write path (append and
+    * compact stage) goes through here so main and reverse bucketing
+    * can never diverge.
     */
   private def write(
       df: DataFrame, table: String, bucketCol: String,
@@ -116,9 +116,8 @@ object XrefStore {
     * `_reverse` projection FROM the compacted main table (so the
     * projection can never drift from the rows it projects). Each table
     * is written exactly ONCE to a versioned stage sibling and swapped
-    * in by [[TableSwap.swapIn]]'s single SET LOCATION — the same
-    * no-absent-window pattern as [[StatementStore.compact]], fallbacks
-    * included.
+    * in by [[TableSwap.rewrite]]'s single location swap — the same
+    * no-absent-window pattern as [[StatementStore.compact]].
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit = {
     // rewrite at the CREATION bucketing ([[TableSwap.bucketsOf]]) —
@@ -129,11 +128,8 @@ object XrefStore {
     // honor at least these pops
     val dels = Tombstones.ofDatasets(table)
     val delsSnap = dels.snapshot(spark)
-    val tmp = TableSwap.stageName(spark, table)
-    TableSwap.dropAllStages(spark, table)
-    writeMain(readLatest(spark, table), tmp, b, SaveMode.Overwrite)
-    TableSwap.swapIn(spark, tmp, table, partitioned = false)(df =>
-      writeMain(df, table, b, SaveMode.Append))
+    TableSwap.rewrite(spark, table)(
+      writeMain(readLatest(spark, table), _, b, SaveMode.Overwrite))
     // [[compact]] swaps main THEN `_reverse`; a crash between the two
     // swaps leaves the reverse projection one compaction behind main.
     // That staleness is row-level harmless — both tables hold the same
@@ -142,14 +138,11 @@ object XrefStore {
     // itself has no absent-name window; policy in [[TableSwap]].)
     val rev = reverseTable(table)
     val rb = TableSwap.bucketsOf(spark, rev).getOrElse(b)
-    val rtmp = TableSwap.stageName(spark, rev)
-    TableSwap.dropAllStages(spark, rev)
     // reverse = projection of the already-compacted main: a cheap
     // bucket-local parquet re-read, no second FINAL computation
-    writeReverse(Xref.reverse(read(spark, table)), rtmp, rb,
-      SaveMode.Overwrite)
-    TableSwap.swapIn(spark, rtmp, rev, partitioned = false)(df =>
-      writeReverse(df, rev, rb, SaveMode.Append))
+    TableSwap.rewrite(spark, rev)(
+      writeReverse(Xref.reverse(read(spark, table)), _, rb,
+        SaveMode.Overwrite))
     // a dataset takedown invalidates the derived mapping structurally
     // (losing positives can split components) — rebuild it from the
     // surviving judgements with the full resolver, staged + swapped
@@ -162,11 +155,8 @@ object XrefStore {
       val maxVer = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
       val rebuilt = Xref.resolverMapping(readLatest(spark, table))
         .withColumn("ver", lit(maxVer))
-      val mtmp = TableSwap.stageName(spark, target)
-      TableSwap.dropAllStages(spark, target)
-      writeMapping(rebuilt, mtmp, mb, SaveMode.Overwrite)
-      TableSwap.swapIn(spark, mtmp, target, partitioned = false)(df =>
-        writeMapping(df, target, mb, SaveMode.Append))
+      TableSwap.rewrite(spark, target)(
+        writeMapping(rebuilt, _, mb, SaveMode.Overwrite))
     }
     dels.retire(spark, delsSnap)
   }
@@ -241,13 +231,8 @@ object XrefStore {
       val stamped = m.withColumn("ver", lit(ver))
       if (!spark.catalog.tableExists(target))
         writeMapping(stamped, target, buckets, SaveMode.ErrorIfExists)
-      else {
-        val tmp = TableSwap.stageName(spark, target)
-        TableSwap.dropAllStages(spark, target)
-        writeMapping(stamped, tmp, buckets, SaveMode.Overwrite)
-        TableSwap.swapIn(spark, tmp, target, partitioned = false)(df =>
-          writeMapping(df, target, buckets, SaveMode.Append))
-      }
+      else TableSwap.rewrite(spark, target)(
+        writeMapping(stamped, _, buckets, SaveMode.Overwrite))
     }
   }
 
@@ -261,11 +246,8 @@ object XrefStore {
     val current = graft.operators.ReplacingMerge.latestByKey(
       spark.table(target),
       keys = Seq(col("entity_id")), version = Seq(col("ver")))
-    val tmp = TableSwap.stageName(spark, target)
-    TableSwap.dropAllStages(spark, target)
     val mb = TableSwap.bucketsOf(spark, target).getOrElse(buckets)
-    writeMapping(current, tmp, mb, SaveMode.Overwrite)
-    TableSwap.swapIn(spark, tmp, target, partitioned = false)(df =>
-      writeMapping(df, target, mb, SaveMode.Append))
+    TableSwap.rewrite(spark, target)(
+      writeMapping(current, _, mb, SaveMode.Overwrite))
   }
 }

@@ -127,33 +127,110 @@ class SourcesSpec extends AnyFunSuite {
     dropTable("stmt_swap")
   }
 
+  // Every compact face, one row each: after the compact no
+  // `<t>_stage_N` entry is left in the catalog, the warehouse holds
+  // exactly one directory per swapped table — its live location, no
+  // orphaned old root and no `_detached` target — no
+  // FileNotFoundException is logged, and the FINAL count is unchanged.
   test("compact detaches its stage onto a directory that exists and leaves none behind") {
+    import spark.implicits._
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    dropTable("stmt_detach")
-    StatementStore.append(sampleStatements, "stmt_detach", buckets = 4)
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import graft.sources.{DocStore, GraphStore, SketchStore, VecStore}
+    val fpx = Fpx.fromStatements(Seq(
+      ("e1", "Person", "ds1", "name", "name", "Tchibo Holding AG"),
+      ("e2", "Person", "ds1", "name", "name", "Holding Tchibo"))
+      .toDF("entity_id", "schema", "dataset", "prop", "prop_type", "value"))
+    val judge = (l: String, r: String, ts: Long) =>
+      ("ds1", l, "Person", "de", l, "ds1", r, "Person", "de", r,
+        "positive", 0.5, ts, "graft")
+    val docs = Seq((1L, "one two three four five six", "s"),
+      (2L, "seven eight nine ten eleven twelve", "s"))
+      .toDF("doc_id", "text", "source")
+    val emb = Tables.load(spark, sf, "embeddings")
+    // (store, swapped tables, extra tables to drop, fill, compact,
+    // FINAL count); the statement store compacts twice, so its second
+    // swap moves off a versioned stage directory too
+    val faces = Seq[(String, Seq[String], Seq[String], () => Unit,
+        () => Unit, () => Long)](
+      ("cdet_stmt", Seq("cdet_stmt"), Nil,
+        () => StatementStore.append(sampleStatements, "cdet_stmt", buckets = 4),
+        () => for (_ <- 1 to 2)
+          StatementStore.compact(spark, "cdet_stmt", buckets = 4),
+        () => StatementStore.readFinal(spark, "cdet_stmt").count()),
+      ("cdet_fpx", Seq("cdet_fpx"), Nil,
+        () => (1 to 2).foreach(_ =>
+          FpxStore.append(fpx, "cdet_fpx", buckets = 4)),
+        () => FpxStore.compact(spark, "cdet_fpx", buckets = 4),
+        () => FpxStore.readFinal(spark, "cdet_fpx").count()),
+      ("cdet_xref", Seq("cdet_xref", "cdet_xref_reverse"),
+        Seq("cdet_xref_mapping", "cdet_xref_dsdels"),
+        () => XrefStore.append(Seq(judge("a", "b", 1L), judge("a", "b", 2L),
+          judge("b", "c", 1L)).toDF(Xref.columns: _*), "cdet_xref",
+          buckets = 4),
+        () => XrefStore.compact(spark, "cdet_xref", buckets = 4),
+        () => XrefStore.readLatest(spark, "cdet_xref").count()),
+      ("cdet_doc", Seq("cdet_doc", "cdet_doc_bands"), Seq("cdet_doc_dels"),
+        () => (1 to 2).foreach(_ =>
+          DocStore.append(docs, "cdet_doc", buckets = 4)),
+        () => DocStore.compact(spark, "cdet_doc", buckets = 4),
+        () => DocStore.readFinal(spark, "cdet_doc").count()),
+      ("cdet_vec", Seq("cdet_vec"),
+        Seq("_cents", "_tops", "_leafmap", "_pq", "_codes", "_dels")
+          .map("cdet_vec" + _),
+        () => VecStore.init(spark, "cdet_vec", emb, col("label"), buckets = 4),
+        () => VecStore.compact(spark, "cdet_vec", buckets = 4),
+        () => VecStore.readFinal(spark, "cdet_vec").count()),
+      ("cdet_graph", Seq("cdet_graph"), Seq("cdet_graph_dels"),
+        () => (1 to 2).foreach(v => GraphStore.append(
+          Seq(("a", "b"), ("b", "c")).toDF("src", "dst"), "cdet_graph",
+          ver = v, buckets = 2)),
+        () => GraphStore.compact(spark, "cdet_graph"),
+        () => GraphStore.edges(spark, "cdet_graph").count()),
+      ("cdet_sk", Seq("cdet_sk"), Seq("cdet_sk_dels"),
+        () => (0 to 1).foreach(v =>
+          SketchStore.applyBatch(spark, docs, "cdet_sk", 64, v.toLong)),
+        () => SketchStore.compact(spark, "cdet_sk", 64),
+        () => SketchStore.readEstimates(spark, "cdet_sk", 64).count()))
     val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val appender = new AbstractAppender("detach-spec", null, null, true,
         Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
         logged.add(s"${e.getMessage.getFormattedMessage} ${e.getThrown}")
     }
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    def dirsOf(t: String): Seq[String] =
+      Option(wh.list()).getOrElse(Array.empty[String]).toSeq
+        .filter(n => n == t || n.startsWith(s"${t}_stage_"))
     appender.start()
     val root = LogManager.getRootLogger.asInstanceOf[Logger]
     root.addAppender(appender)
-    try for (_ <- 1 to 2) StatementStore.compact(spark, "stmt_detach", buckets = 4)
-    finally { root.removeAppender(appender); appender.stop() }
-    assert(!logged.asScala.exists(_.contains("FileNotFoundException")),
-      logged.asScala.mkString("\n"))
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    val left = Option(wh.list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("stmt_detach") && n.contains("_detached"))
-    assert(left.isEmpty, s"detach targets left behind: ${left.mkString(", ")}")
-    assert(StatementStore.readFinal(spark, "stmt_detach").count() == 3)
-    dropTable("stmt_detach")
+    try for ((name, swapped, extra, fill, compact, finalCount) <- faces) {
+      (swapped ++ extra).foreach(dropTable)
+      fill()
+      val before = finalCount()
+      logged.clear()
+      compact()
+      assert(!logged.asScala.exists(_.contains("FileNotFoundException")),
+        s"$name: ${logged.asScala.mkString("\n")}")
+      for (t <- swapped) {
+        val stages = spark.catalog.listTables().collect().map(_.name)
+          .filter(_.matches(s"${t}_stage_\\d+"))
+        assert(stages.isEmpty,
+          s"$name: stage entries left: ${stages.mkString(", ")}")
+        val live = new java.io.File(spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(t)).location).getName
+        assert(dirsOf(t) == Seq(live),
+          s"$name: $t's warehouse dirs ${dirsOf(t).mkString(", ")} are not " +
+            s"just its live location $live")
+      }
+      assert(finalCount() == before, s"$name: FINAL count changed")
+      (swapped ++ extra).foreach(dropTable)
+    } finally { root.removeAppender(appender); appender.stop() }
   }
 
   test("bucket pruning: a canonical_id point lookup reads one bucket") {
