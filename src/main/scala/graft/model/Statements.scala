@@ -129,17 +129,24 @@ object Statements {
     * temporal statement columns at the entity level (the reference
     * entity proxy's first_seen/last_seen aggregation).
     */
-  def assemble(statements: DataFrame, seenRange: Boolean = false): DataFrame = {
-    val baseAggs = Seq(
+  def assemble(statements: DataFrame, seenRange: Boolean = false): DataFrame =
+    assembleWith(statements,
+      if (seenRange) Seq(
+        min(col("first_seen")).as("first_seen"),
+        max(col("last_seen")).as("last_seen"))
+      else Nil)
+
+  /** [[assemble]] with `extra` aggregates appended after the entity
+    * columns — how a read carries a per-entity column (EntityQuery's
+    * sort key) through the assembly group-by.
+    */
+  private[graft] def assembleWith(
+      statements: DataFrame, extra: Seq[Column]): DataFrame = {
+    val aggs = Seq(
       array_join(
         array_sort(collect_list(concat_ws("=", col("prop"), col("value")))),
         "|").as("entity"),
-      count(lit(1)).as("n_statements"))
-    val aggs =
-      if (seenRange) baseAggs ++ Seq(
-        min(col("first_seen")).as("first_seen"),
-        max(col("last_seen")).as("last_seen"))
-      else baseAggs
+      count(lit(1)).as("n_statements")) ++ extra
     statements
       .groupBy(col("canonical_id"), col("schema"), col("dataset"))
       .agg(aggs.head, aggs.tail: _*)

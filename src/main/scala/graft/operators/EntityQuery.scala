@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model.Statements
@@ -21,11 +22,21 @@ import graft.model.Statements
   *   - `orderByProp` orders entities by their minimum value of a prop
   *     (deterministic for multi-valued props), tiebreak canonical_id.
   *
-  * Plan shape (scale): one conditional aggregation over the filtered
-  * statements computes every where/search flag AND the sort key in a
-  * single shuffle on canonical_id; assembly joins back on the same key
-  * — with the statement store bucketed by canonical_id both shuffles
-  * are elided. No collect, no per-clause pass.
+  *   - an entity spanning several (schema, dataset) assembly groups is
+  *     selected or dropped as a whole: its flags combine across groups.
+  *     Ordered output breaks ties by canonical_id, schema, dataset.
+  *
+  * Plan shape (scale): one pass over the filtered statements. Every
+  * where/search/reverse flag and the sort key are window aggregates
+  * over the canonical_id partition (`max(when(…))`, `min(when(…))`),
+  * so each row learns its entity's verdict without a per-key aggregate
+  * joined back on the key (the WinMagic rewrite). Rows of failing
+  * entities are filtered out and assembly groups the survivors in the
+  * same partitioning. One scan of the input; over a FINAL read of the
+  * canonical_id-bucketed statement store the window also reuses
+  * FINAL's clustering and sort, so nothing is exchanged below the
+  * final ordering. On unclustered input the window's one exchange
+  * serves assembly too. No collect, no per-clause pass.
   */
 final case class EntityQuery(
     statements: DataFrame,
@@ -93,67 +104,50 @@ final case class EntityQuery(
     df
   }
 
-  /** canonical_ids passing all where/search clauses, with the sort key.
-    * One conditional aggregation — every clause is a max(flag).
+  /** The filtered statements of entities passing every where, search
+    * and reverse clause, with the entity's sort key as `__ord` when
+    * ordered. Each clause is a `max(flag)` window over canonical_id;
+    * a null canonical_id names no entity and is dropped.
     */
   private def selected: DataFrame = {
-    val flagCols = wheres.zipWithIndex.map { case ((prop, op, vs), i) =>
-      max(when(col("prop") === prop && cmp(op, col("value"), vs), 1)
-        .otherwise(0)).as(s"__f$i")
+    val w = Window.partitionBy(col("canonical_id"))
+    val tests =
+      wheres.map { case (prop, op, vs) =>
+        col("prop") === prop && cmp(op, col("value"), vs) } ++
+      searchQ.map(q => lower(col("value")).contains(q.toLowerCase)) ++
+      reverses.map(id => col("prop_type") === "entity" && col("value") === id)
+    val flags = tests.zipWithIndex.map { case (t, i) =>
+      max(when(t, 1).otherwise(0)).over(w).as(s"__f$i")
     }
-    val searchCol = searchQ.map(q =>
-      max(when(lower(col("value")).contains(q.toLowerCase), 1)
-        .otherwise(0)).as("__fs")).toSeq
-    val revCols = reverses.zipWithIndex.map { case (id, i) =>
-      max(when(col("prop_type") === "entity" && col("value") === id, 1)
-        .otherwise(0)).as(s"__r$i")
+    val ord = order.map { case (prop, _) =>
+      min(when(col("prop") === prop, col("value"))).over(w).as("__ord")
     }
-    val ordCol = order.map { case (prop, _) =>
-      min(when(col("prop") === prop, col("value"))).as("__ord")
-    }.toSeq
-    val aggs = flagCols ++ searchCol ++ revCols ++ ordCol
-    // With no full-text search, the selection aggregate only consumes
-    // rows whose prop a where/order clause names (plus entity-typed
-    // rows for reverse lookups) — other rows contribute nothing to any
-    // flag. Pre-filtering is semantics-preserving exactly when a where
-    // clause exists (every surviving entity then has at least one
-    // matching row), and it lets PruneStaticExplodeFilter strike the
-    // dead unpivot branches, so the selection's scan reads only the
-    // clause columns instead of every property column.
-    val narrowed =
-      if (searchQ.isEmpty && wheres.nonEmpty) {
-        val props = (wheres.map(_._1) ++ order.map(_._1)).distinct
-        val propF = col("prop").isin(props: _*)
-        base.filter(
-          if (reverses.nonEmpty) propF || col("prop_type") === "entity"
-          else propF)
-      } else base
-    val grouped =
-      if (aggs.isEmpty) base.groupBy(col("canonical_id")).agg(count(lit(1)))
-      else narrowed.groupBy(col("canonical_id")).agg(aggs.head, aggs.tail: _*)
-    val passed = (0 until wheres.size).map(i => col(s"__f$i") === 1) ++
-      searchQ.map(_ => col("__fs") === 1).toSeq ++
-      (0 until reverses.size).map(i => col(s"__r$i") === 1)
-    passed.foldLeft(grouped)((df, c) => df.filter(c))
+    val keyed = base.filter(col("canonical_id").isNotNull)
+    val windowed =
+      if (flags.isEmpty && ord.isEmpty) keyed
+      else keyed.select(col("*") +: (flags ++ ord): _*)
+    tests.indices.foldLeft(windowed)((df, i) => df.filter(col(s"__f$i") === 1))
+      .drop(tests.indices.map(i => s"__f$i"): _*)
   }
 
   /** Assembled entities, ordered and sliced. */
   def entities(): DataFrame = {
     val sel = selected
-    val assembled = Statements.assemble(
-      base.join(sel.select("canonical_id"), Seq("canonical_id"), "left_semi"))
-    val withOrd = order match {
+    val ordered = order match {
       case Some((_, desc)) =>
-        val o = assembled.join(sel.select(col("canonical_id"), col("__ord")),
-          Seq("canonical_id"))
+        val assembled = Statements.assembleWith(sel,
+          Seq(min(col("__ord")).as("__ord")))
         val ordCol = if (desc) col("__ord").desc else col("__ord").asc
-        o.orderBy(ordCol, col("canonical_id").asc)
-      case None => assembled.orderBy(col("canonical_id").asc)
+        assembled.orderBy(ordCol, col("canonical_id").asc,
+          col("schema").asc, col("dataset").asc)
+      case None =>
+        Statements.assemble(sel).orderBy(col("canonical_id").asc,
+          col("schema").asc, col("dataset").asc)
     }
     val sliced =
-      if (lim >= 0) withOrd.offset(off).limit(lim)
-      else if (off > 0) withOrd.offset(off)
-      else withOrd
+      if (lim >= 0) ordered.offset(off).limit(lim)
+      else if (off > 0) ordered.offset(off)
+      else ordered
     sliced.drop("__ord")
   }
 
@@ -161,9 +155,7 @@ final case class EntityQuery(
     * `iterate`/statement export path: same selection plan, no
     * assembly fold.
     */
-  def statementsOut(): DataFrame =
-    base.join(selected.select("canonical_id"), Seq("canonical_id"),
-      "left_semi")
+  def statementsOut(): DataFrame = selected.drop("__ord")
 
   /** Stats over the query selection (`view.stats(q)`,
     * test_store.py:128-143): per dataset/schema entity + statement
@@ -205,8 +197,7 @@ final case class EntityQuery(
       func: String,
       prop: String,
       groupByProp: Option[String] = None): DataFrame = {
-    val sel = selected.select("canonical_id")
-    val stmts = base.join(sel, Seq("canonical_id"), "left_semi")
+    val stmts = statementsOut()
     val vals = stmts.filter(col("prop") === prop)
       .select(col("canonical_id"), col("value").cast("double").as("v"))
     val withG = groupByProp match {

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.{DoubleMetaphoneExpression, Phonetics}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Fingerprint (fpx) derivation, frequency view, xref blocking and
@@ -150,57 +151,50 @@ object Fpx {
   def xrefBlocks(
       fpx: DataFrame,
       minEntities: Long = 2,
-      maxEntities: Long = 1000,
-      inputClustered: Boolean = false): DataFrame = {
+      maxEntities: Long = 1000): DataFrame = {
     val blocks = boundedMemberSets(
-      fpx, Seq("value"), "entity_id", minEntities, maxEntities,
-      inputClustered)
+      fpx, Seq("value"), "entity_id", minEntities, maxEntities)
     distinctPairs(expandSortedSets(blocks, spread = true))
   }
 
   /** `groupBy(keys).agg(sort_array(collect_set(member)))` with the
     * size-range filter applied BEFORE the sets are built, not only
-    * after.
+    * after. Rows with a null key form no set.
     *
     * A plain collect_set materializes a hyper-frequent key's full
     * multi-million-member set in one aggregation buffer before the
     * `size(ids) <= max` filter can discard it — the OOM shape of
     * blocking at 100 TB (a ubiquitous token like "holding" blocks
-    * millions of entities). Here a sketch aggregate (map-side HLL
-    * partials, one tiny row per key) first finds the keys whose
-    * distinct-member count can possibly be in range; only their rows
-    * reach the collect_set, capping any buffer at ~2·max for any data
-    * distribution. The exact post-collect size filter keeps results
-    * byte-identical to the unguarded form (the sketch only needs to
-    * never misjudge by 2×, far outside HLL's 5% rsd; rows-below-min is
-    * exact already since rows ≥ distinct members).
+    * millions of entities). Here every row first learns its key's row
+    * count and HLL distinct-member estimate from window aggregates over
+    * the key partition, and only rows of keys whose distinct-member
+    * count can possibly be in range reach the collect_set, capping any
+    * aggregation buffer at ~2·max for any data distribution. A hot
+    * key's rows wait in the window's row buffer, which spills to disk,
+    * so the memory bound holds. The exact post-collect size filter
+    * keeps results byte-identical to the unguarded form (the sketch
+    * only needs to never misjudge by 2×, far outside HLL's 5% rsd;
+    * rows-below-min is exact already since rows ≥ distinct members).
     *
-    * The sketch pass and the set-build pass both consume `df`, which
-    * would compute an expensive upstream (the MinHash band projection,
-    * the fpx derivation) TWICE. So unless the caller declares the input
-    * already clustered on the keys (`inputClustered`, e.g. the
-    * value-bucketed fpx store, where a re-scan is just a cheap parquet
-    * read), the input is repartitioned on the keys first: both passes
-    * then hang off the SAME Exchange, ReuseExchange computes the
-    * upstream once, and the second consumer replays shuffle files.
-    * That exchange doubles as the set-build aggregate's distribution,
-    * so the input still crosses the wire exactly once.
+    * One pass: the window and the set-build aggregate share one
+    * clustering on the keys, so the input is read once and crosses at
+    * most one Exchange — none over the value-bucketed fpx store, whose
+    * scan already delivers it. There is no per-key sketch table joined
+    * back on the keys.
     */
   private[graft] def boundedMemberSets(
       df: DataFrame,
       keys: Seq[String],
       member: String,
       min: Long,
-      max: Long,
-      inputClustered: Boolean = false): DataFrame = {
+      max: Long): DataFrame = {
     val keyCols = keys.map(col)
-    val clustered = if (inputClustered) df else df.repartition(keyCols: _*)
-    val inRange = clustered.groupBy(keyCols: _*)
-      .agg(count(lit(1)).as("rows"),
-        approx_count_distinct(col(member)).as("approx"))
-      .filter(col("rows") >= min && col("approx") <= max * 2)
-      .select(keyCols: _*)
-    clustered.join(inRange, keys)
+    val w = Window.partitionBy(keyCols: _*)
+    df.select(keyCols :+ col(member): _*)
+      .filter(keyCols.map(_.isNotNull).reduce(_ && _))
+      .select(col("*"), count(lit(1)).over(w).as("__rows"),
+        approx_count_distinct(col(member)).over(w).as("__approx"))
+      .filter(col("__rows") >= min && col("__approx") <= max * 2)
       .groupBy(keyCols: _*)
       .agg(sort_array(collect_set(col(member))).as("ids"))
       .filter(size(col("ids")).between(min, max))
@@ -316,7 +310,7 @@ object Fpx {
     named
       .select(col("entity_id"),
         min(col("entity_id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("fp")))
+          Window.partitionBy(col("fp")))
           .as("canonical_id"))
       .distinct()
   }

@@ -300,10 +300,9 @@ object DocStore {
       broadcast(probe.select(col("band"), col("key")).distinct()),
       Seq("band", "key"))
     // cutoff over probed keys only, through the SAME guarded set-build
-    // as d3/f8 ([[graft.operators.Fpx.boundedMemberSets]]): its keyed
-    // repartition lets the sketch pass and the set build share one
-    // Exchange (ReuseExchange), so the stored index is scanned ONCE —
-    // a hand-rolled guard here was measured planning the scan twice.
+    // as d3/f8 ([[graft.operators.Fpx.boundedMemberSets]]): its size
+    // guard is a window over the (band, key) clustering the set build
+    // also uses, so the stored index is scanned ONCE and exchanged once.
     // min = 1: a stored doc alone on a probed key still pairs with the
     // batch doc that probed it (pairs are stored×new, never stored×
     // stored).

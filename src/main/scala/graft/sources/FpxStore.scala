@@ -60,8 +60,10 @@ object FpxStore {
       .filter(col("algorithm") === "fingerprint"))
 
   /** Blocking pairs from the stored table for one algorithm slice —
-    * the test_fingerprints.py query against `..._fpx`. The member-set
-    * aggregate runs inside the value buckets.
+    * the test_fingerprints.py query against `..._fpx`. The FINAL dedup,
+    * the size-guard window and the member-set aggregate all run inside
+    * the value buckets of one store scan; the first exchange is the
+    * pair expansion's.
     */
   def blocks(
       spark: SparkSession,
@@ -71,10 +73,7 @@ object FpxStore {
       maxEntities: Long = 1000): DataFrame =
     Fpx.xrefBlocks(
       readFinal(spark, table).filter(col("algorithm") === algorithm),
-      minEntities, maxEntities,
-      // value-bucketed store: already clustered, a second scan is a
-      // cheap parquet read — don't inject a repartition
-      inputClustered = true)
+      minEntities, maxEntities)
 
   /** Durable dedup, the same single-write [[TableSwap.rewrite]] as
     * [[StatementStore.compact]] (crash-window policy in [[TableSwap]]).

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Components, Fixpoint}
@@ -17,13 +16,10 @@ class ComponentsSpec extends AnyFunSuite {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   // the persisted-RDD set is session-global, but forked suites run
-  // sequentially, so within one test every change to it is ours
-  private def pinned(): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  private def checkpointsOf(df: DataFrame): Set[Int] =
-    df.queryExecution.logical.collectLeaves()
-      .collect { case l: LogicalRDD => l.rdd.id }.toSet
+  // sequentially, so within one test every id added to it is ours; the
+  // ContextCleaner may still remove earlier ids, so compare differences
+  private def addedSince(before: Set[Int]): Set[Int] =
+    persistedIds() -- before
 
   // two triangles sharing node 3, a tail 5-6-7 and a separate pair;
   // the first five edges are the "old" graph of the delta faces
@@ -48,11 +44,12 @@ class ComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     // pairwise-merge judgement chain: 0-1, 1-2, ..., 59-60
     val path = (0L until 60L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = pinned()
+    val before = persistedIds()
     assertThrows[IllegalStateException] {
       Components.minLabel(path, maxIter = 50).count()
     }
-    assert(pinned() == before, "the non-convergence throw must pin nothing")
+    assert(addedSince(before).isEmpty,
+      "the non-convergence throw must pin nothing")
     val stars = labelsOf(Components.minLabelStars(path))
     assert(stars.size == 61 && stars.values.forall(_ == 0L))
   }
@@ -189,16 +186,17 @@ class ComponentsSpec extends AnyFunSuite {
     val sentinel = spark.sparkContext.parallelize(1 to 10).persist()
     assert(sentinel.count() == 10)
     for ((name, run) <- cases) {
-      val before = pinned()
+      val before = persistedIds()
       val out = run()
       assert(out.collect().nonEmpty, name)
-      val own = checkpointsOf(out)
+      val own = checkpointIds(out)
       assert(own.nonEmpty && (own & before).isEmpty, name)
-      assert(pinned() == before ++ own, s"$name pinned more than its result")
+      assert(addedSince(before) == own, s"$name pinned more than its result")
       Fixpoint.release(out)
-      assert(pinned() == before, s"$name: releasing the result left pins")
+      assert(addedSince(before).isEmpty,
+        s"$name: releasing the result left pins")
     }
-    assert(pinned().contains(sentinel.id) && sentinel.count() == 10,
+    assert(persistedIds().contains(sentinel.id) && sentinel.count() == 10,
       "an RDD persisted by someone else must survive")
     sentinel.unpersist()
   }
@@ -210,11 +208,11 @@ class ComponentsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 10)
     for ((name, corpus) <- Seq("trained" -> emb, "empty" -> emb.limit(0))) {
       val cents = Similarity.centroids(corpus, col("label"))
-      val before = pinned()
+      val before = persistedIds()
       val out = Similarity.ivfTreeTopK(corpus, queries, cents,
         k = 5, topCount = 3)
       out.collect()
-      assert(pinned() == before ++ checkpointsOf(out),
+      assert(addedSince(before) == checkpointIds(out),
         s"$name: the tree's training checkpoints outlived the call")
     }
   }
@@ -226,9 +224,9 @@ class ComponentsSpec extends AnyFunSuite {
     val emb = Tables.load(spark, sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
     def unchanged(name: String)(f: => Unit): Unit = {
-      val before = pinned()
+      val before = persistedIds()
       f
-      assert(pinned() == before, s"$name left an RDD persisted")
+      assert(addedSince(before).isEmpty, s"$name left an RDD persisted")
     }
     for ((name, corpus) <- Seq("trained" -> emb, "empty" -> emb.limit(0)))
       unchanged(s"ivfTreeTopK ($name)")(Similarity.ivfTreeTopK(corpus,

@@ -110,4 +110,61 @@ class EntityQuerySpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(2), r.getString(3))).toSet
     assert(outC == Set(("e3", "e1", "out")))
   }
+
+  test("a FINAL store read runs as one job over one scan, no Exchange below the ordering") {
+    import java.sql.Timestamp
+    import graft.sources.{StatementStore, TableSwap}
+    import org.apache.spark.graftspec.Bus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    def ts(s: String) = Timestamp.valueOf(s)
+    val table = "eq_final_scan"
+    TableSwap.dropManaged(spark, table)
+    val t1 = ts("2026-01-01 00:00:00")
+    val t2 = ts("2026-02-01 00:00:00")
+    // id, entity_id, canonical_id, prop, prop_type, schema, value,
+    // dataset, last_seen, deleted: e1's country is re-observed (FINAL
+    // keeps one row), e2's country is tombstoned, e3 lives in a second
+    // dataset
+    val rows = Seq(
+      ("s1", "e1", "e1", "name", "name", "Person", "Alice", "ds1", t1, false),
+      ("s2", "e1", "e1", "country", "string", "Person", "de", "ds1", t1, false),
+      ("s2", "e1", "e1", "country", "string", "Person", "de", "ds1", t2, false),
+      ("s3", "e2", "e2", "name", "name", "Person", "Bob", "ds1", t1, false),
+      ("s4", "e2", "e2", "country", "string", "Person", "de", "ds1", t1, false),
+      ("s4", "e2", "e2", "country", "string", "Person", "de", "ds1", t2, true),
+      ("s5", "e3", "e3", "name", "name", "Person", "Cleo", "ds2", t1, false),
+      ("s6", "e3", "e3", "country", "string", "Person", "de", "ds2", t1, false))
+      .toDF("id", "entity_id", "canonical_id", "prop", "prop_type",
+        "schema", "value", "dataset", "last_seen", "deleted")
+    StatementStore.append(rows, table, buckets = 4)
+    def query = EntityQuery(StatementStore.readFinal(spark, table))
+      .where("country", "eq", "de").orderByProp("name", desc = true)
+    val sliced = query.slice(0, 10).entities()
+    val plan = sliced.queryExecution.executedPlan.toString
+    assert(PlanCounters.shuffles(plan) == 0, plan)
+    assert(plan.split("\n").count(_.contains("FileScan")) == 1, plan)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val got = try {
+      Bus.drain(sc)
+      jobs.set(0)
+      val rows = sliced.collect()
+      Bus.drain(sc)
+      rows
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs")
+    assert(got.map(_.getString(0)).toSeq == Seq("e3", "e1"))
+    assert(got(1).getAs[String]("entity") == "country=de|name=Alice")
+    // unsliced, the one exchange is the final ordering's range partitioning
+    val full = query.entities().queryExecution.executedPlan.toString
+      .split("\n").filter(_.contains("Exchange"))
+    assert(full.nonEmpty && full.forall(_.contains("rangepartitioning")),
+      full.mkString("\n"))
+  }
 }

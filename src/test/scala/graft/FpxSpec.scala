@@ -130,11 +130,11 @@ class FpxSpec extends AnyFunSuite {
       .agg(sort_array(collect_set(col("member"))).as("ids"))
       .filter(size(col("ids")).between(2, 5))
       .collect().map(r => (r.getString(0), r.getSeq[String](1))).toSet
-    for (clustered <- Seq(true, false)) {
-      val guarded = Fpx.boundedMemberSets(df, Seq("k"), "member", 2, 5,
-          inputClustered = clustered)
+    for ((input, shape) <- Seq(
+        (df.repartition(col("k")), "clustered"), (df, "unclustered"))) {
+      val guarded = Fpx.boundedMemberSets(input, Seq("k"), "member", 2, 5)
         .collect().map(r => (r.getString(0), r.getSeq[String](1))).toSet
-      assert(guarded == naive, s"inputClustered=$clustered")
+      assert(guarded == naive, shape)
     }
   }
 

@@ -34,12 +34,15 @@ class PlanShapeSpec extends AnyFunSuite {
     Shape("q4_topk_order_slice", maxShuffles = 0),
     Shape("d1_dedup_exact", maxShuffles = 1),
     Shape("d2_dedup_ngram_jaccard", maxShuffles = 5, minBroadcasts = 2),
-    Shape("d3_dedup_minhash_lsh", maxShuffles = 4, minBroadcasts = 1),
+    // r17: the size guard is a window inside the set build's (band,
+    // key) exchange — the sketch-key broadcast join and its exchange
+    // are gone (4/1 → 3/0, plans/r17/)
+    Shape("d3_dedup_minhash_lsh", maxShuffles = 3),
     // d5 r5: the bounded-block rewrite trades the old 0-shuffle raw
     // label join (unbounded n² per label) for the guarded shape — the
-    // sketch-guard repartitions on label (reused by both passes at
-    // runtime) and the chunk expansion rebalances descriptors
-    Shape("d5_dedup_embedding", maxShuffles = 3, minBroadcasts = 1),
+    // size-guard window shares the set build's label exchange and the
+    // chunk expansion rebalances descriptors (r17: 3 → 2 shuffles)
+    Shape("d5_dedup_embedding", maxShuffles = 2, minBroadcasts = 1),
     Shape("s1_ann_brute_topk", maxShuffles = 2, minBroadcasts = 1),
     Shape("s2_ann_lsh", maxShuffles = 2, minBroadcasts = 1),
     Shape("s3_ann_ivf", maxShuffles = 8, minBroadcasts = 2),
@@ -57,16 +60,20 @@ class PlanShapeSpec extends AnyFunSuite {
     // before the chunk-descriptor explodes (expandSortedSets
     // spread=true): it moves the member-set rows once so descriptor
     // generation is not serialized into one AQE-coalesced task
-    Shape("f8_xref_block", maxShuffles = 5, minBroadcasts = 1),
+    // r17: the size guard is a window in the set build's value
+    // exchange; the sketch-key broadcast join is gone (5/1 → 4/0)
+    Shape("f8_xref_block", maxShuffles = 4),
     // r13: f24 = f8's 4 + the entity-grain name aggregation + the two
     // pair-grain name attaches. r15: the attaches are PINNED to merge
     // joins — the name table is entity-grain (data-sized), and the
     // statically under-estimated broadcast the planner used to pick
-    // collected a >1 GiB relation to the driver at sf10. The broadcast
-    // floor is f8's internal probe-set broadcast.
-    Shape("f24_name_editdist", maxShuffles = 9, minBroadcasts = 1),
+    // collected a >1 GiB relation to the driver at sf10. r17: f8's
+    // sketch-key broadcast, the old broadcast floor, is gone (9/1 → 8/0).
+    Shape("f24_name_editdist", maxShuffles = 8),
     Shape("f11_canonical_lookup", maxShuffles = 3),
-    Shape("f12_entity_query", maxShuffles = 3),
+    // r17: clause flags and the sort key are canonical_id windows —
+    // one exchange serves them and assembly, no join back (3 → 1)
+    Shape("f12_entity_query", maxShuffles = 1),
     Shape("t1_lang_id", maxShuffles = 0),
     // r12: the RETURNED t15 plan is the scan-local apply stage — the
     // vocab-build aggregation ran eagerly at query build (d12/d13
@@ -104,18 +111,20 @@ class PlanShapeSpec extends AnyFunSuite {
     Shape("t5_contamination", maxShuffles = 3, minBroadcasts = 1,
       minPushedScans = 2),
     // d4b: pigeonhole band buckets equi-join, survivor probe broadcast
-    Shape("d4b_simhash_hamming", maxShuffles = 4, minBroadcasts = 3,
+    // r17: the sketch-key broadcast join is gone (4/3 → 3/2)
+    Shape("d4b_simhash_hamming", maxShuffles = 3, minBroadcasts = 2,
       minPushedScans = 2),
     // d6: the returned frame is the final label join over the
     // checkpointed loop output — the loop's per-round cost is pinned
     // by its own convergence contract, the tail must stay 2 shuffles
     Shape("d6_dedup_clusters", maxShuffles = 2),
-    // f18/f19: FINAL-window dedup + attr enrichment; the three dim
-    // joins must stay broadcast
+    // f18/f19: FINAL-window dedup + attr enrichment; the dim joins
+    // must stay broadcast
     // r15: +1 each — the f8 spread exchange rides into every
-    // blocking-pair consumer
-    Shape("f18_xref_judgements", maxShuffles = 8, minBroadcasts = 3),
-    Shape("f19_xref_reverse", maxShuffles = 8, minBroadcasts = 3),
+    // blocking-pair consumer. r17: the third broadcast was the
+    // blocking's sketch-key join, now a window (8/3 → 7/2)
+    Shape("f18_xref_judgements", maxShuffles = 7, minBroadcasts = 2),
+    Shape("f19_xref_reverse", maxShuffles = 7, minBroadcasts = 2),
     // f20: judgement filter + component labels + canonical min
     Shape("f20_resolver_canonical", maxShuffles = 3),
     // q16: ONE sort window feeding all three quantiles + broadcast
@@ -254,9 +263,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // r9b: d12's returned frame hangs off the checkpointed assignment
     // table (the expensive centroid subtree runs ONCE, before the
     // plan) — set build + balanced expansion + two pair joins + drop
-    // agg + verdict join; a blowup past 8 means a consumer started
-    // re-deriving the assignment
-    Shape("d12_semdedup", maxShuffles = 8),
+    // agg + verdict join; a blowup past 7 means a consumer started
+    // re-deriving the assignment (r17: 8 → 7, the size guard is a
+    // window in the set build's exchange)
+    Shape("d12_semdedup", maxShuffles = 7),
     // r10: d13's final frame hangs off the two checkpointed assignment
     // tables — the probed-list distinct and the one verdict aggregation
     // are the only shuffles; everything stored-side joins broadcast

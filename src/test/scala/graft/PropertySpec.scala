@@ -164,6 +164,223 @@ class PropertySpec extends AnyFunSuite {
     check(prop, minTests = 8)
   }
 
+  test("EntityQuery over a FINAL store read matches a brute-force model (versions, tombstones, cross-group flags)") {
+    import spark.implicits._
+    import graft.operators.EntityQuery
+    import graft.sources.{StatementStore, TableSwap}
+    val values = Map(
+      "name" -> Seq("Ann Lee", "Acme Ltd", "Bob"),
+      "country" -> Seq("de", "fr", "us"),
+      "amount" -> Seq("10", "20", "250"),
+      "owner" -> Seq("e1", "e2"))
+    val place = for {
+      sch <- Gen.oneOf("Person", "Company")
+      ds <- Gen.oneOf("ds1", "ds2")
+    } yield (sch, ds)
+    // one statement key's history: an insert at last_seen 1, then at 2
+    // nothing, a re-observation (possibly in another schema or dataset)
+    // or a tombstone, then at 3 possibly a resurrection
+    val fact = for {
+      e <- Gen.choose(1, 6)
+      p <- Gen.oneOf(values.keys.toSeq.sorted)
+      v <- Gen.oneOf(values(p))
+      first <- place
+      second <- Gen.oneOf(Gen.const(None),
+        place.map(x => Some((x, false))), place.map(x => Some((x, true))))
+      third <- Gen.option(place)
+    } yield (e, p, v, Seq(Some((first, false)), second,
+      third.map(x => (x, false))))
+    val comparators = Gen.oneOf(
+      Gen.oneOf("de", "fr", "us").map(v => ("country", "eq", Seq(v))),
+      Gen.oneOf("10", "20", "250").map(v => ("amount", "gte", Seq(v))),
+      Gen.oneOf("20", "250").map(v => ("amount", "lt", Seq(v))),
+      Gen.const(("country", "in", Seq("de", "us"))),
+      Gen.const(("name", "startswith", Seq("A"))))
+    // `all`: every clause kind at once; otherwise one where clause and
+    // each other clause or filter now and then, so selections are
+    // rarely empty and an entity's flags often come from another
+    // (schema, dataset) group than some of its statements
+    def clauses(all: Boolean) = {
+      def rarely[T](g: Gen[T]) = Gen.frequency((3, Gen.const(None)),
+        (1, g.map(Some(_))))
+      def opt[T](g: Gen[T]) = if (all) g.map(Some(_)) else rarely(g)
+      for {
+        sch <- rarely(Gen.oneOf("Person", "Company"))
+        ds <- rarely(Gen.oneOf("ds1", "ds2"))
+        where <- comparators.map(Some(_))
+        search <- opt(Gen.oneOf("a", "E", "lee"))
+        rev <- opt(Gen.oneOf("e1", "e2"))
+        order <- opt(Gen.zip(Gen.oneOf("amount", "name", "country"),
+          Gen.oneOf(true, false)))
+        slice <- opt(Gen.zip(Gen.choose(0, 2), Gen.choose(1, 4)))
+      } yield (sch, ds, where, search, rev, order, slice)
+    }
+    val table = "prop_eq_final"
+    // (entity_id, canonical_id, prop, prop_type, schema, dataset, value)
+    type S = (String, String, String, String, String, String, String)
+    def cmpS(op: String, a: String, vs: Seq[String]): Boolean = op match {
+      case "eq" => a == vs.head
+      case "gte" => a >= vs.head
+      case "lt" => a < vs.head
+      case "startswith" => a.startsWith(vs.head)
+      case "in" => vs.contains(a)
+    }
+    def cmpOrd(a: Option[String], b: Option[String], desc: Boolean): Int =
+      (a, b) match {
+        case (None, None) => 0
+        case (None, _) => if (desc) 1 else -1
+        case (_, None) => if (desc) -1 else 1
+        case (Some(x), Some(y)) => if (desc) y.compareTo(x) else x.compareTo(y)
+      }
+    def cents(v: String): Long = math.round(v.toDouble * 100)
+    def dbl(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None else Some(r.getDouble(i))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(80, fact), clauses(all = true),
+      clauses(all = false)) { (facts, full, partial) =>
+      val keyed = facts.groupBy(f => (f._1, f._2, f._3)).values.map(_.head)
+        .toSeq.sortBy(f => (f._1, f._2, f._3))
+      // canonical_id clusters entities e and e + 3: one canonical id
+      // spans two entity ids as well as schemas and datasets
+      def canon(e: Int) = s"e${(e - 1) % 3 + 1}"
+      val versions = for {
+        (e, p, v, hist) <- keyed
+        (step, ver) <- hist.zipWithIndex.collect { case (Some(x), i) => (x, i + 1L) }
+      } yield {
+        val ((sch, ds), deleted) = step
+        (s"e$e.$p.$v", s"e$e", canon(e), p,
+          if (p == "owner") "entity" else if (p == "name") "name" else "string",
+          sch, v, ds, ver, deleted)
+      }
+      TableSwap.dropManaged(spark, table)
+      for (ver <- 1L to 3L) {
+        val batch = versions.filter(_._9 == ver)
+        if (batch.nonEmpty) StatementStore.append(batch.toDF("id",
+          "entity_id", "canonical_id", "prop", "prop_type", "schema",
+          "value", "dataset", "last_seen", "deleted"), table, buckets = 4)
+      }
+      val fin: Seq[S] = versions.groupBy(_._1).values.map(_.maxBy(_._9))
+        .filter(!_._10).map(r => (r._2, r._3, r._4, r._5, r._6, r._8, r._7))
+        .toSeq
+      Seq(full, partial).forall { case (sch, ds, where, search, rev, order, slice) =>
+        var q = EntityQuery(StatementStore.readFinal(spark, table))
+        sch.foreach(x => q = q.schema(x))
+        ds.foreach(x => q = q.dataset(x))
+        where.foreach { case (p, op, vs) => q = q.where(p, op, vs: _*) }
+        search.foreach(x => q = q.search(x))
+        rev.foreach(x => q = q.reverse(x))
+        order.foreach { case (p, desc) => q = q.orderByProp(p, desc) }
+        slice.foreach { case (o, l) => q = q.slice(o, l) }
+        // the model: flags over ALL of an entity's filtered statements,
+        // whatever their schema and dataset
+        val base = fin.filter(r => sch.forall(_ == r._5) && ds.forall(_ == r._6))
+        val sel = base.groupBy(_._2).filter { case (_, g) =>
+          where.forall { case (p, op, vs) =>
+            g.exists(r => r._3 == p && cmpS(op, r._7, vs)) } &&
+          search.forall(n => g.exists(_._7.toLowerCase.contains(n.toLowerCase))) &&
+          rev.forall(id => g.exists(r => r._4 == "entity" && r._7 == id))
+        }
+        val groups = sel.toSeq.flatMap { case (c, g) =>
+          val ord = order.flatMap { case (p, _) =>
+            g.filter(_._3 == p).map(_._7).minOption }
+          g.groupBy(r => (r._5, r._6)).toSeq.map { case ((s, d), rs) =>
+            (ord, (c, s, d, rs.map(r => s"${r._3}=${r._7}").sorted
+              .mkString("|"), rs.size.toLong))
+          }
+        }
+        val desc = order.exists(_._2)
+        val ordered = groups.sortWith { case ((o1, a), (o2, b)) =>
+          val c = cmpOrd(o1, o2, desc)
+          if (c != 0) c < 0
+          else Ordering[(String, String, String)].lt((a._1, a._2, a._3),
+            (b._1, b._2, b._3))
+        }.map(_._2)
+        val wantEntities = slice.fold(ordered) { case (o, l) =>
+          ordered.slice(o, o + l) }
+        val gotEntities = q.entities().collect().map(r => (r.getString(0),
+          r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+        val out = sel.values.flatten.toSeq
+        val gotOut = q.statementsOut().collect().map(r => (
+          r.getAs[String]("entity_id"), r.getAs[String]("canonical_id"),
+          r.getAs[String]("prop"), r.getAs[String]("prop_type"),
+          r.getAs[String]("schema"), r.getAs[String]("dataset"),
+          r.getAs[String]("value"))).toSeq
+        val wantStats = out.groupBy(r => (r._6, r._5)).map { case ((d, s), rs) =>
+          (d, s, rs.map(_._2).distinct.size.toLong, rs.size.toLong) }.toSet
+        val gotStats = q.stats().collect().map(r => (r.getString(0),
+          r.getString(1), r.getLong(2), r.getLong(3))).toSet
+        val amounts = out.filter(_._3 == "amount").map(_._7)
+        val sumA = amounts.map(cents).sum / 100.0
+        val wantProps =
+          if (amounts.isEmpty) Seq(None, None, None, Some(0.0), None)
+          else Seq(Some(sumA), Some(amounts.map(_.toDouble).min),
+            Some(amounts.map(_.toDouble).max), Some(amounts.size.toDouble),
+            Some(sumA / amounts.size))
+        val gotProps = {
+          val r = q.aggregateProps(Seq(("sum", "amount"), ("min", "amount"),
+            ("max", "amount"), ("count", "amount"), ("avg", "amount")))
+            .collect()(0)
+          (0 until 5).map(dbl(r, _))
+        }
+        val wantByCountry = sel.values.toSeq.flatMap { g =>
+          for (a <- g.filter(_._3 == "amount"); c <- g.filter(_._3 == "country"))
+            yield (c._7, cents(a._7))
+        }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).sum / 100.0 }
+        val gotByCountry = q.aggregateProp("sum", "amount", Some("country"))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        gotEntities == wantEntities && gotOut.sorted == out.sorted &&
+          gotStats == wantStats && gotProps == wantProps &&
+          gotByCountry == wantByCountry
+      }
+    }
+    try check(prop, minTests = 4)
+    finally TableSwap.dropManaged(spark, table)
+  }
+
+  test("boundedMemberSets == the unguarded set build, on an FpxStore and an unclustered frame") {
+    import spark.implicits._
+    import graft.operators.Fpx
+    import graft.sources.{FpxStore, TableSwap}
+    val (lo, hi) = (2L, 5L)
+    // one key's rows: `n` distinct members (below min, at min, in range,
+    // at max, above max, above 2·max), repeated rows and null members
+    def keyRows(n: Int) = for {
+      from <- Gen.choose(0, 20)
+      dups <- Gen.choose(0, 3)
+      nulls <- Gen.choose(0, 2)
+    } yield {
+      val ms = (0 until n).map(i => Option(s"m${from + i}"))
+      ms ++ ms.take(dups) ++ Seq.fill(nulls)(None)
+    }
+    val sized = Gen.oneOf(1, 2, 3, 5, 6, 11, 16).flatMap(keyRows)
+    val table = "prop_bms_fpx"
+    def sets(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.getString(0)), r.getSeq[String](1))).toSet
+    val prop = Prop.forAll(Gen.listOfN(8, sized),
+      Gen.oneOf(2, 3, 5).flatMap(keyRows), Gen.long) { (keys, nullKey, seed) =>
+      val rows = new scala.util.Random(seed).shuffle(
+        keys.zipWithIndex.flatMap { case (ms, i) => ms.map((Option(s"k$i"), _)) } ++
+          nullKey.map((Option.empty[String], _)))
+      val df = rows.toDF("value", "entity_id")
+      val model = sets(df.groupBy(col("value"))
+        .agg(sort_array(collect_set(col("entity_id"))).as("ids"))
+        .filter(size(col("ids")).between(lo, hi)))
+      // the null key's members are in range, so the unguarded form
+      // builds a block for it; the guarded one never may
+      val want = model.filter(_._1.isDefined)
+      TableSwap.dropManaged(spark, table)
+      FpxStore.append(df.select(lit("fingerprint").as("algorithm"),
+        col("value"), lit("name").as("prop"), lit("S").as("schema"),
+        lit("ds").as("dataset"), col("entity_id")), table, buckets = 4)
+      val stored = FpxStore.readFinal(spark, table)
+        .filter(col("algorithm") === "fingerprint")
+      model.exists(_._1.isEmpty) &&
+        sets(Fpx.boundedMemberSets(df, Seq("value"), "entity_id", lo, hi)) == want &&
+        sets(Fpx.boundedMemberSets(stored, Seq("value"), "entity_id", lo, hi)) == want
+    }
+    try check(prop, minTests = 4)
+    finally TableSwap.dropManaged(spark, table)
+  }
+
   test("resolverMapping == union-find components on random judgement graphs") {
     import spark.implicits._
     import graft.operators.Xref

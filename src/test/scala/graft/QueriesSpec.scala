@@ -1,11 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Ids of the RDDs persisted on the session's context now. The
+    * ContextCleaner unpersists earlier garbage asynchronously, so this
+    * set can shrink at any moment: custody specs assert on the ids a
+    * call adds or releases (set differences), never on its size.
+    */
+  def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Ids of the checkpoints a frame reads: its plan's LogicalRDD leaves. */
+  def checkpointIds(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collectLeaves()
+      .collect { case l: LogicalRDD => l.rdd.id }.toSet
 }
 
 class QueriesSpec extends AnyFunSuite {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,22 +134,31 @@ class VecStoreSpec extends AnyFunSuite {
     val reused5 = Similarity.pqTopK(emb, queries, k = 5,
       codebook = Some(stored)).collect().map(_.toString).sorted.toSeq
     // an in-query codebook is one generation per face: a second
-    // identical search releases the first one's codebook checkpoint
-    def pinned() = spark.sparkContext.getPersistentRDDs.size
-    def fresh5() = Similarity.pqTopK(emb, queries, k = 5)
-      .collect().map(_.toString).sorted.toSeq
-    assert(reused5.nonEmpty && reused5 == fresh5())
-    val pinned5 = pinned()
-    assert(fresh5() == reused5 && pinned() == pinned5)
+    // identical search persists its own codebook checkpoint and
+    // releases the first one's (asserted on the checkpoints' RDD ids:
+    // the ContextCleaner can drop other ids from the set mid-test)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def oneGeneration(name: String, reused: Seq[String])(
+        fresh: () => DataFrame): Unit = {
+      val first = fresh()
+      assert(reused.nonEmpty && reused == rows(first), name)
+      val second = fresh()
+      assert(rows(second) == reused, name)
+      val (mine1, mine2) = (checkpointIds(first) -- checkpointIds(second),
+        checkpointIds(second) -- checkpointIds(first))
+      assert(mine1.nonEmpty && mine2.nonEmpty, name)
+      assert(mine2.subsetOf(persistedIds()),
+        s"$name: the second call's codebook is not persisted")
+      assert((mine1 & persistedIds()).isEmpty,
+        s"$name: the first call's codebook was not released")
+    }
+    oneGeneration("pqTopK", reused5)(() =>
+      Similarity.pqTopK(emb, queries, k = 5))
     val cents = VecStore.centroids(spark, "vec_pq")
-    val reused6 = Similarity.ivfPqTopK(emb, queries, cents, k = 5,
-      nProbe = 3, codebook = Some(stored))
-      .collect().map(_.toString).sorted.toSeq
-    def fresh6() = Similarity.ivfPqTopK(emb, queries, cents, k = 5,
-      nProbe = 3).collect().map(_.toString).sorted.toSeq
-    assert(reused6.nonEmpty && reused6 == fresh6())
-    val pinned6 = pinned()
-    assert(fresh6() == reused6 && pinned() == pinned6)
+    val reused6 = rows(Similarity.ivfPqTopK(emb, queries, cents, k = 5,
+      nProbe = 3, codebook = Some(stored)))
+    oneGeneration("ivfPqTopK", reused6)(() =>
+      Similarity.ivfPqTopK(emb, queries, cents, k = 5, nProbe = 3))
   }
 
   test("store-served IVF search equals Similarity.ivfTopK exactly, pruned") {
