@@ -22,7 +22,9 @@ import graft.sources.{StatementStore, TableSwap, XrefStore}
   * consecutive compacts (a) every partition location sits under the
   * live root, (b) full and per-partition FINAL counts survive, and
   * (c) a stranded live-sharing stage entry from a simulated crash is
-  * reclaimed by the next compact without touching live rows. One
+  * reclaimed by the next compact without touching live rows. A third
+  * compact after an append, both naming 2 buckets, keeps the Hive
+  * catalog's creation count of 4 and every point read. One
   * compact of an UNPARTITIONED xref store then checks that the swap's
   * catalog-derived partitioned flag keeps it off `listPartitions`,
   * which the Hive catalog refuses on such a table.
@@ -68,7 +70,7 @@ object TableSwapHiveProbe {
       .listPartitions(org.apache.spark.sql.catalyst.TableIdentifier(
         "hive_swap"))
       .flatMap(_.storage.locationUri).map(_.toString)
-    def check(stage: String): Unit = {
+    def check(stage: String, total: Long = 3, inDs1: Long = 2): Unit = {
       // normLoc on both sides: catalogs mix file:/x and file:///x
       // spellings between table and partition entries
       val root = graft.sources.TableSwap.normLoc(
@@ -80,8 +82,13 @@ object TableSwapHiveProbe {
       val fin = StatementStore.readFinal(spark, "hive_swap")
       val (all, ds1) =
         (fin.count(), fin.filter(col("dataset") === "ds1").count())
-      require(all == 3 && ds1 == 2,
+      require(all == total && ds1 == inDs1,
         s"$stage: FINAL read lost rows (total=$all, ds1=$ds1)")
+      // a bucket-pruned point read finds every entity
+      val lost = fin.select(col("canonical_id")).distinct().collect()
+        .map(_.getString(0)).filter(id => StatementStore.read(spark,
+          "hive_swap").filter(col("canonical_id") === id).count() == 0)
+      require(lost.isEmpty, s"$stage: point reads lost ${lost.mkString(",")}")
     }
 
     check("pre-compact")
@@ -100,6 +107,16 @@ object TableSwapHiveProbe {
       s"compact-2 did not advance the stage version: ${liveLoc()}")
     require(!spark.catalog.tableExists("hive_swap_stage_7"),
       "compact-2 stranded the live-sharing stage entry")
+    // an append and a compact naming another bucket count keep the
+    // creation count the Hive catalog declares
+    StatementStore.append(Seq(("s4", "e3", "e3", "name", "name", "Person",
+        "Carol", "ds2", t)).toDF(stmts.columns.toSeq: _*), "hive_swap",
+      buckets = 2)
+    StatementStore.compact(spark, "hive_swap", buckets = 2)
+    check("compact-3", total = 4)
+    val buckets = TableSwap.bucketsOf(spark, "hive_swap")
+    require(buckets.contains(4),
+      s"compact-3 changed the catalog bucket count to $buckets")
 
     // unpartitioned store: the same swap, no partition re-sync
     val judge = (l: String, r: String, ts: Long) =>
@@ -119,7 +136,8 @@ object TableSwapHiveProbe {
       s"xref compact kept $xrefRows rows, expected 2 latest judgements")
 
     println(s"""{"probe":"tableswap_hive","catalog":"hive",""" +
-      s""""compacts":2,"rows":3,"partitions":${partLocs().size},""" +
+      s""""compacts":3,"rows":4,"buckets":${buckets.get},""" +
+      s""""partitions":${partLocs().size},""" +
       s""""live":"${liveLoc()}","xref_compacts":1,""" +
       s""""xref_rows":$xrefRows,"xref_live":"$xrefLoc","ok":true}""")
     spark.stop()

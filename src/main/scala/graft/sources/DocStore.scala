@@ -40,53 +40,18 @@ import graft.operators.Dedup
   */
 object DocStore {
 
-  // r12: every bucketed write routes through ONE layout shuffle
-  // ([[BucketedLayout]]) so the store's file count is exactly
-  // one file per non-empty bucket per write, regardless of how many
-  // splits the incoming frame has — see BucketedLayout's finding.
-  private def writeDocRows(
-      df: DataFrame, target: String, buckets: Int, mode: SaveMode,
-      zorder: Option[(Seq[String], Int)] = None,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    // z-ordered stores sort each bucket file by a stored __z Morton
-    // key instead of doc_id (StatementStore.write rationale: write-
-    // local bounds, __z never compared across files, row-group pruning
-    // reads the ORIGINAL columns' min/max which z-clustering tightens).
-    // Input __z (delta rows re-read from a z store's own files) is
-    // recomputed, never trusted across writes.
-    val (rows, sortCols) = zorder match {
-      case None => (df, Seq("doc_id"))
-      case Some((zc, bits)) =>
-        val in = df.drop("__z")
-        val (mins, maxs) = ZOrderLayout.bounds(in, zc)
-        (in.withColumn("__z",
-          ZOrderLayout.zValue(zc.map(col), mins, maxs, bits)),
-          Seq("__z"))
-    }
-    BucketedLayout(rows, buckets, Seq("doc_id")).write
-      .mode(mode)
-      .bucketBy(buckets, "doc_id")
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      // split-block bloom filter on the id (StatementStore.bloomOpts
-      // rationale): point lookups skip value-free row groups from the
-      // footer even where min/max cannot serve them — on a z store the
-      // files are never doc_id-sorted, so the bloom is the ONLY
-      // point-lookup index
-      .option("parquet.bloom.filter.enabled#doc_id", "true")
-      .option("parquet.bloom.filter.adaptive.enabled", "true")
-      .options(writerOptions)
-      .format("parquet")
-      .saveAsTable(target)
-  }
-
-  private def writeBandRows(
-      df: DataFrame, target: String, buckets: Int, mode: SaveMode): Unit =
-    BucketedLayout(df, buckets, Seq("band", "key")).write
-      .mode(mode)
-      .bucketBy(buckets, "band", "key")
-      .sortBy("band", "key")
-      .format("parquet")
-      .saveAsTable(target)
+  /** The three bucketed tables' layouts, each written only through
+    * [[BucketedLayout]]: the documents (doc_id buckets, a split-block
+    * bloom filter on doc_id — on a z store the files are never doc_id-
+    * sorted, so the bloom is the ONLY point-lookup index), the band
+    * index and the anchor index.
+    */
+  private val docLayout = BucketedLayout(bucketCols = Seq("doc_id"),
+    sortCols = Seq("doc_id"), bloomCols = Seq("doc_id"))
+  private val bandLayout = BucketedLayout(
+    bucketCols = Seq("band", "key"), sortCols = Seq("band", "key"))
+  private val anchorLayout =
+    BucketedLayout(bucketCols = Seq("h"), sortCols = Seq("h"))
 
   /** Append a document batch and its band-key index rows. The INDEX
     * lands first: the two writes are not atomic, and the two possible
@@ -97,7 +62,10 @@ object DocStore {
     * [[compact]] rebuilds the index from the deduped docs, repairing
     * either drift durably. The anchor index (when on) lands first for
     * the same asymmetry: a span candidate naming a doc the store lost
-    * dies loudly when the caller joins for its text.
+    * dies loudly when the caller joins for its text. `buckets` and
+    * `zorder` apply only to tables this call creates; existing ones
+    * keep their creation bucket count and z declaration
+    * ([[BucketedLayout]]).
     */
   def append(
       docs: DataFrame,
@@ -108,24 +76,12 @@ object DocStore {
       zorder: Option[(Seq[String], Int)] = None,
       writerOptions: Map[String, String] = Map.empty): Unit = {
     val spark = docs.sparkSession
-    // appends to an EXISTING store honor the creation bucket count and
-    // creation z-order declaration (the GraphStore.append / st16b
-    // rule) — a caller-parameter mismatch would leave file bucket ids
-    // the table spec disowns, or files the recorded layout disclaims
-    val existing = spark.catalog.tableExists(table)
-    val b =
-      if (existing) TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-      else buckets
-    val layout = if (existing) ZOrderLayout.layoutOf(spark, table) else zorder
     if (hasAnchors(spark, table))
-      writeAnchorRows(anchorRows(docs, anchorK(spark, table)),
-        s"${table}_anchors", b, SaveMode.Append)
-    writeBandRows(bandKeys(docs, numHashes, rowsPerBand),
-      s"${table}_bands", b, SaveMode.Append)
-    writeDocRows(docs, table, b, SaveMode.Append, layout, writerOptions)
-    if (!existing) layout.foreach { case (zc, bits) =>
-      ZOrderLayout.declare(spark, table, zc, bits)
-    }
+      anchorLayout.write(anchorRows(docs, anchorK(spark, table)),
+        s"${table}_anchors", buckets)
+    bandLayout.write(bandKeys(docs, numHashes, rowsPerBand),
+      s"${table}_bands", buckets)
+    docLayout.write(docs, table, buckets, zorder, writerOptions)
   }
 
   /** The ONE band-key projection all faces of the store share. */
@@ -153,15 +109,6 @@ object DocStore {
         graft.functions.NgramHashesExpression
           .ngramHashesAll(Dedup.words(col("text")), anchorK, 0)))
       .select(col("doc_id"), col("pos"), col("col").as("h"))
-
-  private def writeAnchorRows(
-      df: DataFrame, target: String, buckets: Int, mode: SaveMode): Unit =
-    BucketedLayout(df, buckets, Seq("h")).write
-      .mode(mode)
-      .bucketBy(buckets, "h")
-      .sortBy("h")
-      .format("parquet")
-      .saveAsTable(target)
 
   /** Whether this store maintains the exact-substring anchor index —
     * the tables' existence IS the mode switch (the VecStore tree-table
@@ -195,8 +142,8 @@ object DocStore {
     import spark.implicits._
     Seq(k).toDF("anchor_k").write.mode(SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_anchorsmeta")
-    writeAnchorRows(anchorRows(readFinal(spark, table), k),
-      s"${table}_anchors", buckets, SaveMode.Overwrite)
+    anchorLayout.write(anchorRows(readFinal(spark, table), k),
+      s"${table}_anchors", buckets)
   }
 
   /** Raw read — may contain duplicate doc_ids from re-ingests and
@@ -428,8 +375,11 @@ object DocStore {
     * ever lost; the only cost of the race is bounded, read-time-
     * invisible duplication.
     *
-    * A crash after this leaves stage garbage the next compact's
-    * dropAllStages reclaims — the live tables are untouched.
+    * Each stage is written at its live table's creation bucket count
+    * and z layout ([[BucketedLayout.stage]]); `buckets` never applies
+    * to an existing store. A crash after this leaves stage garbage the
+    * next compact's dropAllStages reclaims — the live tables are
+    * untouched.
     */
   def compactStage(
       spark: SparkSession,
@@ -446,11 +396,6 @@ object DocStore {
       rowsPerBand: Int,
       buckets: Int,
       writerOptions: Map[String, String]): CompactStage = {
-    // rewrite at the CREATION bucketing ([[TableSwap.bucketsOf]]) —
-    // a caller-parameter mismatch would leave file bucket ids the
-    // table spec disowns, silently dropped by bucketed reads
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-    val layout = ZOrderLayout.layoutOf(spark, table)
     val docsTmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
     TableSwap.dropAllStages(spark, s"${table}_bands")
@@ -459,17 +404,17 @@ object DocStore {
     // and the stage honors AT LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
     val delsSnap = Tombstones.of(table).snapshot(spark)
-    writeDocRows(readFinal(spark, table), docsTmp, b,
-      SaveMode.Overwrite, layout, writerOptions)
+    docLayout.stage(readFinal(spark, table), docsTmp, table, buckets,
+      writerOptions)
     val bandsTmp = TableSwap.stageName(spark, s"${table}_bands")
-    writeBandRows(bandKeys(spark.table(docsTmp), numHashes, rowsPerBand),
-      bandsTmp, b, SaveMode.Overwrite)
+    bandLayout.stage(bandKeys(spark.table(docsTmp), numHashes, rowsPerBand),
+      bandsTmp, s"${table}_bands", buckets)
     val anchorsTmp = if (!hasAnchors(spark, table)) None else {
       TableSwap.dropAllStages(spark, s"${table}_anchors")
       val t = TableSwap.stageName(spark, s"${table}_anchors")
-      writeAnchorRows(
+      anchorLayout.stage(
         anchorRows(spark.table(docsTmp), anchorK(spark, table)),
-        t, b, SaveMode.Overwrite)
+        t, s"${table}_anchors", buckets)
       Some(t)
     }
     CompactStage(docsTmp, bandsTmp, snapFiles, delsSnap, anchorsTmp)
@@ -484,7 +429,9 @@ object DocStore {
     * The tombstone table retires only when no NEW tombstones landed
     * since the stage snapshot (`delsSnap` unchanged) — tombstones the
     * stage never honored must keep filtering reads until the next
-    * compact; retained rows for already-dropped ids are no-ops.
+    * compact; retained rows for already-dropped ids are no-ops. The
+    * delta lands at the stages' (the live tables' creation) bucket
+    * count.
     */
   def compactFinish(
       spark: SparkSession,
@@ -493,19 +440,18 @@ object DocStore {
       numHashes: Int = 12,
       rowsPerBand: Int = 2,
       buckets: Int = 64): Unit = {
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-    val layout = ZOrderLayout.layoutOf(spark, table)
     val delta = spark.table(table).inputFiles.toSet -- st.snapFiles
     if (delta.nonEmpty) {
       val deltaRows = minusDels(spark, table,
         spark.read.format("parquet").load(delta.toSeq: _*).drop("__z"))
         .localCheckpoint()
-      writeDocRows(deltaRows, st.docsTmp, b, SaveMode.Append, layout)
-      writeBandRows(bandKeys(deltaRows, numHashes, rowsPerBand),
-        st.bandsTmp, b, SaveMode.Append)
-      st.anchorsTmp.foreach(t => writeAnchorRows(
-        anchorRows(deltaRows, anchorK(spark, table)), t, b,
-        SaveMode.Append))
+      // the stages exist, so their catalog (the live tables' count and
+      // z layout) governs these appends
+      docLayout.write(deltaRows, st.docsTmp, buckets)
+      bandLayout.write(bandKeys(deltaRows, numHashes, rowsPerBand),
+        st.bandsTmp, buckets)
+      st.anchorsTmp.foreach(anchorLayout.write(
+        anchorRows(deltaRows, anchorK(spark, table)), _, buckets))
     }
     TableSwap.swapIn(spark, st.docsTmp, table)
     TableSwap.swapIn(spark, st.bandsTmp, s"${table}_bands")
@@ -523,7 +469,9 @@ object DocStore {
     * LAST, and only if no pop landed mid-compact: a crash after the
     * doc swap but before the retire leaves the anti-join filtering ids
     * that no longer exist — a no-op, never a resurrection.
-    * `writerOptions` reach the staged docs write.
+    * `writerOptions` reach the staged docs write. The rewrite keeps
+    * the creation bucket count and z layout; `buckets` never applies
+    * to an existing store.
     */
   def compact(
       spark: SparkSession,

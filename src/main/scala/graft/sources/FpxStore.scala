@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Fpx
@@ -29,16 +29,15 @@ object FpxStore {
   val keyCols: Seq[String] =
     Seq("algorithm", "value", "prop", "schema", "dataset", "entity_id")
 
+  /** Append an fpx batch. `buckets` applies only when this call
+    * creates the table; an existing table's catalog count governs
+    * ([[BucketedLayout]]).
+    */
   def append(fpx: DataFrame, table: String, buckets: Int = 64): Unit =
-    // BucketedLayout: one file per (algorithm, bucket) per write,
-    // independent of the source's split count (the r12 finding)
-    BucketedLayout(fpx, buckets, Seq("value"), Seq("algorithm")).write
-      .mode(SaveMode.Append)
-      .partitionBy("algorithm")
-      .bucketBy(buckets, "value")
-      .sortBy("value")
-      .format("parquet")
-      .saveAsTable(table)
+    layout.write(fpx, table, buckets)
+
+  private val layout = BucketedLayout(bucketCols = Seq("value"),
+    sortCols = Seq("value"), partCols = Seq("algorithm"))
 
   /** Raw read — may contain duplicate keys from re-ingests. */
   def read(spark: SparkSession, table: String): DataFrame =
@@ -77,15 +76,9 @@ object FpxStore {
 
   /** Durable dedup, the same single-write [[TableSwap.rewrite]] as
     * [[StatementStore.compact]] (crash-window policy in [[TableSwap]]).
+    * The rewrite keeps the creation bucket count ([[BucketedLayout]]);
+    * `buckets` never applies to an existing store.
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit =
-    TableSwap.rewrite(spark, table)(tmp =>
-      BucketedLayout(readFinal(spark, table), buckets,
-        Seq("value"), Seq("algorithm")).write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("algorithm")
-        .bucketBy(buckets, "value")
-        .sortBy("value")
-        .format("parquet")
-        .saveAsTable(tmp))
+    layout.rewrite(spark, table, buckets)(readFinal(spark, table))
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{LabelProp, PageRank, Triangles}
@@ -68,46 +68,27 @@ import graft.operators.{LabelProp, PageRank, Triangles}
   */
 object GraphStore {
 
-  private def writeEdges(
-      df: DataFrame, table: String, buckets: Int, mode: SaveMode): Unit =
-    BucketedLayout(df, buckets, Seq("src")).write
-      .mode(mode)
-      .bucketBy(buckets, "src")
-      .sortBy("src")
-      .format("parquet")
-      .saveAsTable(table)
+  /** The edge table and every node-grain summary table are bucketed
+    * and sorted on their key column, written only through
+    * [[BucketedLayout]].
+    */
+  private def keyed(keyCol: String): BucketedLayout =
+    BucketedLayout(bucketCols = Seq(keyCol), sortCols = Seq(keyCol))
 
-  private def writeNodeTable(
-      df: DataFrame, table: String, buckets: Int, keyCol: String,
-      mode: SaveMode): Unit =
-    BucketedLayout(df, buckets, Seq(keyCol)).write
-      .mode(mode)
-      .bucketBy(buckets, keyCol)
-      .sortBy(keyCol)
-      .format("parquet")
-      .saveAsTable(table)
+  private val edgeLayout = keyed("src")
 
   /** Append an edge batch (columns `src`, `dst`; anything extra is
     * dropped). `ver` stamps the batch for staleness accounting —
     * monotone per caller (a stream's batch id, an ingest counter).
     * `buckets` applies only when the table is CREATED by this call;
-    * an existing table's creation bucket count wins (the st16b rule —
-    * appending a mismatched count would write file bucket ids the
-    * table spec disowns and fail with an AnalysisException).
+    * an existing table's creation bucket count wins
+    * ([[BucketedLayout]]'s creation rule).
     */
   def append(
       edges: DataFrame, table: String, ver: Long,
-      buckets: Int = 16): Unit = {
-    val rows = edges.select(col("src").cast("string"),
-      col("dst").cast("string")).withColumn("ver", lit(ver))
-    val spark = edges.sparkSession
-    if (!spark.catalog.tableExists(table))
-      writeEdges(rows, table, buckets, SaveMode.ErrorIfExists)
-    else {
-      val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-      writeEdges(rows, table, b, SaveMode.Append)
-    }
-  }
+      buckets: Int = 16): Unit =
+    edgeLayout.write(edges.select(col("src").cast("string"),
+      col("dst").cast("string")).withColumn("ver", lit(ver)), table, buckets)
 
   /** Entity takedown: tombstone a node — every incident edge vanishes
     * from [[edges]] (and so from the next refresh) immediately; the
@@ -231,6 +212,10 @@ object GraphStore {
     *     iteration rounds; the edge-grain support table keeps its own
     *     snapshot stamp (its as_of is the census split point, not a
     *     freshness claim).
+    *
+    * `buckets` applies only to summary tables this call creates; every
+    * existing table, the edge table included, keeps its creation
+    * bucket count ([[BucketedLayout]]).
     */
   def refresh(
       spark: SparkSession, table: String, iters: Int = 10,
@@ -272,8 +257,8 @@ object GraphStore {
           val kProp = prop(spark, s"${table}_kcore", "graft.kcore.k")
           def restamp(t: String, keyCol: String): Unit = {
             spark.catalog.refreshTable(t)
-            stageSwap(spark, t, buckets, keyCol)(
-              spark.table(t).withColumn("as_of", lit(asOf)))
+            keyed(keyCol).replace(
+              spark.table(t).withColumn("as_of", lit(asOf)), t, buckets)
           }
           restamp(s"${table}_ranks", "id")
           setProp(spark, s"${table}_ranks", "graft.graph.params", params)
@@ -291,15 +276,14 @@ object GraphStore {
     // (refresh is off the serving path, so nothing outlives this call)
     import graft.operators.Fixpoint.release
     val e = edges(spark, table).localCheckpoint()
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
 
-    // each summary frame is fully consumed by its stageSwap write, so
+    // each summary frame is fully consumed by its summary write, so
     // its final checkpoint blocks are released as soon as the write
     // lands — a long-running telemetry stream's refresh ticks pin
     // nothing between cadences (r14 advisor finding: ranks/labels/
     // census finals leaked one node-grain generation per tick)
     val ranks = PageRank.ranks(e, iters).withColumn("as_of", lit(asOf))
-    stageSwap(spark, s"${table}_ranks", b, "id")(ranks)
+    keyed("id").replace(ranks, s"${table}_ranks", buckets)
     // the stored-parameters declaration: a later NO-OP/REPLAY fast
     // path must never restamp summaries computed under different
     // iteration parameters (set after every write: a refresh may run
@@ -339,8 +323,8 @@ object GraphStore {
           oldE, spark.table(s"${table}_support"), newE)
       case _ => Triangles.perEdgeDiff(e)
     }
-    stageSwap(spark, s"${table}_support", b, "a")(
-      support.withColumn("as_of", lit(asOf)))
+    keyed("a").replace(support.withColumn("as_of", lit(asOf)),
+      s"${table}_support", buckets)
     val cohesion = support
       .select(explode(array(
         struct(col("a").as("node"), col("support")),
@@ -348,14 +332,14 @@ object GraphStore {
       .groupBy(col("x.node").as("node"))
       .agg((sum(col("x.support")) / 2).cast("long").as("n_triangles"))
       .withColumn("as_of", lit(asOf))
-    stageSwap(spark, s"${table}_cohesion", b, "node")(cohesion)
+    keyed("node").replace(cohesion, s"${table}_cohesion", buckets)
     val kept = support
       .filter(col("support") >= minSupport)
       .select(col("a").as("src"), col("b").as("dst"))
     val comm = LabelProp.minLabelRounds(kept, lpRounds)
       .select(col("node"), col("label").as("community"))
       .withColumn("as_of", lit(asOf))
-    stageSwap(spark, s"${table}_communities", b, "node")(comm)
+    keyed("node").replace(comm, s"${table}_communities", buckets)
     release(comm)
     release(support)
 
@@ -396,9 +380,9 @@ object GraphStore {
           kcoreK)
       case _ => graft.operators.KCore.membership(e, kcoreK, kcoreRounds)
     }
-    stageSwap(spark, s"${table}_kcore", b, "node")(
-      core.select(col("node"), col("d").as("core_degree"))
-        .withColumn("as_of", lit(asOf)))
+    keyed("node").replace(core.select(col("node"),
+      col("d").as("core_degree")).withColumn("as_of", lit(asOf)),
+      s"${table}_kcore", buckets)
     // the creation-k declaration: a later refresh at a different k
     // must never patch against an incompatible membership (it refuses
     // into the full-peel branch above instead)
@@ -411,7 +395,7 @@ object GraphStore {
     // preserves the original contract); retirement is gated on the
     // tombstone snapshot taken BEFORE the summaries — a pop landing
     // mid-refresh was not excluded from them and must stay masked
-    if (compactEdges) compactImpl(spark, table, b, Some(delsSnap))
+    if (compactEdges) compactImpl(spark, table, buckets, Some(delsSnap))
   }
 
   // bound on the broadcast side of the pure-replay probe: a bulk load
@@ -432,11 +416,12 @@ object GraphStore {
     * recompute. NEVER retires tombstones: retirement requires
     * summaries rebuilt without the popped nodes in the same operation
     * (the compacting-refresh path), else a stale rank table would
-    * resurrect the popped entity the moment the mask disappears.
+    * resurrect the popped entity the moment the mask disappears. The
+    * rewrite keeps the creation bucket count ([[BucketedLayout]]);
+    * `buckets` never applies to an existing table.
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 16): Unit =
-    compactImpl(spark, table,
-      TableSwap.bucketsOf(spark, table).getOrElse(buckets), None)
+    compactImpl(spark, table, buckets, None)
 
   private def compactImpl(
       spark: SparkSession, table: String, buckets: Int,
@@ -454,27 +439,12 @@ object GraphStore {
           .join(broadcast(d).withColumnRenamed("id", "dst"),
             Seq("dst"), "left_anti")
     }
-    TableSwap.rewrite(spark, table)(
-      writeEdges(rows.select(col("src"), col("dst"), col("ver")),
-        _, buckets, SaveMode.Overwrite))
+    edgeLayout.rewrite(spark, table, buckets)(
+      rows.select(col("src"), col("dst"), col("ver")))
     setProp(spark, table, "graft.graph.compact_ver", asOf.toString)
     if (delsSnap.nonEmpty)
       setProp(spark, table, "graft.graph.scrub_ver", asOf.toString)
     retireIfUnchangedSince.foreach(Tombstones.of(table).retire(spark, _))
-  }
-
-  private def stageSwap(
-      spark: SparkSession, table: String, buckets: Int, keyCol: String)(
-      rows: DataFrame): Unit = {
-    if (!spark.catalog.tableExists(table)) {
-      writeNodeTable(rows, table, buckets, keyCol, SaveMode.ErrorIfExists)
-    } else {
-      // rewrite at the CREATION bucketing (the st16b rule): a count
-      // mismatch would write file bucket ids the table spec disowns
-      val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
-      TableSwap.rewrite(spark, table)(
-        writeNodeTable(rows, _, b, keyCol, SaveMode.Overwrite))
-    }
   }
 
   /** Served rank vector (id, r, as_of) — node-grain, never touches

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.ReplacingMerge
@@ -41,16 +41,16 @@ object StatementStore {
     * `ReplacingMergeTree(ver, is_deleted)` pattern that makes
     * [[pop]]-style deletes append-only.
     *
-    * `zorder` (CREATION-time only, like ClickHouse's ORDER BY — a
-    * MergeTree's key cannot change in place either; engine.py:130):
-    * when the table is first created with `Some((cols, bits))`, every
-    * file the store ever writes is internally Z-ORDERED on those
-    * columns ([[ZOrderLayout]] — a stored `__z` sort key the readers
-    * never see), so range scans on ANY laid-out column prune row
-    * groups from footer stats where the canonical canonical_id sort
-    * prunes none. On an EXISTING table the parameter is ignored and
-    * the creation layout (recorded in table properties) governs —
-    * appends and compacts can never diverge from it.
+    * `buckets` and `zorder` apply only when this call CREATES the
+    * table ([[BucketedLayout]]'s creation rule — like ClickHouse's
+    * ORDER BY, a MergeTree's key cannot change in place either;
+    * engine.py:130): an existing table's catalog bucket count and z
+    * declaration govern every later append, pop and compact. Created
+    * with `zorder = Some((cols, bits))`, every file the store ever
+    * writes is internally Z-ORDERED on those columns ([[ZOrderLayout]]
+    * — a stored `__z` sort key the readers never see), so range scans
+    * on ANY laid-out column prune row groups from footer stats where
+    * the canonical canonical_id sort prunes none.
     */
   def append(statements: DataFrame, table: String, buckets: Int = 64,
       zorder: Option[(Seq[String], Int)] = None,
@@ -59,13 +59,7 @@ object StatementStore {
       if (statements.columns.contains("deleted"))
         statements.withColumn("deleted", col("deleted").cast("boolean"))
       else statements.withColumn("deleted", lit(false))
-    val spark = statements.sparkSession
-    val existing = spark.catalog.tableExists(table)
-    val layout = if (existing) zLayoutOf(spark, table) else zorder
-    write(withDel, table, buckets, SaveMode.Append, layout, writerOptions)
-    if (!existing) layout.foreach { case (zc, bits) =>
-      ZOrderLayout.declare(spark, table, zc, bits)
-    }
+    layout.write(withDel, table, buckets, zorder, writerOptions)
   }
 
   /** Z-layout metadata of a store (None = canonical canonical_id
@@ -76,58 +70,13 @@ object StatementStore {
       : Option[(Seq[String], Int)] = ZOrderLayout.layoutOf(spark, table)
 
   /** The one physical layout: dataset partitions, canonical_id buckets,
-    * sorted files. Every write path (append, compact stage) goes
-    * through here so the layout can never diverge.
-    *
-    * Z-ordered stores sort each bucket file by the stored `__z`
-    * Morton key instead of canonical_id. The z bounds are WRITE-LOCAL
-    * (one min/max pass over the rows being written): `__z` is only a
-    * sort key within the files of one write — it is never compared
-    * across files and never read by queries — so local bounds give
-    * each write an optimal layout with no global state; row-group
-    * pruning reads the ORIGINAL columns' min/max, which z-clustering
-    * tightens regardless of the bucket scaling. The catalog schema
-    * and sort spec carry `__z` from creation, so the location
-    * swap keeps catalog metadata TRUE of the files forever (a
-    * files-sorted-by-z table whose catalog claimed canonical_id order
-    * would let the planner skip a sort it must not — the reason the
-    * layout is fixed at creation).
+    * canonical_id-sorted files (or `__z`-sorted on a z-ordered store),
+    * a split-block bloom filter on canonical_id — the id a z store's
+    * files are never sorted by, and the point-lookup key.
     */
-  private def write(
-      df: DataFrame, table: String, buckets: Int, mode: SaveMode,
-      zorder: Option[(Seq[String], Int)] = None,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    // BucketedLayout: one file per (dataset, bucket) per write,
-    // independent of the source's split count (the r12 finding)
-    val (rows, sortCols) = zorder match {
-      case None => (df, Seq("canonical_id"))
-      case Some((zc, bits)) =>
-        val (mins, maxs) = ZOrderLayout.bounds(df, zc)
-        (df.withColumn("__z",
-          ZOrderLayout.zValue(zc.map(col), mins, maxs, bits)),
-          Seq("__z"))
-    }
-    BucketedLayout(rows, buckets, Seq("canonical_id"), Seq("dataset")).write
-      .mode(mode)
-      .partitionBy("dataset")
-      .bucketBy(buckets, "canonical_id")
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .options(bloomOpts ++ writerOptions)
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Split-block bloom filters on the id column (the ClickHouse
-    * `bloom_filter` skip-index class; [[BloomSkip]] measures them):
-    * min/max stats cannot prune a POINT lookup on a high-cardinality
-    * id when the file is not sorted by it — a z-ordered store's files
-    * never are, and even the canonical sort leaves the non-leading id
-    * (entity_id) unservable. Adaptive sizing keeps the footer cost
-    * proportional to each row group's actual distinct count.
-    */
-  private val bloomOpts = Map(
-    "parquet.bloom.filter.enabled#canonical_id" -> "true",
-    "parquet.bloom.filter.adaptive.enabled" -> "true")
+  private val layout = BucketedLayout(
+    bucketCols = Seq("canonical_id"), sortCols = Seq("canonical_id"),
+    partCols = Seq("dataset"), bloomCols = Seq("canonical_id"))
 
   /** Raw read — may contain superseded duplicate keys and tombstones. */
   def read(spark: SparkSession, table: String): DataFrame =
@@ -205,19 +154,17 @@ object StatementStore {
     * single location swap — no moment exists with the table absent from
     * the catalog (the crash-window policy lives there), and the live
     * table keeps its TBLPROPERTIES, the z-order declaration included.
-    * At 100 TB: one write per OPTIMIZE, not two.
+    * The rewrite keeps the creation bucket count and z layout
+    * ([[BucketedLayout]]); `buckets` never applies to an existing
+    * store. A z-ordered store is re-laid-out with compact-global
+    * bounds (the whole corpus in one write = the optimal z placement,
+    * OPTIMIZE improving on the appends' write-local bounds, exactly a
+    * MergeTree merge). At 100 TB: one write per OPTIMIZE, not two.
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64,
-      writerOptions: Map[String, String] = Map.empty): Unit = {
-    // the creation layout governs the rewrite: a z-ordered store is
-    // re-laid-out with COMPACT-global bounds (the whole corpus in one
-    // write = the optimal z placement — OPTIMIZE improving on the
-    // appends' write-local bounds, exactly a MergeTree merge)
-    val layout = zLayoutOf(spark, table)
+      writerOptions: Map[String, String] = Map.empty): Unit =
     // deleted=false restored so the stage table keeps the physical
     // schema and later appends line up against the catalog.
-    TableSwap.rewrite(spark, table)(tmp =>
-      write(readFinal(spark, table).withColumn("deleted", lit(false)),
-        tmp, buckets, SaveMode.Overwrite, layout, writerOptions))
-  }
+    layout.rewrite(spark, table, buckets, writerOptions)(
+      readFinal(spark, table).withColumn("deleted", lit(false)))
 }

@@ -48,13 +48,8 @@ object TableSwap {
   private def location(spark: SparkSession, table: String): URI =
     spark.sessionState.catalog.getTableMetadata(ident(table)).location
 
-  /** The live table's bucket count from catalog metadata (None for
-    * unbucketed tables). Compact faces rewrite at the CREATION
-    * bucketing via this instead of trusting a caller parameter: a
-    * rewrite at a different count emits file bucket ids the table's
-    * bucket spec disowns, and bucketed reads then drop those files
-    * SILENTLY — partial results, not an error (the r13 st16b
-    * finding).
+  /** The live table's catalog bucket count (None when unbucketed) —
+    * the creation count [[BucketedLayout]]'s writes keep.
     */
   def bucketsOf(spark: SparkSession, table: String): Option[Int] =
     spark.sessionState.catalog.getTableMetadata(ident(table))

@@ -116,19 +116,12 @@ object VecStore {
       table, buckets)
   }
 
-  // r12: every bucketed write routes through ONE layout shuffle
-  // ([[BucketedLayout]], keyed (list_id, bucket-of-vec_id)) — exactly
-  // one file per non-empty (list, bucket) per write regardless of the
-  // source's split count; see BucketedLayout's file-explosion finding.
-  private def writeListed(
-      df: DataFrame, target: String, buckets: Int, mode: SaveMode): Unit =
-    BucketedLayout(df, buckets, Seq("vec_id"), Seq("list_id")).write
-      .mode(mode)
-      .format("parquet")
-      .partitionBy("list_id")
-      .bucketBy(buckets, "vec_id")
-      .sortBy("vec_id")
-      .saveAsTable(target)
+  /** The corpus and `_codes` layout: list_id partitions (the inverted
+    * lists), vec_id buckets, written only through [[BucketedLayout]] —
+    * one file per non-empty (list, bucket) per write.
+    */
+  private val listedLayout = BucketedLayout(bucketCols = Seq("vec_id"),
+    sortCols = Seq("vec_id"), partCols = Seq("list_id"))
 
   /** The stored coarse quantizer. */
   def centroids(spark: SparkSession, table: String): DataFrame =
@@ -137,7 +130,8 @@ object VecStore {
   /** Append a vector batch: scan-local nearest-centroid assignment
     * against the stored quantizer, then one partitioned + bucketed
     * write. No index table to keep in step — the row lands IN its
-    * inverted list.
+    * inverted list. `buckets` applies only when this call creates the
+    * table; an existing store keeps its creation count.
     */
   def append(
       spark: SparkSession,
@@ -167,7 +161,7 @@ object VecStore {
     // once so a non-deterministic source cannot desync codes from
     // vectors (the DocStore probe lesson)
     val assigned = if (hasPq) assigned0.localCheckpoint() else assigned0
-    writeListed(assigned, table, buckets, SaveMode.Append)
+    listedLayout.write(assigned, table, buckets)
     // VECTORS first (source of truth): a crash here leaves the codes
     // cache lagging — PQ search misses the batch until the next
     // encode/retrain — but codes can never reference vectors that do
@@ -403,10 +397,9 @@ object VecStore {
       // it wholesale (no serving window exists to protect)
       if (!TableSwap.partitioned(spark, codesT)) {
         TableSwap.dropManaged(spark, codesT)
-        writeCodes(spark, corpus, cb, codesT, buckets)
-      } else TableSwap.rewrite(spark, codesT)(
-        writeCodes(spark, corpus, cb, _, buckets))
-    } else writeCodes(spark, corpus, cb, codesT, buckets)
+        listedLayout.write(encode(corpus, cb), codesT, buckets)
+      } else listedLayout.rewrite(spark, codesT, buckets)(encode(corpus, cb))
+    } else listedLayout.write(encode(corpus, cb), codesT, buckets)
   }
 
   /** The stored PQ codebook ([[trainPqCodebook]]); carries `cb_hash`,
@@ -424,20 +417,18 @@ object VecStore {
       assigned: DataFrame,
       table: String,
       buckets: Int): Unit =
-    writeCodes(spark,
+    listedLayout.write(encode(
       assigned.select(col("vec_id"), col("embedding"), col("list_id")),
-      liveCodebook(spark, table), s"${table}_codes", buckets)
+      liveCodebook(spark, table)), s"${table}_codes", buckets)
 
-  private def writeCodes(
-      spark: SparkSession,
-      vecsWithList: DataFrame,
-      cb: DataFrame,
-      target: String,
-      buckets: Int): Unit = {
-    requireStamped(cb, target)
+  /** The `_codes` rows of `vecsWithList` under codebook `cb`, each
+    * stamped with the codebook's `cb_hash`.
+    */
+  private def encode(vecsWithList: DataFrame, cb: DataFrame): DataFrame = {
+    requireStamped(cb, "the _codes cache")
     val (numSub, subDim) = pqShape(cb)
     val hash = cb.select(col("cb_hash")).head().getString(0)
-    val encoded = Similarity.pqEncode(
+    Similarity.pqEncode(
       Similarity.subVectors(
         Similarity.unitVectors(
           vecsWithList.select(col("vec_id"), col("embedding")),
@@ -447,7 +438,6 @@ object VecStore {
       .join(vecsWithList.select(col("vec_id"), col("list_id")),
         Seq("vec_id"))
       .withColumn("cb_hash", lit(hash))
-    writeListed(encoded, target, buckets, SaveMode.Append)
   }
 
   /** Legacy guard: a `_pq` table written before the hash-stamp scheme
@@ -749,7 +739,9 @@ object VecStore {
     * reads the compacted corpus); the tombstone table retires LAST and
     * only if no pop landed mid-compact, so a crash anywhere earlier
     * leaves the anti-join filtering ids that are already gone — a
-    * no-op, never a resurrection.
+    * no-op, never a resurrection. The rewrite keeps the corpus's and
+    * the cache's creation bucket counts ([[BucketedLayout]]); `buckets`
+    * never applies to an existing table.
     */
   def compact(
       spark: SparkSession,
@@ -781,14 +773,14 @@ object VecStore {
     * reads dedup, so a row the stage missed is in [[compactFinish]]'s
     * file-list delta and a row it caught twice collapses at FINAL.
     *
-    * A crash after this leaves only stage garbage the next compact's
-    * dropAllStages reclaims.
+    * Each stage is written at its live table's creation bucket count
+    * ([[BucketedLayout.stage]]). A crash after this leaves only stage
+    * garbage the next compact's dropAllStages reclaims.
     */
   def compactStage(
       spark: SparkSession,
       table: String,
       buckets: Int = 16): CompactStage = {
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
     val vecsTmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
     TableSwap.dropAllStages(spark, s"${table}_codes")
@@ -797,8 +789,7 @@ object VecStore {
     // LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
     val delsSnap = Tombstones.of(table).snapshot(spark)
-    writeListed(readFinal(spark, table), vecsTmp, b,
-      SaveMode.Overwrite)
+    listedLayout.stage(readFinal(spark, table), vecsTmp, table, buckets)
     val codesTmp =
       if (!spark.catalog.tableExists(s"${table}_codes")) None
       else {
@@ -807,10 +798,9 @@ object VecStore {
             !TableSwap.partitioned(spark, s"${table}_codes")) None
         else {
           val tmp = TableSwap.stageName(spark, s"${table}_codes")
-          writeCodes(spark,
-            spark.table(vecsTmp)
-              .select(col("vec_id"), col("embedding"), col("list_id")),
-            cb, tmp, b)
+          listedLayout.stage(encode(spark.table(vecsTmp)
+              .select(col("vec_id"), col("embedding"), col("list_id")), cb),
+            tmp, s"${table}_codes", buckets)
           Some((tmp, cb.select(col("cb_hash")).head().getString(0)))
         }
       }
@@ -829,14 +819,14 @@ object VecStore {
     * invalidates the stage, and the rare fallback is the inline
     * [[rebuildCodes]] (which also covers the legacy layouts the stage
     * declined to touch). Tombstones retire only when none landed after
-    * the stage snapshot.
+    * the stage snapshot. The delta lands at the stages' (the live
+    * tables' creation) bucket count.
     */
   def compactFinish(
       spark: SparkSession,
       table: String,
       st: CompactStage,
       buckets: Int = 16): Unit = {
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
     val delta = spark.table(table).inputFiles.toSet -- st.snapFiles
     val deltaRows =
       if (delta.isEmpty) None
@@ -851,7 +841,7 @@ object VecStore {
           spark.read.format("parquet").option("basePath", base)
             .load(delta.toSeq: _*))
           .localCheckpoint()
-        writeListed(rows, st.vecsTmp, b, SaveMode.Append)
+        listedLayout.write(rows, st.vecsTmp, buckets)
         Some(rows)
       }
     TableSwap.swapIn(spark, st.vecsTmp, table)
@@ -864,13 +854,13 @@ object VecStore {
       st.codesTmp match {
         case Some((tmp, stamp)) if liveHash.contains(stamp) =>
           deltaRows.foreach(rows =>
-            writeCodes(spark, rows, live, tmp, b))
+            listedLayout.write(encode(rows, live), tmp, buckets))
           TableSwap.swapIn(spark, tmp, s"${table}_codes")
         case _ =>
           // stale stage (mid-build retrain) or a layout the stage
           // declined — drop any staged codes and rebuild inline
           TableSwap.dropAllStages(spark, s"${table}_codes")
-          rebuildCodes(spark, table, live, b)
+          rebuildCodes(spark, table, live, buckets)
       }
     }
     Tombstones.of(table).retire(spark, st.delsSnap)
@@ -996,10 +986,9 @@ object VecStore {
   private def reassignCorpus(
       spark: SparkSession, table: String, buckets: Int): Unit = {
     val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
-    TableSwap.rewrite(spark, table)(tmp =>
-      writeListed(withAssignment(spark,
-        readFinal(spark, table).select(col("vec_id"), col("embedding")),
-        table), tmp, buckets, SaveMode.Overwrite))
+    listedLayout.rewrite(spark, table, buckets)(withAssignment(spark,
+      readFinal(spark, table).select(col("vec_id"), col("embedding")),
+      table))
     Tombstones.of(table).retire(spark, delsSnap)
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Xref
@@ -25,40 +25,32 @@ object XrefStore {
 
   def reverseTable(table: String): String = table + "_reverse"
 
-  /** The one physical layout per side; every write path (append and
-    * compact stage) goes through here so main and reverse bucketing
-    * can never diverge.
+  /** The physical layout of each side — main, the `_reverse`
+    * projection and the `_mapping` — written only through
+    * [[BucketedLayout]], so no side can diverge from its creation
+    * bucket count.
     */
-  private def write(
-      df: DataFrame, table: String, bucketCol: String,
-      sortCols: Seq[String], buckets: Int, mode: SaveMode): Unit =
-    // BucketedLayout: one file per bucket per write, independent of
-    // the source's split count (the r12 finding)
-    BucketedLayout(df, buckets, Seq(bucketCol)).write
-      .mode(mode)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
+  private val mainLayout = BucketedLayout(
+    bucketCols = Seq("left_id"), sortCols = Seq("left_id", "right_id"))
+  private val reverseLayout = BucketedLayout(
+    bucketCols = Seq("right_id"), sortCols = Seq("right_id", "left_id"))
+  private val mappingLayout = BucketedLayout(
+    bucketCols = Seq("entity_id"), sortCols = Seq("entity_id", "ver"))
 
-  private def writeMain(
-      df: DataFrame, table: String, buckets: Int, mode: SaveMode): Unit =
-    write(df.select(Xref.columns.map(col): _*), table,
-      "left_id", Seq("left_id", "right_id"), buckets, mode)
+  private def mainRows(df: DataFrame): DataFrame =
+    df.select(Xref.columns.map(col): _*)
 
-  private def writeReverse(
-      reversed: DataFrame, table: String, buckets: Int, mode: SaveMode): Unit =
-    write(reversed, table, "right_id", Seq("right_id", "left_id"),
-      buckets, mode)
+  private def mappingRows(df: DataFrame): DataFrame =
+    df.select(col("entity_id"), col("canonical_id"), col("ver"))
 
   /** Append judgement rows to the main table AND the reverse
     * projection (one insert maintains both, like ClickHouse does for
-    * projections on insert).
+    * projections on insert). `buckets` applies only to a table this
+    * call creates; an existing one keeps its creation count.
     */
   def append(xref: DataFrame, table: String, buckets: Int = 64): Unit = {
-    writeMain(xref, table, buckets, SaveMode.Append)
-    writeReverse(Xref.reverse(xref), reverseTable(table), buckets,
-      SaveMode.Append)
+    mainLayout.write(mainRows(xref), table, buckets)
+    reverseLayout.write(Xref.reverse(xref), reverseTable(table), buckets)
   }
 
   /** Raw read — may contain superseded judgement rows. */
@@ -117,46 +109,40 @@ object XrefStore {
     * projection can never drift from the rows it projects). Each table
     * is written exactly ONCE to a versioned stage sibling and swapped
     * in by [[TableSwap.rewrite]]'s single location swap — the same
-    * no-absent-window pattern as [[StatementStore.compact]].
+    * no-absent-window pattern as [[StatementStore.compact]]. Each
+    * rewrite keeps its table's creation bucket count
+    * ([[BucketedLayout]]); `buckets` never applies to an existing
+    * table.
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit = {
-    // rewrite at the CREATION bucketing ([[TableSwap.bucketsOf]]) —
-    // a caller-parameter mismatch would otherwise leave file bucket
-    // ids the table spec disowns, which bucketed reads drop silently
-    val b = TableSwap.bucketsOf(spark, table).getOrElse(buckets)
     // tombstone snapshot BEFORE the FINAL read: the compacted rows
     // honor at least these pops
     val dels = Tombstones.ofDatasets(table)
     val delsSnap = dels.snapshot(spark)
-    TableSwap.rewrite(spark, table)(
-      writeMain(readLatest(spark, table), _, b, SaveMode.Overwrite))
+    mainLayout.rewrite(spark, table, buckets)(
+      mainRows(readLatest(spark, table)))
     // [[compact]] swaps main THEN `_reverse`; a crash between the two
     // swaps leaves the reverse projection one compaction behind main.
     // That staleness is row-level harmless — both tables hold the same
     // upsert-keyed rows and every read path reapplies the FINAL window
     // — and re-running compact is the repair. (The per-table swap
     // itself has no absent-name window; policy in [[TableSwap]].)
-    val rev = reverseTable(table)
-    val rb = TableSwap.bucketsOf(spark, rev).getOrElse(b)
     // reverse = projection of the already-compacted main: a cheap
     // bucket-local parquet re-read, no second FINAL computation
-    TableSwap.rewrite(spark, rev)(
-      writeReverse(Xref.reverse(read(spark, table)), _, rb,
-        SaveMode.Overwrite))
+    reverseLayout.rewrite(spark, reverseTable(table), buckets)(
+      Xref.reverse(read(spark, table)))
     // a dataset takedown invalidates the derived mapping structurally
     // (losing positives can split components) — rebuild it from the
     // surviving judgements with the full resolver, staged + swapped
     val target = mappingTable(table)
     if (delsSnap.nonEmpty && spark.catalog.tableExists(target)) {
-      val mb = TableSwap.bucketsOf(spark, target).getOrElse(b)
       val maxRow = spark.table(target).agg(max(col("ver"))).collect()(0)
       // an all-retracted store can leave the mapping empty — rebuild
       // at ver 0 rather than NPE on the null max
       val maxVer = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      val rebuilt = Xref.resolverMapping(readLatest(spark, table))
-        .withColumn("ver", lit(maxVer))
-      TableSwap.rewrite(spark, target)(
-        writeMapping(rebuilt, _, mb, SaveMode.Overwrite))
+      mappingLayout.rewrite(spark, target, buckets)(mappingRows(
+        Xref.resolverMapping(readLatest(spark, table))
+          .withColumn("ver", lit(maxVer))))
     }
     dels.retire(spark, delsSnap)
   }
@@ -167,11 +153,6 @@ object XrefStore {
   // ---------------------------------------------------------------
 
   def mappingTable(table: String): String = table + "_mapping"
-
-  private def writeMapping(
-      df: DataFrame, target: String, buckets: Int, mode: SaveMode): Unit =
-    write(df.select(col("entity_id"), col("canonical_id"), col("ver")),
-      target, "entity_id", Seq("entity_id", "ver"), buckets, mode)
 
   /** Serve the LIVE canonical mapping: latest row per entity_id by
     * `ver` — ReplacingMergeTree semantics over the versioned delta
@@ -222,32 +203,25 @@ object XrefStore {
       else Xref.applyJudgementsDelta(readMapping(spark, table), batch,
         stored = Some(readLatest(spark, table))) match {
         case Some(delta) =>
-          writeMapping(delta.withColumn("ver", lit(ver)), target,
-            buckets, SaveMode.Append)
+          mappingLayout.write(mappingRows(delta.withColumn("ver", lit(ver))),
+            target, buckets)
           None
         case None => Some(Xref.resolverMapping(readLatest(spark, table)))
       }
-    full.foreach { m =>
-      val stamped = m.withColumn("ver", lit(ver))
-      if (!spark.catalog.tableExists(target))
-        writeMapping(stamped, target, buckets, SaveMode.ErrorIfExists)
-      else TableSwap.rewrite(spark, target)(
-        writeMapping(stamped, _, buckets, SaveMode.Overwrite))
-    }
+    full.foreach(m => mappingLayout.replace(
+      mappingRows(m.withColumn("ver", lit(ver))), target, buckets))
   }
 
   /** OPTIMIZE for the mapping table: rewrite with the FINAL window
     * applied (current rows only, superseded delta versions dropped),
-    * staged + swapped like [[compact]].
+    * staged + swapped like [[compact]], at the mapping's creation
+    * bucket count.
     */
   def compactMapping(
       spark: SparkSession, table: String, buckets: Int = 64): Unit = {
     val target = mappingTable(table)
-    val current = graft.operators.ReplacingMerge.latestByKey(
-      spark.table(target),
-      keys = Seq(col("entity_id")), version = Seq(col("ver")))
-    val mb = TableSwap.bucketsOf(spark, target).getOrElse(buckets)
-    TableSwap.rewrite(spark, target)(
-      writeMapping(current, _, mb, SaveMode.Overwrite))
+    mappingLayout.rewrite(spark, target, buckets)(mappingRows(
+      graft.operators.ReplacingMerge.latestByKey(spark.table(target),
+        keys = Seq(col("entity_id")), version = Seq(col("ver")))))
   }
 }

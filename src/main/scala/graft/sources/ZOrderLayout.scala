@@ -113,9 +113,8 @@ object ZOrderLayout {
 
   /** The creation-time z-order declaration of a managed store, read
     * back from table properties (None = the store's canonical key
-    * sort). Shared by every store that offers a z layout
-    * ([[StatementStore]], [[DocStore]]) so their append/compact paths
-    * resolve the SAME recorded layout and can never diverge from it.
+    * sort). [[BucketedLayout]] reads it on every write of an existing
+    * table, so appends and compacts can never diverge from it.
     */
   def layoutOf(spark: org.apache.spark.sql.SparkSession, table: String)
       : Option[(Seq[String], Int)] = {
@@ -128,8 +127,9 @@ object ZOrderLayout {
   }
 
   /** Record a creation-time z-order declaration on `table` — the
-    * MergeTree ORDER BY analogue (engine.py:130): fixed at creation,
-    * honored by every later write.
+    * MergeTree ORDER BY analogue (engine.py:130): fixed at creation
+    * by [[BucketedLayout]]'s creating write, honored by every later
+    * write.
     */
   def declare(spark: org.apache.spark.sql.SparkSession, table: String,
       zc: Seq[String], bits: Int): Unit =

@@ -568,8 +568,8 @@ object Streams {
         def pending(t: String) = graft.sources.Tombstones.of(t).pending(spark)
         sketchTable.filter(pending)
           .foreach(t => graft.sources.SketchStore.compact(spark, t, k))
-        // compact rewrites at the store's CREATION bucketing
-        // (TableSwap.bucketsOf), so no bucket parameter to mismatch
+        // compact rewrites at the store's creation bucket count
+        // (BucketedLayout's creation rule), so none is passed
         xrefTable
           .filter(t => graft.sources.Tombstones.ofDatasets(t).pending(spark))
           .foreach(t => graft.sources.XrefStore.compact(spark, t))

@@ -233,6 +233,119 @@ class SourcesSpec extends AnyFunSuite {
     } finally { root.removeAppender(appender); appender.stop() }
   }
 
+  // the creation count wins: a write at any other count emits file
+  // bucket ids the catalog's bucket spec disowns, and a bucket-pruned
+  // point read then drops rows silently. Every bucketed store table is
+  // created at 4, then appended to and compacted by calls naming 2.
+  test("every bucketed store keeps its creation bucket count") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
+    import graft.sources.{DocStore, GraphStore, VecStore}
+    val stmts = (from: Int, day: String) => (from until from + 8).map(i =>
+      (s"s$i", s"e$i", s"e$i", "name", "name", "Person", s"v$i",
+        s"ds${i % 2}", ts(s"2026-01-$day 00:00:00")))
+      .toDF("id", "entity_id", "canonical_id", "prop", "prop_type",
+        "schema", "value", "dataset", "last_seen")
+    val fpx = (from: Int) => Fpx.fromStatements((from until from + 8)
+      .map(i => (s"e$i", "Person", "ds1", "name", "name", s"Name$i Holding"))
+      .toDF("entity_id", "schema", "dataset", "prop", "prop_type", "value"))
+    val judge = (from: Int) => (from until from + 4).map(i =>
+      ("ds1", s"a$i", "Person", "de", s"a$i", "ds1", s"b$i", "Person", "de",
+        s"b$i", "positive", 0.5, i.toLong, "graft")).toDF(Xref.columns: _*)
+    val docs = (from: Long) => (from until from + 3L)
+      .map(i => (i, s"doc $i says one two three four five", "s"))
+      .toDF("doc_id", "text", "source")
+    val edges = (from: Int) => (from until from + 6)
+      .map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    val emb = Tables.load(spark, sf, "embeddings")
+    // (name, tables to drop, (checked table, bucket columns),
+    // create at 4, append at 2, compact at 2)
+    val faces = Seq[(String, Seq[String], Seq[(String, Seq[String])],
+        () => Unit, () => Unit, () => Unit)](
+      ("statement", Seq("bk_stmt"), Seq("bk_stmt" -> Seq("canonical_id")),
+        () => StatementStore.append(stmts(0, "01"), "bk_stmt", 4),
+        () => StatementStore.append(stmts(4, "02"), "bk_stmt", 2),
+        () => StatementStore.compact(spark, "bk_stmt", 2)),
+      ("fpx", Seq("bk_fpx"), Seq("bk_fpx" -> Seq("value")),
+        () => FpxStore.append(fpx(0), "bk_fpx", 4),
+        () => FpxStore.append(fpx(4), "bk_fpx", 2),
+        () => FpxStore.compact(spark, "bk_fpx", 2)),
+      ("xref", Seq("bk_xref", "bk_xref_reverse", "bk_xref_dsdels"),
+        Seq("bk_xref" -> Seq("left_id"), "bk_xref_reverse" -> Seq("right_id")),
+        () => XrefStore.append(judge(0), "bk_xref", 4),
+        () => XrefStore.append(judge(2), "bk_xref", 2),
+        () => XrefStore.compact(spark, "bk_xref", 2)),
+      ("doc", Seq("bk_doc", "bk_doc_bands", "bk_doc_dels"),
+        Seq("bk_doc" -> Seq("doc_id"), "bk_doc_bands" -> Seq("band", "key")),
+        () => DocStore.append(docs(0L), "bk_doc", buckets = 4),
+        () => DocStore.append(docs(2L), "bk_doc", buckets = 2),
+        () => DocStore.compact(spark, "bk_doc", buckets = 2)),
+      ("graph", Seq("bk_graph", "bk_graph_dels"),
+        Seq("bk_graph" -> Seq("src")),
+        () => GraphStore.append(edges(0), "bk_graph", 1L, buckets = 4),
+        () => GraphStore.append(edges(3), "bk_graph", 2L, buckets = 2),
+        () => GraphStore.compact(spark, "bk_graph", buckets = 2)),
+      ("vec", Seq("bk_vec", "bk_vec_cents", "bk_vec_dels"),
+        Seq("bk_vec" -> Seq("vec_id")),
+        () => VecStore.init(spark, "bk_vec", emb.filter(col("vec_id") < 40),
+          col("label"), buckets = 4),
+        () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
+          .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
+          "bk_vec", 2),
+        () => VecStore.compact(spark, "bk_vec", 2)))
+    def violations(t: String, keyCols: Seq[String]): Seq[String] = {
+      val count = TableSwap.bucketsOf(spark, t)
+      val files = spark.table(t).inputFiles.toSeq
+      val badIds = files.map(f => BucketingUtils.getBucketId(
+        new Path(f).getName)).filterNot(_.exists(_ < 4))
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(t)).location.toString
+      // per key: rows the live location's files hold vs rows a
+      // bucket-pruned point read returns (one union branch — one
+      // pruned scan — per key, all in one job)
+      val raw = spark.read.parquet(loc).select(keyCols.map(col): _*)
+        .collect().toSeq.groupBy(_.toSeq).toSeq.sortBy(_._1.mkString)
+        .take(8)
+      val hits = raw.zipWithIndex.map { case ((key, _), i) =>
+        spark.table(t).filter(keyCols.zip(key)
+          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
+          .select(lit(i))
+      }.reduce(_ unionAll _).collect().toSeq.groupBy(_.getInt(0))
+        .map { case (i, rs) => i -> rs.size.toLong }
+      val lost = raw.zipWithIndex.collect {
+        case ((key, rows), i) if hits.getOrElse(i, 0L) != rows.size =>
+          s"${key.mkString(",")}: ${hits.getOrElse(i, 0L)} of " +
+            s"${rows.size} rows"
+      }
+      (if (count.contains(4)) Nil else Seq(s"$t: bucket count $count")) ++
+        (if (badIds.isEmpty) Nil else Seq(s"$t: file bucket ids $badIds")) ++
+        lost.map(l => s"$t: point read lost rows, $l")
+    }
+    // each step runs even when the one before it threw, so a compact
+    // is checked after a refused append too
+    def attempt(step: String)(body: => Seq[String]): Seq[String] =
+      scala.util.Try(body).fold(e => Seq(s"$step threw " +
+        s"${e.getClass.getSimpleName}: " +
+        String.valueOf(e.getMessage).linesIterator.take(1).mkString),
+        _.map(s"after $step: " + _))
+    val failures = faces.flatMap {
+      case (name, drop, checked, create, append, compact) =>
+        drop.foreach(dropTable)
+        create()
+        val found = Seq("append" -> append, "compact" -> compact).flatMap {
+          case (step, run) => attempt(step) {
+            run()
+            checked.flatMap { case (t, k) => violations(t, k) }
+          }
+        }
+        drop.foreach(dropTable)
+        found.map(s"$name: " + _)
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   test("bucket pruning: a canonical_id point lookup reads one bucket") {
     dropTable("stmt_spec5")
     StatementStore.append(sampleStatements, "stmt_spec5", buckets = 4)
