@@ -3,6 +3,7 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.functions.{array_sort, slice}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
@@ -33,6 +34,13 @@ import org.apache.spark.sql.types._
   * pre-normalized vectors as dot/centNorm) pass `norm = lit(1.0)`:
   * IEEE multiplication by 1.0 is exact, so dot/(1.0 · cn) is bitwise
   * dot/cn.
+  *
+  * This is the one coarse-quantizer list picker: a flat quantizer is
+  * one subtree ([[TreeMatrix.flat]]) whose single top is stage 1's only
+  * candidate, so stage 2 scores all L leaves (the flat argmax) and
+  * `probe` returns all L candidates for the caller's rank + slice. A
+  * zero-norm vector or centroid scores NaN: the vector lands in the
+  * lowest list id, the centroid never wins a non-degenerate vector.
   */
 final class TreeMatrix(
     val idType: DataType,
@@ -163,6 +171,17 @@ object TreeMatrix {
     else JBigDecimal.valueOf(v).setScale(4, RoundingMode.HALF_UP)
       .doubleValue()
 
+  /** A flat quantizer as a one-subtree matrix: every leaf
+    * (list_id, centroid, centNorm) under one top. The top's centroid
+    * is empty; it is stage 1's only candidate, so its score is never
+    * compared.
+    */
+  def flat(idType: DataType,
+      leaves: Seq[(Any, Seq[Double], Double)]): TreeMatrix = {
+    require(leaves.nonEmpty, "TreeMatrix.flat: empty centroid table")
+    build(idType, Seq((0L, Nil, 1.0)), Map(0L -> leaves))
+  }
+
   /** Build from driver-side JVM rows: (top_id, centroid, centNorm)
     * and per-leaf (list_id, centroid, centNorm, owning top_id). Ids
     * convert to catalyst values and sort ascending (per the type's
@@ -281,4 +300,13 @@ object TreeQuantizerExpression {
     GraftSqlBridge.column(TreeProbeExpression(
       GraftSqlBridge.expression(emb), GraftSqlBridge.expression(norm),
       tree, nProbeTop))
+
+  /** The `nProbe` best (nd, list_id) candidates of the `nProbeTop`
+    * best subtrees, best first: `array_sort` + `slice` rank by
+    * (nd, list_id), the window-rank form's order.
+    */
+  def probeLists(
+      emb: Column, norm: Column, tree: TreeMatrix,
+      nProbeTop: Int, nProbe: Int): Column =
+    slice(array_sort(treeProbe(emb, norm, tree, nProbeTop)), 1, nProbe)
 }

@@ -547,8 +547,9 @@ object Dedup {
   /** d12 — SemDeDup-style semantic deduplication (cluster-then-prune,
     * the published scale recipe for embedding dedup of web-scale
     * corpora): every vector assigns to its nearest TRAINED centroid
-    * (the identical coarse-quantizer argmax as IVF search —
-    * [[Similarity.nearestLists]] with keep = 1), and within each
+    * (the identical flat list picker as IVF search —
+    * [[Similarity.withNearestList]], a scan projection through the
+    * centroid matrix collected once), and within each
     * cluster a vector is dropped when some smaller-id cluster-mate
     * sits at cosine ≥ `minCos`. One row per vector: the learned
     * cluster, the keep/drop verdict, and for dropped vectors the
@@ -558,13 +559,20 @@ object Dedup {
     * convention) so a near-threshold pair cannot flip between engines
     * on float-summation drift — the DuckDB twin takes the identical
     * decision on every pair. The cluster-assignment argmax rounds its
-    * choice score the same way ([[Similarity.nearestLists]]): a vector
+    * choice score the same way: a vector
     * near-equidistant between two centroids ties at 4dp and falls to
     * the list_id tie-break identically in both engines, so assignment
     * (and with it every keep/drop verdict) cannot flip either.
     *
-    * Scale shape: centroids broadcast (k is chosen, not data-sized);
-    * the corpus shuffles once on the learned int cluster id; the
+    * A zero-norm vector assigns to the lowest list id; its pair
+    * cosines still divide by its zero norm
+    * ([[cosineWithNorms]]). An empty centroid table assigns nothing
+    * and answers empty.
+    *
+    * Scale shape: the centroids ride in the assignment expression (k
+    * is chosen, not data-sized), so assignment is a scan projection
+    * with no exchange; the corpus shuffles once on the learned int
+    * cluster id; the
     * quadratic pair expansion reuses the d5/f8 machinery —
     * HLL-guarded bounded member sets + chunk-balanced expansion
     * ([[Fpx.boundedMemberSets]] / [[Fpx.expandSortedSets]]), so a hot
@@ -583,12 +591,12 @@ object Dedup {
       maxList: Int = 10000): DataFrame = {
     // materialize the assignment table ONCE: five consumers hang off it
     // (size guard, membership, set build, both pair sides) and each
-    // would otherwise re-instantiate the centroid-train + crossJoin +
-    // argmax subtree — the d6 lesson; a production pipeline persists
-    // its cluster-assignment table for exactly this reason
-    val assigned = Similarity.nearestLists(
+    // would otherwise re-read and re-assign the corpus — the d6
+    // lesson; a production pipeline persists its cluster-assignment
+    // table for exactly this reason
+    val assigned = Similarity.withNearestList(
       embeddings.select(col("vec_id"), col("embedding")),
-      Similarity.centNorms(cents), "vec_id", keep = 1)
+      cents, Similarity.flatMatrix(cents))
       .localCheckpoint()
     // the cutoff membership filter: structurally ≤ |cents| rows, so it
     // broadcasts; singleton clusters pass (their vector is kept below)
@@ -640,8 +648,9 @@ object Dedup {
     * inverted lists make this probe near-flat in corpus size).
     *
     * Semantics are d12's restricted to cross pairs: both sides assign
-    * to their nearest centroid (the same 4dp-rounded argmax with
-    * list_id tie-break, [[Similarity.nearestLists]]), and a batch
+    * to their nearest centroid through one flat list-picker matrix
+    * (the centroid table collected once; the same 4dp-rounded argmax
+    * with list_id tie-break, [[Similarity.withNearestList]]), and a batch
     * vector is a dup when some STORED vector in its list sits at
     * cosine ≥ `minCos` (4dp-rounded, the d5 convention). Batch×batch
     * pairs are deliberately out of scope — they are the NEXT append's
@@ -659,17 +668,16 @@ object Dedup {
       cents: DataFrame,
       minCos: Double,
       maxList: Int = 10000): DataFrame = {
-    val cn = Similarity.centNorms(cents)
-    // the full-corpus argmax feeds two consumers (list sizes + member
-    // join) — materialize once, the d12 lesson. The store path reads
-    // this from its partition layout instead and skips the job.
-    val storedA = Similarity.nearestLists(
-      stored.select(col("vec_id"), col("embedding")), cn, "vec_id",
-      keep = 1)
+    val tm = Similarity.flatMatrix(cents)
+    // the full-corpus assignment feeds two consumers (list sizes +
+    // member join) — materialize once, the d12 lesson. The store path
+    // reads this from its partition layout instead and skips the job.
+    val storedA = Similarity.withNearestList(
+      stored.select(col("vec_id"), col("embedding")), cents, tm)
       .localCheckpoint()
-    val batchA = Similarity.nearestLists(
+    val batchA = Similarity.withNearestList(
       batch.select(col("vec_id").as("new_vec_id"), col("embedding")),
-      cn, "new_vec_id", keep = 1)
+      cents, tm)
       .localCheckpoint()
     crossVerdicts(storedA, batchA, minCos, maxList)
   }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   LongType, StructField, StructType}
 
+import graft.functions.{TreeMatrix, TreeQuantizerExpression}
+
 /** Approximate-nearest-neighbor search over an embedding column.
   *
   * `bruteTopK` is the exact baseline: broadcast the (small) query set
@@ -228,36 +230,48 @@ object Similarity {
         transform(col("s"), e => e / col("n").cast("double")).as("centroid"))
 
   /** s3 — IVF ANN: corpus vectors assign to their nearest centroid
-    * (one scan against the broadcast centroid table — the inverted
-    * lists); each query probes the `nProbe` nearest lists and scores
-    * only those lists' members. The 100 TB shape: the corpus is
-    * range-free — no global structure beyond the list id, assignment
-    * and search are both broadcast joins + one top-k window.
+    * and each query probes the `nProbe` nearest lists, scoring only
+    * those lists' members. The centroid table is collected once into
+    * the flat list-picker matrix ([[flatMatrix]]), so assignment and
+    * probes are scan projections ([[ivfSearch]], s7's plan with a
+    * one-subtree matrix): no centroid broadcast and no corpus-grain
+    * argmax exchange. An empty centroid table answers empty.
     */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
       cents: DataFrame,
       k: Int,
-      nProbe: Int = 2): DataFrame = {
-    // norms once per centroid (broadcast side) — the assignment scores
-    // |rows|·|cents| pairs, so a norm inside the pair loop is |cents|×
-    // wasted folds
-    val cn = centNorms(cents)
-    def best(df: DataFrame, idCol: String, keep: Int): DataFrame =
-      nearestLists(df, cn, idCol, keep)
-    val assigned = best(
-      corpus.select(col("vec_id").as("neighbor_id"), col("embedding")),
-      "neighbor_id", 1)
-      .select(col("list_id"), col("neighbor_id"),
-        col("embedding").as("cv"), col("__n").as("cn"))
-    val probes = best(
-      queries.select(col("vec_id").as("query_id"), col("embedding")),
-      "query_id", nProbe)
-      .select(col("list_id"), col("query_id"),
-        col("embedding").as("qv"), col("__n").as("qn"))
-    // no dedup needed: each neighbor lives in exactly one inverted list
-    // (keep=1 assignment), so a (query, neighbor) pair scores once
+      nProbe: Int = 2): DataFrame =
+    flatMatrix(cents).fold(emptyTopK(corpus, queries, k))(
+      ivfSearch(corpus, queries, _, k, 1, nProbe))
+
+  /** IVF search through a list-picker matrix: the corpus assigns by
+    * scan projection, each query probes the `nProbe` best lists of its
+    * `nProbeTop` best subtrees (a flat matrix has one), and members of
+    * the probed lists score exactly, top-k per query. The probes are a
+    * broadcast side; the one corpus-side exchange feeds the top-k
+    * aggregation. Each neighbor lives in exactly one list, so a
+    * (query, neighbor) pair scores once.
+    */
+  private def ivfSearch(
+      corpus: DataFrame, queries: DataFrame, tm: TreeMatrix, k: Int,
+      nProbeTop: Int, nProbe: Int): DataFrame = {
+    val assigned = corpus
+      .select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv"),
+        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("cn"))
+      .withColumn("list_id",
+        TreeQuantizerExpression.treeAssign(col("cv"), col("cn"), tm))
+    val probes = queries
+      .select(col("vec_id").as("query_id"),
+        col("embedding").as("qv"),
+        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("qn"))
+      .select(col("query_id"), col("qv"), col("qn"),
+        explode(TreeQuantizerExpression.probeLists(
+          col("qv"), col("qn"), tm, nProbeTop, nProbe)).as("pc"))
+      .select(col("query_id"), col("qv"), col("qn"),
+        col("pc.list_id").as("list_id"))
     val scored = assigned.join(broadcast(probes), Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cos",
@@ -266,19 +280,59 @@ object Similarity {
       scored.select(col("query_id"), col("neighbor_id"), col("cos")), k)
   }
 
-  /** The broadcast centroid side every coarse-quantizer consumer
-    * shares: list ids, centroid vectors and their precomputed norms.
+  /** The (query_id, neighbor_id, cos, rank) top-k shape with no rows:
+    * the answer of a search over no lists.
+    */
+  private def emptyTopK(
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topKPerQuery(
+      queries.limit(0).select(col("vec_id").as("query_id"))
+        .crossJoin(corpus.limit(0).select(col("vec_id").as("neighbor_id")))
+        .withColumn("cos", lit(0.0)), k)
+
+  /** The centroid table as the flat list picker: one collect of the
+    * [[collectLeaves]] rows, norms with [[centNorms]]' arithmetic, in a
+    * one-subtree [[graft.functions.TreeMatrix]]. None for an empty
+    * table.
+    */
+  private[graft] def flatMatrix(cents: DataFrame): Option[TreeMatrix] = {
+    val leaves = collectLeaves(cents)
+    if (leaves.isEmpty) None
+    else Some(TreeMatrix.flat(cents.schema("list_id").dataType,
+      leaves.map { case (id, c) => (id, c.toSeq, vecNorm(c)) }))
+  }
+
+  /** `df` (id, embedding) with its row norm `__n` and `list_id`, the
+    * nearest list of `cents` under its flat matrix `tm` — one scan
+    * projection. With no centroids (`tm` None) no row is kept, as the
+    * pair form's empty crossJoin kept none.
+    */
+  private[graft] def withNearestList(
+      df: DataFrame, cents: DataFrame, tm: Option[TreeMatrix]): DataFrame = {
+    val normed = df
+      .withColumn("__n", sqrt(Dedup.dot(col("embedding"), col("embedding"))))
+    tm match {
+      case Some(m) => normed.withColumn("list_id",
+        TreeQuantizerExpression.treeAssign(col("embedding"), col("__n"), m))
+      case None => normed.withColumn("list_id",
+        lit(null).cast(cents.schema("list_id").dataType)).filter(lit(false))
+    }
+  }
+
+  /** The centroid side of the declarative twins ([[nearestLists]],
+    * [[treeDescend]]): list ids, centroid vectors and their norms.
     */
   private[graft] def centNorms(cents: DataFrame): DataFrame =
     broadcast(cents.select(col("list_id"), col("centroid"),
       sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("cent_n")))
 
-  /** Nearest-list search against a [[centNorms]] side: keep the `keep`
-    * best lists per vector of `df` (which must carry `idCol` and
-    * `embedding`). The row norm is computed once per vector before the
-    * crossJoin and returned as `__n` for downstream exact scoring.
-    * Shared by IVF search (s3/s3b assignment + probes) and semantic
-    * dedup (d12's cluster assignment).
+  /** The declarative twin of the flat list picker, kept for the specs
+    * (no production path calls it): keep the `keep` best lists per
+    * vector of `df` (which must carry `idCol` and `embedding`) against
+    * a [[centNorms]] side, by crossJoin and an argmax exchange. The row
+    * norm is returned as `__n`. The flat matrix ([[flatMatrix]]) makes
+    * the same choices bit for bit on non-degenerate input; a zero-norm
+    * vector or centroid makes this form divide by zero.
     */
   private[graft] def nearestLists(
       df: DataFrame, cn: DataFrame, idCol: String, keep: Int): DataFrame = {
@@ -598,8 +652,11 @@ object Similarity {
     * shuffle), and the ADC join's list key cuts its probe volume by
     * ~|lists|/nProbe versus s5's whole-corpus scoring.
     *
-    * Assignment uses cosine (scale-invariant, so raw-vector centroids
-    * rank identically against the unit-normalized corpus).
+    * Assignment and probes run through the flat list-picker matrix
+    * ([[flatMatrix]], collected once) as scan projections over the unit
+    * vectors with norm 1.0, so d = dot(v, c)/|c|: cosine is
+    * scale-invariant, so raw-vector centroids rank identically against
+    * the unit-normalized corpus. An empty centroid table answers empty.
     */
   def ivfPqTopK(
       corpus: DataFrame,
@@ -615,43 +672,29 @@ object Similarity {
       corpusLists: Option[DataFrame] = None): DataFrame = {
     require(dims % numSub == 0, s"dims $dims not divisible by $numSub")
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
+    val tm = flatMatrix(cents) match {
+      case Some(m) => m
+      case None => return emptyTopK(corpus, queries, k)
+    }
     // shortlist 0 = AUTO: scale with the probed candidate volume
     // (corpus·nProbe/lists) — the r10 operating grid measured recall
     // pinned by a FIXED shortlist, not by nProbe; [[scaledShortlist]]
     // encodes the measured recovery rule
     val shortlist0 =
       if (shortlist > 0) shortlist
-      else scaledShortlist(corpus.count(), cents.count(), nProbe)
+      else scaledShortlist(corpus.count(), tm.leafCount, nProbe)
     val subDim = dims / numSub
-    import org.apache.spark.sql.expressions.Window
     val corpusV = unitVectors(corpus, "vec_id", dims)
     val queriesV = unitVectors(queries, "query_id", dims)
-    val cn = broadcast(cents.select(col("list_id"), col("centroid"),
-      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("cent_n")))
-    // |v| = 1, so cos(v, c) = dot(v, c)/|c|; same argmax-as-aggregate
-    // shape as ivfTopK's corpus assignment, and the same 4dp-rounded
-    // choice score ([[nearestLists]]) so near-tied list picks break on
-    // list_id identically in both engines
-    def lists(df: DataFrame, idCol: String, keep: Int): DataFrame = {
-      val paired = df.crossJoin(cn)
-        .withColumn("d",
-          round(Dedup.dot(col("v"), col("centroid")) / col("cent_n"), 4))
-      if (keep == 1)
-        paired.groupBy(col(idCol))
-          .agg(min_by(col("list_id"),
-            struct((-col("d")).as("nd"), col("list_id"))).as("list_id"))
-      else {
-        val w = Window.partitionBy(col(idCol))
-          .orderBy(col("d").desc, col("list_id").asc)
-        paired.withColumn("r", row_number().over(w))
-          .filter(col("r") <= keep)
-          .select(col(idCol), col("list_id"))
-      }
-    }
     // a VecStore supplies its stored (vec_id, list_id) layout here —
-    // the assignment is then a narrow read instead of a corpus argmax
-    val corpusLists0 = corpusLists.getOrElse(lists(corpusV, "vec_id", 1))
-    val probeLists = lists(queriesV, "query_id", nProbe)
+    // the assignment is then a narrow read instead of a projection
+    val corpusLists0 = corpusLists.getOrElse(corpusV.select(col("vec_id"),
+      TreeQuantizerExpression.treeAssign(col("v"), lit(1.0), tm)
+        .as("list_id")))
+    val probeLists = queriesV
+      .select(col("query_id"), explode(TreeQuantizerExpression.probeLists(
+        col("v"), lit(1.0), tm, 1, nProbe)).as("pc"))
+      .select(col("query_id"), col("pc.list_id").as("list_id"))
     val subsAll = subVectors(corpusV, "vec_id", numSub, subDim)
     // checkpointed for the same two-consumer reason as [[pqTopK]]'s
     // in-query train (structurally bounded — 128 rows at the defaults)
@@ -778,7 +821,6 @@ object Similarity {
   private[graft] def trainTree(
       idType: DataType, leaves: Seq[(Any, Array[Double])],
       topCount: Int): TrainedTree = {
-    import graft.functions.TreeMatrix
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.util.{SQLOrderingUtil, TypeUtils}
     val conv = CatalystTypeConverters.createToCatalystConverter(idType)
@@ -837,11 +879,13 @@ object Similarity {
         .join(leafMap, Seq("list_id"))
         .localCheckpoint())
 
-  /** Two-level descent: nearest top over `topCn` (`topCount`
-    * candidates), then nearest leaf among ONLY that top's children
-    * (broadcast join on top_id). Both argmaxes 4dp-rounded with id
-    * tie-break; the second groupBy reuses the first's exchange (both
-    * hash the vector id). Returns (idCol, list_id, embedding, __n).
+  /** The declarative twin of the tree descent, kept for the specs (no
+    * production path calls it; [[graft.functions.TreeMatrix]] makes
+    * the same choices bit for bit): nearest top over `topCn`
+    * (`topCount` candidates, [[nearestLists]]), then nearest leaf among
+    * ONLY that top's children (broadcast join on top_id). Both argmaxes
+    * 4dp-rounded with id tie-break. Returns (idCol, list_id, embedding,
+    * __n).
     */
   private[graft] def treeDescend(
       df: DataFrame, idCol: String,
@@ -871,10 +915,8 @@ object Similarity {
     * [[graft.functions.TreeMatrix]]; no other job runs and nothing is
     * checkpointed, so the returned plan pins no RDD.
     *
-    * Plan shape: the corpus descent is a scan projection through the
-    * matrix expression (the join form, [[treeDescend]], is its spec
-    * twin); the probes are a broadcast side, and the one corpus-side
-    * exchange feeds the top-k aggregation. Tree assignment is
+    * Plan shape: [[ivfSearch]], the s3 plan with the tree matrix (the
+    * join form, [[treeDescend]], is its spec twin). Tree assignment is
     * approximate vs the flat argmax (a vector whose nearest leaf lives
     * under a different subtree mis-assigns — the standard tree-IVF
     * trade; BASELINE.md round 12 records the agreement rate and the
@@ -888,63 +930,21 @@ object Similarity {
       topCount: Int,
       nProbeTop: Int = 2,
       nProbe: Int = 3): DataFrame = {
-    import graft.functions.{TreeMatrix, TreeQuantizerExpression}
-    // r12: the trained tree rides as ONE expression-local matrix
-    // (centroid-grain, the bounded class of s2's hyperplane matrix), so
-    // the corpus descent is a scan PROJECTION: the corpus-grain argmax
-    // exchange and the corpus × topCount/subtree row fan-outs of the
-    // join form ([[treeDescend]], kept as the spec twin and
-    // choice-bitwise to this expression — randomized parity spec)
-    // disappear from the plan entirely. What remains corpus-side is the
-    // one narrow shuffle into the top-k aggregation. The leaf centroids
-    // are collected once: the driver trains the tree from those rows
-    // ([[trainTree]]) and the same rows fill the matrix's leaves, with
-    // [[centNorms]]' norm arithmetic.
+    // the leaf centroids are collected once: the driver trains the tree
+    // from those rows ([[trainTree]]) and the same rows fill the
+    // matrix's leaves, with [[centNorms]]' norm arithmetic
     val idType = cents.schema("list_id").dataType
     val leaves = collectLeaves(cents)
     val tree = trainTree(idType, leaves, topCount)
-    // degenerate: an empty corpus trains no tree — answer empty in the
-    // standard (query_id, neighbor_id, cos) top-k shape instead of
-    // building a zero-node matrix
-    if (tree.tops.isEmpty)
-      return topKPerQuery(
-        queries.limit(0).select(col("vec_id").as("query_id"))
-          .crossJoin(corpus.limit(0)
-            .select(col("vec_id").as("neighbor_id")))
-          .withColumn("cos", lit(0.0)), k)
+    // an empty corpus trains no tree
+    if (tree.tops.isEmpty) return emptyTopK(corpus, queries, k)
     val leafTop = tree.leafTop.toMap
     val leavesByTop = leaves
       .map { case (id, c) => (id, c.toSeq, vecNorm(c)) }
       .groupBy(l => leafTop(l._1))
     val topSeq = tree.tops.map { case (t, c) => (t, c.toSeq, vecNorm(c)) }
-    val tm = TreeMatrix.build(idType, topSeq, leavesByTop)
-    val assigned = corpus
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"),
-        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("cn"))
-      .withColumn("list_id",
-        TreeQuantizerExpression.treeAssign(col("cv"), col("cn"), tm))
-    // query probes: nProbeTop subtrees, then the nProbe best leaves
-    // across the probed subtrees' children — same expression family,
-    // ranking declarative (array_sort + slice = (nd, list_id) order,
-    // byte-for-byte the window-rank form's choices)
-    val probes = queries
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("qv"),
-        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("qn"))
-      .withColumn("__c", slice(array_sort(
-        TreeQuantizerExpression.treeProbe(
-          col("qv"), col("qn"), tm, nProbeTop)), 1, nProbe))
-      .select(col("query_id"), col("qv"), col("qn"),
-        explode(col("__c")).as("pc"))
-      .select(col("query_id"), col("qv"), col("qn"),
-        col("pc.list_id").as("list_id"))
-    val scored = assigned.join(broadcast(probes), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        Dedup.cosineWithNorms(col("qv"), col("cv"), col("qn"), col("cn")))
-    topKPerQuery(
-      scored.select(col("query_id"), col("neighbor_id"), col("cos")), k)
+    ivfSearch(corpus, queries,
+      TreeMatrix.build(idType, topSeq, leavesByTop), k, nProbeTop, nProbe)
   }
 
   /** One MMR candidate: id, 4dp-scaled relevance-to-query, embedding. */

@@ -167,7 +167,6 @@ object GraphStore {
     * with the refresh's ver, so the split is exact under the
     * documented monotone-ver append contract). A pending takedown
     * removes triangles, which the delta does not model → full census.
-    * `deltaCensus = false` forces the full path (probe baseline).
     * Cohesion and the truss filter derive from the stored support
     * either way, so the serve contracts are unchanged.
     *
@@ -221,7 +220,7 @@ object GraphStore {
       spark: SparkSession, table: String, iters: Int = 10,
       minSupport: Long = 2L, lpRounds: Int = 10,
       buckets: Int = 16, kcoreK: Long = 3L, kcoreRounds: Int = 10,
-      deltaCensus: Boolean = true, compactEdges: Boolean = true): Unit = {
+      compactEdges: Boolean = true): Unit = {
     val delsSnap = Tombstones.of(table).snapshot(spark)
     val asOf = maxVer(spark, table)
     val sv = scrubVer(spark, table)
@@ -311,7 +310,7 @@ object GraphStore {
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
     val support = supportAsOf match {
-      case Some(snapVer) if deltaCensus && delsSnap.isEmpty &&
+      case Some(snapVer) if delsSnap.isEmpty &&
           snapVer >= sv =>
         // append-only tick: batch-bounded delta against the snapshot
         val rows = spark.table(table)
@@ -369,7 +368,7 @@ object GraphStore {
       }
     val core = kcoreSnap match {
       case Some((snapVer, storedK))
-          if deltaCensus && delsSnap.isEmpty && storedK == kcoreK &&
+          if delsSnap.isEmpty && storedK == kcoreK &&
             snapVer >= sv =>
         val rows = spark.table(table)
         graft.operators.KCore.membershipDeltaDiff(

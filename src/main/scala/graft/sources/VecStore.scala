@@ -30,17 +30,19 @@ import graft.operators.{Dedup, Similarity}
   *     physically lives in its list. `__n` is the precomputed vector
   *     norm (the SURVEY §5 norms-once rule, paid at write time).
   *
-  * [[append]] assigns each incoming vector to its nearest centroid
-  * with a SCAN-LOCAL literal-matrix argmax ([[assignExpr]] — the
-  * centroid table is structurally bounded, so it rides in the plan
-  * like s2's hyperplane matrix): assignment is compute-only in the
-  * scan; the write then carries exactly ONE batch-sized layout
-  * shuffle ([[BucketedLayout]], r12 — the price of one-file-per-
-  * bucket on many-split sources), and the
-  * assignment is bit-identical to [[Similarity.nearestLists]]'s
-  * exchange-based argmax (same 4dp-rounded score, same list_id
-  * tie-break; spec-asserted), so the store, batch d12, and the d13
-  * DataFrame twin flag identical dups.
+  * Every assignment and probe face picks lists through ONE matrix
+  * ([[quantizer]], a [[graft.functions.TreeMatrix]]): the persisted
+  * tree on tree stores, otherwise the flat matrix (one subtree holding
+  * every centroid). The quantizer is structurally bounded, so it rides
+  * in the plan as one expression-local object: [[append]]'s
+  * assignment is compute-only in the scan, and the write then carries
+  * exactly ONE batch-sized layout shuffle ([[BucketedLayout]], r12 —
+  * the price of one-file-per-bucket on many-split sources). Flat
+  * assignment is bit-identical to the operators' (d12/d13/s3: same
+  * 4dp-rounded score, same list_id tie-break; spec-asserted against
+  * the declarative [[Similarity.nearestLists]] twin), so the store,
+  * batch d12, and the d13 DataFrame twin flag identical dups. A
+  * zero-norm vector lands in the lowest list id.
   *
   * [[nearDupVerdicts]] broadcasts the batch's assignments onto the
   * stored lists: the broadcast list-id join prunes the scan to the
@@ -73,8 +75,8 @@ object VecStore {
     *
     * `treeTopCount > 0` opts the store into TREE coarse assignment
     * (r12 — the [[graft.operators.Similarity.treeQuantizer]] scale
-    * path, for stores whose list count outgrows the flat literal
-    * argmax): the two-level map persists as `<table>_tops` /
+    * path, for stores whose list count outgrows the flat argmax): the
+    * two-level map persists as `<table>_tops` /
     * `<table>_leafmap` next to the leaf quantizer, and every
     * assignment and probe face descends nearest-top →
     * nearest-leaf-within-subtree (topCount + ~L/topCount candidate
@@ -262,8 +264,8 @@ object VecStore {
   }
 
   /** IVF ANN search SERVED FROM THE STORE (the s3 read face of the
-    * layout): each query picks its `nProbe` nearest stored lists with
-    * the same scan-local literal argmax the write path uses, the
+    * layout): each query picks its `nProbe` nearest stored lists
+    * through the same [[quantizer]] matrix the write path uses, the
     * corpus scan statically prunes to those partitions (the
     * [[nearDupVerdicts]] IN-filter — probe cost is the probed lists,
     * not the corpus), and candidates score EXACTLY (cosine over the
@@ -273,13 +275,12 @@ object VecStore {
     * (shared 4dp-rounded score + list_id tie-break), same scoring
     * arithmetic, same two-phase top-k.
     *
-    * On a TREE store ([[init]] `treeTopCount`) the probe side
-    * descends instead: `nProbeTop` subtrees, then the `nProbe` best
-    * leaves across their children ([[withTreeProbes]]) — and the
-    * output pins to [[graft.operators.Similarity.ivfTreeTopK]] over
-    * the FINAL corpus with the stored centroid table (spec-asserted;
-    * `nProbeTop` is ignored on flat stores, where probe ranking is
-    * global).
+    * On a TREE store ([[init]] `treeTopCount`) the same probe
+    * descends: `nProbeTop` subtrees, then the `nProbe` best leaves
+    * across their children — and the output pins to
+    * [[graft.operators.Similarity.ivfTreeTopK]] over the FINAL corpus
+    * with the stored centroid table (spec-asserted; a flat matrix has
+    * one subtree, so `nProbeTop` changes nothing there).
     */
   /** `among`: optional FILTERED-search predicate — a (vec_id) frame;
     * when set, only stored vectors in it are scored (left-semi AFTER
@@ -299,22 +300,12 @@ object VecStore {
       nProbeTop: Int = 2,
       among: Option[DataFrame] = None): DataFrame = {
     require(nProbe > 0, s"nProbe must be positive, got $nProbe")
-    val base = queries
-      .select(col("vec_id").as("query_id"), col("embedding"),
-        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("__n"))
-    val withC = litTree(spark, table) match {
-      case Some(tr) =>
-        withTreeProbes(base, tr, col("embedding"), col("__n"),
-          nProbeTop, nProbe)
-      case None =>
-        base.withColumn("__c", slice(
-          array_sort(array(
-            candStructs(litCents(spark, table)).toIndexedSeq: _*)),
-          1, nProbe))
-    }
-    val probes = withC
-      .select(col("query_id"), col("embedding").as("qv"),
-        col("__n").as("qn"), explode(col("__c")).as("pc"))
+    val probes = queries
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("qn"))
+      .select(col("query_id"), col("qv"), col("qn"),
+        explode(TreeQuantizerExpression.probeLists(col("qv"), col("qn"),
+          quantizer(spark, table), nProbeTop, nProbe)).as("pc"))
       .select(col("query_id"), col("qv"), col("qn"),
         col("pc.list_id").as("list_id"))
       .localCheckpoint()
@@ -607,13 +598,12 @@ object VecStore {
   }
 
   /** IVF+PQ ANN search SERVED FROM THE STORE — the full production
-    * path: the query's `nProbe` lists are ranked over the UNIT query
-    * vectors (deliberately NOT [[candStructs]]' raw-vector form — see
-    * the inline comment; the operator face pre-normalizes, and
-    * matching its arithmetic bitwise is what keeps the parity spec
-    * exact), the CODES cache is read partition-pruned (corpus floats
-    * untouched by the ADC stage) with the codebook-hash guard folded
-    * into the scan, ADC scores against the stored codebook, and only
+    * path: the query's `nProbe` lists are ranked through the
+    * [[quantizer]] over the UNIT query vectors with norm 1.0 (the
+    * operator face pre-normalizes, and matching its arithmetic bitwise
+    * is what keeps the parity spec exact), the CODES cache is read
+    * partition-pruned (corpus floats untouched by the ADC stage) with
+    * the codebook-hash guard folded into the scan, ADC scores against the stored codebook, and only
     * the capped shortlist re-reads true vectors (bucketed vec_id join
     * on the main table — no store-side shuffle) for the exact
     * re-rank. Output matches
@@ -633,7 +623,7 @@ object VecStore {
     val cb = liveCodebook(spark, table)
     val (numSub, subDim) = pqShape(cb)
     val dims = numSub * subDim
-    val lc = litCents(spark, table)
+    val tm = quantizer(spark, table)
     // shortlist 0 = AUTO ([[Similarity.scaledShortlist]], the measured
     // probed/8 rule): sized from the RAW row count — a parquet
     // metadata-only job, and ≥ FINAL so re-delivered duplicates can
@@ -642,32 +632,21 @@ object VecStore {
     val shortlist0 =
       if (shortlist > 0) shortlist
       else Similarity.scaledShortlist(
-        read(spark, table).count(), lc.length.toLong, nProbe)
+        read(spark, table).count(), tm.leafCount, nProbe)
     val queriesV = Similarity.unitVectors(
       queries.select(col("vec_id"), col("embedding")), "query_id", dims)
       .localCheckpoint()
-    // probe selection over the UNIT query vectors with d = dot(v,c)/|c|
-    // — bitwise the arithmetic of Similarity.ivfPqTopK's list picker
-    // (which pre-normalizes), NOT candStructs' raw-vector form: the two
-    // are mathematically equal but differ in low-order bits, and a
-    // cosine within an ulp of a 4dp rounding boundary would otherwise
-    // flip a probe list between the store face and the operator face
-    // tree stores descend in the SAME unit arithmetic ([[unitScore]]
-    // over the probed subtrees' leaves — nProbeTop ignored on flat
-    // stores); like the flat face, PQ probe selection may differ from
-    // write-time assignment by an ulp at a 4dp boundary (documented
-    // above) — list-driven pruning downstream is correct either way
-    val probesC = litTree(spark, table) match {
-      case Some(tr) =>
-        withTreeProbes(queriesV, tr, col("v"), lit(1.0),
-          nProbeTop, nProbe)
-      case None =>
-        queriesV.withColumn("__c", slice(
-          array_sort(array(candsOf(lc, unitScore).toIndexedSeq: _*)),
-          1, nProbe))
-    }
-    val probes = probesC
-      .select(col("query_id"), explode(col("__c")).as("pc"))
+    // probe selection over the UNIT query vectors with norm 1.0, so
+    // d = dot(v,c)/|c| — bitwise Similarity.ivfPqTopK's, NOT the
+    // raw-vector form: the two are mathematically equal but differ in
+    // low-order bits, and a cosine within an ulp of a 4dp rounding
+    // boundary would otherwise flip a probe list between the store
+    // face and the operator face. PQ probe selection may therefore
+    // differ from write-time assignment by an ulp at a 4dp boundary;
+    // list-driven pruning downstream is correct either way
+    val probes = queriesV
+      .select(col("query_id"), explode(TreeQuantizerExpression.probeLists(
+        col("v"), lit(1.0), tm, nProbeTop, nProbe)).as("pc"))
       .select(col("query_id"), col("pc.list_id").as("list_id"))
       .localCheckpoint()
     val probedIds = probes.select(col("list_id")).distinct()
@@ -903,19 +882,16 @@ object VecStore {
     val actions = scala.collection.mutable.Buffer.empty[String]
     var codesStale = false
     // 1. sampled assignment check against the live quantizer
-    val lc = litCents(spark, table)
     val sample = readFinal(spark, table)
       .select(col("vec_id"), col("embedding"), col("list_id"))
       .limit(sampleN).localCheckpoint()
-    val sampleW = sample
+    // recomputed through the SAME quantizer the write path uses — a
+    // drifted tree store (e.g. tree tables rebuilt by hand) repairs to
+    // the tree layout, never silently back to flat
+    val drifted = sample
       .withColumn("__n", sqrt(Dedup.dot(col("embedding"), col("embedding"))))
-    // tree stores recompute through the SAME descent the write path
-    // uses — a drifted tree store (e.g. tree tables rebuilt by hand)
-    // repairs to the tree layout, never silently back to flat
-    val drifted = (litTree(spark, table) match {
-      case Some(tr) => withTreeAssignment(sampleW, tr, "__new")
-      case None => sampleW.withColumn("__new", assignExpr(lc))
-    }).filter(col("__new") =!= col("list_id")).count()
+      .withColumn("__new", assignment(spark, table))
+      .filter(col("__new") =!= col("list_id")).count()
     if (drifted > 0) {
       reassignCorpus(spark, table, buckets)
       codesStale = true
@@ -1059,32 +1035,34 @@ object VecStore {
   /** `vectors` (idCol, embedding) with the stored quantizer's
     * assignment attached: (idCol, embedding, __n, list_id), all
     * scan-local. Shared by the write path and the probe's batch side.
-    * Tree stores ([[init]] `treeTopCount`) descend the persisted
-    * two-level map instead of the flat argmax — same plug point, so
-    * append, the near-dup probe's batch side, and migrate all switch
-    * together and can never disagree on a list choice.
+    * One path for flat and tree stores: the [[quantizer]] matrix is
+    * the persisted tree or the flat one-subtree matrix, so append, the
+    * near-dup probe's batch side, and migrate can never disagree on a
+    * list choice.
     */
   private[graft] def withAssignment(
       spark: SparkSession,
       vectors: DataFrame,
       table: String,
-      idCol: String = "vec_id"): DataFrame = {
-    val base = vectors
+      idCol: String = "vec_id"): DataFrame =
+    vectors
       .select(col(idCol), col("embedding"),
         sqrt(Dedup.dot(col("embedding"), col("embedding"))).as("__n"))
-    litTree(spark, table) match {
-      case Some(tr) => withTreeAssignment(base, tr)
-      case None => base.withColumn("list_id",
-        assignExpr(litCents(spark, table)))
-    }
-  }
+      .withColumn("list_id", assignment(spark, table))
 
-  /** The quantizer as driver-side literals: (list_id, centroid,
-    * cent_n), cent_n computed by the SAME Spark expression as
-    * [[Similarity.centNorms]] so the division below is bitwise the one
-    * nearestLists performs. The collect is structurally bounded — k is
-    * chosen at init, the same class as s2's hyperplane matrix and t5's
-    * probe set.
+  /** The [[quantizer]]'s list choice for rows carrying `embedding` and
+    * its norm `__n`: one scan-local native expression
+    * ([[graft.functions.TreeAssignExpression]]).
+    */
+  private def assignment(spark: SparkSession, table: String): Column =
+    TreeQuantizerExpression.treeAssign(
+      col("embedding"), col("__n"), quantizer(spark, table))
+
+  /** The quantizer as driver-side rows: (list_id, centroid, cent_n),
+    * cent_n computed by the SAME Spark expression as
+    * [[Similarity.centNorms]]. The collect is structurally bounded — k
+    * is chosen at init, the same class as s2's hyperplane matrix and
+    * t5's probe set.
     */
   private def litCents(
       spark: SparkSession, table: String): Array[(Any, Seq[Double], Double)] =
@@ -1092,126 +1070,47 @@ object VecStore {
       .collect()
       .map(r => (r.get(0), r.getSeq[Double](1), r.getDouble(2)))
 
-  /** Nearest-list choice as ONE scan-local expression over the literal
-    * centroid matrix: per candidate round(cos, 4) (the drift-proof
-    * convention of [[Similarity.nearestLists]]), argmax by
-    * (score desc, list_id asc) via array_min over (−score, list_id)
-    * structs. Zero shuffle — the exchange-based argmax exists for
-    * data-sized centroid sets; a trained quantizer is not one.
+  /** The stored quantizer as ONE driver-side matrix object
+    * ([[graft.functions.TreeMatrix]]), the one lookup every assignment
+    * and probe face reads. On a tree store ([[init]] `treeTopCount`,
+    * `_tops` exists): the refined super-centroids with the
+    * [[Similarity.centNorms]] norm arithmetic and the [[litCents]]
+    * leaves grouped by subtree; a refined top that no leaf re-assigned
+    * to is dropped ([[TreeMatrix.build]]): it can never win an
+    * assignment, and a probe slot spent on an empty subtree would scan
+    * nothing. Otherwise the flat matrix: one subtree holding every
+    * [[litCents]] row ([[TreeMatrix.flat]]). The tables' existence IS
+    * the mode switch, so a re-init without the option falls back to
+    * flat with nothing stale left behind. The collects are
+    * centroid-grain (≤ topCount + L rows), and the matrix keeps the
+    * PLAN constant-size in L — per-centroid `typedLit` encodings
+    * measured seconds of per-call analysis+codegen tax at L = 1000
+    * (`TreeSearchDebugProbe`).
     */
-  private def assignExpr(lc: Array[(Any, Seq[Double], Double)]): Column =
-    array_min(array(candStructs(lc).toIndexedSeq: _*)).getField("list_id")
-
-  /** The per-centroid (−score, list_id) candidate structs both the
-    * keep-1 argmax ([[assignExpr]]) and [[ivfTopK]]'s nProbe probe
-    * selection rank — one definition, so write-time assignment and
-    * the exact-search probe can never disagree on a list choice.
-    * [[ivfPqTopK]] deliberately does NOT use this form: its operator
-    * twin ranks pre-normalized unit vectors, and matching that
-    * arithmetic bitwise (see the inline comment there) is what keeps
-    * its parity spec exact.
-    */
-  private def candStructs(
-      lc: Array[(Any, Seq[Double], Double)]): Array[Column] = {
-    require(lc.nonEmpty, "VecStore: empty centroid table")
-    candsOf(lc, rawScore)
-  }
-
-  /** (−round(score, 4), list_id) candidate structs over a literal
-    * centroid set, parameterized by the scoring form so the tree
-    * machinery serves both arithmetic disciplines: [[rawScore]]
-    * (raw vectors + precomputed `__n` — the write/exact-search form,
-    * bitwise [[Similarity.nearestLists]]) and [[unitScore]] (unit
-    * query vectors — the PQ probe form, bitwise
-    * [[Similarity.ivfPqTopK]]'s list picker).
-    */
-  private def candsOf(
-      cs: Array[(Any, Seq[Double], Double)],
-      score: (Seq[Double], Double) => Column): Array[Column] =
-    cs.map { case (id, c, cn) =>
-      struct((-score(c, cn)).as("nd"), lit(id).as("list_id"))
-    }
-
-  private def rawScore: (Seq[Double], Double) => Column =
-    (c, cn) => round(Dedup.dot(col("embedding"), typedLit(c)) /
-      (col("__n") * lit(cn)), 4)
-
-  private def unitScore: (Seq[Double], Double) => Column =
-    (c, cn) => round(Dedup.dot(col("v"), typedLit(c)) / lit(cn), 4)
-
-  /** The persisted tree quantizer ([[init]] `treeTopCount`) as ONE
-    * driver-side matrix object ([[graft.functions.TreeMatrix]]):
-    * refined super-centroids with the [[Similarity.centNorms]] norm
-    * arithmetic, and the leaf candidates grouped by subtree. None on
-    * flat stores — the tables' existence IS the mode switch, so a
-    * re-init without the option falls back to flat with nothing stale
-    * left behind. Both collects are centroid-grain (≤ topCount + L
-    * rows — the [[litCents]] bounded class). A refined top that no
-    * leaf re-assigned to is dropped ([[TreeMatrix.build]]): it can
-    * never win an assignment, and a probe slot spent on an empty
-    * subtree would scan nothing. The matrix form (rather than
-    * per-leaf `typedLit` when-chains) keeps the PLAN constant-size in
-    * L — the literal encoding measured seconds of per-call
-    * analysis+codegen tax at L = 1000 (`TreeSearchDebugProbe`).
-    */
-  private def litTree(
-      spark: SparkSession, table: String): Option[TreeMatrix] =
-    if (!spark.catalog.tableExists(s"${table}_tops")) None
+  private def quantizer(spark: SparkSession, table: String): TreeMatrix = {
+    val idType = centroids(spark, table).schema("list_id").dataType
+    val leaves = litCents(spark, table).toSeq
+    require(leaves.nonEmpty, "VecStore: empty centroid table")
+    if (!spark.catalog.tableExists(s"${table}_tops"))
+      TreeMatrix.flat(idType, leaves)
     else {
-      val idType =
-        spark.table(s"${table}_cents").schema("list_id").dataType
       val leafTop = spark.table(s"${table}_leafmap").collect()
         .map(r => (r.get(0), r.getLong(1))).toMap
-      val leaves = litCents(spark, table).toSeq
-        .groupBy { c =>
-          leafTop.getOrElse(c._1, sys.error(
-            s"VecStore: `${table}_cents` leaf ${c._1} missing from " +
-              s"`${table}_leafmap` — corrupt tree tables? re-run init"))
-        }
-        .map { case (k, v) => k -> v }
+      val byTop = leaves.groupBy { c =>
+        leafTop.getOrElse(c._1, sys.error(
+          s"VecStore: `${table}_cents` leaf ${c._1} missing from " +
+            s"`${table}_leafmap` — corrupt tree tables? re-run init"))
+      }
       val tops = Similarity.centNorms(
         spark.table(s"${table}_tops")
           .select(col("top_id").as("list_id"), col("centroid")))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
         .toSeq
-      require(tops.exists(t => leaves.contains(t._1)),
+      require(tops.exists(t => byTop.contains(t._1)),
         s"VecStore: `${table}_tops`/`${table}_leafmap` describe no " +
           "non-empty subtree — corrupt tree tables? re-run init")
-      Some(TreeMatrix.build(idType, tops, leaves))
+      TreeMatrix.build(idType, tops, byTop)
     }
-
-  /** Tree descent as ONE scan-local native expression
-    * ([[graft.functions.TreeAssignExpression]]): stage-1 argmax over
-    * the `topCount` super-centroids, stage-2 over ONLY the picked
-    * subtree's leaves — topCount + ~L/topCount candidate scores per
-    * row. Bitwise [[Similarity.treeDescend]]'s choices (same
-    * 4dp-rounded score, same id tie-breaks) — spec-asserted incl. a
-    * randomized twin parity.
-    */
-  private def withTreeAssignment(
-      df: DataFrame, tree: TreeMatrix,
-      out: String = "list_id"): DataFrame =
-    df.withColumn(out, TreeQuantizerExpression.treeAssign(
-      col("embedding"), col("__n"), tree))
-
-  /** Probe-list selection for tree stores: the `nProbeTop` best
-    * subtrees, then the `nProbe` best leaves ACROSS the probed
-    * subtrees' children — the [[Similarity.ivfTreeTopK]] probe
-    * discipline, scan-local. The native expression emits the probed
-    * (nd, list_id) candidate structs; ranking stays declarative
-    * (`array_sort` + `slice`), so list-choice ordering is exactly the
-    * flat face's. `norm` is the query-norm column for raw-vector
-    * scoring, or `lit(1.0)` for the PQ face's unit arithmetic
-    * (multiplying by 1.0 is IEEE-exact, so dot/(1.0·cn) is bitwise
-    * dot/cn). Adds `__c`: the chosen (nd, list_id) structs,
-    * best-first.
-    */
-  private def withTreeProbes(
-      df: DataFrame, tree: TreeMatrix, emb: Column, norm: Column,
-      nProbeTop: Int, nProbe: Int): DataFrame =
-    df.withColumn("__c", slice(
-      array_sort(
-        TreeQuantizerExpression.treeProbe(emb, norm, tree, nProbeTop)),
-      1, nProbe))
+  }
 }

@@ -45,14 +45,22 @@ class PlanShapeSpec extends AnyFunSuite {
     Shape("d5_dedup_embedding", maxShuffles = 2, minBroadcasts = 1),
     Shape("s1_ann_brute_topk", maxShuffles = 2, minBroadcasts = 1),
     Shape("s2_ann_lsh", maxShuffles = 2, minBroadcasts = 1),
-    Shape("s3_ann_ivf", maxShuffles = 8, minBroadcasts = 2),
+    // r17: the flat quantizer is a one-subtree TreeMatrix, so s3, s3b
+    // and s9 run s7's plan: assignment and probes are scan projections,
+    // the two centroid broadcasts under the crossJoins and the
+    // corpus-grain argmax exchange are gone (s3 8/3 → 2/1, s3b 6/3 →
+    // 2/1, s9 8/4 → 2/2 with the allowed-id semi-join broadcast;
+    // plans/r17/*_picker_*.txt)
+    Shape("s3_ann_ivf", maxShuffles = 2, minBroadcasts = 1),
+    Shape("s3b_ann_ivf_agg", maxShuffles = 2, minBroadcasts = 1),
+    Shape("s9_ann_filtered", maxShuffles = 2, minBroadcasts = 2),
     // r12: the trained tree rides as ONE expression-local matrix
     // (TreeAssign/TreeProbeExpression), so corpus descent is a scan
     // projection — no corpus-grain argmax exchange, no centroid
     // broadcast joins. What remains: the probe broadcast onto the
     // assigned corpus and the two top-k aggregation exchanges
-    // (QUARTER the flat s3's 8). A blowup past 2 means the descent
-    // fell back to a join form
+    // (the parent flat s3 had 8; it shares this plan since r17). A
+    // blowup past 2 means the descent fell back to a join form
     Shape("s7_ann_ivf_tree", maxShuffles = 2, minBroadcasts = 1),
     Shape("f2_entity_assembly", maxShuffles = 1),
     Shape("f6_fpx_table", maxShuffles = 0),
@@ -235,8 +243,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // query BUILD through the eager codebook checkpoint
     // (Similarity.ivfPqTopK), so its subtree — 6 exchanges plus the
     // train's broadcast(seeds), once per codebook consumer — left the
-    // static plan: 19 → 13 exchanges, 9 → 7 broadcasts
-    Shape("s6_ann_ivfpq", maxShuffles = 13, minBroadcasts = 7),
+    // static plan: 19 → 13 exchanges, 9 → 7 broadcasts. r17 list
+    // picker: corpus lists and probes are scan projections through the
+    // flat matrix — the two centroid broadcasts and the list argmax
+    // exchanges left (13 → 6); the (vec_id, list_id) and probe-list
+    // joins broadcast in their place (7 → 7)
+    Shape("s6_ann_ivfpq", maxShuffles = 6, minBroadcasts = 7),
     // r9b: the rule battery is one codegen'd scan projection — any
     // Exchange means a metric started computing post-shuffle
     Shape("t13_gopher_filter", maxShuffles = 0),
@@ -265,8 +277,11 @@ class PlanShapeSpec extends AnyFunSuite {
     // plan) — set build + balanced expansion + two pair joins + drop
     // agg + verdict join; a blowup past 7 means a consumer started
     // re-deriving the assignment (r17: 8 → 7, the size guard is a
-    // window in the set build's exchange)
-    Shape("d12_semdedup", maxShuffles = 7),
+    // window in the set build's exchange; then 7 → 4 with 2 pair-side
+    // broadcasts: the checkpointed assignment is a scan projection
+    // through the flat matrix, so its size estimate is the corpus
+    // scan's and both pair joins broadcast)
+    Shape("d12_semdedup", maxShuffles = 4),
     // r10: d13's final frame hangs off the two checkpointed assignment
     // tables — the probed-list distinct and the one verdict aggregation
     // are the only shuffles; everything stored-side joins broadcast

@@ -32,21 +32,100 @@ class VecStoreSpec extends AnyFunSuite {
         Option(r.get(4)).map(_.toString)))
     }.toMap
 
-  test("scan-local literal argmax assigns identically to nearestLists") {
+  test("flat list picker equals nearestLists; a zero norm lands in the lowest list") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    import graft.functions.TreeQuantizerExpression
+    def lists(df: DataFrame) = df.select(col("vec_id"), col("list_id"))
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    // the store's flat matrix over the real corpus
     dropStore("vec_assign")
     VecStore.init(spark, "vec_assign", stored, col("label"), buckets = 4)
-    val viaStore = VecStore
-      .withAssignment(spark, emb.select(col("vec_id"), col("embedding")),
-        "vec_assign")
-      .select(col("vec_id"), col("list_id"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaExchange = Similarity
-      .nearestLists(emb.select(col("vec_id"), col("embedding")),
-        Similarity.centNorms(VecStore.centroids(spark, "vec_assign")),
-        "vec_id", keep = 1)
-      .select(col("vec_id"), col("list_id"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaStore.nonEmpty && viaStore == viaExchange)
+    val viaStore = lists(VecStore.withAssignment(spark,
+      emb.select(col("vec_id"), col("embedding")), "vec_assign"))
+    val viaTwin = lists(Similarity.nearestLists(
+      emb.select(col("vec_id"), col("embedding")),
+      Similarity.centNorms(VecStore.centroids(spark, "vec_assign")),
+      "vec_id", keep = 1))
+    assert(viaStore.nonEmpty && viaStore == viaTwin)
+
+    // randomized centroid sets with an exact 4dp tie (a centroid and
+    // its 3× multiple: equal at 4dp, not bitwise) and a duplicate
+    // centroid, under integer and string list ids in shuffled order
+    val rnd = new scala.util.Random(17)
+    val vecs = (0L until 300L)
+      .map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val cases = Seq[(String, DataType, Int => Any, (Any, Any) => Boolean)](
+      ("int", IntegerType, i => (i * 37) % 100 - 50,
+        (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]),
+      ("string", StringType, i => f"L${(i * 37) % 100}%02d",
+        (a, b) => a.asInstanceOf[String] < b.asInstanceOf[String]))
+    for ((name, idType, idOf, lt) <- cases) {
+      val base = Seq.fill(12)(Array.fill(8)(rnd.nextGaussian()))
+      val cs = base ++ Seq(base(0).map(_ * 3.0), base(1))
+      val ids = cs.indices.map(idOf)
+      val cents = spark.createDataFrame(
+        ids.zip(cs).map { case (id, c) => Row(id, c.toSeq) }.asJava,
+        StructType(Seq(StructField("list_id", idType),
+          StructField("centroid", ArrayType(DoubleType)))))
+      val tm = Similarity.flatMatrix(cents)
+      val picked = Similarity.withNearestList(vecs, cents, tm)
+      val cn = Similarity.centNorms(cents)
+      assert(lists(picked) ==
+        lists(Similarity.nearestLists(vecs, cn, "vec_id", keep = 1)), name)
+      // the higher id of the tied and of the duplicated pair never wins
+      for ((a, b) <- Seq(ids(0) -> ids(12), ids(1) -> ids(13))) {
+        val (lo, hi) = if (lt(a, b)) (a, b) else (b, a)
+        assert(picked.filter(col("list_id") === lit(lo)).count() > 0 &&
+          picked.filter(col("list_id") === lit(hi)).count() == 0,
+          s"$name: tie $lo/$hi")
+      }
+      val probed = picked.select(col("vec_id"), col("list_id"),
+        TreeQuantizerExpression.probeLists(col("embedding"), col("__n"),
+          tm.get, 1, 3).getField("list_id").as("p"))
+        .collect().map(r => (r.getLong(0), r.get(1), r.getSeq[Any](2)))
+      val twinProbes = Similarity.nearestLists(vecs, cn, "vec_id", keep = 3)
+        .select(col("vec_id"), col("list_id")).collect()
+        .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.get(1)).toSet }
+      assert(probed.length == 300 && probed.forall { case (id, l, p) =>
+        p.length == 3 && p.head == l && p.toSet == twinProbes(id)
+      }, name)
+    }
+
+    // zero norms: the label-0 group {v, −v} trains a zero centroid at
+    // the lowest list id, and a zero vector scores NaN against every
+    // centroid. It lands in list 0 on a flat and a tree store append
+    // and through the operator assignment; every other vector skips
+    // the zero centroid (its NaN loses), so it matches the twin over
+    // the other centroids (the twin itself divides by the zero norm)
+    val v = Array.fill(8)(rnd.nextGaussian().toFloat)
+    val corpus = ((1L to 60L).map(i => (i, (i % 5 + 1).toInt,
+      Array.fill(8)(rnd.nextGaussian().toFloat))) ++
+      Seq((1000L, 0, v), (1001L, 0, v.map(-_))))
+      .toDF("vec_id", "label", "embedding")
+    val zero = Seq((2000L, Array.fill(8)(0f))).toDF("vec_id", "embedding")
+    for ((t, top) <- Seq("vec_zflat" -> 0, "vec_ztree" -> 2)) {
+      dropStore(t)
+      VecStore.init(spark, t, corpus, col("label"), buckets = 2,
+        treeTopCount = top)
+      VecStore.append(spark, zero, t, buckets = 2)
+      assert(VecStore.read(spark, t).filter(col("vec_id") === 2000L)
+        .select(col("list_id")).as[Int].collect().toSeq == Seq(0), t)
+    }
+    val zc = VecStore.centroids(spark, "vec_zflat")
+    assert(zc.filter(col("list_id") === 0)
+      .select(col("centroid")).as[Seq[Double]].head().forall(_ == 0.0))
+    val opA = lists(Similarity.withNearestList(
+      corpus.select(col("vec_id"), col("embedding")).union(zero), zc,
+      Similarity.flatMatrix(zc)))
+    assert(opA(2000L) == 0)
+    assert(opA - 2000L == lists(Similarity.nearestLists(
+      corpus.select(col("vec_id"), col("embedding")),
+      Similarity.centNorms(zc.filter(col("list_id") =!= 0)),
+      "vec_id", keep = 1)))
   }
 
   test("store probe equals the d13 DataFrame twin exactly") {
