@@ -467,13 +467,18 @@ object Dedup {
     * (3× fewer flops, bitwise-identical result — see cosineWithNorms).
     */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+    cosineWithNorms(a, b, sqrt(dot(a, a)), sqrt(dot(b, b)))
 
   /** Cosine given precomputed norms: same doubles as [[cosine]], but
     * the norms are evaluated once per vector instead of once per pair.
+    * A zero-norm side has no cosine: the score is null (ANSI division
+    * would raise DIVIDE_BY_ZERO), so it fails every threshold and a
+    * `desc` ranking puts it after every scored candidate.
     */
-  def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
-    dot(a, b) / (na * nb)
+  def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column = {
+    val denom = na * nb
+    when(denom =!= 0.0, dot(a, b) / denom)
+  }
 
   /** d5 — embedding-cosine near-dup pairs ≥ τ within a blocking label
     * (label = cluster/shard key, e.g. a KMeans cluster / LSH bucket).
@@ -565,8 +570,8 @@ object Dedup {
     * (and with it every keep/drop verdict) cannot flip either.
     *
     * A zero-norm vector assigns to the lowest list id; its pair
-    * cosines still divide by its zero norm
-    * ([[cosineWithNorms]]). An empty centroid table assigns nothing
+    * cosines are null ([[cosineWithNorms]]), so it is never dropped
+    * and never drops a mate. An empty centroid table assigns nothing
     * and answers empty.
     *
     * Scale shape: the centroids ride in the assignment expression (k

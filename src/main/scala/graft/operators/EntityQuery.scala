@@ -191,21 +191,32 @@ final case class EntityQuery(
   /** Aggregate a numeric prop over the selected entities:
     * func ∈ sum, min, max, avg, count; optional grouping by another
     * prop's value (ftmq `aggregate(func, prop, groups=...)`,
-    * test_store.py:171-236).
+    * test_store.py:171-236). Grouped, every (value, group) pair of one
+    * entity counts once — the inner join of its two props on
+    * canonical_id — built in one pass over the selection: both props'
+    * values are collected per canonical_id (on the selection's own key
+    * partitioning) and the two lists exploded against each other.
     */
   def aggregateProp(
       func: String,
       prop: String,
       groupByProp: Option[String] = None): DataFrame = {
     val stmts = statementsOut()
-    val vals = stmts.filter(col("prop") === prop)
-      .select(col("canonical_id"), col("value").cast("double").as("v"))
+    val v = col("value").cast("double")
     val withG = groupByProp match {
       case Some(g) =>
-        val gv = stmts.filter(col("prop") === g)
-          .select(col("canonical_id"), col("value").as("g"))
-        vals.join(gv, Seq("canonical_id"))
-      case None => vals.withColumn("g", lit("all"))
+        // struct-wrapped so a non-numeric value (null v) is kept, as
+        // the join kept it; collect_list skips only the other prop
+        def valuesOf(p: String, c: Column) =
+          collect_list(when(col("prop") === p, struct(c.as("x"))))
+        stmts.filter(col("prop").isin(prop, g))
+          .groupBy(col("canonical_id"))
+          .agg(valuesOf(prop, v).as("vs"), valuesOf(g, col("value")).as("gs"))
+          .select(explode(col("vs")).as("v"), col("gs"))
+          .select(col("v.x").as("v"), explode(col("gs")).as("g"))
+          .select(col("v"), col("g.x").as("g"))
+      case None =>
+        stmts.filter(col("prop") === prop).select(v.as("v"), lit("all").as("g"))
     }
     val aggCol = func match {
       case "sum" => sum(round(col("v") * 100).cast("long")) / 100.0

@@ -320,19 +320,22 @@ object Similarity {
   }
 
   /** The centroid side of the declarative twins ([[nearestLists]],
-    * [[treeDescend]]): list ids, centroid vectors and their norms.
+    * [[treeDescend]]): list ids, centroid vectors and their norms. The
+    * twins broadcast it at their joins; VecStore collects it.
     */
   private[graft] def centNorms(cents: DataFrame): DataFrame =
-    broadcast(cents.select(col("list_id"), col("centroid"),
-      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("cent_n")))
+    cents.select(col("list_id"), col("centroid"),
+      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("cent_n"))
 
   /** The declarative twin of the flat list picker, kept for the specs
     * (no production path calls it): keep the `keep` best lists per
     * vector of `df` (which must carry `idCol` and `embedding`) against
     * a [[centNorms]] side, by crossJoin and an argmax exchange. The row
     * norm is returned as `__n`. The flat matrix ([[flatMatrix]]) makes
-    * the same choices bit for bit on non-degenerate input; a zero-norm
-    * vector or centroid makes this form divide by zero.
+    * the same choices bit for bit, a zero norm included: a zero-norm
+    * score is null ([[Dedup.cosineWithNorms]]) and ranks after every
+    * scored list, so a zero vector lands in the lowest list id and a
+    * zero centroid never wins a non-zero vector.
     */
   private[graft] def nearestLists(
       df: DataFrame, cn: DataFrame, idCol: String, keep: Int): DataFrame = {
@@ -345,7 +348,7 @@ object Similarity {
     // rounded — `__n` and downstream scoring stay exact.
     val paired = df
       .withColumn("__n", sqrt(Dedup.dot(col("embedding"), col("embedding"))))
-      .crossJoin(cn)
+      .crossJoin(broadcast(cn))
       .withColumn("d", round(Dedup.cosineWithNorms(
         col("embedding"), col("centroid"), col("__n"), col("cent_n")), 4))
     if (keep == 1) {
@@ -357,12 +360,13 @@ object Similarity {
       // carries one narrow row per vector. min_by over
       // struct(-d, list_id) = ORDER BY d DESC, list_id ASC, the same
       // deterministic tie-break as the window (list_id is unique per
-      // candidate, so the comparison key never ties).
+      // candidate, so the comparison key never ties); a null d ranks
+      // last, as the window's DESC puts it.
       paired
         .groupBy(col(idCol))
         .agg(min_by(
           struct(col("list_id"), col("embedding"), col("__n")),
-          struct((-col("d")).as("nd"), col("list_id"))).as("b"))
+          struct(descNullsLast(col("d")), col("list_id"))).as("b"))
         .select(col(idCol), col("b.list_id").as("list_id"),
           col("b.embedding").as("embedding"), col("b.__n").as("__n"))
     } else {
@@ -811,8 +815,8 @@ object Similarity {
     *     round, Spark's double ordering (NaN above every number, equal
     *     to itself), ties to the lowest top_id. A zero-norm leaf scores
     *     NaN against every top and lands in the lowest one (the
-    *     declarative twin divides by its zero norm, which ANSI
-    *     division rejects);
+    *     declarative twin scores it null against every top, a tie
+    *     that falls to the lowest top_id too);
     *   - cosines and norms fold with [[graft.functions
     *     .DotProductExpression]]'s `dotDD` loop;
     *   - a refined top is the dim-major mean of its seed members, in
@@ -865,19 +869,25 @@ object Similarity {
 
   private def vecNorm(c: Array[Double]): Double = math.sqrt(vecDot(c, c))
 
-  /** The level-2 broadcast side of the tree descent: leaf centroids
-    * with precomputed norms, annotated with their subtree —
-    * centroid-grain, checkpointed (consumed by the corpus descent AND
-    * the probe ranking). A spec twin: the served paths carry the tree
-    * in a [[graft.functions.TreeMatrix]].
+  /** The level-2 side of the tree descent, broadcast at
+    * [[treeDescend]]'s join: leaf centroids with precomputed norms,
+    * annotated with their subtree — centroid-grain, checkpointed
+    * (consumed by the corpus descent AND the probe ranking). A spec
+    * twin: the served paths carry the tree in a
+    * [[graft.functions.TreeMatrix]].
     */
   private[graft] def treeLeaves(
       cents: DataFrame, leafMap: DataFrame): DataFrame =
-    broadcast(
-      cents.select(col("list_id"), col("centroid"),
-        sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("leaf_n"))
-        .join(leafMap, Seq("list_id"))
-        .localCheckpoint())
+    cents.select(col("list_id"), col("centroid"),
+      sqrt(Dedup.dot(col("centroid"), col("centroid"))).as("leaf_n"))
+      .join(leafMap, Seq("list_id"))
+      .localCheckpoint()
+
+  /** The `min_by` sort key of a score ranked descending with a null
+    * (zero-norm) score last: −d, and +∞ for null.
+    */
+  private def descNullsLast(d: Column): Column =
+    coalesce(-d, lit(Double.PositiveInfinity)).as("nd")
 
   /** The declarative twin of the tree descent, kept for the specs (no
     * production path calls it; [[graft.functions.TreeMatrix]] makes
@@ -893,13 +903,13 @@ object Similarity {
     nearestLists(df, topCn, idCol, 1)
       .select(col(idCol), col("list_id").as("top_id"),
         col("embedding"), col("__n"))
-      .join(leaves, Seq("top_id"))
+      .join(broadcast(leaves), Seq("top_id"))
       .withColumn("d", round(Dedup.cosineWithNorms(
         col("embedding"), col("centroid"), col("__n"), col("leaf_n")), 4))
       .groupBy(col(idCol))
       .agg(min_by(
         struct(col("list_id"), col("embedding"), col("__n")),
-        struct((-col("d")).as("nd"), col("list_id"))).as("b"))
+        struct(descNullsLast(col("d")), col("list_id"))).as("b"))
       .select(col(idCol), col("b.list_id").as("list_id"),
         col("b.embedding").as("embedding"), col("b.__n").as("__n"))
 

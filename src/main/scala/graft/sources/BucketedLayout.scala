@@ -41,6 +41,21 @@ import org.apache.spark.sql.functions._
   * declaration. A compact stage is written at the LIVE table's count
   * and z layout ([[stage]], [[rewrite]]), so the swapped-in files
   * always match the catalog entry that serves them.
+  *
+  * The compression codec is part of the layout too: every bucketed
+  * table is written with zstd ([[codec]]), not Spark's default snappy.
+  * The stores are dominated by id columns, and an id such as the
+  * statement table's 40-hex-char `id` carries 4 bits of information in
+  * each 8-bit character: snappy does no entropy coding and shrinks
+  * such a column by about 8%, zstd's entropy stage by about half. Like
+  * the bucket count, the codec of appends is fixed at creation: Spark
+  * records the creating write's options in the table's catalog entry
+  * and every later append to it writes under those, so a caller's
+  * `writerOptions` take effect on a creating write and on a compact
+  * stage (a new table). A reader takes each file's codec from that
+  * file's own footer: a table created at another codec (snappy before
+  * the codec joined the layout) keeps serving its files next to the
+  * zstd files its compacts write.
   */
 final case class BucketedLayout(
     bucketCols: Seq[String],
@@ -133,11 +148,19 @@ final case class BucketedLayout(
       .partitionBy(partCols: _*)
       .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
       .sortBy(sortBy.head, sortBy.tail: _*)
-      .options(bloom ++ writerOptions)
+      .options(BucketedLayout.codec ++ bloom ++ writerOptions)
       .format("parquet")
       .saveAsTable(target)
     if (creates) z.foreach { case (zc, bits) =>
       ZOrderLayout.declare(spark, target, zc, bits)
     }
   }
+}
+
+object BucketedLayout {
+
+  /** The codec of every bucketed store file; a caller's
+    * `writerOptions` may still override it.
+    */
+  private val codec = Map("compression" -> "zstd")
 }

@@ -575,15 +575,10 @@ class PipelineSpec extends AnyFunSuite {
         StructType(Seq(StructField("list_id", idType),
           StructField("centroid", ArrayType(DoubleType)))))
       val (tops, leafMap) = Similarity.treeQuantizer(cents, topCount)
-      // the twin's cosine divides by the zero norm: ANSI division
-      // raises DIVIDE_BY_ZERO, legacy division yields null, and a leaf
-      // whose every score is null ties across all tops exactly as NaN
-      // scores tie in the driver trainer (lowest top_id)
-      val ansi = spark.conf.get("spark.sql.ansi.enabled")
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      val (twinTops, twinMap) =
-        try TreeTrainingTwin.treeQuantizer(cents, topCount)
-        finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+      // the twin scores a zero norm null, and a leaf whose every score
+      // is null ties across all tops exactly as NaN scores tie in the
+      // driver trainer (lowest top_id)
+      val (twinTops, twinMap) = TreeTrainingTwin.treeQuantizer(cents, topCount)
       def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
       def mapOf(df: DataFrame) =
         df.collect().map(r => r.get(0) -> r.getLong(1)).toMap
@@ -2009,6 +2004,43 @@ class PipelineSpec extends AnyFunSuite {
       df, df.filter(col("vec_id") === 0L), shortlist = 3, k = 3)
       .collect().map(_.getLong(1)).toSet
     assert(out == Set(1L, 3L), s"zero-norm row must drop silently: $out")
+  }
+
+  test("a zero-norm vector has a null cosine: s1 and s2 rank it last, d5 pairs it with nothing") {
+    import spark.implicits._
+    import graft.operators.{Dedup, Similarity}
+    val df = Seq(
+      (0L, Seq(1.0f, 0.0f, 0.0f)), (1L, Seq(0.9f, 0.1f, 0.0f)),
+      (2L, Seq(0.0f, 0.0f, 0.0f)), // zero norm: no cosine exists
+      (3L, Seq(0.5f, 0.8f, 0.0f)), (4L, Seq(0.9f, 0.12f, 0.0f)))
+      .toDF("vec_id", "embedding")
+    def ranked(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(3)) ->
+        (r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double])))
+      .toMap
+    val s1 = ranked(Similarity.bruteTopK(df, df, k = 4))
+    // every query ranks its three scored neighbors first and the zero
+    // vector last, unscored; the zero query's neighbors are all
+    // unscored and fall to the neighbor_id order
+    for (q <- Seq(0L, 1L, 3L, 4L)) {
+      assert((1 to 3).forall(r => s1((q, r.toLong))._2.isDefined), s"query $q")
+      assert(s1((q, 4L)) == ((2L, None)), s"query $q")
+    }
+    assert((1 to 4).map(r => s1((2L, r.toLong))) ==
+      Seq(0L, 1L, 3L, 4L).map(n => (n, None)))
+    // one hyperplane plus its hamming-1 probe reaches every bucket, so
+    // s2 scores exactly s1's candidates
+    assert(ranked(Similarity.lshTopK(df, df, k = 4, numPlanes = 1)) == s1)
+    // d5: the pairs with the zero vector fail the threshold, the rest
+    // are the pairs of the corpus without it
+    val labelled = df.withColumn("label", lit(0))
+    def pairs(in: org.apache.spark.sql.DataFrame) =
+      Dedup.embeddingNearDup(in, 0.9).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val d5 = pairs(labelled)
+    assert(d5.nonEmpty && d5 == pairs(labelled.filter(col("vec_id") =!= 2L)))
+    assert(labelled.select(Dedup.cosine(col("embedding"),
+      lit(Array(0.0f, 0.0f, 0.0f)))).collect().forall(_.isNullAt(0)))
   }
 
   // ---- d14 exact duplicated-substring runs ----

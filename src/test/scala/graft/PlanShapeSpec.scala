@@ -82,6 +82,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // r17: clause flags and the sort key are canonical_id windows —
     // one exchange serves them and assembly, no join back (3 → 1)
     Shape("f12_entity_query", maxShuffles = 1),
+    // r17: both grouped props are collected per canonical_id in the
+    // selection's one exchange, then exploded; only the group
+    // aggregation shuffles again (the two-read join form was 3/1)
+    Shape("f15_query_agg", maxShuffles = 2),
     Shape("t1_lang_id", maxShuffles = 0),
     // r12: the RETURNED t15 plan is the scan-local apply stage — the
     // vocab-build aggregation ran eagerly at query build (d12/d13

@@ -346,6 +346,192 @@ class SourcesSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  /** The parquet footers of `t`'s live files: (file, codec of each
+    * column chunk, whether that chunk carries a bloom filter, whether
+    * it has non-dictionary pages), one row per chunk.
+    */
+  private def chunksOf(t: String): Seq[(String, String, String, Boolean, Boolean)] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    spark.catalog.refreshTable(t)
+    val conf = spark.sessionState.newHadoopConf()
+    spark.table(t).inputFiles.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap { block =>
+        val blooms = reader.getBloomFilterDataReader(block)
+        block.getColumns.asScala.map { c =>
+          val stats = c.getEncodingStats
+          (f, c.getPath.toDotString, c.getCodec.name,
+            blooms.readBloomFilter(c) != null,
+            stats == null || stats.hasNonDictionaryEncodedPages())
+        }
+      } finally reader.close()
+    }
+  }
+
+  /** What in `t` is not zstd, or a note when `t` has no file at all
+    * (a check over no chunk proves nothing).
+    */
+  private def nonZstd(t: String): Seq[String] = {
+    val chunks = chunksOf(t)
+    val bad = chunks.filter(_._3 != "ZSTD")
+    if (chunks.isEmpty) Seq(s"$t: no data file")
+    else if (bad.isEmpty) Nil
+    else Seq(s"$t: ${bad.size} of ${chunks.size} column chunks are " +
+      s"${bad.map(_._3).distinct.mkString("/")} (columns " +
+      s"${bad.map(_._2).distinct.mkString(", ")})")
+  }
+
+  // the codec is part of the one bucketed writer's layout: every table
+  // kind BucketedLayout writes carries zstd column chunks after its
+  // first create, an append and a compact
+  test("every bucketed store table is written with zstd on create, append and compact") {
+    import spark.implicits._
+    import graft.sources.{DocStore, GraphStore, VecStore}
+    val stmts = (from: Int, day: String) => (from until from + 8).map(i =>
+      (s"s$i", s"e$i", s"e$i", "name", "name", "Person", s"v$i",
+        s"ds${i % 2}", ts(s"2026-01-$day 00:00:00")))
+      .toDF("id", "entity_id", "canonical_id", "prop", "prop_type",
+        "schema", "value", "dataset", "last_seen")
+    val fpx = (from: Int) => Fpx.fromStatements((from until from + 8)
+      .map(i => (s"e$i", "Person", "ds1", "name", "name", s"Name$i Holding"))
+      .toDF("entity_id", "schema", "dataset", "prop", "prop_type", "value"))
+    val judge = (from: Int) => (from until from + 4).map(i =>
+      ("ds1", s"a$i", "Person", "de", s"a$i", "ds1", s"b$i", "Person", "de",
+        s"b$i", "positive", 0.5, i.toLong, "graft")).toDF(Xref.columns: _*)
+    val docs = (from: Long) => (from until from + 3L)
+      .map(i => (i, s"doc $i says one two three four five", "s"))
+      .toDF("doc_id", "text", "source")
+    // a 4-clique: every edge closes two triangles, so the support and
+    // cohesion summaries have rows
+    val clique = (from: Int) => (for (i <- from until from + 4;
+        j <- i + 1 until from + 4) yield (s"n$i", s"n$j")).toDF("src", "dst")
+    val refresh = () => GraphStore.refresh(spark, "zc_graph", iters = 2,
+      lpRounds = 2, kcoreRounds = 2, buckets = 4)
+    val emb = Tables.load(spark, sf, "embeddings")
+    // (name, tables to drop, tables checked, create, append, compact)
+    val faces = Seq[(String, Seq[String], Seq[String],
+        () => Unit, () => Unit, () => Unit)](
+      ("statement", Seq("zc_stmt"), Seq("zc_stmt"),
+        () => StatementStore.append(stmts(0, "01"), "zc_stmt", 4),
+        () => StatementStore.append(stmts(4, "02"), "zc_stmt", 4),
+        () => StatementStore.compact(spark, "zc_stmt", 4)),
+      ("fpx", Seq("zc_fpx"), Seq("zc_fpx"),
+        () => FpxStore.append(fpx(0), "zc_fpx", 4),
+        () => FpxStore.append(fpx(4), "zc_fpx", 4),
+        () => FpxStore.compact(spark, "zc_fpx", 4)),
+      ("xref", Seq("", "_reverse", "_mapping", "_dsdels").map("zc_xref" + _),
+        Seq("", "_reverse", "_mapping").map("zc_xref" + _),
+        () => XrefStore.applyBatch(spark, judge(0), "zc_xref", 1L, 4),
+        () => XrefStore.applyBatch(spark, judge(2), "zc_xref", 2L, 4),
+        () => {
+          XrefStore.compact(spark, "zc_xref", 4)
+          XrefStore.compactMapping(spark, "zc_xref", 4)
+        }),
+      ("doc", Seq("", "_bands", "_anchors", "_anchorsmeta", "_dels")
+          .map("zc_doc" + _),
+        Seq("", "_bands", "_anchors").map("zc_doc" + _),
+        () => {
+          DocStore.append(docs(0L), "zc_doc", buckets = 4)
+          DocStore.initAnchors(spark, "zc_doc", k = 4, buckets = 4)
+        },
+        () => DocStore.append(docs(2L), "zc_doc", buckets = 4),
+        () => DocStore.compact(spark, "zc_doc", buckets = 4)),
+      ("graph", Seq("", "_dels", "_ranks", "_communities", "_cohesion",
+          "_kcore", "_support").map("zc_graph" + _),
+        Seq("", "_ranks", "_communities", "_cohesion", "_kcore", "_support")
+          .map("zc_graph" + _),
+        () => { GraphStore.append(clique(0), "zc_graph", 1L, 4); refresh() },
+        () => { GraphStore.append(clique(2), "zc_graph", 2L, 4); refresh() },
+        () => GraphStore.compact(spark, "zc_graph", 4)),
+      ("vec", Seq("", "_cents", "_tops", "_leafmap", "_pq", "_codes", "_dels")
+          .map("zc_vec" + _),
+        Seq("zc_vec", "zc_vec_codes"),
+        () => {
+          VecStore.init(spark, "zc_vec", emb.filter(col("vec_id") < 40),
+            col("label"), buckets = 4)
+          VecStore.trainPqCodebook(spark, "zc_vec", numSub = 8,
+            codebookK = 4, buckets = 4)
+        },
+        () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
+          .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
+          "zc_vec", 4),
+        () => VecStore.compact(spark, "zc_vec", 4)))
+    val failures = faces.flatMap {
+      case (name, drop, checked, create, append, compact) =>
+        drop.foreach(dropTable)
+        val found = Seq("create" -> create, "append" -> append,
+            "compact" -> compact).flatMap { case (step, run) =>
+          run()
+          checked.flatMap(nonZstd).map(s"$name after $step: " + _)
+        }
+        drop.foreach(dropTable)
+        found
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  // parquet readers take each file's codec from its own footer, so a
+  // store holding files of two codecs serves them side by side. A
+  // table's appends take the codec its creating write recorded in the
+  // catalog entry; a compact stage is a new table at the layout's zstd.
+  // So a store created at snappy (here through `writerOptions`, as a
+  // store created before the codec joined the layout has the session's
+  // snappy) mixes codecs once compacted and appended to, and its next
+  // compact leaves only zstd.
+  test("a mixed-codec statement store reads as an all-zstd one; compact leaves zstd; blooms kept") {
+    Seq("codec_mixed", "codec_zstd").foreach(dropTable)
+    // batch 1 re-ingests half of batch 0's statements at a later
+    // last_seen, so FINAL picks versions across files of both codecs
+    def batch(k: Int) = spark.range(k * 2000L, k * 2000L + 4000L)
+      .select(
+        concat(lit("s"), col("id")).as("id"),
+        concat(lit("e"), pmod(col("id") * 7919L, lit(3000L))).as("entity_id"),
+        concat(lit("e"), pmod(col("id") * 7919L, lit(3000L))).as("canonical_id"),
+        lit("name").as("prop"), lit("name").as("prop_type"),
+        lit("Person").as("schema"), concat(lit("v"), col("id")).as("value"),
+        concat(lit("ds"), pmod(col("id"), lit(2L))).as("dataset"),
+        lit(ts(s"2026-01-0${k + 1} 00:00:00")).as("last_seen"))
+    // a 512-byte dictionary page makes the canonical_id chunks fall back to
+    // plain pages, the only chunks parquet writes a bloom filter for
+    val small = Map("parquet.dictionary.page.size" -> "512")
+    def codecs(t: String) = chunksOf(t).map(_._3).toSet
+    StatementStore.append(batch(0), "codec_mixed", 4,
+      writerOptions = small + ("compression" -> "snappy"))
+    assert(codecs("codec_mixed") == Set("SNAPPY"))
+    StatementStore.compact(spark, "codec_mixed", 4, writerOptions = small)
+    assert(codecs("codec_mixed") == Set("ZSTD"))
+    StatementStore.append(batch(1), "codec_mixed", 4)
+    assert(codecs("codec_mixed") == Set("SNAPPY", "ZSTD"))
+    (0 to 1).foreach(k =>
+      StatementStore.append(batch(k), "codec_zstd", 4, writerOptions = small))
+    assert(codecs("codec_zstd") == Set("ZSTD"))
+    val ids = chunksOf("codec_zstd").filter(_._2 == "canonical_id")
+    assert(ids.exists(_._5), "no canonical_id chunk left the dictionary")
+    assert(ids.filter(_._5).forall(_._4),
+      "a canonical_id chunk with plain pages carries no bloom filter")
+    def contentHash(t: String) = {
+      val fin = StatementStore.readFinal(spark, t)
+      val cols = fin.columns.sorted.map(col)
+      fin.agg(count(lit(1)),
+        sum(xxhash64(cols: _*).cast("decimal(38,0)"))).head().toSeq
+    }
+    def lookup(t: String, id: String) = StatementStore.readFinal(spark, t)
+      .filter(col("canonical_id") === id).collect().map(_.toSeq).toSet
+    val keys = Seq("e0", "e17", "e1234", "e2999", "e-absent")
+    val want = contentHash("codec_zstd")
+    assert(want.head == 6000L)
+    assert(contentHash("codec_mixed") == want)
+    for (k <- keys) assert(lookup("codec_mixed", k) == lookup("codec_zstd", k), k)
+    StatementStore.compact(spark, "codec_mixed", 4)
+    assert(codecs("codec_mixed") == Set("ZSTD"))
+    assert(contentHash("codec_mixed") == want)
+    for (k <- keys) assert(lookup("codec_mixed", k) == lookup("codec_zstd", k), k)
+    Seq("codec_mixed", "codec_zstd").foreach(dropTable)
+  }
+
   test("bucket pruning: a canonical_id point lookup reads one bucket") {
     dropTable("stmt_spec5")
     StatementStore.append(sampleStatements, "stmt_spec5", buckets = 4)
