@@ -33,20 +33,19 @@ import graft.sources.{BitmapStore, FpxStore, FtmJson, QuantileStore,
   *                                      delegates externally)
   *   resolve <table> [entity_id]        canonical lookup from the
   *                                      stored mapping (all, or one)
-  *   migrate <table> [buckets]          detect-and-repair a VecStore
+  *   migrate <table>                    detect-and-repair a VecStore
   *                                      written by an older build
   *                                      (stale pre-4dp assignments,
   *                                      unstamped _pq/_codes, crashed
   *                                      or half-finished retrains);
   *                                      idempotent — a second run
   *                                      reports nothing to do
-  *   treeify <table> <topCount> [buckets]
-  *                                      opt a populated VecStore into
+  *   treeify <table> <topCount>         opt a populated VecStore into
   *                                      TREE coarse assignment in
   *                                      place (train over the stored
   *                                      leaves, re-assign the corpus
   *                                      through the descent)
-  *   untreeify <table> [buckets]        revert a tree VecStore to flat
+  *   untreeify <table>                  revert a tree VecStore to flat
   *   stats <table>                      per dataset/schema counts
   *   query <table> [k=v ...]            dataset=, schema=, limit=,
   *                                      where=prop:op:value (repeat)
@@ -253,29 +252,25 @@ object Cli {
           .getOrElse(mapping.orderBy("entity_id"))
         out.collect().foreach(r => println(r.mkString("\t")))
 
-      case "migrate" :: table :: rest if rest.length <= 1 =>
+      case "migrate" :: table :: Nil =>
         // the automated face of SURVEY §7's documented compat repairs:
         // a pre-r11 VecStore (pre-4dp assignments, unstamped codebook/
         // codes) repairs in one staged-swap pass instead of by hand
-        val buckets = rest.headOption.map(_.toInt).getOrElse(16)
-        val actions = graft.sources.VecStore.migrate(spark, table, buckets)
+        val actions = graft.sources.VecStore.migrate(spark, table)
         if (actions.isEmpty) println(s"$table: already current, no repairs")
         else actions.foreach(a => println(s"$table: $a"))
 
-      case "treeify" :: table :: topCount :: rest if rest.length <= 1 =>
+      case "treeify" :: table :: topCount :: Nil =>
         // r12: in-place flat→tree upgrade of a populated VecStore —
         // the operational face of `init treeTopCount` for stores that
         // already hold a corpus
-        val buckets = rest.headOption.map(_.toInt).getOrElse(16)
-        val actions = graft.sources.VecStore.treeify(
-          spark, table, topCount.toInt, buckets)
+        val actions =
+          graft.sources.VecStore.treeify(spark, table, topCount.toInt)
         if (actions.isEmpty) println(s"$table: already a tree store")
         else actions.foreach(a => println(s"$table: $a"))
 
-      case "untreeify" :: table :: rest if rest.length <= 1 =>
-        val buckets = rest.headOption.map(_.toInt).getOrElse(16)
-        val actions = graft.sources.VecStore.untreeify(spark, table,
-          buckets)
+      case "untreeify" :: table :: Nil =>
+        val actions = graft.sources.VecStore.untreeify(spark, table)
         if (actions.isEmpty) println(s"$table: already a flat store")
         else actions.foreach(a => println(s"$table: $a"))
 

@@ -127,7 +127,7 @@ object TableSwapHiveProbe {
       buckets = 4)
     require(!TableSwap.partitioned(spark, "hive_xref"),
       "hive_xref should be unpartitioned")
-    XrefStore.compact(spark, "hive_xref", buckets = 4)
+    XrefStore.compact(spark, "hive_xref")
     val xrefLoc = liveLoc("hive_xref")
     require(xrefLoc.endsWith("_stage_1"),
       s"xref compact did not take the SET LOCATION path: $xrefLoc")

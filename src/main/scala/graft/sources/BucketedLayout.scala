@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** The one bucketed writer of the stores. Each bucketed table kind
   * declares its physical layout once — bucket, sort, partition and
   * split-block bloom-filter columns — and every write of such a table
-  * (append, first create, compact stage) is one [[write]] call. This
+  * (append, first create, compact stage) goes through its layout. This
   * is the `partitionBy`/`bucketBy`/`sortBy` mapping of the reference's
   * MergeTree layout (engine.py:130-247), fixed in one place.
   *
@@ -34,13 +34,19 @@ import org.apache.spark.sql.functions._
   * created, like a MergeTree's ORDER BY key. A write at any other
   * count emits file bucket ids the table's bucket spec disowns, and
   * bucketed reads then prune those files SILENTLY — a point lookup
-  * returns partial results, not an error. So an existing target's
-  * catalog bucket count and z declaration govern every write; the
-  * caller's `buckets` and `zorder` take effect only when the call
-  * creates the table, and the creating write records the z
-  * declaration. A compact stage is written at the LIVE table's count
+  * returns partial results, not an error. So a store's shape is named
+  * once, by the call that creates its main table ([[write]]'s
+  * `buckets` and `zorder`, which the creating write records), and an
+  * existing table's catalog bucket count and z declaration govern
+  * every later write. A side table created after its store exists
+  * (a vector store's `_codes`, a doc store's `_anchors`, an xref
+  * `_mapping`, the graph summaries) takes the main table's catalog
+  * bucket count but never its z declaration ([[writeBeside]],
+  * [[replace]]). A compact stage is written at the LIVE table's count
   * and z layout ([[stage]], [[rewrite]]), so the swapped-in files
-  * always match the catalog entry that serves them.
+  * always match the catalog entry that serves them. An existing table
+  * without a bucket spec fails the write: no graft write creates one,
+  * and a count guessed for it would be the silent-pruning bug above.
   *
   * The compression codec is part of the layout too: every bucketed
   * table is written with zstd ([[codec]]), not Spark's default snappy.
@@ -63,55 +69,58 @@ final case class BucketedLayout(
     partCols: Seq[String] = Nil,
     bloomCols: Seq[String] = Nil) {
 
-  /** Append `df` to `table`, creating it when absent. An existing
-    * table's catalog bucket count and z declaration apply; `buckets`
-    * and `zorder` only when this call creates the table.
+  /** Append `df` to `table`, creating it when absent at `buckets`
+    * and `zorder`. An existing table's catalog bucket count and z
+    * declaration apply instead.
     */
   def write(df: DataFrame, table: String, buckets: Int,
       zorder: Option[(Seq[String], Int)] = None,
       writerOptions: Map[String, String] = Map.empty): Unit =
-    writeGoverned(df, table, table, buckets, zorder, writerOptions)
+    writeAt(df, table, (buckets, zorder), writerOptions)
 
-  /** Create the compact stage `tmp` of the live `table` at the live
-    * table's bucket count and z layout (`buckets` applies only to a
-    * legacy unbucketed live table).
+  /** Append `df` to `table`, a side table of the store whose main
+    * table is `main`: created when absent at `main`'s catalog bucket
+    * count, never at its z declaration.
     */
-  def stage(df: DataFrame, tmp: String, table: String, buckets: Int,
+  def writeBeside(df: DataFrame, table: String, main: String): Unit =
+    writeAt(df, table,
+      (BucketedLayout.bucketCount(df.sparkSession, main), None), Map.empty)
+
+  /** Write `df` to the compact stage `tmp` of the live `table`,
+    * creating it at the live table's bucket count and z layout.
+    */
+  def stage(df: DataFrame, tmp: String, table: String,
       writerOptions: Map[String, String] = Map.empty): Unit =
-    writeGoverned(df, tmp, table, buckets, None, writerOptions)
+    writeAt(df, tmp, BucketedLayout.shapeOf(df.sparkSession, table),
+      writerOptions)
 
   /** Stage-and-swap `table`'s replacement rows through
     * [[TableSwap.rewrite]]: the rewrite keeps the creation count.
     */
-  def rewrite(spark: SparkSession, table: String, buckets: Int,
+  def rewrite(spark: SparkSession, table: String,
       writerOptions: Map[String, String] = Map.empty)(
       rows: => DataFrame): Unit =
-    TableSwap.rewrite(spark, table)(stage(rows, _, table, buckets,
-      writerOptions))
+    TableSwap.rewrite(spark, table)(stage(rows, _, table, writerOptions))
 
-  /** Replace `table`'s rows with `df`: create the table when absent,
-    * else [[rewrite]] it.
+  /** Replace the rows of `table`, a side table of `main`: create it
+    * when absent ([[writeBeside]]), else [[rewrite]] it.
     */
-  def replace(df: DataFrame, table: String, buckets: Int): Unit =
+  def replace(df: DataFrame, table: String, main: String): Unit =
     if (!df.sparkSession.catalog.tableExists(table))
-      write(df, table, buckets)
-    else rewrite(df.sparkSession, table, buckets)(df)
+      writeBeside(df, table, main)
+    else rewrite(df.sparkSession, table)(df)
 
-  /** Write `df` to `target` under the layout `governor`'s catalog
-    * declares (`target` itself once it exists), else under the
-    * caller's `buckets` and `zorder`.
+  /** Write `df` to `target` under its catalog's bucket count and z
+    * declaration, or under `shape` when this write creates it.
     */
-  private def writeGoverned(
-      df: DataFrame, target: String, governor: String, buckets: Int,
-      zorder: Option[(Seq[String], Int)],
+  private def writeAt(
+      df: DataFrame, target: String,
+      shape: => (Int, Option[(Seq[String], Int)]),
       writerOptions: Map[String, String]): Unit = {
     val spark = df.sparkSession
     val creates = !spark.catalog.tableExists(target)
-    val gov = if (creates) governor else target
     val (n, z) =
-      if (!spark.catalog.tableExists(gov)) (buckets, zorder)
-      else (TableSwap.bucketsOf(spark, gov).getOrElse(buckets),
-        ZOrderLayout.layoutOf(spark, gov))
+      if (creates) shape else BucketedLayout.shapeOf(spark, target)
     // z-ordered tables sort each bucket file by a stored `__z` Morton
     // key instead of the sort columns. The z bounds are WRITE-LOCAL
     // (one min/max pass over the rows being written): `__z` is only a
@@ -163,4 +172,16 @@ object BucketedLayout {
     * `writerOptions` may still override it.
     */
   private val codec = Map("compression" -> "zstd")
+
+  /** `table`'s catalog bucket count; a table without one fails. */
+  private def bucketCount(spark: SparkSession, table: String): Int =
+    TableSwap.bucketsOf(spark, table).getOrElse(
+      throw new IllegalArgumentException(s"BucketedLayout: `$table` has " +
+        "no bucket spec, so no write can know its bucket count; " +
+        "recreate it through its store"))
+
+  /** `table`'s catalog bucket count and z declaration. */
+  private def shapeOf(spark: SparkSession, table: String)
+      : (Int, Option[(Seq[String], Int)]) =
+    (bucketCount(spark, table), ZOrderLayout.layoutOf(spark, table))
 }

@@ -53,6 +53,14 @@ object DocStore {
   private val anchorLayout =
     BucketedLayout(bucketCols = Seq("h"), sortCols = Seq("h"))
 
+  /** The MinHash band shape of the `_bands` index — batch d3's and
+    * streaming st12's. It is fixed, not a parameter: an index probed
+    * or rebuilt under another shape shares no band key with the one
+    * it was written under, and would miss every candidate silently.
+    */
+  private val numHashes = 12
+  private val rowsPerBand = 2
+
   /** Append a document batch and its band-key index rows. The INDEX
     * lands first: the two writes are not atomic, and the two possible
     * crash states are not symmetric — orphan index rows (index landed,
@@ -65,13 +73,14 @@ object DocStore {
     * dies loudly when the caller joins for its text. `buckets` and
     * `zorder` apply only to tables this call creates; existing ones
     * keep their creation bucket count and z declaration
-    * ([[BucketedLayout]]).
+    * ([[BucketedLayout]]). `writerOptions` act only on the creating
+    * write of the documents table too: Spark records the creating
+    * write's options in the catalog entry, and every later append
+    * writes under those.
     */
   def append(
       docs: DataFrame,
       table: String,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
       buckets: Int = 64,
       zorder: Option[(Seq[String], Int)] = None,
       writerOptions: Map[String, String] = Map.empty): Unit = {
@@ -79,14 +88,12 @@ object DocStore {
     if (hasAnchors(spark, table))
       anchorLayout.write(anchorRows(docs, anchorK(spark, table)),
         s"${table}_anchors", buckets)
-    bandLayout.write(bandKeys(docs, numHashes, rowsPerBand),
-      s"${table}_bands", buckets)
+    bandLayout.write(bandKeys(docs), s"${table}_bands", buckets)
     docLayout.write(docs, table, buckets, zorder, writerOptions)
   }
 
   /** The ONE band-key projection all faces of the store share. */
-  private def bandKeys(
-      docs: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame =
+  private def bandKeys(docs: DataFrame): DataFrame =
     docs
       .filter(size(Dedup.words(col("text"))) >= 3)
       .select(col("doc_id"), posexplode(
@@ -129,21 +136,18 @@ object DocStore {
   /** Build the exact-substring anchor index for an EXISTING store
     * (from its FINAL rows) and switch anchor maintenance on. Re-init
     * with a different k rebuilds from scratch — mixed-width anchor
-    * rows would silently never collide.
+    * rows would silently never collide. The index is created at the
+    * documents table's bucket count.
     */
-  def initAnchors(
-      spark: SparkSession,
-      table: String,
-      k: Int = 8,
-      buckets: Int = 64): Unit = {
+  def initAnchors(spark: SparkSession, table: String, k: Int = 8): Unit = {
     require(k >= 2, s"initAnchors: anchor width k must be >= 2, got $k")
     TableSwap.dropManaged(spark, s"${table}_anchors")
     TableSwap.dropManaged(spark, s"${table}_anchorsmeta")
     import spark.implicits._
     Seq(k).toDF("anchor_k").write.mode(SaveMode.Overwrite)
       .format("parquet").saveAsTable(s"${table}_anchorsmeta")
-    anchorLayout.write(anchorRows(readFinal(spark, table), k),
-      s"${table}_anchors", buckets)
+    anchorLayout.writeBeside(anchorRows(readFinal(spark, table), k),
+      s"${table}_anchors", table)
   }
 
   /** Raw read — may contain duplicate doc_ids from re-ingests and
@@ -227,8 +231,6 @@ object DocStore {
       spark: SparkSession,
       table: String,
       newDocs: DataFrame,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
       maxBucket: Int = 1000): DataFrame = {
     // Materialize the batch's band keys ONCE: the projection feeds two
     // plan subtrees (the broadcast distinct key set and the final
@@ -236,7 +238,7 @@ object DocStore {
     // batch MinHash signatures — twice the kernel work, and an
     // inconsistent key set if newDocs is backed by a non-deterministic
     // source. Batch-sized, so the eager materialization is cheap.
-    val probe = bandKeys(newDocs, numHashes, rowsPerBand)
+    val probe = bandKeys(newDocs)
       .withColumnRenamed("doc_id", "new_doc_id")
       .localCheckpoint()
     // popped docs leave the candidate space immediately (their index
@@ -376,25 +378,16 @@ object DocStore {
     * invisible duplication.
     *
     * Each stage is written at its live table's creation bucket count
-    * and z layout ([[BucketedLayout.stage]]); `buckets` never applies
-    * to an existing store. A crash after this leaves stage garbage the
-    * next compact's dropAllStages reclaims — the live tables are
-    * untouched.
+    * and z layout ([[BucketedLayout.stage]]). A crash after this
+    * leaves stage garbage the next compact's dropAllStages reclaims —
+    * the live tables are untouched.
     */
-  def compactStage(
-      spark: SparkSession,
-      table: String,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
-      buckets: Int = 64): CompactStage =
-    stage(spark, table, numHashes, rowsPerBand, buckets, Map.empty)
+  def compactStage(spark: SparkSession, table: String): CompactStage =
+    stage(spark, table, Map.empty)
 
   private def stage(
       spark: SparkSession,
       table: String,
-      numHashes: Int,
-      rowsPerBand: Int,
-      buckets: Int,
       writerOptions: Map[String, String]): CompactStage = {
     val docsTmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
@@ -404,17 +397,16 @@ object DocStore {
     // and the stage honors AT LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
     val delsSnap = Tombstones.of(table).snapshot(spark)
-    docLayout.stage(readFinal(spark, table), docsTmp, table, buckets,
-      writerOptions)
+    docLayout.stage(readFinal(spark, table), docsTmp, table, writerOptions)
     val bandsTmp = TableSwap.stageName(spark, s"${table}_bands")
-    bandLayout.stage(bandKeys(spark.table(docsTmp), numHashes, rowsPerBand),
-      bandsTmp, s"${table}_bands", buckets)
+    bandLayout.stage(bandKeys(spark.table(docsTmp)), bandsTmp,
+      s"${table}_bands")
     val anchorsTmp = if (!hasAnchors(spark, table)) None else {
       TableSwap.dropAllStages(spark, s"${table}_anchors")
       val t = TableSwap.stageName(spark, s"${table}_anchors")
       anchorLayout.stage(
         anchorRows(spark.table(docsTmp), anchorK(spark, table)),
-        t, s"${table}_anchors", buckets)
+        t, s"${table}_anchors")
       Some(t)
     }
     CompactStage(docsTmp, bandsTmp, snapFiles, delsSnap, anchorsTmp)
@@ -434,12 +426,7 @@ object DocStore {
     * count.
     */
   def compactFinish(
-      spark: SparkSession,
-      table: String,
-      st: CompactStage,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
-      buckets: Int = 64): Unit = {
+      spark: SparkSession, table: String, st: CompactStage): Unit = {
     val delta = spark.table(table).inputFiles.toSet -- st.snapFiles
     if (delta.nonEmpty) {
       val deltaRows = minusDels(spark, table,
@@ -447,11 +434,11 @@ object DocStore {
         .localCheckpoint()
       // the stages exist, so their catalog (the live tables' count and
       // z layout) governs these appends
-      docLayout.write(deltaRows, st.docsTmp, buckets)
-      bandLayout.write(bandKeys(deltaRows, numHashes, rowsPerBand),
-        st.bandsTmp, buckets)
-      st.anchorsTmp.foreach(anchorLayout.write(
-        anchorRows(deltaRows, anchorK(spark, table)), _, buckets))
+      docLayout.stage(deltaRows, st.docsTmp, table)
+      bandLayout.stage(bandKeys(deltaRows), st.bandsTmp, s"${table}_bands")
+      st.anchorsTmp.foreach(anchorLayout.stage(
+        anchorRows(deltaRows, anchorK(spark, table)), _,
+        s"${table}_anchors"))
     }
     TableSwap.swapIn(spark, st.docsTmp, table)
     TableSwap.swapIn(spark, st.bandsTmp, s"${table}_bands")
@@ -470,17 +457,11 @@ object DocStore {
     * doc swap but before the retire leaves the anti-join filtering ids
     * that no longer exist — a no-op, never a resurrection.
     * `writerOptions` reach the staged docs write. The rewrite keeps
-    * the creation bucket count and z layout; `buckets` never applies
-    * to an existing store.
+    * the creation bucket count and z layout.
     */
   def compact(
       spark: SparkSession,
       table: String,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
-      buckets: Int = 64,
       writerOptions: Map[String, String] = Map.empty): Unit =
-    compactFinish(spark, table,
-      stage(spark, table, numHashes, rowsPerBand, buckets, writerOptions),
-      numHashes, rowsPerBand, buckets)
+    compactFinish(spark, table, stage(spark, table, writerOptions))
 }

@@ -77,8 +77,8 @@ object FpxStore {
   /** Durable dedup, the same single-write [[TableSwap.rewrite]] as
     * [[StatementStore.compact]] (crash-window policy in [[TableSwap]]).
     * The rewrite keeps the creation bucket count ([[BucketedLayout]]);
-    * `buckets` never applies to an existing store.
+    * `buckets` is ignored (it stays for existing positional callers).
     */
   def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit =
-    layout.rewrite(spark, table, buckets)(readFinal(spark, table))
+    layout.rewrite(spark, table)(readFinal(spark, table))
 }

@@ -68,9 +68,9 @@ import graft.operators.{LabelProp, PageRank, Triangles}
   */
 object GraphStore {
 
-  /** The edge table and every node-grain summary table are bucketed
-    * and sorted on their key column, written only through
-    * [[BucketedLayout]].
+  /** The edge table and every summary table are bucketed and sorted
+    * on their key column, written only through [[BucketedLayout]]; a
+    * summary table is created at the edge table's bucket count.
     */
   private def keyed(keyCol: String): BucketedLayout =
     BucketedLayout(bucketCols = Seq(keyCol), sortCols = Seq(keyCol))
@@ -119,17 +119,6 @@ object GraphStore {
     }
   }
 
-  private def prop(
-      spark: SparkSession, table: String, key: String): Option[String] =
-    spark.sessionState.catalog
-      .getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties.get(key)
-
-  private def setProp(
-      spark: SparkSession, table: String, key: String, value: String): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES('$key'='$value')")
-
   private def maxVer(spark: SparkSession, table: String): Long = {
     spark.catalog.refreshTable(table) // cloned-session staleness: SummaryStore doc
     val r = spark.table(table).agg(max(col("ver"))).collect()(0)
@@ -137,7 +126,8 @@ object GraphStore {
     // compaction preserves each edge's FIRST-SEEN ver (so the delta
     // splits stay exact across rewrites), which can shrink the row-side
     // max; the compact watermark keeps the logical version monotone
-    val compactVer = prop(spark, table, "graft.graph.compact_ver")
+    val compactVer = TableSwap.properties(spark, table)
+      .get("graft.graph.compact_ver")
       .map(_.toLong).getOrElse(0L)
     math.max(rowsMax, compactVer)
   }
@@ -147,7 +137,8 @@ object GraphStore {
   // whose reconstruction (ver <= snapshot) can no longer be read back
   // from the rows, so the delta paths refuse it into the full recompute
   private def scrubVer(spark: SparkSession, table: String): Long =
-    prop(spark, table, "graft.graph.scrub_ver").map(_.toLong).getOrElse(0L)
+    TableSwap.properties(spark, table).get("graft.graph.scrub_ver")
+      .map(_.toLong).getOrElse(0L)
 
   /** Recompute the served analytics from the LIVE edge set — the one
     * corpus-grain face, run at the compact cadence, off the serving
@@ -212,14 +203,14 @@ object GraphStore {
     *     snapshot stamp (its as_of is the census split point, not a
     *     freshness claim).
     *
-    * `buckets` applies only to summary tables this call creates; every
-    * existing table, the edge table included, keeps its creation
-    * bucket count ([[BucketedLayout]]).
+    * A summary table this call creates takes the edge table's catalog
+    * bucket count; every existing table keeps its creation count
+    * ([[BucketedLayout]]).
     */
   def refresh(
       spark: SparkSession, table: String, iters: Int = 10,
       minSupport: Long = 2L, lpRounds: Int = 10,
-      buckets: Int = 16, kcoreK: Long = 3L, kcoreRounds: Int = 10,
+      kcoreK: Long = 3L, kcoreRounds: Int = 10,
       compactEdges: Boolean = true): Unit = {
     val delsSnap = Tombstones.of(table).snapshot(spark)
     val asOf = maxVer(spark, table)
@@ -236,7 +227,8 @@ object GraphStore {
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
     val paramsMatch = allSummaries &&
-      prop(spark, s"${table}_ranks", "graft.graph.params").contains(params)
+      TableSwap.properties(spark, s"${table}_ranks")
+        .get("graft.graph.params").contains(params)
     if (paramsMatch && delsSnap.isEmpty && ranksAsOf.contains(asOf))
       return // NO-OP tick: nothing changed since the last refresh
     if (paramsMatch && delsSnap.isEmpty &&
@@ -253,19 +245,21 @@ object GraphStore {
           .distinct().count()
         if (matched == nNew) { // PURE-REPLAY tick: set unchanged —
           // restamp the node-grain summaries' as_of and stop
-          val kProp = prop(spark, s"${table}_kcore", "graft.kcore.k")
+          val kProp = TableSwap.properties(spark, s"${table}_kcore")
+            .get("graft.kcore.k")
           def restamp(t: String, keyCol: String): Unit = {
             spark.catalog.refreshTable(t)
             keyed(keyCol).replace(
-              spark.table(t).withColumn("as_of", lit(asOf)), t, buckets)
+              spark.table(t).withColumn("as_of", lit(asOf)), t, table)
           }
           restamp(s"${table}_ranks", "id")
-          setProp(spark, s"${table}_ranks", "graft.graph.params", params)
+          TableSwap.setProperties(spark, s"${table}_ranks",
+            "graft.graph.params" -> params)
           restamp(s"${table}_communities", "node")
           restamp(s"${table}_cohesion", "node")
           restamp(s"${table}_kcore", "node")
-          kProp.foreach(k =>
-            setProp(spark, s"${table}_kcore", "graft.kcore.k", k))
+          kProp.foreach(k => TableSwap.setProperties(spark,
+            s"${table}_kcore", "graft.kcore.k" -> k))
           return
         }
       }
@@ -282,13 +276,14 @@ object GraphStore {
     // nothing between cadences (r14 advisor finding: ranks/labels/
     // census finals leaked one node-grain generation per tick)
     val ranks = PageRank.ranks(e, iters).withColumn("as_of", lit(asOf))
-    keyed("id").replace(ranks, s"${table}_ranks", buckets)
+    keyed("id").replace(ranks, s"${table}_ranks", table)
     // the stored-parameters declaration: a later NO-OP/REPLAY fast
     // path must never restamp summaries computed under different
     // iteration parameters (set after every write: a refresh may run
     // under parameters other than the last one's, and a lost property
     // only disables the fast paths, never correctness)
-    setProp(spark, s"${table}_ranks", "graft.graph.params", params)
+    TableSwap.setProperties(spark, s"${table}_ranks",
+      "graft.graph.params" -> params)
     release(ranks)
 
     // ONE census pays for two summaries: the per-edge support feeds
@@ -323,7 +318,7 @@ object GraphStore {
       case _ => Triangles.perEdgeDiff(e)
     }
     keyed("a").replace(support.withColumn("as_of", lit(asOf)),
-      s"${table}_support", buckets)
+      s"${table}_support", table)
     val cohesion = support
       .select(explode(array(
         struct(col("a").as("node"), col("support")),
@@ -331,14 +326,14 @@ object GraphStore {
       .groupBy(col("x.node").as("node"))
       .agg((sum(col("x.support")) / 2).cast("long").as("n_triangles"))
       .withColumn("as_of", lit(asOf))
-    keyed("node").replace(cohesion, s"${table}_cohesion", buckets)
+    keyed("node").replace(cohesion, s"${table}_cohesion", table)
     val kept = support
       .filter(col("support") >= minSupport)
       .select(col("a").as("src"), col("b").as("dst"))
     val comm = LabelProp.minLabelRounds(kept, lpRounds)
       .select(col("node"), col("label").as("community"))
       .withColumn("as_of", lit(asOf))
-    keyed("node").replace(comm, s"${table}_communities", buckets)
+    keyed("node").replace(comm, s"${table}_communities", table)
     release(comm)
     release(support)
 
@@ -357,10 +352,8 @@ object GraphStore {
       if (!spark.catalog.tableExists(s"${table}_kcore")) None
       else {
         spark.catalog.refreshTable(s"${table}_kcore")
-        val storedK = spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst
-            .TableIdentifier(s"${table}_kcore"))
-          .properties.get("graft.kcore.k").map(_.toLong)
+        val storedK = TableSwap.properties(spark, s"${table}_kcore")
+          .get("graft.kcore.k").map(_.toLong)
         val r = spark.table(s"${table}_kcore")
           .agg(max(col("as_of"))).collect()(0)
         if (r.isNullAt(0)) None
@@ -381,12 +374,12 @@ object GraphStore {
     }
     keyed("node").replace(core.select(col("node"),
       col("d").as("core_degree")).withColumn("as_of", lit(asOf)),
-      s"${table}_kcore", buckets)
+      s"${table}_kcore", table)
     // the creation-k declaration: a later refresh at a different k
     // must never patch against an incompatible membership (it refuses
     // into the full-peel branch above instead)
-    spark.sql(s"ALTER TABLE ${table}_kcore SET TBLPROPERTIES(" +
-      s"'graft.kcore.k'='$kcoreK')")
+    TableSwap.setProperties(spark, s"${table}_kcore",
+      "graft.kcore.k" -> kcoreK.toString)
     release(core)
 
     release(e)
@@ -394,7 +387,7 @@ object GraphStore {
     // preserves the original contract); retirement is gated on the
     // tombstone snapshot taken BEFORE the summaries — a pop landing
     // mid-refresh was not excluded from them and must stay masked
-    if (compactEdges) compactImpl(spark, table, buckets, Some(delsSnap))
+    if (compactEdges) compactImpl(spark, table, Some(delsSnap))
   }
 
   // bound on the broadcast side of the pure-replay probe: a bulk load
@@ -416,14 +409,13 @@ object GraphStore {
     * summaries rebuilt without the popped nodes in the same operation
     * (the compacting-refresh path), else a stale rank table would
     * resurrect the popped entity the moment the mask disappears. The
-    * rewrite keeps the creation bucket count ([[BucketedLayout]]);
-    * `buckets` never applies to an existing table.
+    * rewrite keeps the creation bucket count ([[BucketedLayout]]).
     */
-  def compact(spark: SparkSession, table: String, buckets: Int = 16): Unit =
-    compactImpl(spark, table, buckets, None)
+  def compact(spark: SparkSession, table: String): Unit =
+    compactImpl(spark, table, None)
 
   private def compactImpl(
-      spark: SparkSession, table: String, buckets: Int,
+      spark: SparkSession, table: String,
       retireIfUnchangedSince: Option[Set[String]]): Unit = {
     val delsSnap = Tombstones.of(table).snapshot(spark)
     val asOf = maxVer(spark, table)
@@ -438,11 +430,12 @@ object GraphStore {
           .join(broadcast(d).withColumnRenamed("id", "dst"),
             Seq("dst"), "left_anti")
     }
-    edgeLayout.rewrite(spark, table, buckets)(
+    edgeLayout.rewrite(spark, table)(
       rows.select(col("src"), col("dst"), col("ver")))
-    setProp(spark, table, "graft.graph.compact_ver", asOf.toString)
-    if (delsSnap.nonEmpty)
-      setProp(spark, table, "graft.graph.scrub_ver", asOf.toString)
+    TableSwap.setProperties(spark, table,
+      "graft.graph.compact_ver" -> asOf.toString)
+    if (delsSnap.nonEmpty) TableSwap.setProperties(spark, table,
+      "graft.graph.scrub_ver" -> asOf.toString)
     retireIfUnchangedSince.foreach(Tombstones.of(table).retire(spark, _))
   }
 

@@ -50,7 +50,10 @@ object StatementStore {
     * writes is internally Z-ORDERED on those columns ([[ZOrderLayout]]
     * — a stored `__z` sort key the readers never see), so range scans
     * on ANY laid-out column prune row groups from footer stats where
-    * the canonical canonical_id sort prunes none.
+    * the canonical canonical_id sort prunes none. `writerOptions`
+    * act only on a creating write too: Spark records the creating
+    * write's options in the catalog entry, and every later append
+    * writes under those.
     */
   def append(statements: DataFrame, table: String, buckets: Int = 64,
       zorder: Option[(Seq[String], Int)] = None,
@@ -61,13 +64,6 @@ object StatementStore {
       else statements.withColumn("deleted", lit(false))
     layout.write(withDel, table, buckets, zorder, writerOptions)
   }
-
-  /** Z-layout metadata of a store (None = canonical canonical_id
-    * sort), from the live table's properties — the creation-time
-    * ORDER BY declaration every later write must honor.
-    */
-  def zLayoutOf(spark: SparkSession, table: String)
-      : Option[(Seq[String], Int)] = ZOrderLayout.layoutOf(spark, table)
 
   /** The one physical layout: dataset partitions, canonical_id buckets,
     * canonical_id-sorted files (or `__z`-sorted on a z-ordered store),
@@ -117,6 +113,9 @@ object StatementStore {
     * The popped statements are materialized BEFORE the tombstones are
     * appended (the reference returns a list, not a cursor) — one
     * entity's statements are bounded, so the collect is safe.
+    * `buckets` is ignored: the store exists, so its creation count
+    * governs the tombstone append (the parameter stays for existing
+    * positional callers).
     */
   def pop(
       spark: SparkSession,
@@ -155,8 +154,8 @@ object StatementStore {
     * the catalog (the crash-window policy lives there), and the live
     * table keeps its TBLPROPERTIES, the z-order declaration included.
     * The rewrite keeps the creation bucket count and z layout
-    * ([[BucketedLayout]]); `buckets` never applies to an existing
-    * store. A z-ordered store is re-laid-out with compact-global
+    * ([[BucketedLayout]]); `buckets` is ignored (it stays for existing
+    * positional callers). A z-ordered store is re-laid-out with compact-global
     * bounds (the whole corpus in one write = the optimal z placement,
     * OPTIMIZE improving on the appends' write-local bounds, exactly a
     * MergeTree merge). At 100 TB: one write per OPTIMIZE, not two.
@@ -165,6 +164,6 @@ object StatementStore {
       writerOptions: Map[String, String] = Map.empty): Unit =
     // deleted=false restored so the stage table keeps the physical
     // schema and later appends line up against the catalog.
-    layout.rewrite(spark, table, buckets, writerOptions)(
+    layout.rewrite(spark, table, writerOptions)(
       readFinal(spark, table).withColumn("deleted", lit(false)))
 }

@@ -55,6 +55,19 @@ object TableSwap {
     spark.sessionState.catalog.getTableMetadata(ident(table))
       .bucketSpec.map(_.numBuckets)
 
+  /** `table`'s catalog properties (TBLPROPERTIES) — where a store
+    * records what it fixed at creation or last computed (a z
+    * declaration, a graph refresh's parameters and watermarks).
+    */
+  def properties(spark: SparkSession, table: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(ident(table)).properties
+
+  /** Set catalog properties on `table`, in one ALTER TABLE. */
+  def setProperties(
+      spark: SparkSession, table: String, props: (String, String)*): Unit =
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" +
+      props.map { case (k, v) => s"'$k'='$v'" }.mkString(",") + ")")
+
   /** Whether `table` is partitioned, per its catalog metadata. Gate
     * every `listPartitions` on it: the Hive catalog THROWS on a
     * non-partitioned table (the in-memory one returns an empty list,

@@ -169,7 +169,7 @@ object VecStore {
     // encode/retrain — but codes can never reference vectors that do
     // not exist (the xref/statements direction; the exact-search and
     // dedup faces read the main table and never lag)
-    if (hasPq) appendCodes(spark, assigned, table, buckets)
+    if (hasPq) appendCodes(spark, assigned, table)
   }
 
   /** Raw read — may contain duplicate vec_ids from re-delivered
@@ -343,8 +343,7 @@ object VecStore {
       table: String,
       numSub: Int = 8,
       codebookK: Int = 16,
-      dims: Int = 64,
-      buckets: Int = 16): Unit = {
+      dims: Int = 64): Unit = {
     // train ONCE, stamp the codebook's content hash on the codebook
     // AND every code row: codebook and codes are a mutually-dependent
     // pair with no atomic two-table write, so consistency is enforced
@@ -359,7 +358,7 @@ object VecStore {
     val stamped = cbDf.withColumn("cb_hash", lit(cbHashOf(cbDf)))
     stamped.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(s"${table}_pq")
-    rebuildCodes(spark, table, stamped, buckets)
+    rebuildCodes(spark, table, stamped)
   }
 
   /** Rebuild the `_codes` cache from the FINAL corpus under codebook
@@ -370,27 +369,23 @@ object VecStore {
     * codes-append crashed after the vector write re-enter PQ serving
     * here, the repair both failure docs point at. An existing table
     * swaps via [[TableSwap]] (no window in which the name fails to
-    * resolve); a first build creates it directly.
+    * resolve); a first build creates it directly, at the corpus
+    * table's bucket count.
     */
   private def rebuildCodes(
-      spark: SparkSession,
-      table: String,
-      cb: DataFrame,
-      buckets: Int): Unit = {
+      spark: SparkSession, table: String, cb: DataFrame): Unit = {
     val corpus = readFinal(spark, table)
       .select(col("vec_id"), col("embedding"), col("list_id"))
     val codesT = s"${table}_codes"
-    if (spark.catalog.tableExists(codesT)) {
-      // a LEGACY unpartitioned cache can't take a partitioned stage by
-      // a location swap (its catalog entry declares no partition
-      // column) — and an unpartitioned layout predates the
-      // stamp scheme, so PQ serving is already refusing on it: replace
-      // it wholesale (no serving window exists to protect)
-      if (!TableSwap.partitioned(spark, codesT)) {
-        TableSwap.dropManaged(spark, codesT)
-        listedLayout.write(encode(corpus, cb), codesT, buckets)
-      } else listedLayout.rewrite(spark, codesT, buckets)(encode(corpus, cb))
-    } else listedLayout.write(encode(corpus, cb), codesT, buckets)
+    // a LEGACY unpartitioned cache can't take a partitioned stage by
+    // a location swap (its catalog entry declares no partition
+    // column) — and an unpartitioned layout predates the
+    // stamp scheme, so PQ serving is already refusing on it: replace
+    // it wholesale (no serving window exists to protect)
+    if (spark.catalog.tableExists(codesT) &&
+        !TableSwap.partitioned(spark, codesT))
+      TableSwap.dropManaged(spark, codesT)
+    listedLayout.replace(encode(corpus, cb), codesT, table)
   }
 
   /** The stored PQ codebook ([[trainPqCodebook]]); carries `cb_hash`,
@@ -404,13 +399,10 @@ object VecStore {
     spark.table(s"${table}_codes")
 
   private def appendCodes(
-      spark: SparkSession,
-      assigned: DataFrame,
-      table: String,
-      buckets: Int): Unit =
-    listedLayout.write(encode(
+      spark: SparkSession, assigned: DataFrame, table: String): Unit =
+    listedLayout.writeBeside(encode(
       assigned.select(col("vec_id"), col("embedding"), col("list_id")),
-      liveCodebook(spark, table)), s"${table}_codes", buckets)
+      liveCodebook(spark, table)), s"${table}_codes", table)
 
   /** The `_codes` rows of `vecsWithList` under codebook `cb`, each
     * stamped with the codebook's `cb_hash`.
@@ -539,10 +531,7 @@ object VecStore {
     * trainPqCodebook crash states, whose repairs it also subsumes.
     * Shape (numSub/K/dims) carries over from the live generation.
     */
-  def retrainPqStaged(
-      spark: SparkSession,
-      table: String,
-      buckets: Int = 16): Unit = {
+  def retrainPqStaged(spark: SparkSession, table: String): Unit = {
     val old = liveCodebook(spark, table).localCheckpoint()
     requireStamped(old, "retrainPqStaged")
     // self-heal an interrupted previous retrain before adding a gen
@@ -563,7 +552,7 @@ object VecStore {
       .localCheckpoint()
     stamped.write.mode(SaveMode.Append).format("parquet")
       .saveAsTable(s"${table}_pq")
-    rebuildCodes(spark, table, stamped, buckets)
+    rebuildCodes(spark, table, stamped)
     pruneCodebook(spark, table)
   }
 
@@ -719,14 +708,10 @@ object VecStore {
     * only if no pop landed mid-compact, so a crash anywhere earlier
     * leaves the anti-join filtering ids that are already gone — a
     * no-op, never a resurrection. The rewrite keeps the corpus's and
-    * the cache's creation bucket counts ([[BucketedLayout]]); `buckets`
-    * never applies to an existing table.
+    * the cache's creation bucket counts ([[BucketedLayout]]).
     */
-  def compact(
-      spark: SparkSession,
-      table: String,
-      buckets: Int = 16): Unit =
-    compactFinish(spark, table, compactStage(spark, table, buckets), buckets)
+  def compact(spark: SparkSession, table: String): Unit =
+    compactFinish(spark, table, compactStage(spark, table))
 
   /** Handle between [[compactStage]] and [[compactFinish]] — the
     * [[DocStore.CompactStage]] twin for the embedding corpus: staged
@@ -756,10 +741,7 @@ object VecStore {
     * ([[BucketedLayout.stage]]). A crash after this leaves only stage
     * garbage the next compact's dropAllStages reclaims.
     */
-  def compactStage(
-      spark: SparkSession,
-      table: String,
-      buckets: Int = 16): CompactStage = {
+  def compactStage(spark: SparkSession, table: String): CompactStage = {
     val vecsTmp = TableSwap.stageName(spark, table)
     TableSwap.dropAllStages(spark, table)
     TableSwap.dropAllStages(spark, s"${table}_codes")
@@ -768,7 +750,7 @@ object VecStore {
     // LEAST these tombstones
     val snapFiles = spark.table(table).inputFiles.toSet
     val delsSnap = Tombstones.of(table).snapshot(spark)
-    listedLayout.stage(readFinal(spark, table), vecsTmp, table, buckets)
+    listedLayout.stage(readFinal(spark, table), vecsTmp, table)
     val codesTmp =
       if (!spark.catalog.tableExists(s"${table}_codes")) None
       else {
@@ -779,7 +761,7 @@ object VecStore {
           val tmp = TableSwap.stageName(spark, s"${table}_codes")
           listedLayout.stage(encode(spark.table(vecsTmp)
               .select(col("vec_id"), col("embedding"), col("list_id")), cb),
-            tmp, s"${table}_codes", buckets)
+            tmp, s"${table}_codes")
           Some((tmp, cb.select(col("cb_hash")).head().getString(0)))
         }
       }
@@ -802,10 +784,7 @@ object VecStore {
     * tables' creation) bucket count.
     */
   def compactFinish(
-      spark: SparkSession,
-      table: String,
-      st: CompactStage,
-      buckets: Int = 16): Unit = {
+      spark: SparkSession, table: String, st: CompactStage): Unit = {
     val delta = spark.table(table).inputFiles.toSet -- st.snapFiles
     val deltaRows =
       if (delta.isEmpty) None
@@ -820,7 +799,7 @@ object VecStore {
           spark.read.format("parquet").option("basePath", base)
             .load(delta.toSeq: _*))
           .localCheckpoint()
-        listedLayout.write(rows, st.vecsTmp, buckets)
+        listedLayout.stage(rows, st.vecsTmp, table)
         Some(rows)
       }
     TableSwap.swapIn(spark, st.vecsTmp, table)
@@ -833,13 +812,13 @@ object VecStore {
       st.codesTmp match {
         case Some((tmp, stamp)) if liveHash.contains(stamp) =>
           deltaRows.foreach(rows =>
-            listedLayout.write(encode(rows, live), tmp, buckets))
+            listedLayout.stage(encode(rows, live), tmp, s"${table}_codes"))
           TableSwap.swapIn(spark, tmp, s"${table}_codes")
         case _ =>
           // stale stage (mid-build retrain) or a layout the stage
           // declined — drop any staged codes and rebuild inline
           TableSwap.dropAllStages(spark, s"${table}_codes")
-          rebuildCodes(spark, table, live, buckets)
+          rebuildCodes(spark, table, live)
       }
     }
     Tombstones.of(table).retire(spark, st.delsSnap)
@@ -877,7 +856,6 @@ object VecStore {
   def migrate(
       spark: SparkSession,
       table: String,
-      buckets: Int = 16,
       sampleN: Int = 1000): Seq[String] = {
     val actions = scala.collection.mutable.Buffer.empty[String]
     var codesStale = false
@@ -893,7 +871,7 @@ object VecStore {
       .withColumn("__new", assignment(spark, table))
       .filter(col("__new") =!= col("list_id")).count()
     if (drifted > 0) {
-      reassignCorpus(spark, table, buckets)
+      reassignCorpus(spark, table)
       codesStale = true
       actions += s"reassigned corpus: $drifted/${sample.count()} sampled " +
         "rows carried a stale list assignment (pre-4dp layout)"
@@ -916,13 +894,13 @@ object VecStore {
       if (!cb.columns.contains("cb_hash")) {
         val (numSub, subDim) = pqShape(cb)
         val k = (cb.count() / numSub).toInt
-        trainPqCodebook(spark, table, numSub, k, numSub * subDim, buckets)
+        trainPqCodebook(spark, table, numSub, k, numSub * subDim)
         codesStale = false
         actions += s"retrained codebook at the legacy shape " +
           s"(numSub=$numSub, K=$k, dims=${numSub * subDim}): stored " +
           "_pq predated the cb_hash stamp scheme"
       } else if (!hasCodes) {
-        rebuildCodes(spark, table, cb, buckets)
+        rebuildCodes(spark, table, cb)
         codesStale = false
         actions += "rebuilt _codes: _pq existed without its cache " +
           "(crashed trainPqCodebook)"
@@ -942,7 +920,7 @@ object VecStore {
             else None
           }
         reason.foreach { r =>
-          rebuildCodes(spark, table, cb, buckets)
+          rebuildCodes(spark, table, cb)
           codesStale = false
           actions += s"rebuilt _codes: $r"
         }
@@ -959,10 +937,9 @@ object VecStore {
     * FINAL-excluded) drop physically, so the tombstones retire with
     * the swap unless a pop landed mid-rewrite.
     */
-  private def reassignCorpus(
-      spark: SparkSession, table: String, buckets: Int): Unit = {
+  private def reassignCorpus(spark: SparkSession, table: String): Unit = {
     val delsSnap = Tombstones.of(table).snapshot(spark) // before FINAL
-    listedLayout.rewrite(spark, table, buckets)(withAssignment(spark,
+    listedLayout.rewrite(spark, table)(withAssignment(spark,
       readFinal(spark, table).select(col("vec_id"), col("embedding")),
       table))
     Tombstones.of(table).retire(spark, delsSnap)
@@ -984,10 +961,7 @@ object VecStore {
     * repairs. Idempotent: an already-tree store returns no actions.
     */
   def treeify(
-      spark: SparkSession,
-      table: String,
-      topCount: Int,
-      buckets: Int = 16): Seq[String] = {
+      spark: SparkSession, table: String, topCount: Int): Seq[String] = {
     require(spark.catalog.tableExists(s"${table}_cents"),
       s"VecStore: no store at `$table` (missing `${table}_cents`)")
     if (spark.catalog.tableExists(s"${table}_tops")) return Seq.empty
@@ -997,12 +971,12 @@ object VecStore {
       .saveAsTable(s"${table}_leafmap")
     tops.write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(s"${table}_tops")
-    reassignCorpus(spark, table, buckets)
+    reassignCorpus(spark, table)
     val actions = scala.collection.mutable.Buffer(
       s"trained tree quantizer (topCount=$topCount) and re-assigned " +
         "the corpus through the descent")
     if (spark.catalog.tableExists(s"${table}_codes")) {
-      rebuildCodes(spark, table, liveCodebook(spark, table), buckets)
+      rebuildCodes(spark, table, liveCodebook(spark, table))
       actions += "rebuilt _codes across the moved lists"
     }
     actions.toSeq
@@ -1014,19 +988,16 @@ object VecStore {
     * then the corpus re-assigns through the flat argmax and `_codes`
     * rebuilds. Idempotent on a flat store.
     */
-  def untreeify(
-      spark: SparkSession,
-      table: String,
-      buckets: Int = 16): Seq[String] = {
+  def untreeify(spark: SparkSession, table: String): Seq[String] = {
     if (!spark.catalog.tableExists(s"${table}_tops")) return Seq.empty
     TableSwap.dropManaged(spark, s"${table}_tops")
     TableSwap.dropManaged(spark, s"${table}_leafmap")
-    reassignCorpus(spark, table, buckets)
+    reassignCorpus(spark, table)
     val actions = scala.collection.mutable.Buffer(
       "dropped the tree quantizer and re-assigned the corpus through " +
         "the flat argmax")
     if (spark.catalog.tableExists(s"${table}_codes")) {
-      rebuildCodes(spark, table, liveCodebook(spark, table), buckets)
+      rebuildCodes(spark, table, liveCodebook(spark, table))
       actions += "rebuilt _codes across the moved lists"
     }
     actions.toSeq

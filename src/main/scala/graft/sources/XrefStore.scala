@@ -28,7 +28,8 @@ object XrefStore {
   /** The physical layout of each side — main, the `_reverse`
     * projection and the `_mapping` — written only through
     * [[BucketedLayout]], so no side can diverge from its creation
-    * bucket count.
+    * bucket count. The `_mapping` is created at the main table's
+    * count.
     */
   private val mainLayout = BucketedLayout(
     bucketCols = Seq("left_id"), sortCols = Seq("left_id", "right_id"))
@@ -111,15 +112,14 @@ object XrefStore {
     * in by [[TableSwap.rewrite]]'s single location swap — the same
     * no-absent-window pattern as [[StatementStore.compact]]. Each
     * rewrite keeps its table's creation bucket count
-    * ([[BucketedLayout]]); `buckets` never applies to an existing
-    * table.
+    * ([[BucketedLayout]]).
     */
-  def compact(spark: SparkSession, table: String, buckets: Int = 64): Unit = {
+  def compact(spark: SparkSession, table: String): Unit = {
     // tombstone snapshot BEFORE the FINAL read: the compacted rows
     // honor at least these pops
     val dels = Tombstones.ofDatasets(table)
     val delsSnap = dels.snapshot(spark)
-    mainLayout.rewrite(spark, table, buckets)(
+    mainLayout.rewrite(spark, table)(
       mainRows(readLatest(spark, table)))
     // [[compact]] swaps main THEN `_reverse`; a crash between the two
     // swaps leaves the reverse projection one compaction behind main.
@@ -129,7 +129,7 @@ object XrefStore {
     // itself has no absent-name window; policy in [[TableSwap]].)
     // reverse = projection of the already-compacted main: a cheap
     // bucket-local parquet re-read, no second FINAL computation
-    reverseLayout.rewrite(spark, reverseTable(table), buckets)(
+    reverseLayout.rewrite(spark, reverseTable(table))(
       Xref.reverse(read(spark, table)))
     // a dataset takedown invalidates the derived mapping structurally
     // (losing positives can split components) — rebuild it from the
@@ -140,7 +140,7 @@ object XrefStore {
       // an all-retracted store can leave the mapping empty — rebuild
       // at ver 0 rather than NPE on the null max
       val maxVer = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      mappingLayout.rewrite(spark, target, buckets)(mappingRows(
+      mappingLayout.rewrite(spark, target)(mappingRows(
         Xref.resolverMapping(readLatest(spark, table))
           .withColumn("ver", lit(maxVer))))
     }
@@ -190,7 +190,9 @@ object XrefStore {
     * rows. `ver` must be monotone per applied batch (a streaming
     * batchId, an ingest timestamp); equal-`ver` duplicates are
     * harmless (the FINAL window's row_number picks one of two
-    * identical rows).
+    * identical rows). `buckets` applies only when this call creates
+    * the judgement tables; the `_mapping` always lands at the main
+    * table's count.
     */
   def applyBatch(
       spark: SparkSession, batch: DataFrame, table: String, ver: Long,
@@ -203,13 +205,13 @@ object XrefStore {
       else Xref.applyJudgementsDelta(readMapping(spark, table), batch,
         stored = Some(readLatest(spark, table))) match {
         case Some(delta) =>
-          mappingLayout.write(mappingRows(delta.withColumn("ver", lit(ver))),
-            target, buckets)
+          mappingLayout.writeBeside(
+            mappingRows(delta.withColumn("ver", lit(ver))), target, table)
           None
         case None => Some(Xref.resolverMapping(readLatest(spark, table)))
       }
     full.foreach(m => mappingLayout.replace(
-      mappingRows(m.withColumn("ver", lit(ver))), target, buckets))
+      mappingRows(m.withColumn("ver", lit(ver))), target, table))
   }
 
   /** OPTIMIZE for the mapping table: rewrite with the FINAL window
@@ -217,10 +219,9 @@ object XrefStore {
     * staged + swapped like [[compact]], at the mapping's creation
     * bucket count.
     */
-  def compactMapping(
-      spark: SparkSession, table: String, buckets: Int = 64): Unit = {
+  def compactMapping(spark: SparkSession, table: String): Unit = {
     val target = mappingTable(table)
-    mappingLayout.rewrite(spark, target, buckets)(mappingRows(
+    mappingLayout.rewrite(spark, target)(mappingRows(
       graft.operators.ReplacingMerge.latestByKey(spark.table(target),
         keys = Seq(col("entity_id")), version = Seq(col("ver")))))
   }

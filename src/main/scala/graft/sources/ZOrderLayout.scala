@@ -118,9 +118,7 @@ object ZOrderLayout {
     */
   def layoutOf(spark: org.apache.spark.sql.SparkSession, table: String)
       : Option[(Seq[String], Int)] = {
-    val props = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .properties
+    val props = TableSwap.properties(spark, table)
     props.get("graft.zorder.cols").map { cols =>
       (cols.split(",").toSeq, props.getOrElse("graft.zorder.bits", "16").toInt)
     }
@@ -133,9 +131,9 @@ object ZOrderLayout {
     */
   def declare(spark: org.apache.spark.sql.SparkSession, table: String,
       zc: Seq[String], bits: Int): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES(" +
-      s"'graft.zorder.cols'='${zc.mkString(",")}'," +
-      s"'graft.zorder.bits'='$bits')")
+    TableSwap.setProperties(spark, table,
+      "graft.zorder.cols" -> zc.mkString(","),
+      "graft.zorder.bits" -> bits.toString)
 
   /** Per-row-group INT64 min/max stats for `cols`, straight from the
     * parquet footers — the exact metadata a scan's row-group pruning

@@ -396,7 +396,7 @@ object Streams {
     */
   def ingestVecs(
       vecs: DataFrame, table: String, compactEvery: Int = 0,
-      buckets: Int = 16, minBloatRatio: Double = 0.0,
+      minBloatRatio: Double = 0.0,
       retrainEvery: Int = 0, retrainRatio: Double = 1.2,
       asyncCompact: Boolean = false)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
@@ -413,12 +413,11 @@ object Streams {
       if (asyncCompact) {
         val spark = batch.sparkSession
         if (compactor == null) compactor = new AsyncCompactor(
-          () => graft.sources.VecStore.compactStage(spark, table, buckets),
-          s => graft.sources.VecStore.compactFinish(spark, table, s, buckets))
+          () => graft.sources.VecStore.compactStage(spark, table),
+          s => graft.sources.VecStore.compactFinish(spark, table, s))
         if (compactor.maybeFinish()) bloatBound.set(0L)
       }
-      graft.sources.VecStore.append(batch.sparkSession, batch, table,
-        buckets)
+      graft.sources.VecStore.append(batch.sparkSession, batch, table)
       if (bloatBound.get() >= 0L) { bloatBound.addAndGet(batch.count()); () }
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
         val spark = batch.sparkSession
@@ -427,7 +426,7 @@ object Streams {
           () => graft.sources.VecStore.readFinal(spark, table).count(),
           () =>
             if (asyncCompact) { compactor.schedule(); () }
-            else graft.sources.VecStore.compact(spark, table, buckets),
+            else graft.sources.VecStore.compact(spark, table),
           minBloatRatio,
           () => graft.sources.Tombstones.of(table).pending(spark)))
       }
@@ -461,7 +460,7 @@ object Streams {
         val base = baseline.get()
         if (base < 0.0) { baseline.set(res); () }
         else if (res > retrainRatio * base) {
-          graft.sources.VecStore.retrainPqStaged(spark, table, buckets)
+          graft.sources.VecStore.retrainPqStaged(spark, table)
           baseline.set(-1.0)
         }
       }
@@ -516,15 +515,14 @@ object Streams {
     * Same replay/crash/concurrent-ingest contract as [[takedownDocs]].
     */
   def takedownVecs(
-      requests: DataFrame, table: String, compactEvery: Int = 0,
-      buckets: Int = 16)
+      requests: DataFrame, table: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     ingestInto(requests) { (batch, batchId) =>
       val spark = batch.sparkSession
       graft.sources.VecStore.popIds(spark, table, batch)
       if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1 &&
           graft.sources.Tombstones.of(table).pending(spark))
-        graft.sources.VecStore.compact(spark, table, buckets)
+        graft.sources.VecStore.compact(spark, table)
     }
 
   /** st16b — the SOURCE-grain takedown: right-to-be-forgotten

@@ -198,7 +198,7 @@ class CliSpec extends AnyFunSuite {
     val emb = Tables.load(spark, SparkTestSession.sf, "embeddings")
     graft.sources.VecStore.init(spark, "mig_vecs", emb,
       col("label"), buckets = 4)
-    graft.sources.VecStore.trainPqCodebook(spark, "mig_vecs", buckets = 4)
+    graft.sources.VecStore.trainPqCodebook(spark, "mig_vecs")
     // ---- synthesize the legacy layout ----
     // (a) stale assignments: shift a handful of vectors into the wrong
     // list — what a pre-4dp argmax left behind for boundary vectors
@@ -236,7 +236,7 @@ class CliSpec extends AnyFunSuite {
     }
     // ---- migrate ----
     val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(out) { Cli.run(spark, List("migrate", "mig_vecs", "4")) }
+    Console.withOut(out) { Cli.run(spark, List("migrate", "mig_vecs")) }
     val report = out.toString
     assert(report.contains("reassigned corpus"),
       s"stale assignments must be detected+repaired: $report")
@@ -259,7 +259,7 @@ class CliSpec extends AnyFunSuite {
     assert(stamps.toSeq == Seq(live))
     // ---- second migrate: nothing to do ----
     val out2 = new java.io.ByteArrayOutputStream()
-    Console.withOut(out2) { Cli.run(spark, List("migrate", "mig_vecs", "4")) }
+    Console.withOut(out2) { Cli.run(spark, List("migrate", "mig_vecs")) }
     assert(out2.toString.contains("already current"),
       s"second migrate must be a no-op: ${out2.toString}")
   }
@@ -277,7 +277,7 @@ class CliSpec extends AnyFunSuite {
       col("label"), buckets = 4)
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(out) {
-      Cli.run(spark, List("treeify", "tfy_vecs", "3", "4"))
+      Cli.run(spark, List("treeify", "tfy_vecs", "3"))
     }
     assert(out.toString.contains("trained tree quantizer"),
       s"treeify must report the upgrade: ${out.toString}")
@@ -285,7 +285,7 @@ class CliSpec extends AnyFunSuite {
       spark.catalog.tableExists("tfy_vecs_leafmap"))
     val out2 = new java.io.ByteArrayOutputStream()
     Console.withOut(out2) {
-      Cli.run(spark, List("treeify", "tfy_vecs", "3", "4"))
+      Cli.run(spark, List("treeify", "tfy_vecs", "3"))
     }
     assert(out2.toString.contains("already a tree store"),
       s"second treeify must be a no-op: ${out2.toString}")
@@ -298,7 +298,7 @@ class CliSpec extends AnyFunSuite {
       k = 3, nProbe = 2, nProbeTop = 2).count() > 0)
     val out3 = new java.io.ByteArrayOutputStream()
     Console.withOut(out3) {
-      Cli.run(spark, List("untreeify", "tfy_vecs", "4"))
+      Cli.run(spark, List("untreeify", "tfy_vecs"))
     }
     assert(out3.toString.contains("flat argmax"),
       s"untreeify must report the downgrade: ${out3.toString}")

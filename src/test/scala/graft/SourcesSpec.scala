@@ -171,18 +171,18 @@ class SourcesSpec extends AnyFunSuite {
         () => XrefStore.append(Seq(judge("a", "b", 1L), judge("a", "b", 2L),
           judge("b", "c", 1L)).toDF(Xref.columns: _*), "cdet_xref",
           buckets = 4),
-        () => XrefStore.compact(spark, "cdet_xref", buckets = 4),
+        () => XrefStore.compact(spark, "cdet_xref"),
         () => XrefStore.readLatest(spark, "cdet_xref").count()),
       ("cdet_doc", Seq("cdet_doc", "cdet_doc_bands"), Seq("cdet_doc_dels"),
         () => (1 to 2).foreach(_ =>
           DocStore.append(docs, "cdet_doc", buckets = 4)),
-        () => DocStore.compact(spark, "cdet_doc", buckets = 4),
+        () => DocStore.compact(spark, "cdet_doc"),
         () => DocStore.readFinal(spark, "cdet_doc").count()),
       ("cdet_vec", Seq("cdet_vec"),
         Seq("_cents", "_tops", "_leafmap", "_pq", "_codes", "_dels")
           .map("cdet_vec" + _),
         () => VecStore.init(spark, "cdet_vec", emb, col("label"), buckets = 4),
-        () => VecStore.compact(spark, "cdet_vec", buckets = 4),
+        () => VecStore.compact(spark, "cdet_vec"),
         () => VecStore.readFinal(spark, "cdet_vec").count()),
       ("cdet_graph", Seq("cdet_graph"), Seq("cdet_graph_dels"),
         () => (1 to 2).foreach(v => GraphStore.append(
@@ -235,8 +235,11 @@ class SourcesSpec extends AnyFunSuite {
 
   // the creation count wins: a write at any other count emits file
   // bucket ids the catalog's bucket spec disowns, and a bucket-pruned
-  // point read then drops rows silently. Every bucketed store table is
-  // created at 4, then appended to and compacted by calls naming 2.
+  // point read then drops rows silently. Every store is created at 4;
+  // each side table created after its main table (vector `_codes`, doc
+  // `_anchors`, xref `_mapping`, the five graph summaries) lands at the
+  // main table's 4 too. Appends then name 2, and so do the statement
+  // and fpx compacts (the other compacts name no count).
   test("every bucketed store keeps its creation bucket count") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -257,11 +260,17 @@ class SourcesSpec extends AnyFunSuite {
     val docs = (from: Long) => (from until from + 3L)
       .map(i => (i, s"doc $i says one two three four five", "s"))
       .toDF("doc_id", "text", "source")
-    val edges = (from: Int) => (from until from + 6)
-      .map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    // a 4-clique: every edge closes two triangles, so every graph
+    // summary has rows
+    val clique = (from: Int) => (for (i <- from until from + 4;
+        j <- i + 1 until from + 4) yield (s"n$i", s"n$j")).toDF("src", "dst")
+    val refresh = () => GraphStore.refresh(spark, "bk_graph", iters = 2,
+      lpRounds = 2, kcoreK = 2L, kcoreRounds = 2)
+    val summaries = Seq("_ranks" -> "id", "_support" -> "a",
+      "_cohesion" -> "node", "_communities" -> "node", "_kcore" -> "node")
     val emb = Tables.load(spark, sf, "embeddings")
     // (name, tables to drop, (checked table, bucket columns),
-    // create at 4, append at 2, compact at 2)
+    // create at 4 then build the side tables, append at 2, compact)
     val faces = Seq[(String, Seq[String], Seq[(String, Seq[String])],
         () => Unit, () => Unit, () => Unit)](
       ("statement", Seq("bk_stmt"), Seq("bk_stmt" -> Seq("canonical_id")),
@@ -272,29 +281,48 @@ class SourcesSpec extends AnyFunSuite {
         () => FpxStore.append(fpx(0), "bk_fpx", 4),
         () => FpxStore.append(fpx(4), "bk_fpx", 2),
         () => FpxStore.compact(spark, "bk_fpx", 2)),
-      ("xref", Seq("bk_xref", "bk_xref_reverse", "bk_xref_dsdels"),
-        Seq("bk_xref" -> Seq("left_id"), "bk_xref_reverse" -> Seq("right_id")),
-        () => XrefStore.append(judge(0), "bk_xref", 4),
-        () => XrefStore.append(judge(2), "bk_xref", 2),
-        () => XrefStore.compact(spark, "bk_xref", 2)),
-      ("doc", Seq("bk_doc", "bk_doc_bands", "bk_doc_dels"),
-        Seq("bk_doc" -> Seq("doc_id"), "bk_doc_bands" -> Seq("band", "key")),
-        () => DocStore.append(docs(0L), "bk_doc", buckets = 4),
+      ("xref", Seq("", "_reverse", "_mapping", "_dsdels").map("bk_xref" + _),
+        Seq("bk_xref" -> Seq("left_id"), "bk_xref_reverse" -> Seq("right_id"),
+          "bk_xref_mapping" -> Seq("entity_id")),
+        () => {
+          XrefStore.append(judge(0), "bk_xref", 4)
+          XrefStore.applyBatch(spark, judge(1), "bk_xref", 1L)
+        },
+        () => XrefStore.applyBatch(spark, judge(2), "bk_xref", 2L, 2),
+        () => {
+          XrefStore.compact(spark, "bk_xref")
+          XrefStore.compactMapping(spark, "bk_xref")
+        }),
+      ("doc", Seq("", "_bands", "_anchors", "_anchorsmeta", "_dels")
+          .map("bk_doc" + _),
+        Seq("bk_doc" -> Seq("doc_id"), "bk_doc_bands" -> Seq("band", "key"),
+          "bk_doc_anchors" -> Seq("h")),
+        () => {
+          DocStore.append(docs(0L), "bk_doc", buckets = 4)
+          DocStore.initAnchors(spark, "bk_doc", k = 4)
+        },
         () => DocStore.append(docs(2L), "bk_doc", buckets = 2),
-        () => DocStore.compact(spark, "bk_doc", buckets = 2)),
-      ("graph", Seq("bk_graph", "bk_graph_dels"),
-        Seq("bk_graph" -> Seq("src")),
-        () => GraphStore.append(edges(0), "bk_graph", 1L, buckets = 4),
-        () => GraphStore.append(edges(3), "bk_graph", 2L, buckets = 2),
-        () => GraphStore.compact(spark, "bk_graph", buckets = 2)),
-      ("vec", Seq("bk_vec", "bk_vec_cents", "bk_vec_dels"),
-        Seq("bk_vec" -> Seq("vec_id")),
-        () => VecStore.init(spark, "bk_vec", emb.filter(col("vec_id") < 40),
-          col("label"), buckets = 4),
+        () => DocStore.compact(spark, "bk_doc")),
+      ("graph", ("_dels" +: "" +: summaries.map(_._1)).map("bk_graph" + _),
+        ("bk_graph" -> Seq("src")) +:
+          summaries.map { case (s, k) => s"bk_graph$s" -> Seq(k) },
+        () => { GraphStore.append(clique(0), "bk_graph", 1L, buckets = 4)
+          refresh() },
+        () => { GraphStore.append(clique(2), "bk_graph", 2L, buckets = 2)
+          refresh() },
+        () => GraphStore.compact(spark, "bk_graph")),
+      ("vec", Seq("", "_cents", "_pq", "_codes", "_dels").map("bk_vec" + _),
+        Seq("bk_vec" -> Seq("vec_id"), "bk_vec_codes" -> Seq("vec_id")),
+        () => {
+          VecStore.init(spark, "bk_vec", emb.filter(col("vec_id") < 40),
+            col("label"), buckets = 4)
+          VecStore.trainPqCodebook(spark, "bk_vec", numSub = 8,
+            codebookK = 4)
+        },
         () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
           "bk_vec", 2),
-        () => VecStore.compact(spark, "bk_vec", 2)))
+        () => VecStore.compact(spark, "bk_vec")))
     def violations(t: String, keyCols: Seq[String]): Seq[String] = {
       val count = TableSwap.bucketsOf(spark, t)
       val files = spark.table(t).inputFiles.toSeq
@@ -333,9 +361,9 @@ class SourcesSpec extends AnyFunSuite {
     val failures = faces.flatMap {
       case (name, drop, checked, create, append, compact) =>
         drop.foreach(dropTable)
-        create()
-        val found = Seq("append" -> append, "compact" -> compact).flatMap {
-          case (step, run) => attempt(step) {
+        val found = Seq("create" -> create, "append" -> append,
+            "compact" -> compact).flatMap { case (step, run) =>
+          attempt(step) {
             run()
             checked.flatMap { case (t, k) => violations(t, k) }
           }
@@ -409,7 +437,7 @@ class SourcesSpec extends AnyFunSuite {
     val clique = (from: Int) => (for (i <- from until from + 4;
         j <- i + 1 until from + 4) yield (s"n$i", s"n$j")).toDF("src", "dst")
     val refresh = () => GraphStore.refresh(spark, "zc_graph", iters = 2,
-      lpRounds = 2, kcoreRounds = 2, buckets = 4)
+      lpRounds = 2, kcoreRounds = 2)
     val emb = Tables.load(spark, sf, "embeddings")
     // (name, tables to drop, tables checked, create, append, compact)
     val faces = Seq[(String, Seq[String], Seq[String],
@@ -427,25 +455,25 @@ class SourcesSpec extends AnyFunSuite {
         () => XrefStore.applyBatch(spark, judge(0), "zc_xref", 1L, 4),
         () => XrefStore.applyBatch(spark, judge(2), "zc_xref", 2L, 4),
         () => {
-          XrefStore.compact(spark, "zc_xref", 4)
-          XrefStore.compactMapping(spark, "zc_xref", 4)
+          XrefStore.compact(spark, "zc_xref")
+          XrefStore.compactMapping(spark, "zc_xref")
         }),
       ("doc", Seq("", "_bands", "_anchors", "_anchorsmeta", "_dels")
           .map("zc_doc" + _),
         Seq("", "_bands", "_anchors").map("zc_doc" + _),
         () => {
           DocStore.append(docs(0L), "zc_doc", buckets = 4)
-          DocStore.initAnchors(spark, "zc_doc", k = 4, buckets = 4)
+          DocStore.initAnchors(spark, "zc_doc", k = 4)
         },
         () => DocStore.append(docs(2L), "zc_doc", buckets = 4),
-        () => DocStore.compact(spark, "zc_doc", buckets = 4)),
+        () => DocStore.compact(spark, "zc_doc")),
       ("graph", Seq("", "_dels", "_ranks", "_communities", "_cohesion",
           "_kcore", "_support").map("zc_graph" + _),
         Seq("", "_ranks", "_communities", "_cohesion", "_kcore", "_support")
           .map("zc_graph" + _),
         () => { GraphStore.append(clique(0), "zc_graph", 1L, 4); refresh() },
         () => { GraphStore.append(clique(2), "zc_graph", 2L, 4); refresh() },
-        () => GraphStore.compact(spark, "zc_graph", 4)),
+        () => GraphStore.compact(spark, "zc_graph")),
       ("vec", Seq("", "_cents", "_tops", "_leafmap", "_pq", "_codes", "_dels")
           .map("zc_vec" + _),
         Seq("zc_vec", "zc_vec_codes"),
@@ -453,12 +481,12 @@ class SourcesSpec extends AnyFunSuite {
           VecStore.init(spark, "zc_vec", emb.filter(col("vec_id") < 40),
             col("label"), buckets = 4)
           VecStore.trainPqCodebook(spark, "zc_vec", numSub = 8,
-            codebookK = 4, buckets = 4)
+            codebookK = 4)
         },
         () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
           "zc_vec", 4),
-        () => VecStore.compact(spark, "zc_vec", 4)))
+        () => VecStore.compact(spark, "zc_vec")))
     val failures = faces.flatMap {
       case (name, drop, checked, create, append, compact) =>
         drop.foreach(dropTable)
@@ -692,7 +720,7 @@ class SourcesSpec extends AnyFunSuite {
       .toDF(Xref.columns: _*), "xref_cspec", buckets = 4)
     assert(XrefStore.read(spark, "xref_cspec").count() == 3)
 
-    XrefStore.compact(spark, "xref_cspec", buckets = 4)
+    XrefStore.compact(spark, "xref_cspec")
     // the OPTIMIZE FINAL analogue: the superseded (a,b,ts=1) row is
     // physically gone from BOTH tables, the ts=2 judgement survives
     val main = XrefStore.read(spark, "xref_cspec")
@@ -1031,12 +1059,12 @@ class SourcesSpec extends AnyFunSuite {
     DocStore.popIds(spark, "doc_midpop", Seq(1L).toDF("doc_id"))
     popMidCompact("doc_midpop",
       () => DocStore.popIds(spark, "doc_midpop", Seq(2L).toDF("doc_id")))(
-      DocStore.compact(spark, "doc_midpop", buckets = 4))
+      DocStore.compact(spark, "doc_midpop"))
     assert(spark.catalog.tableExists("doc_midpop_dels"),
       "a pop that landed mid-compact was retired with the snapshot")
     assert(DocStore.readFinal(spark, "doc_midpop").select("doc_id")
       .as[Long].collect().toSet == Set(3L))
-    DocStore.compact(spark, "doc_midpop", buckets = 4)
+    DocStore.compact(spark, "doc_midpop")
     assert(!spark.catalog.tableExists("doc_midpop_dels"))
     assert(DocStore.read(spark, "doc_midpop").count() == 1)
     // vec store: the inline compact and the corpus re-assignment
@@ -1044,9 +1072,9 @@ class SourcesSpec extends AnyFunSuite {
     val emb = Tables.load(spark, sf, "embeddings")
     val ids = emb.select("vec_id").as[Long].collect().sorted.take(2)
     val rewrites = Seq[(String, String => Unit)](
-      "vec_midpop_compact" -> (VecStore.compact(spark, _, buckets = 4)),
+      "vec_midpop_compact" -> (VecStore.compact(spark, _)),
       "vec_midpop_treeify" -> { t =>
-        VecStore.treeify(spark, t, topCount = 3, buckets = 4); () })
+        VecStore.treeify(spark, t, topCount = 3); () })
     for ((t, rewrite) <- rewrites) {
       Seq(t, s"${t}_cents", s"${t}_tops", s"${t}_leafmap", s"${t}_pq",
         s"${t}_codes", s"${t}_dels").foreach(dropTable)
@@ -1124,7 +1152,7 @@ class SourcesSpec extends AnyFunSuite {
       "the dsA-touching judgement must be gone from reverse lookups")
     // the mapping is derived state: stale until compact (documented)
     assert(mapping().keySet == Set("a", "b", "c"))
-    XrefStore.compact(spark, "xref_pop", buckets = 4)
+    XrefStore.compact(spark, "xref_pop")
     // physical drop from main + reverse, tombstones retired, mapping
     // rebuilt by the full resolver over the survivors — the popped
     // dataset's entity is GONE from readMapping
@@ -1211,7 +1239,7 @@ class SourcesSpec extends AnyFunSuite {
       s"FINAL over the id-bucketed store must not shuffle:\n$finalPlan")
     // compact: durable dedup, index rebuilt from the deduped docs,
     // probe still answers identically
-    DocStore.compact(spark, "doc_spec", buckets = 4)
+    DocStore.compact(spark, "doc_spec")
     assert(DocStore.read(spark, "doc_spec").count() == 3L)
     assert(DocStore.bands(spark, "doc_spec").count() == 3L * 6)
     assert(DocStore.nearDupCandidates(spark, "doc_spec", newDocs)
@@ -1286,7 +1314,7 @@ class SourcesSpec extends AnyFunSuite {
     val (k, minRun, maxDf) = (4, 6, 8)
     DocStore.append(stored, "doc_anch", buckets = 4)
     assert(!DocStore.hasAnchors(spark, "doc_anch"))
-    DocStore.initAnchors(spark, "doc_anch", k = k, buckets = 4)
+    DocStore.initAnchors(spark, "doc_anch", k = k)
     assert(DocStore.hasAnchors(spark, "doc_anch") &&
       DocStore.anchorK(spark, "doc_anch") == k)
     // the oracle: batch d14 over the union, restricted to pairs with
@@ -1326,7 +1354,7 @@ class SourcesSpec extends AnyFunSuite {
     DocStore.pop(spark, "doc_anch", Seq(50L).toDF("doc_id"))
     assert(probe() == want, "popped doc must vanish from candidates")
     // compact: anchors rebuilt from FINAL docs; answers unchanged
-    DocStore.compact(spark, "doc_anch", buckets = 4)
+    DocStore.compact(spark, "doc_anch")
     assert(probe() == want)
     assert(spark.table("doc_anch_anchors")
       .filter(col("doc_id") === 50L).count() == 0L,
@@ -1390,7 +1418,7 @@ class SourcesSpec extends AnyFunSuite {
       "doc_oob", buckets = 4)
     assert(DocStore.read(spark, "doc_oob").count() == 3L)
     // phase 1: the heavy build — live tables untouched, still serving
-    val st = DocStore.compactStage(spark, "doc_oob", buckets = 4)
+    val st = DocStore.compactStage(spark, "doc_oob")
     assert(DocStore.read(spark, "doc_oob").count() == 3L,
       "stage build must not touch the live table")
     assert(spark.table(st.docsTmp).count() == 2L,
@@ -1402,7 +1430,7 @@ class SourcesSpec extends AnyFunSuite {
     DocStore.pop(spark, "doc_oob",
       Seq(2L).toDF("doc_id"))
     // phase 2: append-bounded finish — delta caught up, swap, pop sticky
-    DocStore.compactFinish(spark, "doc_oob", st, buckets = 4)
+    DocStore.compactFinish(spark, "doc_oob", st)
     assert(DocStore.readFinal(spark, "doc_oob")
       .collect().map(_.getLong(0)).toSet == Set(1L, 4L),
       "delta doc must survive; replay collapsed; mid-build pop hidden")
@@ -1421,14 +1449,14 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists("doc_oob_dels"),
       "tombstones newer than the stage snapshot must not retire")
     // the next (inline) compact physically drops doc 2 and retires
-    DocStore.compact(spark, "doc_oob", buckets = 4)
+    DocStore.compact(spark, "doc_oob")
     assert(DocStore.read(spark, "doc_oob")
       .collect().map(_.getLong(0)).toSet == Set(1L, 4L))
     assert(!spark.catalog.tableExists("doc_oob_dels"))
     // a quiet build (no mid-build events) retires tombstones directly
     DocStore.pop(spark, "doc_oob", Seq(4L).toDF("doc_id"))
-    val st2 = DocStore.compactStage(spark, "doc_oob", buckets = 4)
-    DocStore.compactFinish(spark, "doc_oob", st2, buckets = 4)
+    val st2 = DocStore.compactStage(spark, "doc_oob")
+    DocStore.compactFinish(spark, "doc_oob", st2)
     assert(DocStore.read(spark, "doc_oob")
       .collect().map(_.getLong(0)).toSet == Set(1L),
       "pre-stage pop must drop physically at finish")
@@ -1470,7 +1498,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(cands().isEmpty)
     // compact: doc rows and their band index rows physically gone, the
     // counts reconcile (6 bands per surviving doc), dels retired
-    DocStore.compact(spark, "doc_pop", buckets = 4)
+    DocStore.compact(spark, "doc_pop")
     assert(DocStore.read(spark, "doc_pop").count() == 2)
     assert(DocStore.bands(spark, "doc_pop").count() == 2L * 6)
     assert(!spark.catalog.tableExists("doc_pop_dels"))
@@ -1481,7 +1509,7 @@ class SourcesSpec extends AnyFunSuite {
       .count() == 0)
     assert(DocStore.readFinal(spark, "doc_pop").count() == 2)
     // after compaction the id is free to ingest again
-    DocStore.compact(spark, "doc_pop", buckets = 4)
+    DocStore.compact(spark, "doc_pop")
     DocStore.append(Seq((1L, textA, "s")).toDF("doc_id", "text", "source"),
       "doc_pop", buckets = 4)
     assert(DocStore.readFinal(spark, "doc_pop").count() == 3)
@@ -1523,7 +1551,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(DocStore.readFinal(spark, "crash_docs").count() == 2)
     // replayed index rows are duplicates the probe's set build absorbs;
     // compact makes the repair durable and exact
-    DocStore.compact(spark, "crash_docs", buckets = 4)
+    DocStore.compact(spark, "crash_docs")
     assert(DocStore.bands(spark, "crash_docs").count() == 2L * 6)
 
     // --- XrefStore: MAIN (source of truth) first. The projection can
@@ -1767,9 +1795,9 @@ class SourcesSpec extends AnyFunSuite {
       StatementStore.append(batch(k), "zstore_plain", buckets = 2,
         writerOptions = opts)
     }
-    assert(StatementStore.zLayoutOf(spark, "zstore")
+    assert(ZOrderLayout.layoutOf(spark, "zstore")
       .contains((Seq("first_seen", "last_seen"), 16)))
-    assert(StatementStore.zLayoutOf(spark, "zstore_plain").isEmpty)
+    assert(ZOrderLayout.layoutOf(spark, "zstore_plain").isEmpty)
     // (1) FINAL parity: same logical rows, no __z anywhere
     def finalSet(t: String) = StatementStore.readFinal(spark, t)
       .collect().map(_.toSeq).toSet
@@ -1809,7 +1837,7 @@ class SourcesSpec extends AnyFunSuite {
     // FINAL is still identical
     StatementStore.compact(spark, "zstore", buckets = 2,
       writerOptions = opts)
-    assert(StatementStore.zLayoutOf(spark, "zstore")
+    assert(ZOrderLayout.layoutOf(spark, "zstore")
       .contains((Seq("first_seen", "last_seen"), 16)))
     assert(finalSet("zstore") == finalSet("zstore_plain"),
       "compact broke FINAL on the z store")
@@ -1917,7 +1945,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(cand("zdocs") == cand("zdocs_plain"))
     // (4) the layout survives compact (corpus-global re-layout) and
     // appends keep honoring it without the caller re-passing it
-    DocStore.compact(spark, "zdocs", buckets = 2, writerOptions = opts)
+    DocStore.compact(spark, "zdocs", writerOptions = opts)
     assert(ZOrderLayout.layoutOf(spark, "zdocs")
       .contains((Seq("ts", "score"), 16)))
     assert(finalSet("zdocs") == finalSet("zdocs_plain"),
@@ -1955,8 +1983,7 @@ class SourcesSpec extends AnyFunSuite {
     val b1 = Seq(("a", "b"), ("b", "c"), ("a", "c"),
       ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")).toDF("src", "dst")
     GraphStore.append(b1, "gstore", ver = 1, buckets = 2)
-    GraphStore.refresh(spark, "gstore", minSupport = 1L, buckets = 2,
-      kcoreK = 2L)
+    GraphStore.refresh(spark, "gstore", minSupport = 1L, kcoreK = 2L)
     val served1 = rankMap(GraphStore.ranks(spark, "gstore"))
     assert(served1 == rankMap(PageRank.ranks(
       GraphStore.edges(spark, "gstore"))), "served rank != recompute")
@@ -1993,8 +2020,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(GraphStore.staleness(spark, "gstore") == ((1L, 2L)))
     def pinned() = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val pinnedBefore = pinned()
-    GraphStore.refresh(spark, "gstore", minSupport = 1L, buckets = 2,
-      kcoreK = 2L)
+    GraphStore.refresh(spark, "gstore", minSupport = 1L, kcoreK = 2L)
     assert(pinned() == pinnedBefore, "a refresh tick must leave nothing pinned")
     val served2 = rankMap(GraphStore.ranks(spark, "gstore"))
     assert(served2 == rankMap(PageRank.ranks(
@@ -2031,8 +2057,7 @@ class SourcesSpec extends AnyFunSuite {
     // refreshed ranks are bit-identical
     GraphStore.append(b2, "gstore", ver = 3, buckets = 2)
     assert(GraphStore.edges(spark, "gstore").count() == 9)
-    GraphStore.refresh(spark, "gstore", minSupport = 1L, buckets = 2,
-      kcoreK = 2L)
+    GraphStore.refresh(spark, "gstore", minSupport = 1L, kcoreK = 2L)
     assert(rankMap(GraphStore.ranks(spark, "gstore")) == served2,
       "replayed batch moved the rank vector")
     assert(coreMap(GraphStore.kcore(spark, "gstore")) ==
@@ -2053,8 +2078,7 @@ class SourcesSpec extends AnyFunSuite {
       .exists(_.getString(0) == "x"))
     assert(!GraphStore.kcore(spark, "gstore").collect()
       .exists(_.getString(0) == "x"))
-    GraphStore.refresh(spark, "gstore", minSupport = 1L, buckets = 2,
-      kcoreK = 2L)
+    GraphStore.refresh(spark, "gstore", minSupport = 1L, kcoreK = 2L)
     assert(!spark.catalog.tableExists("gstore_dels"),
       "tombstones must retire at refresh")
     val served3 = rankMap(GraphStore.ranks(spark, "gstore"))
@@ -2091,7 +2115,7 @@ class SourcesSpec extends AnyFunSuite {
       .toDF("src", "dst")
     GraphStore.append(b1, t, ver = 1, buckets = 2)
     val edgeFiles1 = spark.table(t).inputFiles.toSet
-    GraphStore.refresh(spark, t, minSupport = 1L, buckets = 2,
+    GraphStore.refresh(spark, t, minSupport = 1L,
       kcoreK = 2L, compactEdges = false)
     assert(spark.table(t).inputFiles.toSet == edgeFiles1,
       "a summary tick must not rewrite edge files")
@@ -2101,7 +2125,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(GraphStore.staleness(spark, t) == ((1L, 1L)))
     // NO-OP tick: nothing changed — summaries untouched too
     val rankFiles1 = spark.table(s"${t}_ranks").inputFiles.toSet
-    GraphStore.refresh(spark, t, minSupport = 1L, buckets = 2,
+    GraphStore.refresh(spark, t, minSupport = 1L,
       kcoreK = 2L, compactEdges = false)
     assert(spark.table(s"${t}_ranks").inputFiles.toSet == rankFiles1,
       "a no-op tick must not rewrite the summaries")
@@ -2110,7 +2134,7 @@ class SourcesSpec extends AnyFunSuite {
     // support table keeps its own snapshot stamp
     GraphStore.append(b1, t, ver = 2, buckets = 2)
     val sAsOf1 = supportAsOf()
-    GraphStore.refresh(spark, t, minSupport = 1L, buckets = 2,
+    GraphStore.refresh(spark, t, minSupport = 1L,
       kcoreK = 2L, compactEdges = false)
     assert(GraphStore.staleness(spark, t) == ((2L, 2L)),
       "a replay tick must catch the as_of up")
@@ -2122,7 +2146,7 @@ class SourcesSpec extends AnyFunSuite {
     // a REAL batch takes the normal delta tick (support restamped)
     val b2 = Seq(("x", "y"), ("y", "z"), ("x", "z")).toDF("src", "dst")
     GraphStore.append(b2, t, ver = 3, buckets = 2)
-    GraphStore.refresh(spark, t, minSupport = 1L, buckets = 2,
+    GraphStore.refresh(spark, t, minSupport = 1L,
       kcoreK = 2L, compactEdges = false)
     assert(supportAsOf() == 3L)
     assert(rankMap(GraphStore.ranks(spark, t)) ==
@@ -2144,7 +2168,7 @@ class SourcesSpec extends AnyFunSuite {
     // ticks delta and equals the from-scratch recomputes
     val b3 = Seq(("z", "w"), ("y", "w")).toDF("src", "dst")
     GraphStore.append(b3, t, ver = 4, buckets = 2)
-    GraphStore.refresh(spark, t, minSupport = 1L, buckets = 2,
+    GraphStore.refresh(spark, t, minSupport = 1L,
       kcoreK = 2L, compactEdges = false)
     assert(spark.table(s"${t}_support")
       .select(col("a"), col("b"), col("support")).collect()
@@ -2159,7 +2183,7 @@ class SourcesSpec extends AnyFunSuite {
     // + different iters must RECOMPUTE at the new params, not restamp
     GraphStore.append(b3, t, ver = 5, buckets = 2)
     GraphStore.refresh(spark, t, iters = 5, minSupport = 1L,
-      buckets = 2, kcoreK = 2L, compactEdges = false)
+      kcoreK = 2L, compactEdges = false)
     assert(rankMap(GraphStore.ranks(spark, t)) ==
       rankMap(PageRank.ranks(GraphStore.edges(spark, t), iters = 5)),
       "a changed-params tick must recompute at the new params")
@@ -2176,7 +2200,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(!GraphStore.ranks(spark, t).collect()
       .exists(_.getString(0) == "x"), "popped node must stay masked")
     GraphStore.refresh(spark, t, iters = 5, minSupport = 1L,
-      buckets = 2, kcoreK = 2L)
+      kcoreK = 2L)
     assert(!spark.catalog.tableExists(s"${t}_dels"),
       "the compacting refresh must retire the tombstones")
     assert(rankMap(GraphStore.ranks(spark, t)) ==

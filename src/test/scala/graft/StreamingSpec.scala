@@ -718,8 +718,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding"))
     graft.sources.VecStore.init(spark, "st14c_vecs", storedSide,
       col("label"), buckets = 4)
-    graft.sources.VecStore.trainPqCodebook(spark, "st14c_vecs",
-      buckets = 4)
+    graft.sources.VecStore.trainPqCodebook(spark, "st14c_vecs")
     val n0 = graft.sources.VecStore.readFinal(spark, "st14c_vecs").count()
     val rows = batchSide.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -727,7 +726,7 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ingestVecs(
       in.toDF().toDF("vec_id", "embedding"), "st14c_vecs",
-      compactEvery = 2, buckets = 4, asyncCompact = true)
+      compactEvery = 2, asyncCompact = true)
       .option("checkpointLocation",
         checkpointDir("st14c_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -802,7 +801,7 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ingestVecs(
       in.toDF().toDF("vec_id", "embedding"), "st14_vecs",
-      compactEvery = 2, buckets = 4)
+      compactEvery = 2)
       .option("checkpointLocation",
         checkpointDir("st14_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -855,7 +854,7 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ingestVecs(
       in.toDF().toDF("vec_id", "embedding"), "st14t_vecs",
-      compactEvery = 0, buckets = 4)
+      compactEvery = 0)
       .option("checkpointLocation",
         checkpointDir("st14t_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -1087,7 +1086,7 @@ class StreamingSpec extends AnyFunSuite {
     val emb = Tables.load(spark, sf, "embeddings")
     graft.sources.VecStore.init(spark, "st16_vecs", emb,
       col("label"), buckets = 4)
-    graft.sources.VecStore.trainPqCodebook(spark, "st16_vecs", buckets = 4)
+    graft.sources.VecStore.trainPqCodebook(spark, "st16_vecs")
     // the victim: vec 7; the probe is its exact copy under a fresh id,
     // so at minCos ≥ 0.999 the ONLY possible verdict is dup_of = 7
     val victim = 7L
@@ -1112,7 +1111,7 @@ class StreamingSpec extends AnyFunSuite {
       s"precondition: victim must serve on every face ($ivf0 / $pq0)")
     val in = MemoryStream[Long]
     val q = Streams.takedownVecs(
-      in.toDF().toDF("vec_id"), "st16_vecs", buckets = 4)
+      in.toDF().toDF("vec_id"), "st16_vecs")
       .option("checkpointLocation",
         checkpointDir("st16v_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()
@@ -1150,8 +1149,7 @@ class StreamingSpec extends AnyFunSuite {
     val storedSide = emb.filter(col("vec_id") % 10 =!= 0)
     graft.sources.VecStore.init(spark, "st14b_vecs", storedSide,
       col("label"), buckets = 4)
-    graft.sources.VecStore.trainPqCodebook(spark, "st14b_vecs",
-      buckets = 4)
+    graft.sources.VecStore.trainPqCodebook(spark, "st14b_vecs")
     def hashes(): Seq[String] = {
       // the retrain swaps _pq/_codes in the stream's CLONED session —
       // this observer refreshes before reading (the documented
@@ -1181,7 +1179,7 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Seq[Float])]
     val q = Streams.ingestVecs(
       in.toDF().toDF("vec_id", "embedding"), "st14b_vecs",
-      buckets = 4, retrainEvery = 1)
+      retrainEvery = 1)
       .option("checkpointLocation",
         checkpointDir("st14b_ckpt"))
       .trigger(Trigger.ProcessingTime(0)).start()

@@ -171,7 +171,7 @@ class VecStoreSpec extends AnyFunSuite {
       spark, "vec_compact",
       batch.select(col("vec_id"), col("embedding")), minCos = 0.35))
     val n = VecStore.readFinal(spark, "vec_compact").count()
-    VecStore.compact(spark, "vec_compact", buckets = 4)
+    VecStore.compact(spark, "vec_compact")
     assert(VecStore.read(spark, "vec_compact").count() == n)
     val after = verdictMap(VecStore.nearDupVerdicts(
       spark, "vec_compact",
@@ -330,7 +330,7 @@ class VecStoreSpec extends AnyFunSuite {
       .foreach(r => assert(viaOp(r.getLong(0)) == r.get(1).toString))
     // migrate's sampled drift check recomputes through the SAME tree
     // descent — a healthy tree store schedules no repair
-    assert(VecStore.migrate(spark, "vec_tree", buckets = 4).isEmpty)
+    assert(VecStore.migrate(spark, "vec_tree").isEmpty)
     // re-init WITHOUT the option: tree tables gone, assignment is the
     // flat argmax again — no half-and-half residue
     VecStore.init(spark, "vec_tree", stored, col("label"), buckets = 4)
@@ -431,7 +431,7 @@ class VecStoreSpec extends AnyFunSuite {
       k = 5, nProbe = 3, nProbeTop = 2)
       .filter(col("neighbor_id") === victim).count()
     assert(hits == 0, "popped id still served by tree search")
-    VecStore.compact(spark, "vec_tdup", buckets = 4)
+    VecStore.compact(spark, "vec_tdup")
     assert(spark.catalog.tableExists("vec_tdup_tops"),
       "compact must keep the tree quantizer")
     assert(VecStore.readFinal(spark, "vec_tdup")
@@ -443,7 +443,7 @@ class VecStoreSpec extends AnyFunSuite {
     VecStore.init(spark, "vec_tpq", stored, col("label"), buckets = 4,
       treeTopCount = 3)
     VecStore.trainPqCodebook(spark, "vec_tpq", numSub = 8,
-      codebookK = 8, dims = 64, buckets = 4)
+      codebookK = 8, dims = 64)
     val queries = batch.select(col("vec_id"), col("embedding")).limit(5)
       .localCheckpoint()
     val a = VecStore.ivfPqTopK(spark, "vec_tpq", queries, k = 5,
@@ -498,7 +498,7 @@ class VecStoreSpec extends AnyFunSuite {
   test("store-served IVF+PQ equals the operator on stored artifacts; codes follow appends") {
     dropStore("vec_pqserve")
     VecStore.init(spark, "vec_pqserve", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_pqserve", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_pqserve")
     val queries = batch.select(col("vec_id"), col("embedding")).limit(10)
       .localCheckpoint()
     val viaStore = VecStore.ivfPqTopK(spark, "vec_pqserve", queries,
@@ -529,7 +529,7 @@ class VecStoreSpec extends AnyFunSuite {
       .filter(col("vec_id") >= 500000).count() == 8)
     // a retrain is also a rebuild of the codes (staged swap) — serving
     // keeps working and the hashes stay in step
-    VecStore.trainPqCodebook(spark, "vec_pqserve", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_pqserve")
     assert(VecStore.ivfPqTopK(spark, "vec_pqserve", queries, 5, 3)
       .count() > 0)
     // compact rebuilds the codes cache too: replay the corpus, compact,
@@ -538,7 +538,7 @@ class VecStoreSpec extends AnyFunSuite {
       stored.select(col("vec_id"), col("embedding")), "vec_pqserve",
       buckets = 4)
     val nVec = VecStore.readFinal(spark, "vec_pqserve").count()
-    VecStore.compact(spark, "vec_pqserve", buckets = 4)
+    VecStore.compact(spark, "vec_pqserve")
     assert(VecStore.read(spark, "vec_pqserve").count() == nVec)
     assert(VecStore.codes(spark, "vec_pqserve").count() == nVec * 8,
       "compact must rebuild the codes cache deduplicated")
@@ -570,7 +570,7 @@ class VecStoreSpec extends AnyFunSuite {
   test("append refuses when the codebook exists without its codes cache") {
     dropStore("vec_nocodes")
     VecStore.init(spark, "vec_nocodes", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_nocodes", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_nocodes")
     TableSwap.dropManaged(spark, "vec_nocodes_codes")
     val e = intercept[IllegalArgumentException] {
       VecStore.append(spark,
@@ -579,7 +579,7 @@ class VecStoreSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("rerun trainPqCodebook"))
     // the named repair restores appendability
-    VecStore.trainPqCodebook(spark, "vec_nocodes", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_nocodes")
     VecStore.append(spark,
       batch.select(col("vec_id"), col("embedding")), "vec_nocodes",
       buckets = 4)
@@ -596,7 +596,7 @@ class VecStoreSpec extends AnyFunSuite {
     import spark.implicits._
     dropStore("vec_pop")
     VecStore.init(spark, "vec_pop", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_pop", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_pop")
     val queries = batch.select(col("vec_id"), col("embedding")).limit(10)
       .localCheckpoint()
     def neighbors(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -625,7 +625,7 @@ class VecStoreSpec extends AnyFunSuite {
     assert(VecStore.readFinal(spark, "vec_pop").count() == n - 1)
     // compact: vector row and its 8 code rows physically gone, the
     // counts reconcile (codes = 8 per surviving vector), dels retired
-    VecStore.compact(spark, "vec_pop", buckets = 4)
+    VecStore.compact(spark, "vec_pop")
     assert(VecStore.read(spark, "vec_pop").count() == n - 1)
     assert(VecStore.codes(spark, "vec_pop").count() == (n - 1) * 8)
     assert(VecStore.codes(spark, "vec_pop")
@@ -653,7 +653,7 @@ class VecStoreSpec extends AnyFunSuite {
     import spark.implicits._
     dropStore("vec_cstage")
     VecStore.init(spark, "vec_cstage", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_cstage", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_cstage")
     // bloat: a full re-delivery; then a pre-stage takedown
     VecStore.append(spark, stored.select(col("vec_id"), col("embedding")),
       "vec_cstage", buckets = 4)
@@ -666,14 +666,14 @@ class VecStoreSpec extends AnyFunSuite {
     VecStore.pop(spark, "vec_cstage", Seq(victim1).toDF("vec_id"))
     val n = stored.count()
     val b = batch.count()
-    val st = VecStore.compactStage(spark, "vec_cstage", buckets = 4)
+    val st = VecStore.compactStage(spark, "vec_cstage")
     // MID-BUILD: a fresh batch lands and a second id is taken down
     VecStore.append(spark, batch.select(col("vec_id"), col("embedding")),
       "vec_cstage", buckets = 4)
     val victim2 = stored.filter(col("vec_id") =!= victim1)
       .select(col("vec_id")).head().getLong(0)
     VecStore.popIds(spark, "vec_cstage", Seq(victim2).toDF("vec_id"))
-    VecStore.compactFinish(spark, "vec_cstage", st, buckets = 4)
+    VecStore.compactFinish(spark, "vec_cstage", st)
     // FINAL: stored − both victims + the mid-build batch
     assert(VecStore.readFinal(spark, "vec_cstage").count() == n - 2 + b)
     // the swap deduped the re-delivery and physically dropped victim1
@@ -692,7 +692,7 @@ class VecStoreSpec extends AnyFunSuite {
     // a QUIET stage/finish pair: victim2 drops physically, tombstones
     // retire, counts reconcile exactly
     VecStore.compactFinish(spark, "vec_cstage",
-      VecStore.compactStage(spark, "vec_cstage", buckets = 4), buckets = 4)
+      VecStore.compactStage(spark, "vec_cstage"))
     assert(!spark.catalog.tableExists("vec_cstage_dels"))
     assert(VecStore.read(spark, "vec_cstage").count() == n - 2 + b)
     assert(VecStore.codes(spark, "vec_cstage").count() == (n - 2 + b) * 8)
@@ -708,10 +708,9 @@ class VecStoreSpec extends AnyFunSuite {
   test("treeify: populated flat store opts into tree mode in place; untreeify reverses") {
     dropStore("vec_tify")
     VecStore.init(spark, "vec_tify", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_tify", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_tify")
     val n = stored.count()
-    val acts = VecStore.treeify(spark, "vec_tify", topCount = 3,
-      buckets = 4)
+    val acts = VecStore.treeify(spark, "vec_tify", topCount = 3)
     assert(acts.size == 2, acts.mkString("; "))
     assert(spark.catalog.tableExists("vec_tify_tops") &&
       spark.catalog.tableExists("vec_tify_leafmap"))
@@ -744,10 +743,10 @@ class VecStoreSpec extends AnyFunSuite {
       .count() > 0)
     // healthy upgraded store: migrate schedules nothing; re-treeify
     // is a no-op
-    assert(VecStore.migrate(spark, "vec_tify", buckets = 4).isEmpty)
-    assert(VecStore.treeify(spark, "vec_tify", 3, buckets = 4).isEmpty)
+    assert(VecStore.migrate(spark, "vec_tify").isEmpty)
+    assert(VecStore.treeify(spark, "vec_tify", 3).isEmpty)
     // reverse: flat again — assignment ≡ the flat argmax, physically
-    assert(VecStore.untreeify(spark, "vec_tify", buckets = 4).size == 2)
+    assert(VecStore.untreeify(spark, "vec_tify").size == 2)
     assert(!spark.catalog.tableExists("vec_tify_tops") &&
       !spark.catalog.tableExists("vec_tify_leafmap"))
     val flat = Similarity.nearestLists(
@@ -760,8 +759,8 @@ class VecStoreSpec extends AnyFunSuite {
       .select(col("vec_id"), col("list_id")).collect()
       .foreach(r => assert(flat(r.getLong(0)) == r.get(1).toString))
     assert(VecStore.codes(spark, "vec_tify").count() == n * 8)
-    assert(VecStore.untreeify(spark, "vec_tify", buckets = 4).isEmpty)
-    assert(VecStore.migrate(spark, "vec_tify", buckets = 4).isEmpty)
+    assert(VecStore.untreeify(spark, "vec_tify").isEmpty)
+    assert(VecStore.migrate(spark, "vec_tify").isEmpty)
   }
 
   // the drift monitor's exactness anchor: when the corpus IS the seed
@@ -778,7 +777,7 @@ class VecStoreSpec extends AnyFunSuite {
   test("staged retrain: no refusal window, crash state serves old, migrate prunes") {
     dropStore("vec_retrain")
     VecStore.init(spark, "vec_retrain", stored, col("label"), buckets = 4)
-    VecStore.trainPqCodebook(spark, "vec_retrain", buckets = 4)
+    VecStore.trainPqCodebook(spark, "vec_retrain")
     val queries = batch.select(col("vec_id"), col("embedding")).limit(5)
       .localCheckpoint()
     def hash(): String = spark.table("vec_retrain_pq")
@@ -815,7 +814,7 @@ class VecStoreSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq == Seq(h0),
       "mid-crash append must stamp with the SERVING generation")
     // ---- migrate prunes the leftover generation ----
-    val actions = VecStore.migrate(spark, "vec_retrain", buckets = 4)
+    val actions = VecStore.migrate(spark, "vec_retrain")
     assert(actions.exists(_.contains("pruned stale codebook")),
       s"migrate must report the pruned generation: $actions")
     assert(hash() == h0, "the serving generation must survive the prune")
@@ -823,7 +822,7 @@ class VecStoreSpec extends AnyFunSuite {
     VecStore.append(spark,
       batch.limit(20).select((col("vec_id") + 800000).as("vec_id"),
         col("embedding")), "vec_retrain", buckets = 4)
-    VecStore.retrainPqStaged(spark, "vec_retrain", buckets = 4)
+    VecStore.retrainPqStaged(spark, "vec_retrain")
     val h1 = hash()
     assert(h1 != h0 && !h1.contains(","),
       s"retrain must land exactly one NEW generation: $h1")
@@ -834,7 +833,7 @@ class VecStoreSpec extends AnyFunSuite {
     assert(serve().nonEmpty)
     // ---- unchanged corpus: retrain is a no-op, never a duplicate ----
     val rowsBefore = spark.table("vec_retrain_pq").count()
-    VecStore.retrainPqStaged(spark, "vec_retrain", buckets = 4)
+    VecStore.retrainPqStaged(spark, "vec_retrain")
     assert(hash() == h1 &&
       spark.table("vec_retrain_pq").count() == rowsBefore,
       "an unchanged-corpus retrain must change nothing")
