@@ -115,7 +115,7 @@ object PipelineQueries {
       .stripMargin
 
   def d3DedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(docs(s, dir), numHashes = 12, rowsPerBand = 2)
+    Dedup.minhashLsh(docs(s, dir))
 
   /** The MinHash-LSH candidate-pair derivation as CTEs (shared by the
     * d3 and d6 oracles).
@@ -145,7 +145,7 @@ object PipelineQueries {
     s"WITH $d3PairsCte SELECT left_id, right_id FROM lshpairs"
 
   def d6DedupClusters(s: SparkSession, dir: String): DataFrame =
-    Dedup.nearDupClusters(docs(s, dir), numHashes = 12, rowsPerBand = 2)
+    Dedup.nearDupClusters(docs(s, dir))
 
   /** Recursive transitive closure over the symmetric LSH pair graph;
     * cluster canonical = min reachable doc_id. Shared by the d6/d6b and
@@ -178,7 +178,7 @@ object PipelineQueries {
     * just the spec-level agreement check.
     */
   def d6bDedupClustersStars(s: SparkSession, dir: String): DataFrame =
-    Dedup.nearDupClusters(docs(s, dir), numHashes = 12, rowsPerBand = 2,
+    Dedup.nearDupClusters(docs(s, dir),
       components = df => graft.operators.Components.minLabelStars(df))
 
   /** d8 — canonical-document selection over the d6 clusters: keep the
@@ -189,7 +189,7 @@ object PipelineQueries {
   def d8DedupKeepBest(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     Dedup.keepBest(d,
-      Dedup.nearDupClusters(d, numHashes = 12, rowsPerBand = 2))
+      Dedup.nearDupClusters(d))
   }
 
   val d8Sql: String =

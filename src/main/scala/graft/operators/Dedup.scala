@@ -295,6 +295,29 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
+  /** The MinHash band shape of the near-dup faces: [[bandHashes]]
+    * hashes in bands of [[bandRows]] rows. A DocStore `_bands` index
+    * and st12's stream key on it and d3 defaults to it, so their band
+    * keys agree; an index probed or rebuilt under another shape shares
+    * no band key with the one it was written under, and would miss
+    * every candidate silently.
+    */
+  val bandHashes = 12
+  val bandRows = 2
+
+  /** The band keys of a document `text`, one per band (the band index
+    * is the key's array position): ONE fused kernel, words →
+    * shingles → signature → band keys, with no per-row shingle,
+    * signature or struct array materializing (r8; spec-equal to the
+    * composed signature-then-slice form,
+    * [[minhashBandKeysComposed]]). Callers keep only texts of at least
+    * 3 words.
+    */
+  def bandKeys(text: Column, numHashes: Int = bandHashes,
+      rowsPerBand: Int = bandRows): Column =
+    graft.functions.MinHashSignatureExpression.minhashBands(
+      words(text), 3, numHashes, rowsPerBand)
+
   /** d3 — MinHash + LSH candidate pairs. `numHashes` hashes split into
     * bands of `rowsPerBand`; docs sharing any band key become a pair.
     * The scale path for 100 TB dedup: band keys are computed in the
@@ -304,19 +327,13 @@ object Dedup {
     */
   def minhashLsh(
       documents: DataFrame,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
+      numHashes: Int = bandHashes,
+      rowsPerBand: Int = bandRows,
       maxBucket: Int = 1000): DataFrame = {
-    // ONE fused kernel for the whole scan: words → shingles →
-    // signature → band keys, no per-row shingle/signature/struct
-    // array ever materializing (r8; spec-equal to the composed
-    // signature-then-slice form, [[minhashBandKeysComposed]]). The
-    // band index is the key's array position.
     val bands = documents
       .filter(size(words(col("text"))) >= 3)
-      .select(col("doc_id"), posexplode(
-        graft.functions.MinHashSignatureExpression.minhashBands(
-          words(col("text")), 3, numHashes, rowsPerBand)))
+      .select(col("doc_id"),
+        posexplode(bandKeys(col("text"), numHashes, rowsPerBand)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("key"))
     // sketch-guarded set build (a degenerate corpus — e.g. millions of
     // near-identical boilerplate docs — lands in ONE bucket; the guard
@@ -353,8 +370,8 @@ object Dedup {
     */
   def nearDupClusters(
       documents: DataFrame,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2,
+      numHashes: Int = bandHashes,
+      rowsPerBand: Int = bandRows,
       maxBucket: Int = 1000,
       // the components engine: min-propagation (O(diameter) rounds,
       // right for near-clique LSH graphs) by default; pass

@@ -78,6 +78,14 @@ final case class BucketedLayout(
       writerOptions: Map[String, String] = Map.empty): Unit =
     writeAt(df, table, (buckets, zorder), writerOptions)
 
+  /** Append `df` to the existing `table` under its catalog's bucket
+    * count and z declaration; an absent table fails the write.
+    */
+  def append(df: DataFrame, table: String): Unit =
+    writeAt(df, table, throw new IllegalArgumentException(
+      s"BucketedLayout: `$table` does not exist; create it through " +
+        "its store"), Map.empty)
+
   /** Append `df` to `table`, a side table of the store whose main
     * table is `main`: created when absent at `main`'s catalog bucket
     * count, never at its z declaration.

@@ -53,14 +53,6 @@ object DocStore {
   private val anchorLayout =
     BucketedLayout(bucketCols = Seq("h"), sortCols = Seq("h"))
 
-  /** The MinHash band shape of the `_bands` index — batch d3's and
-    * streaming st12's. It is fixed, not a parameter: an index probed
-    * or rebuilt under another shape shares no band key with the one
-    * it was written under, and would miss every candidate silently.
-    */
-  private val numHashes = 12
-  private val rowsPerBand = 2
-
   /** Append a document batch and its band-key index rows. The INDEX
     * lands first: the two writes are not atomic, and the two possible
     * crash states are not symmetric — orphan index rows (index landed,
@@ -96,9 +88,7 @@ object DocStore {
   private def bandKeys(docs: DataFrame): DataFrame =
     docs
       .filter(size(Dedup.words(col("text"))) >= 3)
-      .select(col("doc_id"), posexplode(
-        graft.functions.MinHashSignatureExpression.minhashBands(
-          Dedup.words(col("text")), 3, numHashes, rowsPerBand)))
+      .select(col("doc_id"), posexplode(Dedup.bandKeys(col("text"))))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("key"))
 
   /** The positional-anchor projection of the EXACT-substring index

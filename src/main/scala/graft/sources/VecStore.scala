@@ -62,7 +62,8 @@ object VecStore {
   /** (Re)create the store: train the coarse quantizer on the initial
     * corpus (grouped by `key` — a label, shard, or clustering column,
     * exactly [[Similarity.centroids]]' contract), persist it, then
-    * append the corpus through the normal write path.
+    * write the assigned corpus, creating the main table at `buckets`:
+    * the one call that names the store's bucket count.
     *
     * init on an EXISTING store drops every table first (the
     * `--recreate` semantics): re-initializing is the documented drift
@@ -114,7 +115,8 @@ object VecStore {
       leafMap.write.mode(SaveMode.Overwrite).format("parquet")
         .saveAsTable(s"${table}_leafmap")
     }
-    append(spark, embeddings.select(col("vec_id"), col("embedding")),
+    listedLayout.write(withAssignment(spark,
+      embeddings.select(col("vec_id"), col("embedding")), table),
       table, buckets)
   }
 
@@ -132,14 +134,10 @@ object VecStore {
   /** Append a vector batch: scan-local nearest-centroid assignment
     * against the stored quantizer, then one partitioned + bucketed
     * write. No index table to keep in step — the row lands IN its
-    * inverted list. `buckets` applies only when this call creates the
-    * table; an existing store keeps its creation count.
+    * inverted list. The store must exist: [[init]] creates it and
+    * names its bucket count.
     */
-  def append(
-      spark: SparkSession,
-      vectors: DataFrame,
-      table: String,
-      buckets: Int = 16): Unit = {
+  def append(spark: SparkSession, vectors: DataFrame, table: String): Unit = {
     val hasPq = spark.catalog.tableExists(s"${table}_pq")
     // a codebook without its codes cache is the crash state between
     // trainPqCodebook's two writes — appending would CREATE a cache
@@ -163,7 +161,7 @@ object VecStore {
     // once so a non-deterministic source cannot desync codes from
     // vectors (the DocStore probe lesson)
     val assigned = if (hasPq) assigned0.localCheckpoint() else assigned0
-    listedLayout.write(assigned, table, buckets)
+    listedLayout.append(assigned, table)
     // VECTORS first (source of truth): a crash here leaves the codes
     // cache lagging — PQ search misses the batch until the next
     // encode/retrain — but codes can never reference vectors that do

@@ -842,8 +842,8 @@ object Streams {
 
   /** st12 — streaming NEAR-dup guard: the continuous-ingest face of
     * batch d3 (MinHash-LSH). Each arriving document expands to its LSH
-    * band keys inside the micro-batch scan — the SAME fused
-    * words→shingles→signature→bands kernel as batch d3, so a batch
+    * band keys inside the micro-batch scan — the SAME kernel and band
+    * shape as batch d3 ([[graft.operators.Dedup.bandKeys]]), so a batch
     * backfill and the live stream compute identical keys — and a keyed
     * state store remembers, per band key, the FIRST document that
     * claimed it inside the horizon. Every later arrival sharing a key
@@ -864,17 +864,14 @@ object Streams {
   def nearDupStream(
       docs: DataFrame,
       watermark: String = "10 minutes",
-      horizonMs: Long = 10 * 60 * 1000,
-      numHashes: Int = 12,
-      rowsPerBand: Int = 2): Dataset[NearDupHit] = {
+      horizonMs: Long = 10 * 60 * 1000): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
     import graft.operators.Dedup
     val bands = docs
       .filter(size(Dedup.words(col("text"))) >= 3)
       .withWatermark("ts", watermark)
-      .select(col("doc_id"), col("ts"), posexplode(
-        graft.functions.MinHashSignatureExpression.minhashBands(
-          Dedup.words(col("text")), 3, numHashes, rowsPerBand)))
+      .select(col("doc_id"), col("ts"),
+        posexplode(Dedup.bandKeys(col("text"))))
       .select(col("doc_id"), col("ts"), col("pos").as("band"),
         col("col").as("key"))
       .as[BandRow]

@@ -238,8 +238,10 @@ class SourcesSpec extends AnyFunSuite {
   // point read then drops rows silently. Every store is created at 4;
   // each side table created after its main table (vector `_codes`, doc
   // `_anchors`, xref `_mapping`, the five graph summaries) lands at the
-  // main table's 4 too. Appends then name 2, and so do the statement
-  // and fpx compacts (the other compacts name no count).
+  // main table's 4 too. Appends then name 2 where their call can
+  // create the main table (the vector append cannot, and names no
+  // count), and so do the statement and fpx compacts (the other
+  // compacts name no count).
   test("every bucketed store keeps its creation bucket count") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -321,7 +323,7 @@ class SourcesSpec extends AnyFunSuite {
         },
         () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
-          "bk_vec", 2),
+          "bk_vec"),
         () => VecStore.compact(spark, "bk_vec")))
     def violations(t: String, keyCols: Seq[String]): Seq[String] = {
       val count = TableSwap.bucketsOf(spark, t)
@@ -485,7 +487,7 @@ class SourcesSpec extends AnyFunSuite {
         },
         () => VecStore.append(spark, emb.filter(col("vec_id") < 8)
           .select((col("vec_id") + 1000L).as("vec_id"), col("embedding")),
-          "zc_vec", 4),
+          "zc_vec"),
         () => VecStore.compact(spark, "zc_vec")))
     val failures = faces.flatMap {
       case (name, drop, checked, create, append, compact) =>
@@ -1617,6 +1619,13 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.catalog.tableExists("crash_vec_cents"))
     assert(!spark.catalog.tableExists("crash_vec"))
     intercept[Exception] { VecStore.readFinal(spark, "crash_vec").count() }
+    // only init names the corpus table's bucket count, so an append
+    // into the crash state refuses too instead of creating a corpus
+    // that holds only its batch
+    val noCorpus = intercept[IllegalArgumentException] {
+      VecStore.append(spark, vecs.select("vec_id", "embedding"), "crash_vec")
+    }
+    assert(noCorpus.getMessage.contains("`crash_vec` does not exist"))
     assert(new java.io.File(wh, "crash_vec").delete())
     VecStore.init(spark, "crash_vec", vecs,
       org.apache.spark.sql.functions.col("label"), buckets = 4)

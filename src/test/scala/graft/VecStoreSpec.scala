@@ -111,7 +111,7 @@ class VecStoreSpec extends AnyFunSuite {
       dropStore(t)
       VecStore.init(spark, t, corpus, col("label"), buckets = 2,
         treeTopCount = top)
-      VecStore.append(spark, zero, t, buckets = 2)
+      VecStore.append(spark, zero, t)
       assert(VecStore.read(spark, t).filter(col("vec_id") === 2000L)
         .select(col("list_id")).as[Int].collect().toSeq == Seq(0), t)
     }
@@ -153,7 +153,7 @@ class VecStoreSpec extends AnyFunSuite {
     val n = VecStore.readFinal(spark, "vec_redeliver").count()
     // the at-least-once world: the same batch lands twice
     VecStore.append(spark, stored.select(col("vec_id"), col("embedding")),
-      "vec_redeliver", buckets = 4)
+      "vec_redeliver")
     assert(VecStore.read(spark, "vec_redeliver").count() == 2 * n)
     assert(VecStore.readFinal(spark, "vec_redeliver").count() == n)
     val after = verdictMap(VecStore.nearDupVerdicts(
@@ -166,7 +166,7 @@ class VecStoreSpec extends AnyFunSuite {
     dropStore("vec_compact")
     VecStore.init(spark, "vec_compact", stored, col("label"), buckets = 4)
     VecStore.append(spark, stored.select(col("vec_id"), col("embedding")),
-      "vec_compact", buckets = 4)
+      "vec_compact")
     val before = verdictMap(VecStore.nearDupVerdicts(
       spark, "vec_compact",
       batch.select(col("vec_id"), col("embedding")), minCos = 0.35))
@@ -486,7 +486,7 @@ class VecStoreSpec extends AnyFunSuite {
     assert(VecStore.ivfTopK(spark, "vec_degen", empty, k = 5).count() == 0)
     // appending an empty batch is a no-op, not an error
     val n = VecStore.readFinal(spark, "vec_degen").count()
-    VecStore.append(spark, empty, "vec_degen", buckets = 4)
+    VecStore.append(spark, empty, "vec_degen")
     assert(VecStore.readFinal(spark, "vec_degen").count() == n)
     // a store that was never initialized refuses loudly
     intercept[Exception] {
@@ -524,7 +524,7 @@ class VecStoreSpec extends AnyFunSuite {
     // vector is PQ-searchable immediately (8 code rows at 8 subspaces)
     val extra = batch.limit(1)
       .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
-    VecStore.append(spark, extra, "vec_pqserve", buckets = 4)
+    VecStore.append(spark, extra, "vec_pqserve")
     assert(VecStore.codes(spark, "vec_pqserve")
       .filter(col("vec_id") >= 500000).count() == 8)
     // a retrain is also a rebuild of the codes (staged swap) — serving
@@ -535,8 +535,7 @@ class VecStoreSpec extends AnyFunSuite {
     // compact rebuilds the codes cache too: replay the corpus, compact,
     // and the cache holds exactly one code row per (vec, sub)
     VecStore.append(spark,
-      stored.select(col("vec_id"), col("embedding")), "vec_pqserve",
-      buckets = 4)
+      stored.select(col("vec_id"), col("embedding")), "vec_pqserve")
     val nVec = VecStore.readFinal(spark, "vec_pqserve").count()
     VecStore.compact(spark, "vec_pqserve")
     assert(VecStore.read(spark, "vec_pqserve").count() == nVec)
@@ -574,15 +573,13 @@ class VecStoreSpec extends AnyFunSuite {
     TableSwap.dropManaged(spark, "vec_nocodes_codes")
     val e = intercept[IllegalArgumentException] {
       VecStore.append(spark,
-        batch.select(col("vec_id"), col("embedding")), "vec_nocodes",
-        buckets = 4)
+        batch.select(col("vec_id"), col("embedding")), "vec_nocodes")
     }
     assert(e.getMessage.contains("rerun trainPqCodebook"))
     // the named repair restores appendability
     VecStore.trainPqCodebook(spark, "vec_nocodes")
     VecStore.append(spark,
-      batch.select(col("vec_id"), col("embedding")), "vec_nocodes",
-      buckets = 4)
+      batch.select(col("vec_id"), col("embedding")), "vec_nocodes")
     assert(VecStore.codes(spark, "vec_nocodes")
       .select(col("vec_id")).distinct().count() ==
       VecStore.readFinal(spark, "vec_nocodes").count())
@@ -620,8 +617,7 @@ class VecStoreSpec extends AnyFunSuite {
     // sticky: a re-delivered copy of the popped vector stays hidden
     // (and its freshly-appended code rows die at compact below)
     VecStore.append(spark,
-      popped.select(col("vec_id"), col("embedding")), "vec_pop",
-      buckets = 4)
+      popped.select(col("vec_id"), col("embedding")), "vec_pop")
     assert(VecStore.readFinal(spark, "vec_pop").count() == n - 1)
     // compact: vector row and its 8 code rows physically gone, the
     // counts reconcile (codes = 8 per surviving vector), dels retired
@@ -635,8 +631,7 @@ class VecStoreSpec extends AnyFunSuite {
       .contains(victim))
     // after compaction the id is free to ingest again
     VecStore.append(spark,
-      popped.select(col("vec_id"), col("embedding")), "vec_pop",
-      buckets = 4)
+      popped.select(col("vec_id"), col("embedding")), "vec_pop")
     assert(VecStore.readFinal(spark, "vec_pop").count() == n)
   }
 
@@ -656,7 +651,7 @@ class VecStoreSpec extends AnyFunSuite {
     VecStore.trainPqCodebook(spark, "vec_cstage")
     // bloat: a full re-delivery; then a pre-stage takedown
     VecStore.append(spark, stored.select(col("vec_id"), col("embedding")),
-      "vec_cstage", buckets = 4)
+      "vec_cstage")
     val queries = batch.select(col("vec_id"), col("embedding")).limit(10)
       .localCheckpoint()
     def neighbors(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -669,7 +664,7 @@ class VecStoreSpec extends AnyFunSuite {
     val st = VecStore.compactStage(spark, "vec_cstage")
     // MID-BUILD: a fresh batch lands and a second id is taken down
     VecStore.append(spark, batch.select(col("vec_id"), col("embedding")),
-      "vec_cstage", buckets = 4)
+      "vec_cstage")
     val victim2 = stored.filter(col("vec_id") =!= victim1)
       .select(col("vec_id")).head().getLong(0)
     VecStore.popIds(spark, "vec_cstage", Seq(victim2).toDF("vec_id"))
@@ -807,7 +802,7 @@ class VecStoreSpec extends AnyFunSuite {
     // append still works mid-crash-state (stamps resolve the same way)
     val extra = batch.limit(1)
       .select((col("vec_id") + 700000).as("vec_id"), col("embedding"))
-    VecStore.append(spark, extra, "vec_retrain", buckets = 4)
+    VecStore.append(spark, extra, "vec_retrain")
     assert(VecStore.codes(spark, "vec_retrain")
       .filter(col("vec_id") >= 700000)
       .select(col("cb_hash")).distinct()
@@ -821,7 +816,7 @@ class VecStoreSpec extends AnyFunSuite {
     // ---- a real staged retrain after the corpus changed ----
     VecStore.append(spark,
       batch.limit(20).select((col("vec_id") + 800000).as("vec_id"),
-        col("embedding")), "vec_retrain", buckets = 4)
+        col("embedding")), "vec_retrain")
     VecStore.retrainPqStaged(spark, "vec_retrain")
     val h1 = hash()
     assert(h1 != h0 && !h1.contains(","),
